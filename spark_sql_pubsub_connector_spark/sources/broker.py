@@ -134,7 +134,7 @@ class FileBroker:
             os.makedirs(os.path.join(self.root, d), exist_ok=True)
 
     # -- crash-safe sequence minting ---------------------------------------
-    def _next_seq(self, d: str) -> int:
+    def _next_seq(self, d: str, repair: bool = True) -> int:
         """Next dense sequence number for a topic dir, crash-safe
         (r14 self-review, the publish twin of the r13 sink find).
 
@@ -153,6 +153,9 @@ class FileBroker:
            was never recorded committed and re-commits whole).
         2. The next seq is ``max(counter, last_intact_line_seq + 1)``,
            so the counter lagging the log can never re-mint a live seq.
+
+        ``repair=False`` is the read-only form for counting: a torn
+        tail is skipped, not truncated.
         """
         with open(os.path.join(d, ".seq")) as fh:
             seq = int(fh.read().strip() or "0")
@@ -189,7 +192,7 @@ class FileBroker:
             return b"".join(reversed(chunks))
 
         try:
-            with open(path, "rb+") as fh:
+            with open(path, "rb+" if repair else "rb") as fh:
                 fh.seek(0, os.SEEK_END)
                 size = fh.tell()
                 if size == 0:
@@ -197,7 +200,8 @@ class FileBroker:
                 last = read_back_to_newline(fh, size)
                 if not last.endswith(b"\n"):
                     # torn tail: cut back to the last complete line
-                    fh.truncate(size - len(last))
+                    if repair:
+                        fh.truncate(size - len(last))
                     size -= len(last)
                     last = read_back_to_newline(fh, size) if size else b""
                 if last.strip():
@@ -378,6 +382,12 @@ class FileBroker:
         out = {"floor_seq": floor, "cut_bytes": 0, "cut_messages": 0}
         if floor <= meta.get("compacted_below_seq", 0):
             return out
+        # the cut can remove the log's last line: bring a counter that
+        # lags the log (crash between append and counter write) up to
+        # date first, or the next publish would re-mint cut seqs below
+        # the ack floor and those messages would read as acked
+        with open(os.path.join(d, ".seq"), "w") as fh:
+            fh.write(str(self._next_seq(d)))
         meta = {
             "token": uuid.uuid4().hex,
             "cut_below_seq": floor,
@@ -616,7 +626,10 @@ class FileBroker:
     def _store_sub(self, sub: str, state: dict) -> None:
         tmp = self._sub_path(sub) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            json.dump(state, fh)
+            # json.dumps, not json.dump: only dumps uses the C encoder,
+            # and this state lists every leased seq (written under the
+            # broker lock on every pull and ack)
+            fh.write(json.dumps(state))
         os.replace(tmp, self._sub_path(sub))
 
     @staticmethod
@@ -743,9 +756,12 @@ class FileBroker:
             if region is None and consumed_to is not None:
                 state["deliver_pos"] = consumed_to
             self._store_sub(sub, state)
+        # one nonce per pull: the seq already makes each ack id unique
+        # within the pull, the nonce tells redeliveries apart
+        nonce = uuid.uuid4().hex[:8]
         return [
             (
-                f"ack-{s}-{uuid.uuid4().hex[:8]}",
+                f"ack-{s}-{nonce}",
                 item if isinstance(item, dict) else json.loads(item),
             )
             for s, item in picked
@@ -809,12 +825,36 @@ class FileBroker:
 
     # -- monitoring (Cloud Monitoring stand-in) ----------------------------
     def backlog(self, sub: str) -> int:
-        return sum(self.backlog_by_region(sub).values())
+        """Unacked messages, leased ones included (like the real metric).
+
+        Seqs are dense from the subscription's ``acked_below`` up to the
+        topic's next seq, so the backlog is a count: no log scan, no
+        JSON parse, no state write. It equals
+        ``sum(backlog_by_region(sub).values())``."""
+        with self._lock():
+            return self._backlog_locked(self._load_sub(sub))
+
+    def _backlog_locked(self, state: dict) -> int:
+        end = self._next_seq(self._topic_dir(state["topic"]), repair=False)
+        return end - state["acked_below"] - len(state["acked"])
+
+    def deliverable(self, sub: str) -> int:
+        """Messages a pull could lease now: the backlog minus those under
+        an unexpired lease. Counted like ``backlog``, with no log scan.
+        Every leased seq is unacked and sits in exactly one lease group,
+        so no message is subtracted twice."""
+        now = time.time()
+        with self._lock():
+            state = self._load_sub(sub)
+            leased = sum(len(g[1]) for g in state["lease_groups"] if g[0] > now)
+            return self._backlog_locked(state) - leased
 
     def backlog_by_region(self, sub: str) -> dict[str, int]:
         """num_unacked_messages_by_region equivalent
         (PubsubSubscriptionMonitor.scala:155-210). Leased-but-unacked
-        messages still count as backlog, like the real metric."""
+        messages still count as backlog, like the real metric. Scans and
+        parses the unacked log; only the dynamic-partition monitor needs
+        the per-region split."""
         with self._lock():
             state = self._load_sub(sub)
             self._sync_cursors(state, state["topic"])
@@ -850,10 +890,10 @@ class RealBrokerClient:
     ``RealBrokerClient(project_id)`` is the only change needed to run
     the connector against the real service: every method the connector
     consumes (``pull_raw`` / ``acknowledge`` / ``modify_ack_deadline`` /
-    ``commit_staged`` / ``backlog`` / ``backlog_by_region`` / admin) has
-    the same name, signature, and return shape
-    (``tests/test_broker.py::TestRealClientParity`` pins this without
-    the dependency installed).
+    ``commit_staged`` / ``backlog`` / ``deliverable`` /
+    ``backlog_by_region`` / admin) has the same name, signature, and
+    return shape (``tests/test_broker.py::TestRealClientParity`` pins
+    this without the dependency installed).
 
     The container ships no ``google-cloud-pubsub`` (and no network), so
     construction raises a descriptive ``ImportError`` when the library
@@ -879,6 +919,9 @@ class RealBrokerClient:
     MAX_OUTSTANDING_MESSAGES = 1_000
     BATCH_MAX_MESSAGES = 20
     BATCH_MAX_LATENCY_S = 0.010
+    #: ack ids per acknowledge request: the service's request-size
+    #: limit, which the reference chunks by (PubsubMicroBatchStream.scala:97)
+    ACK_CHUNK = 1_500
 
     @staticmethod
     def resolve_endpoint(region: str | None = None, endpoint: str | None = None) -> str:
@@ -1086,11 +1129,13 @@ class RealBrokerClient:
         ]
 
     def acknowledge(self, sub: str, ack_ids: list[str]) -> int:
-        if not ack_ids:
-            return 0
-        self._subscriber().acknowledge(
-            request={"subscription": self._sub_path(sub), "ack_ids": ack_ids}
-        )
+        for i in range(0, len(ack_ids), self.ACK_CHUNK):
+            self._subscriber().acknowledge(
+                request={
+                    "subscription": self._sub_path(sub),
+                    "ack_ids": ack_ids[i : i + self.ACK_CHUNK],
+                }
+            )
         return len(ack_ids)
 
     def modify_ack_deadline(
@@ -1110,6 +1155,12 @@ class RealBrokerClient:
 
     def backlog(self, sub: str) -> int:
         return sum(self.backlog_by_region(sub).values())
+
+    def deliverable(self, sub: str) -> int:
+        """The service reports no lease counts, so this is the backlog:
+        an upper bound, which never plans an empty batch over messages
+        a pull could lease."""
+        return self.backlog(sub)
 
     def backlog_by_region(self, sub: str) -> dict[str, int]:
         """num_unacked_messages_by_region from Cloud Monitoring, the

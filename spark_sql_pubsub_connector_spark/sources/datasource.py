@@ -24,19 +24,31 @@ Parity map to the reference (SURVEY.md §2.1):
          Re-checked against pyspark 4.1.2 (rounds 4 and 5; r5 probe:
          zero availableNow mentions in pyspark.sql.datasource, no new
          DataSourceStreamReader methods): still no
-         SupportsTriggerAvailableNow analog — watch item stands
+         SupportsTriggerAvailableNow analog — watch item stands.
+         The backlog counts leased messages, so the batch after a
+         drain's last data batch still exists: Spark calls commit() only
+         while it builds the next batch, and that batch carries the ack
   S6/S13 per-batch partition planning — static num_partitions, or
-         backlog-driven with per-region splits via BacklogMonitor
+         backlog-driven with per-region splits via BacklogMonitor. A
+         batch first planned when no message is deliverable (the broker's
+         unacked-and-unleased count is 0) plans no partitions, so the
+         ack-only batch runs no tasks
   S7/S8  per-task pull of ≤ max_messages_per_partition messages,
          decoded to the 7-column row (PubsubPartitionReader.scala)
   S9     deterministic replay: first pull persists the partition's
-         messages to an atomically-renamed cache file; task retries and
-         plan re-evaluations read the cache instead of re-pulling
-         (RDD-block cache analog, PubsubPartitionReader.scala:33-70)
-  S10/S11 ack-on-commit: ack ids ride in the cache files (the
-         accumulator analog); commit(end) acks in parallel chunks of
-         1500 and evicts the batch's cache
-         (PubsubMicroBatchStream.scala:93-114)
+         RecordBatch as an atomically-renamed Arrow IPC file; task
+         retries and plan re-evaluations yield the stored batch instead
+         of re-pulling (RDD-block cache analog,
+         PubsubPartitionReader.scala:33-70). A copy that exists but
+         does not read (zero-length, truncated, older format) fails the
+         task rather than re-pulling. The batch's partition plan is
+         persisted beside its parts the first time it is planned, so a
+         replan rebuilds the same partitions
+  S10/S11 ack-on-commit: ack ids ride in the cache files' ack_id column
+         (the accumulator analog); commit(end) acks each batch with one
+         broker call and evicts the batch's cache
+         (PubsubMicroBatchStream.scala:93-114; the reference's
+         1500-id request chunking lives in RealBrokerClient.acknowledge)
   S12    single-consumer stream registry (registry.py)
   S14-S16 append-only staged-commit sink with batch-id idempotence,
          write-schema + ordering-key validation on driver AND executor
@@ -54,7 +66,6 @@ import json
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -84,7 +95,8 @@ from .options import (
 )
 from .registry import StreamRegistry
 
-ACK_CHUNK = 1500  # PubsubMicroBatchStream.scala:97
+_PART_SUFFIX = ".arrow"  # replay-cache part files (Arrow IPC)
+_PLAN_FILE = "plan.json"  # a batch's partition plan, beside its parts
 
 # Read schema — 7 fixed columns (reference package.scala:174-186)
 PUBSUB_READ_SCHEMA = StructType(
@@ -210,31 +222,30 @@ class _PartitionPayload:
     legacy_files: tuple = ()
 
 
-def _records_to_arrow(payload: _PartitionPayload, records: list[dict]):
+def _records_to_arrow(subscription_path: str, received: list[tuple[str, dict]]):
     """One Arrow RecordBatch for the whole partition — the DataSource
     API accepts RecordBatches from read(), which skips per-row pickling
     (the dominant cost of the tuple path: ~1000 rows × 7 fields per
-    partition through the Python/JVM boundary)."""
+    partition through the Python/JVM boundary). ``received`` is
+    ``pull_raw``'s ``(ack_id, record)`` pairs."""
     import base64
 
     import pyarrow as pa
 
-    n = len(records)
+    recs = [r for _, r in received]
     return pa.RecordBatch.from_arrays(
         [
-            pa.array([payload.subscription_path] * n, type=pa.string()),
-            pa.array([r["ack_id"] for r in records], type=pa.string()),
-            pa.array([r["message_id"] for r in records], type=pa.string()),
-            pa.array([r["ordering_key"] for r in records], type=pa.string()),
+            pa.array([subscription_path] * len(recs), type=pa.string()),
+            pa.array([a for a, _ in received], type=pa.string()),
+            pa.array([r["message_id"] for r in recs], type=pa.string()),
+            pa.array([r.get("ordering_key", "") for r in recs], type=pa.string()),
+            pa.array([base64.b64decode(r["data_b64"]) for r in recs], type=pa.binary()),
             pa.array(
-                [base64.b64decode(r["data_b64"]) for r in records], type=pa.binary()
-            ),
-            pa.array(
-                [r["publish_ts_us"] for r in records],
+                [r["publish_ts_us"] for r in recs],
                 type=pa.timestamp("us", tz="UTC"),
             ),
             pa.array(
-                [list((r.get("attributes") or {}).items()) for r in records],
+                [list((r.get("attributes") or {}).items()) for r in recs],
                 type=pa.map_(pa.string(), pa.string()),
             ),
         ],
@@ -250,105 +261,145 @@ def _records_to_arrow(payload: _PartitionPayload, records: list[dict]):
     )
 
 
-def _write_cache_atomic(path: str, records: list[dict]) -> None:
+def _batch_to_ipc(batch):
+    """The Arrow IPC file of ``batch``: the replay-cache format. An
+    empty batch is written as schema and footer only."""
+    import pyarrow as pa
+
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_file(sink, batch.schema) as writer:
+        if batch.num_rows:
+            writer.write_batch(batch)
+    return sink.getvalue()
+
+
+def _write_atomic(path: str, data) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        for rec in records:
-            fh.write(json.dumps(rec) + "\n")
+    with open(tmp, "wb") as fh:
+        fh.write(data)
     os.replace(tmp, path)
 
 
-def _load_cache(path: str) -> list[dict] | None:
-    """Cached records, or None when the file is absent/unreadable (a
-    lost or corrupted copy — the caller falls back to a replica)."""
-    try:
-        with open(path) as fh:
-            return [json.loads(line) for line in fh if line.strip()]
-    except (OSError, ValueError):
-        return None
+def _load_ipc(path: str):
+    """``(file bytes, batches)`` of a cache copy. Raises on a lost,
+    zero-length, truncated or non-IPC copy: an IPC file ends in a
+    footer, so a torn write never reads as a shorter batch."""
+    import pyarrow as pa
+
+    with open(path, "rb") as fh:
+        data = fh.read()
+    reader = pa.ipc.open_file(pa.py_buffer(data))
+    return data, [reader.get_batch(i) for i in range(reader.num_record_batches)]
+
+
+def _load_ack_ids(path: str) -> list[str]:
+    """The ``ack_id`` column of a cache copy; the memory map pages in
+    only that column's buffers."""
+    import pyarrow as pa
+
+    with pa.memory_map(path) as src:
+        reader = pa.ipc.open_file(src)
+        return [
+            a
+            for i in range(reader.num_record_batches)
+            for a in reader.get_batch(i).column("ack_id").to_pylist()
+        ]
+
+
+def _load_plan(path: str) -> list:
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _first_readable(paths, load):
+    """``(path, load(path))`` for the first copy in ``paths`` that loads,
+    or None when no copy exists. Copies that exist but none of which
+    loads raise: re-pulling or re-planning in their place would change
+    what an already-planned batch replays or acks (ADVICE r12)."""
+    import pyarrow as pa
+
+    bad = []
+    for path in paths:
+        try:
+            return path, load(path)
+        except FileNotFoundError:
+            continue
+        except (OSError, ValueError, KeyError, pa.ArrowException):
+            bad.append(path)
+    if bad:
+        raise RuntimeError(
+            f"pubsub replay cache: {bad[0]} exists but no copy is parseable "
+            f"({len(paths)} paths checked); refusing to re-pull or re-plan "
+            "— that would silently change the planned batch"
+        )
+    return None
 
 
 def _pull_or_replay(payload: _PartitionPayload):
     """Executor-side body of read(): replay from the partition cache if
     present, else pull once and persist atomically (S7 + S9).
 
-    With ``replay_cache_replicas > 1`` each pull is persisted to every
+    The cache file is the Arrow IPC file of the partition's RecordBatch,
+    so a replay yields the stored batch without parsing. With
+    ``replay_cache_replicas > 1`` each pull is persisted to every
     replica path before the primary (the primary's existence is the
     commit point), and a replay that finds the primary missing or
     corrupted serves from the first healthy replica — re-healing the
-    primary AND any other lost copy, so redundancy never silently
-    degrades below the configured replica count — instead of
-    re-pulling. This mirrors the reference's 2× replicated persist of
-    the pulled batch (PubsubPartitionReader.scala:57,
+    primary AND any other lost copy with the same bytes, so redundancy
+    never silently degrades below the configured replica count —
+    instead of re-pulling. This mirrors the reference's 2× replicated
+    persist of the pulled batch (PubsubPartitionReader.scala:57,
     MEMORY_AND_DISK_SER_2): losing one copy between pull and commit
     never changes what the batch replays.
 
-    When a copy EXISTS but no existing copy parses, the task fails
-    loudly instead of re-pulling: a re-pull under a still-held broker
-    lease can return fewer (or zero) messages and overwrite the cache,
-    silently changing a planned batch's replay content (ADVICE r12).
-    Only the fully-absent case (no copy ever written) pulls. The probe
-    set includes ``legacy_files`` — copies under retired derived
-    ``.read_cache_rep*`` roots (ADVICE r13): a batch pulled under an
-    older replica config whose surviving copy sits under an old root
-    must replay from it, not silently re-pull. Legacy copies are
-    read-only here; healing rewrites only the configured set."""
-    import base64
+    When a copy EXISTS but no existing copy parses (zero-length,
+    truncated, or a ``.jsonl`` copy written by the older JSON-lines
+    cache format), the task fails loudly instead of re-pulling: a
+    re-pull under a still-held broker lease can return fewer (or zero)
+    messages and overwrite the cache, silently changing a planned
+    batch's replay content (ADVICE r12). Only the fully-absent case (no
+    copy ever written) pulls. The probe set includes ``legacy_files`` —
+    copies under retired derived ``.read_cache_rep*`` roots (ADVICE
+    r13): a batch pulled under an older replica config whose surviving
+    copy sits under an old root must replay from it, not silently
+    re-pull. Legacy copies are read-only here; healing rewrites only
+    the configured set."""
+    import pyarrow as pa
 
     configured = (payload.cache_file,) + tuple(payload.replica_files)
     all_copies = configured + tuple(payload.legacy_files)
-    records = None
-    source = None
-    any_copy_present = False
-    for path in all_copies:
-        if os.path.exists(path):
-            any_copy_present = True
-            records = _load_cache(path)
-            if records is not None:
-                source = path
-                break
-    if records is None and any_copy_present:
-        raise RuntimeError(
-            f"pubsub replay cache for {payload.cache_file} exists but no "
-            f"copy is parseable ({len(all_copies)} roots checked); "
-            "refusing to re-pull — that would silently change the "
-            "planned batch's replay content"
-        )
-    if records is not None:
+    # a .jsonl sibling is a copy in the older format: present, unreadable
+    older = tuple(p[: -len(_PART_SUFFIX)] + ".jsonl" for p in all_copies)
+    found = _first_readable(all_copies + older, _load_ipc)
+    if found is not None:
+        source, (data, batches) = found
         if source != payload.cache_file:
             # served from a replica (or a legacy copy): re-heal the
             # primary and every other missing/corrupt CONFIGURED copy
             for path in configured:
-                if path != source and _load_cache(path) is None:
-                    _write_cache_atomic(path, records)
-        if records:
-            yield _records_to_arrow(payload, records)
+                if path == source:
+                    continue
+                try:
+                    _load_ipc(path)
+                except (OSError, ValueError, pa.ArrowException):
+                    _write_atomic(path, data)
+        yield from batches  # an empty partition stores none
         return
 
     broker = FileBroker(payload.broker_dir)
-    # pull_raw keeps payloads base64-encoded: the replay cache stores
-    # base64 anyway, so the decode→re-encode of pull() would be pure
-    # overhead (the single decode happens once, in _records_to_arrow)
+    # pull_raw keeps payloads base64-encoded, so each payload is decoded
+    # exactly once, in _records_to_arrow
     received = broker.pull_raw(
         payload.subscription, payload.max_messages, region=payload.region
     )
-    records = [
-        {
-            "ack_id": ack_id,
-            "message_id": rec["message_id"],
-            "ordering_key": rec.get("ordering_key", ""),
-            "data_b64": rec["data_b64"],
-            "publish_ts_us": rec["publish_ts_us"],
-            "attributes": rec.get("attributes") or {},
-        }
-        for ack_id, rec in received
-    ]
+    batch = _records_to_arrow(payload.subscription_path, received)
+    data = _batch_to_ipc(batch)
     for rep in payload.replica_files:
-        _write_cache_atomic(rep, records)
-    _write_cache_atomic(payload.cache_file, records)
-    if records:
-        yield _records_to_arrow(payload, records)
+        _write_atomic(rep, data)
+    _write_atomic(payload.cache_file, data)
+    if batch.num_rows:
+        yield batch
 
 
 class PubsubStreamReader(DataSourceStreamReader):
@@ -409,15 +460,20 @@ class PubsubStreamReader(DataSourceStreamReader):
 
     # -- offsets (S4/S5) ---------------------------------------------------
     def _restore_state(self) -> dict:
+        """The persisted counters; a missing file starts at 0. A file
+        that does not parse raises: reading it as 0 would re-plan
+        already-committed batch keys (ROADMAP direction 3)."""
+        path = _offset_state_path(self.opts)
         try:
-            with open(_offset_state_path(self.opts)) as fh:
-                st = json.load(fh)
-            return {
-                "planned": int(st.get("planned", 0)),
-                "committed": int(st.get("committed", 0)),
-            }
-        except (OSError, ValueError):
+            with open(path) as fh:
+                raw = fh.read()
+        except FileNotFoundError:
             return {"planned": 0, "committed": 0}
+        try:
+            st = json.loads(raw)
+            return {"planned": int(st["planned"]), "committed": int(st["committed"])}
+        except (ValueError, KeyError, TypeError) as e:
+            raise ValueError(f"corrupt pubsub offset state {path}: {e}") from e
 
     def _persist_state(self) -> None:
         path = _offset_state_path(self.opts)
@@ -514,27 +570,22 @@ class PubsubStreamReader(DataSourceStreamReader):
             if base not in configured_bases
         ]
 
-        plan: list[tuple[int, str | None]] = []  # (index, region)
-        if self.monitor is not None:
-            info = self.monitor.partitioning_info()
-            if info.split_by_region:
-                # region-aware split (PubsubMicroBatchStream.scala:58-74):
-                # each region's partitions pull with a region-pinned
-                # "endpoint" so a dominant region gets dedicated tasks
-                idx = 0
-                for r in info.by_region:
-                    for _ in range(r.num_partitions * units):
-                        plan.append((idx, r.region))
-                        idx += 1
-            else:
-                for i in range(info.total_partitions * units):
-                    plan.append((i, None))
+        # The plan is fixed the first time a batch is planned, an empty
+        # one included: a replan (restart, plan re-evaluation) must
+        # rebuild the same partitions, or a backlog that grew in between
+        # adds partitions that pull fresh messages into an already-planned
+        # batch, which a sink may skip as committed while commit() acks.
+        plan_dirs = [cache_dir] + replica_dirs + legacy_dirs
+        found = _first_readable(
+            [os.path.join(d, _PLAN_FILE) for d in plan_dirs], _load_plan
+        )
+        if found is not None:
+            regions = found[1]
         else:
-            for i in range(self.opts.num_partitions * units):
-                plan.append((i, None))
-
-        if len(plan) > self.opts.max_dynamic_partitions:
-            plan = plan[: self.opts.max_dynamic_partitions]
+            regions = self._plan(units)
+            data = json.dumps(regions).encode()
+            for d in replica_dirs + [cache_dir]:  # primary last, as for parts
+                _write_atomic(os.path.join(d, _PLAN_FILE), data)
 
         return [
             InputPartition(
@@ -543,20 +594,44 @@ class PubsubStreamReader(DataSourceStreamReader):
                     subscription=self.opts.subscription,
                     subscription_path=self.opts.subscription_path,
                     max_messages=self.opts.max_messages_per_partition,
-                    cache_file=os.path.join(cache_dir, f"part-{i:05d}.jsonl"),
+                    cache_file=os.path.join(cache_dir, f"part-{i:05d}{_PART_SUFFIX}"),
                     region=region,
                     replica_files=tuple(
-                        os.path.join(d, f"part-{i:05d}.jsonl")
+                        os.path.join(d, f"part-{i:05d}{_PART_SUFFIX}")
                         for d in replica_dirs
                     ),
                     legacy_files=tuple(
-                        os.path.join(d, f"part-{i:05d}.jsonl")
+                        os.path.join(d, f"part-{i:05d}{_PART_SUFFIX}")
                         for d in legacy_dirs
                     ),
                 )
             )
-            for i, region in plan
+            for i, region in enumerate(regions)
         ]
+
+    def _plan(self, units: int) -> list[str | None]:
+        """The region of each partition of a batch of ``units`` capacity
+        units (None pulls from every region), at most
+        ``max_dynamic_partitions`` of them.
+
+        Empty when no message is deliverable: Spark acks a batch only
+        while it builds the next one, so a drain ends with a batch whose
+        only job is that ack, and its tasks would pull nothing."""
+        if self.broker.deliverable(self.opts.subscription) == 0:
+            return []
+        info = self.monitor.partitioning_info() if self.monitor else None
+        if info is None:
+            regions = [None] * (self.opts.num_partitions * units)
+        elif info.split_by_region:
+            # region-aware split (PubsubMicroBatchStream.scala:58-74):
+            # each region's partitions pull with a region-pinned
+            # "endpoint" so a dominant region gets dedicated tasks
+            regions = [
+                r.region for r in info.by_region for _ in range(r.num_partitions * units)
+            ]
+        else:
+            regions = [None] * (info.total_partitions * units)
+        return regions[: self.opts.max_dynamic_partitions]
 
     # -- executor read (S7/S8/S9) ------------------------------------------
     def read(self, partition: InputPartition):
@@ -592,7 +667,7 @@ class PubsubStreamReader(DataSourceStreamReader):
                     os.path.join(root, batch_key)
                 )
         for dirs in batch_dirs.values():
-            # Ack set per part file comes from the FIRST existing copy
+            # Ack set per part file comes from the FIRST readable copy
             # in root order (primary first — `roots` leads with the
             # primary and batch_dirs preserves that order), never the
             # union across copies: divergent copies (a zombie or
@@ -601,41 +676,25 @@ class PubsubStreamReader(DataSourceStreamReader):
             # would otherwise ack messages that appear in no replayed
             # batch — an at-least-once violation (ADVICE r12). Replica
             # content counts only where the primary copy of that part
-            # file is absent.
+            # file is absent or unreadable, which is exactly when a
+            # replay serves that replica. Only the ack_id column is
+            # read.
             part_names = sorted(
-                {
-                    f
-                    for d in dirs
-                    for f in os.listdir(d)
-                    if f.endswith(".jsonl")
-                }
+                {f for d in dirs for f in os.listdir(d) if f.endswith(_PART_SUFFIX)}
             )
             ack_ids: list[str] = []
             for name in part_names:
-                for d in dirs:
-                    path = os.path.join(d, name)
-                    if not os.path.exists(path):
-                        continue
-                    with open(path) as fh:
-                        for line in fh:
-                            if line.strip():
-                                ack_ids.append(json.loads(line)["ack_id"])
-                    break
-            ack_ids = list(dict.fromkeys(ack_ids))  # distinct, keep order
+                _path, ids = _first_readable(
+                    [os.path.join(d, name) for d in dirs], _load_ack_ids
+                )
+                ack_ids.extend(ids)
             if ack_ids:
-                chunks = [
-                    ack_ids[i : i + ACK_CHUNK]
-                    for i in range(0, len(ack_ids), ACK_CHUNK)
-                ]
-                with ThreadPoolExecutor(max_workers=min(8, len(chunks))) as ex:
-                    list(
-                        ex.map(
-                            lambda c: self.broker.acknowledge(
-                                self.opts.subscription, c
-                            ),
-                            chunks,
-                        )
-                    )
+                # one call per batch: the file broker takes any number
+                # of ids under one lock hold; RealBrokerClient chunks to
+                # the service's request limit itself
+                self.broker.acknowledge(
+                    self.opts.subscription, list(dict.fromkeys(ack_ids))
+                )
             for batch_dir in dirs:  # block eviction analog, every copy
                 shutil.rmtree(batch_dir, ignore_errors=True)
         self.registry.heartbeat(self.opts.subscription, self.stream_id)

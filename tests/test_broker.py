@@ -103,6 +103,7 @@ class TestRealClientParity:
         "acknowledge",
         "modify_ack_deadline",
         "backlog",
+        "deliverable",
         "backlog_by_region",
         "topic_messages",
         "delete_all",
@@ -189,6 +190,28 @@ def test_publish_seq_recovers_from_stale_counter(broker, tmp_path):
     got = broker.pull("s", 10)
     assert sorted(int(m.message.message_id) for m in got) == [0, 1, 2, 3, 4]
     assert len({m.message.message_id for m in got}) == 5
+
+
+def test_compaction_that_cuts_the_whole_log_keeps_a_lagging_counter_safe(
+    broker, tmp_path
+):
+    """A counter lagging the log is recovered from the log's last line,
+    so a compaction that cuts every line must bring the counter up to
+    date first. Otherwise the next publish re-mints seqs below the ack
+    floor, and those new messages read as already acked."""
+    import os
+
+    broker.publish("t", _msgs(3))
+    seq_path = os.path.join(str(tmp_path), "topics", "t", ".seq")
+    with open(seq_path, "w") as fh:
+        fh.write("1")  # crash between the log append and the counter write
+    broker.acknowledge("s", [m.ack_id for m in broker.pull("s", 10)])
+    broker.compact_topic("t")
+    assert os.path.getsize(_log_path(tmp_path)) == 0
+    assert broker.backlog("s") == 0
+    assert broker.publish("t", _msgs(2)) == ["3", "4"]
+    assert broker.backlog("s") == 2
+    assert sorted(m.message.message_id for m in broker.pull("s", 10)) == ["3", "4"]
 
 
 def test_commit_staged_seq_recovers_from_stale_counter(broker, tmp_path):

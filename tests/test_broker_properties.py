@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import time
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from spark_sql_pubsub_connector_spark.sources.broker import FileBroker, PubsubMessage
@@ -309,3 +309,110 @@ def test_concurrent_consumers_with_auto_compacting_publisher(
     # acked) the bound is deterministic
     b.compact_topic("t")
     assert os.path.getsize(log) < 2 * 1024
+
+
+# op stream for the backlog differential: everything that moves the
+# ack floor, the log's end or its layout, plus the crash residues
+# (torn tail line, .seq counter lagging the log)
+_OPS_B = st.lists(
+    st.tuples(
+        st.sampled_from(
+            ["publish", "pull", "ack", "nack", "expire", "compact", "torn",
+             "lag", "newsub"]
+        ),
+        st.integers(1, 7),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(ops=_OPS_B)
+# a lapsed lease is deliverable again before any pull drops its group
+@example(ops=[("publish", 3), ("pull", 2), ("expire", 1), ("pull", 1)])
+@example(
+    # the compaction cuts every line, the lagging counter's included
+    ops=[("publish", 5), ("lag", 3), ("pull", 7), ("pull", 1), ("ack", 7),
+         ("ack", 1), ("compact", 1), ("newsub", 1), ("torn", 1), ("pull", 2),
+         ("publish", 2), ("compact", 1)]
+)
+def test_backlog_and_deliverable_counts_match_a_scan(tmp_path_factory, ops):
+    """``backlog()`` counts seqs between the ack floor and the log's end
+    instead of scanning the log; it must equal the scanned
+    ``backlog_by_region`` sum after any history, on every subscription
+    (the ``drain`` benchmark's correctness gate reads ``backlog()``).
+    ``deliverable()`` must equal that scan minus the leases the model
+    holds, and a pull must then lease exactly that many messages (an
+    empty plan is made on ``deliverable() == 0``)."""
+    import os
+    from types import SimpleNamespace
+    from unittest import mock
+
+    from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
+
+    tmp = tmp_path_factory.mktemp("backlog")
+    b = FileBroker(str(tmp / "b"))
+    b.create_topic("t")
+    b.create_subscription("s", "t", ack_deadline_s=10)
+    topic_dir = b._topic_dir("t")
+    clock = [1_000.0]
+    subs = ["s"]
+    outstanding: dict[str, list[str]] = {"s": []}
+    published = 0
+    regions = ["global", "us-east1", "eu-west1"]
+
+    def publish(k: int) -> None:
+        nonlocal published
+        b.publish(
+            "t",
+            [
+                PubsubMessage(data=b"x", publish_ts_us=1,
+                              region=regions[(published + i) % 3])
+                for i in range(k)
+            ],
+        )
+        published += k
+
+    with mock.patch.object(broker_mod, "time", SimpleNamespace(time=lambda: clock[0])):
+        for kind, k in ops:
+            sub = subs[k % len(subs)]
+            if kind == "publish":
+                publish(k)
+            elif kind == "pull":
+                outstanding[sub] += [rm.ack_id for rm in b.pull(sub, k)]
+            elif kind == "ack":
+                b.acknowledge(sub, outstanding[sub][:k])
+                del outstanding[sub][:k]
+            elif kind == "nack":
+                b.modify_ack_deadline(sub, outstanding[sub][:k], 0.0)
+                del outstanding[sub][:k]
+            elif kind == "expire":
+                clock[0] += 11  # every lease lapses; redelivered on pull
+                outstanding = {s: [] for s in subs}
+            elif kind == "compact":
+                b.compact_topic("t")
+            elif kind == "torn":
+                # a crashed append: part of a line, no newline
+                with open(os.path.join(topic_dir, "log.jsonl"), "a") as fh:
+                    fh.write('{"seq": 999999, "message_id": "99')
+            elif kind == "lag":
+                # crash between the log append and the counter write
+                with open(os.path.join(topic_dir, ".seq")) as fh:
+                    before = fh.read()
+                publish(k)
+                with open(os.path.join(topic_dir, ".seq"), "w") as fh:
+                    fh.write(before)
+            elif kind == "newsub" and len(subs) < 3:
+                name = f"s{len(subs)}"
+                b.create_subscription(name, "t", ack_deadline_s=10)
+                subs.append(name)
+                outstanding[name] = []
+            for s in subs:
+                unacked = sum(b.backlog_by_region(s).values())
+                assert b.backlog(s) == unacked, (kind, s)
+                assert b.deliverable(s) == unacked - len(outstanding[s]), (kind, s)
+        for s in subs:
+            want = b.deliverable(s)
+            assert len(b.pull(s, 10**6)) == want
+            assert b.deliverable(s) == 0

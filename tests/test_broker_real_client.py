@@ -41,6 +41,7 @@ class _FakeService:
         self.seq = 0
         self.subscriber_clients: list = []
         self.publisher_clients: list = []
+        self.ack_request_sizes: list[int] = []
 
     def create_topic(self, path: str) -> None:
         self.topics.setdefault(path, [])
@@ -115,6 +116,7 @@ class _FakeSubscriberClient:
         )
 
     def acknowledge(self, request):
+        self.service.ack_request_sizes.append(len(request["ack_ids"]))
         self.service.acknowledge(request["subscription"], request["ack_ids"])
 
     def modify_ack_deadline(self, request):
@@ -271,6 +273,17 @@ def test_nack_via_modify_ack_deadline_redelivers(real_client):
     real_client.modify_ack_deadline("s", [got[0].ack_id], 0)
     again = real_client.pull("s", 10)
     assert [r.message.message_id for r in again] == ["0"]
+
+
+def test_acknowledge_chunks_to_the_request_limit(real_client, fake_gcp):
+    """The service takes at most 1,500 ack ids per request
+    (PubsubMicroBatchStream.scala:97); callers pass any number."""
+    real_client.publish("t", _msgs(3200))
+    got = real_client.pull("s", 5000)
+    assert real_client.acknowledge("s", [r.ack_id for r in got]) == 3200
+    assert fake_gcp.ack_request_sizes == [1500, 1500, 200]
+    sub = fake_gcp.subs["projects/proj/subscriptions/s"]
+    assert len(sub["acked"]) == 3200 and not sub["leased"]
 
 
 def test_empty_ack_and_modack_are_noops(real_client, fake_gcp):

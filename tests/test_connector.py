@@ -11,7 +11,9 @@ file-backed fake broker:
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import time
 
 import pytest
@@ -1147,11 +1149,15 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
     attempt's pull lands only in a replica while another attempt's pull
     becomes the primary), commit must ack ONLY what the primary copy
     holds. Unioning would ack replica-only messages that appear in no
-    replayed/committed batch, silently dropping them."""
-    import json as _json
-
+    replayed/committed batch, silently dropping them. The zombie's copy
+    is a valid cache file, so only the primary-first rule keeps its
+    ack ids out."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamReader,
+        _batch_to_ipc,
+        _load_ack_ids,
+        _records_to_arrow,
+        _write_atomic,
     )
 
     _publish_canonical(broker, 10)
@@ -1179,21 +1185,11 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
         assert len(zombie) == 10
         rep_file = parts[0].value.replica_files[0]
         assert os.path.exists(rep_file)
-        with open(rep_file, "w") as fh:
-            for ack_id, rec in zombie:
-                fh.write(
-                    _json.dumps(
-                        {
-                            "ack_id": ack_id,
-                            "message_id": rec["message_id"],
-                            "ordering_key": rec.get("ordering_key", ""),
-                            "data_b64": rec["data_b64"],
-                            "publish_ts_us": rec["publish_ts_us"],
-                            "attributes": rec.get("attributes") or {},
-                        }
-                    )
-                    + "\n"
-                )
+        _write_atomic(
+            rep_file,
+            _batch_to_ipc(_records_to_arrow(parts[0].value.subscription_path, zombie)),
+        )
+        assert _load_ack_ids(rep_file) == [a for a, _ in zombie]
         reader.commit(end)
         # nack the zombie leases: every one of its messages must come
         # back (they were never part of a committed batch). A unioning
@@ -1271,7 +1267,7 @@ def test_replica_serve_reheals_all_copies(spark, broker, broker_dir):
         first = sorted(tuple(map(str, r)) for r in _read_rows(reader, parts[0]))
         payload = parts[0].value
         rep1, rep2 = payload.replica_files
-        with open(rep1) as fh:
+        with open(rep1, "rb") as fh:
             healthy = fh.read()
         # lose the primary AND the second replica; only rep1 survives
         os.remove(payload.cache_file)
@@ -1279,10 +1275,251 @@ def test_replica_serve_reheals_all_copies(spark, broker, broker_dir):
         second = sorted(tuple(map(str, r)) for r in _read_rows(reader, parts[0]))
         assert first == second
         for path in (payload.cache_file, rep2):
-            with open(path) as fh:
+            with open(path, "rb") as fh:
                 assert fh.read() == healthy  # re-healed, byte-identical
     finally:
         reader.stop()
+
+
+def _reader(broker_dir, **opts):
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        PubsubStreamReader,
+    )
+
+    base = {"project_id": "p", "subscription": "s", "broker_dir": broker_dir}
+    return PubsubStreamReader(dict(base, **{k: str(v) for k, v in opts.items()}))
+
+
+@pytest.mark.parametrize("keep", [0.0, 0.5, 0.99])
+def test_torn_primary_without_replica_fails_loudly(broker, broker_dir, keep):
+    """A zero-length or truncated cache copy (a torn or lost write) is
+    unreadable, not a shorter batch: with no replica to fall back to,
+    the replay fails instead of yielding less or re-pulling."""
+    _publish_canonical(broker, 10)
+    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        assert len(_read_rows(reader, parts[0])) == 10
+        path = parts[0].value.cache_file
+        with open(path, "rb") as fh:
+            torn = fh.read()[: int(os.path.getsize(path) * keep)]
+        with open(path, "wb") as fh:
+            fh.write(torn)
+        with pytest.raises(RuntimeError, match="no copy is parseable"):
+            _read_rows(reader, parts[0])
+        with open(path, "rb") as fh:
+            assert fh.read() == torn  # not re-pulled over
+    finally:
+        reader.stop()
+
+
+def test_legacy_jsonl_cache_copy_fails_loudly(broker, broker_dir):
+    """A batch dir holding only a copy in the older JSON-lines format
+    must not be taken for a never-pulled partition: re-pulling under
+    the still-held lease would replay a different batch."""
+    import json as _json
+
+    _publish_canonical(broker, 10)
+    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        cache_file = parts[0].value.cache_file
+        legacy = cache_file[: -len(".arrow")] + ".jsonl"
+        os.makedirs(os.path.dirname(legacy), exist_ok=True)
+        with open(legacy, "w") as fh:
+            fh.write(_json.dumps({"ack_id": "ack-0-x", "message_id": "0"}) + "\n")
+        with pytest.raises(RuntimeError, match="no copy is parseable"):
+            _read_rows(reader, parts[0])
+        assert not os.path.exists(cache_file)
+        assert len(broker.pull("s", 10)) == 10  # nothing was leased
+    finally:
+        reader.stop()
+
+
+def test_empty_partition_cache_file_is_small(broker, broker_dir):
+    """An empty partition still writes its cache file (the replay must
+    find it), but only schema and footer: well under the 4 KiB floor
+    below which a leftover cache file counts as holding no data."""
+    _publish_canonical(broker, 5)
+    reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        assert [len(_read_rows(reader, p)) for p in parts] == [5, 0]
+        empty = parts[1].value.cache_file
+        assert 0 < os.path.getsize(empty) < 4096
+        assert _read_rows(reader, parts[1]) == []  # replays as empty
+    finally:
+        reader.stop()
+
+
+def test_commit_acks_batch_in_one_broker_call(broker, broker_dir, monkeypatch):
+    """commit() reads the ack ids of every part and acks the batch with
+    a single broker call, even past the real service's 1,500-id request
+    limit (RealBrokerClient chunks for itself)."""
+    _publish_canonical(broker, 2000)
+    reader = _reader(broker_dir, num_partitions=4, max_messages_per_partition=500)
+    calls = []
+    real_ack = reader.broker.acknowledge
+    monkeypatch.setattr(
+        reader.broker,
+        "acknowledge",
+        lambda sub, ids: calls.append(len(ids)) or real_ack(sub, ids),
+    )
+    try:
+        end = reader.latestOffset()
+        parts = reader.partitions(reader.initialOffset(), end)
+        assert len(parts) == 4
+        assert sum(len(_read_rows(reader, p)) for p in parts) == 2000
+        reader.commit(end)
+        assert calls == [2000]
+        assert broker.backlog("s") == 0
+    finally:
+        reader.stop()
+
+
+def test_replan_after_restart_reuses_the_persisted_plan(broker, broker_dir):
+    """With dynamic partitioning the partition count follows the backlog
+    at planning time. A batch re-planned after a restart, once more
+    messages were published, must rebuild the SAME partitions: extra
+    partitions would pull fresh messages into the planned batch, and
+    commit() would ack them even if a sink skips the batch as already
+    committed."""
+    opts = dict(
+        num_partitions=1,
+        max_messages_per_partition=1000,
+        dynamic_partitioning="true",
+        backlog_threshold=1000,
+        stream_id="fixed",
+    )
+    broker.publish("t", [PubsubMessage(data=b"a", publish_ts_us=1)] * 1500)
+    r1 = _reader(broker_dir, **opts)
+    start, end = r1.initialOffset(), r1.latestOffset()
+    parts = r1.partitions(start, end)
+    assert len(parts) == 2  # ceil(1500 / 1000)
+    assert sum(len(_read_rows(r1, p)) for p in parts) == 1500
+    r1.stop()  # crash before commit
+
+    broker.publish("t", [PubsubMessage(data=b"b", publish_ts_us=1)] * 5000)
+    r2 = _reader(broker_dir, **opts)
+    try:
+        replanned = r2.partitions(start, end)
+        assert len(replanned) == 2  # the monitor alone would now say 7
+        assert sum(len(_read_rows(r2, p)) for p in replanned) == 1500
+        r2.commit(end)
+        assert broker.backlog("s") == 5000
+    finally:
+        r2.stop()
+
+
+def test_ack_only_batch_plans_no_partitions_even_after_restart(broker, broker_dir):
+    """Spark acks batch N while it builds batch N+1. When batch N took
+    every message, N+1 is planned with nothing deliverable and runs no
+    tasks. Its empty plan is persisted: replanned after a restart, once
+    new messages have arrived, it stays empty, so it never pulls fresh
+    messages into a batch a sink may already have skipped as committed."""
+    opts = dict(num_partitions=2, max_messages_per_partition=10, stream_id="fixed")
+    _publish_canonical(broker, 20)
+    r1 = _reader(broker_dir, **opts)
+    b0 = r1.initialOffset()
+    b1 = r1.latestOffset()
+    assert sum(len(_read_rows(r1, p)) for p in r1.partitions(b0, b1)) == 20
+    b2 = r1.latestOffset()  # the leased 20 are still backlog
+    assert b2["batch_id"] > b1["batch_id"]
+    r1.commit(b1)
+    assert broker.backlog("s") == 0
+    assert r1.partitions(b1, b2) == []
+    r1.stop()  # crash before batch b2 commits
+
+    _publish_canonical(broker, 5)
+    r2 = _reader(broker_dir, **opts)
+    try:
+        assert r2.partitions(b1, b2) == []
+        r2.commit(b2)
+        assert broker.backlog("s") == 5
+        b3 = r2.latestOffset()
+        assert sum(len(_read_rows(r2, p)) for p in r2.partitions(b2, b3)) == 5
+    finally:
+        r2.stop()
+
+
+def test_batch_planned_over_leased_backlog_is_empty(broker, broker_dir):
+    """Messages leased by another consumer are backlog but not
+    deliverable: a batch planned over them alone runs no tasks."""
+    _publish_canonical(broker, 10)
+    zombie = broker.pull("s", 10)
+    assert len(zombie) == 10
+    reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        assert end["batch_id"] > start["batch_id"]
+        assert reader.partitions(start, end) == []
+        reader.commit(end)
+        assert broker.backlog("s") == 10  # the zombie's leases stand
+    finally:
+        reader.stop()
+
+
+def test_relay_through_ack_only_batch_is_exactly_once(spark, broker, broker_dir, tmp_path):
+    """pubsub -> pubsub: the batch after the last data batch plans no
+    partitions, and the sink still commits it. The output holds every
+    message once, and the source's backlog ends at 0."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _sink_state_path,
+    )
+    from spark_sql_pubsub_connector_spark.sources.options import (
+        validate_write_options,
+    )
+
+    _publish_canonical(broker, 60)
+    broker.create_topic("t2")
+    ck = str(tmp_path / "ck_ack_only")
+    src = read_stream(
+        spark, broker_dir, "s", max_messages_per_partition=50, num_partitions=2
+    )
+    q = write_stream(src.select("data", "attributes"), broker_dir, "t2", ck)
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and broker.backlog("s") > 0:
+            time.sleep(0.2)
+        q.processAllAvailable()
+        # batches that ran (idle triggers report no addBatch phase)
+        progress = [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    assert broker.backlog("s") == 0
+    rows = [p["numInputRows"] for p in progress]
+    assert sum(rows) == 60 and rows[-1] == 0, rows
+    last_batch = progress[-1]["batchId"]
+    opts = validate_write_options(
+        {"project_id": "test-project", "topic": "t2", "broker_dir": broker_dir,
+         "sink_id": ck}
+    )
+    with open(_sink_state_path(opts)) as fh:
+        assert json.load(fh)["last_batch"] == last_batch
+    datas = [m.data for m in broker.topic_messages("t2")]
+    assert sorted(datas) == sorted(f"Test Message: {i}".encode() for i in range(60))
+
+
+def test_corrupt_offset_state_fails_loudly(broker, broker_dir):
+    """A truncated offset-state file is an error that names the file; a
+    missing one starts the counters at 0."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _offset_state_path,
+    )
+
+    reader = _reader(broker_dir)
+    assert (reader._last, reader._committed) == (0, 0)
+    _publish_canonical(broker, 3)
+    reader.latestOffset()
+    reader.stop()
+    path = _offset_state_path(reader.opts)
+    with open(path) as fh:
+        whole = fh.read()
+    with open(path, "w") as fh:
+        fh.write(whole[: len(whole) // 2])
+    with pytest.raises(ValueError, match=re.escape(path)):
+        _reader(broker_dir)
 
 
 def test_replay_cache_replica_dirs_option_validation(broker_dir, tmp_path):
