@@ -103,26 +103,6 @@ def latest_prior_bench(repo_dir: str) -> str | None:
     return None
 
 
-def prev_calibration_fallback(repo_dir: str, prev_queries: dict) -> dict:
-    """Calibration for a prior round whose driver artifact lacks it
-    (headlines through r7 shed the block — ADVICE r7 medium). The
-    committed ``BENCH_DIAG.json`` is written by the same bench
-    invocation the driver parses, so when its cold-timings dict is
-    byte-identical to the prior artifact's, it is the same run and its
-    calibration is that round's. Any mismatch → empty dict (skip
-    normalization rather than normalize against the wrong host)."""
-    try:
-        with open(os.path.join(repo_dir, "BENCH_DIAG.json")) as fh:
-            diag = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if diag.get("queries") == prev_queries and isinstance(
-        diag.get("calibration"), dict
-    ):
-        return diag["calibration"]
-    return {}
-
-
 def headline_line(result: dict) -> str:
     """The one JSON line the driver parses, compacted to fit its tail
     window: headline metric + per-query cold/warm-median + connector
@@ -345,15 +325,6 @@ def main() -> None:
             # (uniform, tracks the probes) from engine regressions
             # (query-specific, survives normalization).
             pc = parsed.get("calibration", {})
-            if not pc:
-                # Rounds ≤7 shed calibration from the headline (ADVICE
-                # r7 medium): recover it from the committed
-                # BENCH_DIAG.json, but only when that file is provably
-                # the SAME run as the prev driver artifact (identical
-                # cold-timings dict) — otherwise a stale diag from a
-                # local re-run would normalize against the wrong host
-                # speed, worse than no normalization.
-                pc = prev_calibration_fallback(REPO, pq)
             if pc.get("cpu_probe_s") and pc.get("shuffle_probe_s"):
                 drift = (
                     calibration["cpu_probe_s"] / pc["cpu_probe_s"]

@@ -3,7 +3,7 @@
 
 Layout:
   sources/    Pub/Sub-shaped streaming source + sink on the Python
-              DataSource API, fake broker, backlog monitor, registry.
+              DataSource API, fake broker, stream registry.
   plans/      declarative query corpus (DataFrame builders + DuckDB
               oracle SQL) — the relational layer the reference
               delegates to Spark SQL.

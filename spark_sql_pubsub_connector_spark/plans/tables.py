@@ -18,19 +18,6 @@ from pyspark.sql.types import LongType
 
 from ..session import ensure_confs
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Deterministic repartition key per table for widen_scan (a real,
 # high-cardinality column — hash repartitioning on it is stable under
 # task retry, unlike rand-derived keys; optimization guide §2.5).
@@ -104,7 +91,3 @@ def load_table(
     if widen:
         df = widen_scan(df, name, sf_dir)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -7,8 +7,8 @@ S1-S19) Spark-first:
   broker.py      broker abstraction: file-backed fake (cross-process)
                  + real-client stub gated behind an import-try
   registry.py    single-consumer stream guard (S12)
-  monitor.py     backlog-driven dynamic partition planning (S13/S6)
-  datasource.py  the DataSource / stream reader / stream writer (the rest)
+  datasource.py  the DataSource / stream reader / stream writer (the
+                 rest, including backlog-driven partition planning S6/S13)
 """
 
 from .datasource import (  # noqa: F401

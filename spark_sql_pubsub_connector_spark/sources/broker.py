@@ -14,7 +14,7 @@ mirrored from the real service:
     the ack deadline and the messages are redelivered (at-least-once,
     README.md:125 of the reference);
   - ``acknowledge`` permanently removes leased messages;
-  - per-region backlog stats feed the dynamic-partition monitor (the
+  - per-region backlog stats feed dynamic partition planning (the
     reference polls Cloud Monitoring, PubsubSubscriptionMonitor.scala).
 
 On a 1000-executor cluster this file broker is replaced by the real
@@ -38,6 +38,23 @@ import uuid
 from dataclasses import dataclass, field
 
 
+def _write_atomic(path: str, data: str | bytes) -> None:
+    """Replace ``path`` with ``data`` through a uniquely named tmp file
+    and ``os.replace``, so a reader sees the old file or the new one,
+    never a torn write. Creates the parent directory only when it is
+    missing, so the common case does no extra I/O. No fsync."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    mode = "w" if isinstance(data, str) else "wb"
+    try:
+        fh = open(tmp, mode)
+    except FileNotFoundError:
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        fh = open(tmp, mode)
+    with fh:
+        fh.write(data)
+    os.replace(tmp, path)
+
+
 @dataclass(frozen=True)
 class PubsubMessage:
     data: bytes
@@ -46,6 +63,18 @@ class PubsubMessage:
     message_id: str = ""
     publish_ts_us: int = 0  # µs since epoch (reference truncates to µs)
     region: str = "global"
+
+    @staticmethod
+    def from_record(rec: dict) -> PubsubMessage:
+        """The message a topic-log record (or ``pull_raw`` record) holds."""
+        return PubsubMessage(
+            data=base64.b64decode(rec["data_b64"]),
+            attributes=rec.get("attributes") or {},
+            ordering_key=rec.get("ordering_key", ""),
+            message_id=rec["message_id"],
+            publish_ts_us=rec["publish_ts_us"],
+            region=rec.get("region", "global"),
+        )
 
 
 @dataclass(frozen=True)
@@ -123,15 +152,9 @@ class FileBroker:
             # (a new sub sees every RETAINED message) intact.
             meta = self._load_topic_meta_locked(topic)
             state["acked_below"] = meta.get("compacted_below_seq", 0)
-            with open(self._sub_path(sub), "w") as fh:
-                json.dump(state, fh)
-
-    def delete_all(self) -> None:
-        import shutil
-
-        for d in ("topics", "subs"):
-            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-            os.makedirs(os.path.join(self.root, d), exist_ok=True)
+            # atomic: a torn sub file would veto compaction of every
+            # topic (_retention_floor_locked)
+            _write_atomic(self._sub_path(sub), json.dumps(state))
 
     # -- crash-safe sequence minting ---------------------------------------
     def _next_seq(self, d: str, repair: bool = True) -> int:
@@ -302,8 +325,7 @@ class FileBroker:
         state.pop("scan_pos", None)
         state.pop("deliver_pos", None)
         for g in state["lease_groups"]:
-            if len(g) > 2:
-                g[2] = 0
+            g[2] = 0
         state["cursor_token"] = tok
 
     def _retention_floor_locked(self, topic: str) -> int:
@@ -614,23 +636,13 @@ class FileBroker:
         if not os.path.exists(path):
             raise KeyError(f"no such subscription: {sub}")
         with open(path) as fh:
-            state = json.load(fh)
-        if "leases" in state:  # migrate the legacy per-id lease format
-            groups: dict[float, list[int]] = {}
-            for l in state.pop("leases").values():
-                groups.setdefault(l["expiry"], []).append(l["seq"])
-            state["lease_groups"] = [[e, ss] for e, ss in sorted(groups.items())]
-        state.setdefault("lease_groups", [])
-        return state
+            return json.load(fh)
 
     def _store_sub(self, sub: str, state: dict) -> None:
-        tmp = self._sub_path(sub) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            # json.dumps, not json.dump: only dumps uses the C encoder,
-            # and this state lists every leased seq (written under the
-            # broker lock on every pull and ack)
-            fh.write(json.dumps(state))
-        os.replace(tmp, self._sub_path(sub))
+        # json.dumps, not json.dump: only dumps uses the C encoder, and
+        # this state lists every leased seq (written under the broker
+        # lock on every pull and ack)
+        _write_atomic(self._sub_path(sub), json.dumps(state))
 
     @staticmethod
     def _expire_leases(state: dict, now: float) -> None:
@@ -643,8 +655,7 @@ class FileBroker:
             if g[0] > now and g[1]:
                 kept.append(g)
             elif g[1]:  # expired with outstanding seqs → redeliver
-                gb = g[2] if len(g) > 2 else 0
-                dp = gb if dp is None else min(dp, gb)
+                dp = g[2] if dp is None else min(dp, g[2])
         state["lease_groups"] = kept
         if dp is not None:
             state["deliver_pos"] = dp
@@ -683,17 +694,7 @@ class FileBroker:
         restricted to one region — the reference's per-region endpoint
         pulls, PubsubMicroBatchStream.scala:58-74)."""
         return [
-            ReceivedMessage(
-                ack_id=ack_id,
-                message=PubsubMessage(
-                    data=base64.b64decode(rec["data_b64"]),
-                    attributes=rec.get("attributes") or {},
-                    ordering_key=rec.get("ordering_key", ""),
-                    message_id=rec["message_id"],
-                    publish_ts_us=rec["publish_ts_us"],
-                    region=rec.get("region", "global"),
-                ),
-            )
+            ReceivedMessage(ack_id=ack_id, message=PubsubMessage.from_record(rec))
             for ack_id, rec in self.pull_raw(sub, max_messages, region)
         ]
 
@@ -814,8 +815,9 @@ class FileBroker:
                         else:
                             keep.append(s)
                     g[1] = keep
-                    gb = g[2] if len(g) > 2 else 0
-                    moved_start = gb if moved_start is None else min(moved_start, gb)
+                    moved_start = (
+                        g[2] if moved_start is None else min(moved_start, g[2])
+                    )
             if moved:
                 state["lease_groups"].append(
                     [now + seconds, moved, moved_start or 0]
@@ -853,7 +855,7 @@ class FileBroker:
         """num_unacked_messages_by_region equivalent
         (PubsubSubscriptionMonitor.scala:155-210). Leased-but-unacked
         messages still count as backlog, like the real metric. Scans and
-        parses the unacked log; only the dynamic-partition monitor needs
+        parses the unacked log; only dynamic partition planning needs
         the per-region split."""
         with self._lock():
             state = self._load_sub(sub)
@@ -870,17 +872,7 @@ class FileBroker:
 
     def topic_messages(self, topic: str) -> list[PubsubMessage]:
         """Test helper: the full committed topic log, in order."""
-        return [
-            PubsubMessage(
-                data=base64.b64decode(rec["data_b64"]),
-                attributes=rec.get("attributes") or {},
-                ordering_key=rec.get("ordering_key", ""),
-                message_id=rec["message_id"],
-                publish_ts_us=rec["publish_ts_us"],
-                region=rec.get("region", "global"),
-            )
-            for rec in self._read_log(topic)
-        ]
+        return [PubsubMessage.from_record(rec) for rec in self._read_log(topic)]
 
 
 class RealBrokerClient:
@@ -1019,12 +1011,6 @@ class RealBrokerClient:
                 "topic": self._topic_path(topic),
                 "ack_deadline_seconds": int(ack_deadline_s),
             }
-        )
-
-    def delete_all(self) -> None:
-        raise NotImplementedError(
-            "refusing to bulk-delete topics/subscriptions on a real "
-            "project; delete them explicitly via the admin API"
         )
 
     # -- publish ----------------------------------------------------------

@@ -29,7 +29,9 @@ Parity map to the reference (SURVEY.md §2.1):
          drain's last data batch still exists: Spark calls commit() only
          while it builds the next batch, and that batch carries the ack
   S6/S13 per-batch partition planning — static num_partitions, or
-         backlog-driven with per-region splits via BacklogMonitor. A
+         backlog-driven with per-region splits (the reader scans the
+         broker's per-region backlog where the reference polls Cloud
+         Monitoring, PubsubSubscriptionMonitor.scala). A
          batch first planned when no message is deliverable (the broker's
          unacked-and-unleased count is 0) plans no partitions, so the
          ack-only batch runs no tasks
@@ -85,11 +87,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .broker import FileBroker, PubsubMessage
-from .monitor import BacklogMonitor
+from .broker import FileBroker, _write_atomic
 from .options import (
+    PartitioningInfo,
     PubsubReadOptions,
     PubsubWriteOptions,
+    plan_partitioning,
     validate_read_options,
     validate_write_options,
 )
@@ -273,14 +276,6 @@ def _batch_to_ipc(batch):
     return sink.getvalue()
 
 
-def _write_atomic(path: str, data) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "wb") as fh:
-        fh.write(data)
-    os.replace(tmp, path)
-
-
 def _load_ipc(path: str):
     """``(file bytes, batches)`` of a cache copy. Raises on a lost,
     zero-length, truncated or non-IPC copy: an IPC file ends in a
@@ -419,16 +414,6 @@ class PubsubStreamReader(DataSourceStreamReader):
         # analysis/planning, and only the running stream's instance
         # drives the offset lifecycle.
         self._registered = False
-        self.monitor: BacklogMonitor | None = None
-        if self.opts.dynamic_partitioning:
-            self.monitor = BacklogMonitor(
-                self.broker,
-                self.opts.subscription,
-                self.opts,
-                refresh_interval_s=float(
-                    options.get("monitor_refresh_interval_seconds", 0)
-                ),
-            )
 
     def _ensure_registered(self) -> None:
         if not self._registered:
@@ -476,12 +461,10 @@ class PubsubStreamReader(DataSourceStreamReader):
             raise ValueError(f"corrupt pubsub offset state {path}: {e}") from e
 
     def _persist_state(self) -> None:
-        path = _offset_state_path(self.opts)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"planned": self._last, "committed": self._committed}, fh)
-        os.replace(tmp, path)
+        _write_atomic(
+            _offset_state_path(self.opts),
+            json.dumps({"planned": self._last, "committed": self._committed}),
+        )
 
     def _advance_to(self, n: int, committed: bool = False) -> None:
         """Monotone counter update + persistence (only on increase)."""
@@ -508,10 +491,21 @@ class PubsubStreamReader(DataSourceStreamReader):
         self._ensure_registered()
         return {"batch_id": self._committed}
 
-    def _base_partitions(self) -> int:
-        if self.monitor is not None:
-            return self.monitor.partitioning_info().total_partitions
-        return self.opts.num_partitions
+    def _partitioning(self) -> PartitioningInfo | None:
+        """The backlog-driven plan (S6/S13) when ``dynamic_partitioning``
+        is on, else None (static ``num_partitions``):
+        ``clamp(ceil(backlog / threshold), 1, max)`` partitions, split by
+        region when one region dominates the backlog
+        (PubsubSubscriptionMonitor.scala:136-210). One region scan per
+        call; the reference caches a Cloud Monitoring poll instead."""
+        if not self.opts.dynamic_partitioning:
+            return None
+        return plan_partitioning(
+            self.broker.backlog_by_region(self.opts.subscription),
+            threshold=self.opts.backlog_threshold,
+            max_partitions=self.opts.max_dynamic_partitions,
+            split_threshold=self.opts.region_split_threshold,
+        )
 
     def latestOffset(self) -> dict:
         # advance the synthetic counter by the number of capacity-sized
@@ -522,7 +516,8 @@ class PubsubStreamReader(DataSourceStreamReader):
         backlog = self.broker.backlog(self.opts.subscription)
         n = self._last
         if backlog > 0:
-            base = self._base_partitions()
+            info = self._partitioning()
+            base = info.total_partitions if info else self.opts.num_partitions
             capacity = base * self.opts.max_messages_per_partition
             max_units = max(1, self.opts.max_dynamic_partitions // base)
             units = min(max_units, max(1, -(-backlog // capacity)))
@@ -619,7 +614,7 @@ class PubsubStreamReader(DataSourceStreamReader):
         only job is that ack, and its tasks would pull nothing."""
         if self.broker.deliverable(self.opts.subscription) == 0:
             return []
-        info = self.monitor.partitioning_info() if self.monitor else None
+        info = self._partitioning()
         if info is None:
             regions = [None] * (self.opts.num_partitions * units)
         elif info.split_by_region:
@@ -700,8 +695,6 @@ class PubsubStreamReader(DataSourceStreamReader):
         self.registry.heartbeat(self.opts.subscription, self.stream_id)
 
     def stop(self) -> None:
-        if self.monitor is not None:
-            self.monitor.stop()
         if self._registered:
             self.registry.unregister(self.opts.subscription, self.stream_id)
 
@@ -971,18 +964,15 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
     def _record_committed(self, batch_id: int) -> None:
         if self.opts.sink_id is None:
             return
-        path = _sink_state_path(self.opts)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
+        _write_atomic(
+            _sink_state_path(self.opts),
+            json.dumps(
                 {
                     "last_batch": batch_id,
                     "ck_instance": _checkpoint_instance_id(self.opts),
-                },
-                fh,
-            )
-        os.replace(tmp, path)
+                }
+            ),
+        )
 
     def _gc_orphans(self) -> None:
         """Sweep THIS sink's leftover stage files (VERDICT r13 #5).

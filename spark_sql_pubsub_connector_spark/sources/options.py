@@ -22,7 +22,6 @@ DYNAMIC_PARTITIONING = "dynamic_partitioning"
 ORDERING_KEY = "ordering_key"
 BROKER_DIR = "broker_dir"  # fake-broker root (stands in for endPoint;
 # a real-client endpoint would come from region_endpoint() below)
-ACK_DEADLINE_SECONDS = "ack_deadline_seconds"
 BACKLOG_THRESHOLD = "backlog_threshold"
 MAX_DYNAMIC_PARTITIONS = "max_dynamic_partitions"
 REGION_SPLIT_THRESHOLD = "region_split_threshold"
@@ -49,7 +48,6 @@ DEFAULT_MAX_MESSAGES_PER_PARTITION = 1000  # package.scala:33
 DEFAULT_BACKLOG_THRESHOLD = 10_000  # PubsubSubscriptionMonitor.scala:33-35
 DEFAULT_MAX_DYNAMIC_PARTITIONS = 256  # PubsubSubscriptionMonitor.scala:26-31
 DEFAULT_REGION_SPLIT_THRESHOLD = 0.7  # package.scala:118
-DEFAULT_ACK_DEADLINE_SECONDS = 60.0
 DEFAULT_PUBLISH_BATCH_SIZE = 100
 # The reference persists each pulled batch at MEMORY_AND_DISK_SER_2 —
 # two copies on distinct executors (PubsubPartitionReader.scala:57) —
@@ -105,7 +103,22 @@ def _bool(options: dict, key: str, default: bool = False) -> bool:
     raw = options.get(key)
     if raw is None:
         return default
-    return str(raw).strip().lower() in ("true", "1", "yes")
+    v = str(raw).strip().lower()
+    if v in ("true", "1", "yes"):
+        return True
+    if v in ("false", "0", "no"):
+        return False
+    raise ValueError(f"Option '{key}' must be a boolean, got {raw!r}")
+
+
+def _float(options: dict, key: str, default: float) -> float:
+    raw = options.get(key)
+    if raw is None:
+        return default
+    try:
+        return float(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"Option '{key}' must be a number, got {raw!r}") from None
 
 
 @dataclass(frozen=True)
@@ -121,7 +134,6 @@ class PubsubReadOptions:
     backlog_threshold: int = DEFAULT_BACKLOG_THRESHOLD
     max_dynamic_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS
     region_split_threshold: float = DEFAULT_REGION_SPLIT_THRESHOLD
-    ack_deadline_seconds: float = DEFAULT_ACK_DEADLINE_SECONDS
     # Stable consumer identity: a restarted query passing the same
     # stream_id (e.g. its checkpoint path) re-claims the subscription
     # immediately instead of waiting out the registry's crash TTL.
@@ -138,10 +150,6 @@ class PubsubReadOptions:
         # fully-qualified path, as surfaced in the `subscription` column
         # (PubsubPartitionReader.scala:87)
         return f"projects/{self.project_id}/subscriptions/{self.subscription}"
-
-    @property
-    def capacity_per_batch(self) -> int:
-        return self.num_partitions * self.max_messages_per_partition
 
 
 @dataclass(frozen=True)
@@ -235,10 +243,7 @@ def validate_read_options(options: dict) -> PubsubReadOptions:
             options, MAX_DYNAMIC_PARTITIONS, DEFAULT_MAX_DYNAMIC_PARTITIONS, minimum=32
         ),
         region_split_threshold=max(
-            0.5, float(options.get(REGION_SPLIT_THRESHOLD, DEFAULT_REGION_SPLIT_THRESHOLD))
-        ),
-        ack_deadline_seconds=float(
-            options.get(ACK_DEADLINE_SECONDS, DEFAULT_ACK_DEADLINE_SECONDS)
+            0.5, _float(options, REGION_SPLIT_THRESHOLD, DEFAULT_REGION_SPLIT_THRESHOLD)
         ),
         stream_id=(
             str(options[STREAM_ID])

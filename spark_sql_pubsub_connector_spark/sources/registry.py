@@ -21,6 +21,8 @@ import json
 import os
 import time
 
+from .broker import _write_atomic
+
 # An entry is considered live while its stream heartbeats (every batch
 # via commit/latestOffset). A crashed stream's claim expires after this,
 # allowing restart-from-checkpoint to reclaim the subscription. The
@@ -47,10 +49,7 @@ class StreamRegistry:
                     with open(self.path) as fh:
                         state = json.load(fh)
                 yield state
-                tmp = self.path + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(state, fh)
-                os.replace(tmp, self.path)
+                _write_atomic(self.path, json.dumps(state))
             finally:
                 fcntl.flock(lk, fcntl.LOCK_UN)
 

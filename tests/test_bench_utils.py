@@ -12,7 +12,6 @@ from bench import (
     HEADLINE_BUDGET,
     headline_line,
     latest_prior_bench,
-    prev_calibration_fallback,
 )
 
 
@@ -169,25 +168,6 @@ def test_headline_line_terminal_fallback_never_overflows():
     # per-query detail is what overflowed; its size is declared instead
     assert "queries" not in parsed
     assert parsed["queries_truncated"] > 60
-
-
-def test_prev_calibration_fallback_same_run_only(tmp_path):
-    """Rounds ≤7 shed calibration from the headline; the fallback may
-    recover it from BENCH_DIAG.json ONLY when the diag is provably the
-    same run as the prior driver artifact (identical cold timings) —
-    a stale diag would normalize against the wrong host speed."""
-    prev_queries = {"q01": 1.23, "q17": 3.21}
-    cal = {"cpu_probe_s": 0.28, "shuffle_probe_s": 0.35}
-    diag = tmp_path / "BENCH_DIAG.json"
-    diag.write_text(json.dumps({"queries": prev_queries, "calibration": cal}))
-    assert prev_calibration_fallback(str(tmp_path), prev_queries) == cal
-    # timings differ → different run → no fallback
-    assert prev_calibration_fallback(str(tmp_path), {"q01": 9.9}) == {}
-    # missing file → no fallback
-    assert prev_calibration_fallback(str(tmp_path / "nope"), prev_queries) == {}
-    # malformed diag → no fallback
-    diag.write_text("{not json")
-    assert prev_calibration_fallback(str(tmp_path), prev_queries) == {}
 
 
 def test_headline_line_carries_connector_error():

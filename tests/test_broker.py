@@ -106,7 +106,6 @@ class TestRealClientParity:
         "deliverable",
         "backlog_by_region",
         "topic_messages",
-        "delete_all",
     )
 
     def test_dependency_absent_in_container(self):
@@ -542,3 +541,59 @@ def test_subscription_created_after_compaction_starts_at_floor(
     assert s2["acked"] == []
     # and the topic still compacts (floor would have stuck at 0 before)
     assert broker.compact_topic("t")["cut_messages"] == 2
+
+
+def test_torn_subscription_create_leaves_compaction_working(
+    broker, tmp_path, monkeypatch
+):
+    """A subscription file torn mid-write used to stay behind unparseable,
+    and the retention floor reads any unparseable sub file as 0, so
+    compaction stopped for every topic on the broker. The file is now
+    written through a tmp file and a rename: a write that fails partway
+    leaves no ``subs/*.json`` behind, and other topics still compact."""
+    import builtins
+    import json
+    import os
+
+    from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
+
+    broker.publish("t", _msgs(4))
+    got = broker.pull("s", 4)
+    broker.acknowledge("s", [m.ack_id for m in got])  # s: acked_below=4
+
+    class TornFile:
+        """Writes half of the first chunk, then fails like a full disk."""
+
+        def __init__(self, fh):
+            self._fh = fh
+
+        def write(self, data):
+            self._fh.write(data[: len(data) // 2])
+            self._fh.flush()
+            raise OSError("no space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._fh.close()
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        fh = builtins.open(path, mode, *args, **kwargs)
+        if os.sep + "subs" + os.sep in str(path) and "w" in mode:
+            return TornFile(fh)
+        return fh
+
+    monkeypatch.setattr(broker_mod, "open", torn_open, raising=False)
+    with pytest.raises(OSError, match="no space"):
+        broker.create_subscription("other", "t2")
+    monkeypatch.undo()
+
+    subs_dir = os.path.join(str(tmp_path), "subs")
+    for fn in os.listdir(subs_dir):
+        if fn.endswith(".json"):
+            with open(os.path.join(subs_dir, fn)) as fh:
+                json.load(fh)  # every subscription file parses
+    stats = broker.compact_topic("t")
+    assert stats["floor_seq"] == 4
+    assert stats["cut_messages"] == 4

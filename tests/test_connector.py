@@ -435,7 +435,6 @@ def test_dynamic_partitioning_region_split(spark, broker_dir):
         }
     )
     try:
-        reader.monitor.refresh()
         start, end = reader.initialOffset(), reader.latestOffset()
         parts = reader.partitions(start, end)
         regions = [p.value.region for p in parts]
@@ -1403,7 +1402,7 @@ def test_replan_after_restart_reuses_the_persisted_plan(broker, broker_dir):
     r2 = _reader(broker_dir, **opts)
     try:
         replanned = r2.partitions(start, end)
-        assert len(replanned) == 2  # the monitor alone would now say 7
+        assert len(replanned) == 2  # a fresh plan would now say 7
         assert sum(len(_read_rows(r2, p)) for p in replanned) == 1500
         r2.commit(end)
         assert broker.backlog("s") == 5000

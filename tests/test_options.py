@@ -59,6 +59,28 @@ def test_read_range_violations_throw(key, bad):
         validate_read_options({**BASE_READ, key: bad})
 
 
+@pytest.mark.parametrize(
+    "key,bad",
+    [
+        ("dynamic_partitioning", "ture"),
+        ("dynamic_partitioning", ""),
+        ("region_split_threshold", "abc"),
+    ],
+)
+def test_read_malformed_values_name_the_option(key, bad):
+    with pytest.raises(ValueError, match=key):
+        validate_read_options({**BASE_READ, key: bad})
+
+
+@pytest.mark.parametrize(
+    "raw,want",
+    [("false", False), ("No", False), ("0", False), ("TRUE", True), ("yes", True), ("1", True)],
+)
+def test_read_bool_spellings(raw, want):
+    o = validate_read_options({**BASE_READ, "dynamic_partitioning": raw})
+    assert o.dynamic_partitioning is want
+
+
 def test_write_parse_and_ordering_key():
     o = validate_write_options({**BASE_WRITE, "ordering_key": "my_key"})
     assert o.ordering_key == "my_key"
@@ -96,33 +118,44 @@ def test_plan_partitioning_region_split():
 
 
 def test_batches_to_drain_formula(tmp_path):
-    """S5: availableNow batch estimate = max(ceil(backlog/capacity), 1)
-    (PubsubSubscriptionMonitor.scala:96-113 semantics)."""
+    """S5: each latestOffset advances the offset by
+    ceil(backlog / capacity) units, capacity = partitions × max messages
+    (PubsubSubscriptionMonitor.scala:96-113 semantics), capped at
+    max_dynamic_partitions // partitions units."""
     from spark_sql_pubsub_connector_spark.sources.broker import (
         FileBroker,
         PubsubMessage,
     )
-    from spark_sql_pubsub_connector_spark.sources.monitor import BacklogMonitor
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        PubsubStreamReader,
+    )
 
     b = FileBroker(str(tmp_path / "broker"))
     b.create_topic("t")
     b.create_subscription("s", "t")
-    opts = validate_read_options(
+    reader = PubsubStreamReader(
         {
             "project_id": "p",
             "subscription": "s",
             "broker_dir": str(tmp_path / "broker"),
             "num_partitions": "4",
             "max_messages_per_partition": "10",
+            "max_dynamic_partitions": "32",
         }
     )
-    mon = BacklogMonitor(b, "s", opts)
-    mon.refresh()
-    assert mon.batches_to_drain(40) == 1  # empty backlog -> 1 batch
-    b.publish("t", [PubsubMessage(data=b"x", publish_ts_us=1) for _ in range(95)])
-    mon.refresh()
-    assert mon.batches_to_drain(40) == 3  # ceil(95/40)
-    assert mon.batches_to_drain(100) == 1
+
+    def msgs(n):
+        return [PubsubMessage(data=b"x", publish_ts_us=1) for _ in range(n)]
+
+    try:
+        assert reader.initialOffset() == {"batch_id": 0}
+        assert reader.latestOffset() == {"batch_id": 0}  # empty backlog
+        b.publish("t", msgs(95))
+        assert reader.latestOffset() == {"batch_id": 3}  # ceil(95/40)
+        b.publish("t", msgs(905))  # ceil(1000/40) = 25 units > 32 // 4
+        assert reader.latestOffset() == {"batch_id": 3 + 8}
+    finally:
+        reader.stop()
 
 
 def test_region_endpoint_mapping():
@@ -183,30 +216,41 @@ def test_log_retention_bytes_option():
         validate_write_options(dict(base, log_retention_bytes="nope"))
 
 
-def test_monitor_stop_during_inflight_tick_is_final():
-    """r15 review: Timer.cancel() is a no-op once the timer has fired,
-    so a stop() landing while _tick executes used to be undone by the
-    tick's unconditional finally-reschedule — the monitor refreshed
-    forever after stop. The reschedule now checks the stopped flag
-    under the lock. Modeled deterministically: stop() first, then the
-    in-flight tick completes — no new timer may appear."""
-    import tempfile
-
-    from spark_sql_pubsub_connector_spark.sources.broker import FileBroker
-    from spark_sql_pubsub_connector_spark.sources.monitor import (
-        BacklogMonitor,
+def test_reader_reads_only_declared_options(tmp_path):
+    """Every key the stream reader reads from its options map is one
+    declared in options.py, so the option surface is stated in one
+    place and validated there."""
+    from spark_sql_pubsub_connector_spark.sources import options as options_mod
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        PubsubStreamReader,
     )
 
-    root = tempfile.mkdtemp()
-    b = FileBroker(root)
-    b.create_topic("t")
-    b.create_subscription("s", "t")
-    opts = validate_read_options(
-        {"project_id": "p", "subscription": "s", "broker_dir": root}
+    declared = {
+        v
+        for k, v in vars(options_mod).items()
+        if k.isupper() and not k.startswith("DEFAULT_") and isinstance(v, str)
+    }
+
+    class Recording(dict):
+        def __init__(self, *args):
+            super().__init__(*args)
+            self.read: set[str] = set()
+
+        def get(self, key, default=None):
+            self.read.add(key)
+            return super().get(key, default)
+
+        def __getitem__(self, key):
+            self.read.add(key)
+            return super().__getitem__(key)
+
+        def __contains__(self, key):
+            self.read.add(key)
+            return super().__contains__(key)
+
+    opts = Recording(
+        {**BASE_READ, "broker_dir": str(tmp_path), "dynamic_partitioning": "true"}
     )
-    mon = BacklogMonitor(b, "s", opts, auto_refresh=True)
-    assert mon._timer is not None
-    mon.stop()  # cancels the pending timer
-    assert mon._timer is None
-    mon._tick()  # the tick that had already fired before cancel()
-    assert mon._timer is None, "stopped monitor was rescheduled"
+    PubsubStreamReader(opts).stop()
+    assert "dynamic_partitioning" in opts.read
+    assert opts.read <= declared, sorted(opts.read - declared)
