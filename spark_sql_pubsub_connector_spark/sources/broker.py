@@ -1145,7 +1145,11 @@ class RealBrokerClient:
     def deliverable(self, sub: str) -> int:
         """The service reports no lease counts, so this is the backlog:
         an upper bound, which never plans an empty batch over messages
-        a pull could lease."""
+        a pull could lease. The count also sizes each plan (at most
+        ceil(deliverable / max_messages_per_partition) pulls), and Cloud
+        Monitoring reports it with a lag. An undercount plans fewer
+        pulls than the batch could fill: the messages left over wait
+        one batch, none is lost."""
         return self.backlog(sub)
 
     def backlog_by_region(self, sub: str) -> dict[str, int]:

@@ -31,10 +31,15 @@ Parity map to the reference (SURVEY.md §2.1):
   S6/S13 per-batch partition planning — static num_partitions, or
          backlog-driven with per-region splits (the reader scans the
          broker's per-region backlog where the reference polls Cloud
-         Monitoring, PubsubSubscriptionMonitor.scala). A
-         batch first planned when no message is deliverable (the broker's
-         unacked-and-unleased count is 0) plans no partitions, so the
-         ack-only batch runs no tasks
+         Monitoring, PubsubSubscriptionMonitor.scala). Deliberate
+         deviation: the reference plans num_partitions pulls every
+         batch (PubsubMicroBatchStream.scala:58-74); here a region-less
+         plan holds at most ceil(deliverable / max_messages_per_partition)
+         pulls, deliverable being the broker's unacked-and-unleased
+         count. Every planned partition is a Spark task with a fixed
+         worker cost, and a pull past that count returns nothing. A
+         batch with nothing deliverable, such as the ack-only batch
+         after a drain, plans no partitions and runs no tasks
   S7/S8  per-task pull of ≤ max_messages_per_partition messages,
          decoded to the 7-column row (PubsubPartitionReader.scala)
   S9     deterministic replay: first pull persists the partition's
@@ -65,6 +70,7 @@ evicted on commit exactly like the reference's RDD blocks.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import uuid
@@ -97,6 +103,8 @@ from .options import (
     validate_write_options,
 )
 from .registry import StreamRegistry
+
+_log = logging.getLogger(__name__)
 
 _PART_SUFFIX = ".arrow"  # replay-cache part files (Arrow IPC)
 _PLAN_FILE = "plan.json"  # a batch's partition plan, beside its parts
@@ -372,6 +380,7 @@ def _pull_or_replay(payload: _PartitionPayload):
         if source != payload.cache_file:
             # served from a replica (or a legacy copy): re-heal the
             # primary and every other missing/corrupt CONFIGURED copy
+            healed = []
             for path in configured:
                 if path == source:
                     continue
@@ -379,6 +388,11 @@ def _pull_or_replay(payload: _PartitionPayload):
                     _load_ipc(path)
                 except (OSError, ValueError, pa.ArrowException):
                     _write_atomic(path, data)
+                    healed.append(path)
+            if healed:
+                _log.warning(
+                    "pubsub replay cache: replayed %s, re-healed %s", source, healed
+                )
         yield from batches  # an empty partition stores none
         return
 
@@ -436,12 +450,20 @@ class PubsubStreamReader(DataSourceStreamReader):
             os.path.join(rep, sub)
             for rep in _replica_root_dirs(self.opts)
         ]
+        purged = []
         for root in roots:
             if not os.path.isdir(root):
                 continue
             for d in os.listdir(root):
                 if d != own:
-                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+                    path = os.path.join(root, d)
+                    shutil.rmtree(path, ignore_errors=True)
+                    purged.append(path)
+        if purged:
+            _log.info(
+                "subscription %s: purged other streams' replay caches, unacked: %s",
+                self.opts.subscription, purged,
+            )
 
     # -- offsets (S4/S5) ---------------------------------------------------
     def _restore_state(self) -> dict:
@@ -577,7 +599,7 @@ class PubsubStreamReader(DataSourceStreamReader):
         if found is not None:
             regions = found[1]
         else:
-            regions = self._plan(units)
+            regions = self._plan(units, batch_key)
             data = json.dumps(regions).encode()
             for d in replica_dirs + [cache_dir]:  # primary last, as for parts
                 _write_atomic(os.path.join(d, _PLAN_FILE), data)
@@ -604,29 +626,54 @@ class PubsubStreamReader(DataSourceStreamReader):
             for i, region in enumerate(regions)
         ]
 
-    def _plan(self, units: int) -> list[str | None]:
+    def _plan(self, units: int, batch_key: str) -> list[str | None]:
         """The region of each partition of a batch of ``units`` capacity
         units (None pulls from every region), at most
         ``max_dynamic_partitions`` of them.
 
-        Empty when no message is deliverable: Spark acks a batch only
-        while it builds the next one, so a drain ends with a batch whose
-        only job is that ack, and its tasks would pull nothing."""
-        if self.broker.deliverable(self.opts.subscription) == 0:
+        A region-less plan has ``num_partitions × units`` partitions
+        (``total_partitions × units`` under dynamic partitioning), capped
+        at the pulls the deliverable backlog can fill:
+        ``ceil(deliverable / max_messages_per_partition)``. Every planned
+        partition is a Spark task with a fixed cost, and a pull past the
+        deliverable count returns nothing. So a batch with nothing
+        deliverable plans no partitions: Spark acks a batch only while
+        it builds the next one, so a drain ends with a batch whose only
+        job is that ack.
+
+        A region-split plan keeps its per-region counts, since its pulls
+        are pinned to a region; the regions take turns in the list, so
+        the ``max_dynamic_partitions`` cut leaves every region at least
+        one partition."""
+        deliverable = self.broker.deliverable(self.opts.subscription)
+        if deliverable == 0:
+            _log.debug("batch %s: nothing deliverable, planned 0 partitions", batch_key)
             return []
         info = self._partitioning()
-        if info is None:
-            regions = [None] * (self.opts.num_partitions * units)
-        elif info.split_by_region:
+        if info is not None and info.split_by_region:
             # region-aware split (PubsubMicroBatchStream.scala:58-74):
             # each region's partitions pull with a region-pinned
             # "endpoint" so a dominant region gets dedicated tasks
             regions = [
-                r.region for r in info.by_region for _ in range(r.num_partitions * units)
+                region
+                for _, region in sorted(
+                    (i, r.region)
+                    for r in info.by_region
+                    for i in range(r.num_partitions * units)
+                )
             ]
+            uncapped = len(regions)
         else:
-            regions = [None] * (info.total_partitions * units)
-        return regions[: self.opts.max_dynamic_partitions]
+            base = info.total_partitions if info else self.opts.num_partitions
+            uncapped = base * units
+            fill = -(-deliverable // self.opts.max_messages_per_partition)
+            regions = [None] * min(uncapped, fill)
+        regions = regions[: self.opts.max_dynamic_partitions]
+        _log.debug(
+            "batch %s: %d deliverable, planned %d partitions (%d uncapped)",
+            batch_key, deliverable, len(regions), uncapped,
+        )
+        return regions
 
     # -- executor read (S7/S8/S9) ------------------------------------------
     def read(self, partition: InputPartition):

@@ -416,3 +416,56 @@ def test_backlog_and_deliverable_counts_match_a_scan(tmp_path_factory, ops):
             want = b.deliverable(s)
             assert len(b.pull(s, 10**6)) == want
             assert b.deliverable(s) == 0
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    backlog=st.integers(0, 60),
+    leased=st.integers(0, 60),
+    num_partitions=st.integers(1, 6),
+    per_pull=st.integers(1, 12),
+)
+@example(backlog=25, leased=0, num_partitions=4, per_pull=10)
+@example(backlog=25, leased=15, num_partitions=4, per_pull=10)
+def test_plan_holds_only_the_pulls_the_deliverable_backlog_can_fill(
+    tmp_path_factory, backlog, leased, num_partitions, per_pull
+):
+    """A static plan has min(num_partitions × units,
+    ceil(deliverable / max_messages_per_partition)) partitions. Its
+    reads take min(deliverable, capacity) rows, and a replay yields the
+    same rows."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        PubsubStreamReader,
+    )
+
+    leased = min(leased, backlog)
+    b = _mk(tmp_path_factory.mktemp("plan"), backlog, deadline=600)
+    assert len(b.pull("s", leased)) == leased  # another consumer's leases
+    reader = PubsubStreamReader(
+        {
+            "project_id": "p",
+            "subscription": "s",
+            "broker_dir": b.root,
+            "num_partitions": str(num_partitions),
+            "max_messages_per_partition": str(per_pull),
+        }
+    )
+
+    def read_all(parts):
+        return [
+            [row for batch in reader.read(p) for row in batch.to_pylist()]
+            for p in parts
+        ]
+
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        units = max(1, end["batch_id"] - start["batch_id"])
+        deliverable = backlog - leased
+        parts = reader.partitions(start, end)
+        assert len(parts) == min(num_partitions * units, -(-deliverable // per_pull))
+        first = read_all(parts)
+        capacity = num_partitions * units * per_pull
+        assert sum(map(len, first)) == min(deliverable, capacity)
+        assert read_all(parts) == first
+    finally:
+        reader.stop()

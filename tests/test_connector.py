@@ -12,6 +12,7 @@ file-backed fake broker:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import time
@@ -1338,15 +1339,19 @@ def test_legacy_jsonl_cache_copy_fails_loudly(broker, broker_dir):
 def test_empty_partition_cache_file_is_small(broker, broker_dir):
     """An empty partition still writes its cache file (the replay must
     find it), but only schema and footer: well under the 4 KiB floor
-    below which a leftover cache file counts as holding no data."""
+    below which a leftover cache file counts as holding no data. The
+    plan holds only pulls the deliverable backlog can fill, so the
+    partition is emptied by another consumer leasing the messages
+    between planning and the read."""
     _publish_canonical(broker, 5)
     reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
     try:
         parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
-        assert [len(_read_rows(reader, p)) for p in parts] == [5, 0]
-        empty = parts[1].value.cache_file
+        assert len(FileBroker(broker_dir).pull("s", 10)) == 5
+        assert [len(_read_rows(reader, p)) for p in parts] == [0]
+        empty = parts[0].value.cache_file
         assert 0 < os.path.getsize(empty) < 4096
-        assert _read_rows(reader, parts[1]) == []  # replays as empty
+        assert _read_rows(reader, parts[0]) == []  # replays as empty
     finally:
         reader.stop()
 
@@ -1376,38 +1381,46 @@ def test_commit_acks_batch_in_one_broker_call(broker, broker_dir, monkeypatch):
         reader.stop()
 
 
-def test_replan_after_restart_reuses_the_persisted_plan(broker, broker_dir):
-    """With dynamic partitioning the partition count follows the backlog
-    at planning time. A batch re-planned after a restart, once more
-    messages were published, must rebuild the SAME partitions: extra
-    partitions would pull fresh messages into the planned batch, and
-    commit() would ack them even if a sink skips the batch as already
-    committed."""
-    opts = dict(
-        num_partitions=1,
-        max_messages_per_partition=1000,
-        dynamic_partitioning="true",
-        backlog_threshold=1000,
-        stream_id="fixed",
-    )
-    broker.publish("t", [PubsubMessage(data=b"a", publish_ts_us=1)] * 1500)
-    r1 = _reader(broker_dir, **opts)
-    start, end = r1.initialOffset(), r1.latestOffset()
-    parts = r1.partitions(start, end)
-    assert len(parts) == 2  # ceil(1500 / 1000)
-    assert sum(len(_read_rows(r1, p)) for p in parts) == 1500
-    r1.stop()  # crash before commit
+def test_replan_after_restart_reuses_the_persisted_plan(tmp_path):
+    """The partition count follows the backlog at planning time, under
+    dynamic partitioning and under the static count's deliverable cap.
+    A batch re-planned after a restart, once more messages were
+    published, must rebuild the SAME partitions: extra partitions would
+    pull fresh messages into the planned batch, and commit() would ack
+    them even if a sink skips the batch as already committed."""
+    modes = {
+        # a fresh plan would now say
+        # min(ceil(6500 / 1000) × 1, ceil(5000 deliverable / 1000)) = 5
+        "dynamic": dict(
+            num_partitions=1, dynamic_partitioning="true", backlog_threshold=1000
+        ),
+        # a fresh plan would now say min(4 × 1, ceil(5000 / 1000)) = 4
+        "static": dict(num_partitions=4),
+    }
+    for name, mode in modes.items():
+        broker_dir = str(tmp_path / name)
+        broker = FileBroker(broker_dir)
+        broker.create_topic("t")
+        broker.create_subscription("s", "t", ack_deadline_s=300)
+        opts = dict(mode, max_messages_per_partition=1000, stream_id="fixed")
+        broker.publish("t", [PubsubMessage(data=b"a", publish_ts_us=1)] * 1500)
+        r1 = _reader(broker_dir, **opts)
+        start, end = r1.initialOffset(), r1.latestOffset()
+        parts = r1.partitions(start, end)
+        assert len(parts) == 2, name  # ceil(1500 / 1000)
+        assert sum(len(_read_rows(r1, p)) for p in parts) == 1500
+        r1.stop()  # crash before commit
 
-    broker.publish("t", [PubsubMessage(data=b"b", publish_ts_us=1)] * 5000)
-    r2 = _reader(broker_dir, **opts)
-    try:
-        replanned = r2.partitions(start, end)
-        assert len(replanned) == 2  # a fresh plan would now say 7
-        assert sum(len(_read_rows(r2, p)) for p in replanned) == 1500
-        r2.commit(end)
-        assert broker.backlog("s") == 5000
-    finally:
-        r2.stop()
+        broker.publish("t", [PubsubMessage(data=b"b", publish_ts_us=1)] * 5000)
+        r2 = _reader(broker_dir, **opts)
+        try:
+            replanned = r2.partitions(start, end)
+            assert len(replanned) == 2, name  # a fresh plan would be larger
+            assert sum(len(_read_rows(r2, p)) for p in replanned) == 1500
+            r2.commit(end)
+            assert broker.backlog("s") == 5000
+        finally:
+            r2.stop()
 
 
 def test_ack_only_batch_plans_no_partitions_even_after_restart(broker, broker_dir):
@@ -1458,6 +1471,123 @@ def test_batch_planned_over_leased_backlog_is_empty(broker, broker_dir):
         reader.stop()
 
 
+_DS_LOGGER = "spark_sql_pubsub_connector_spark.sources.datasource"
+
+
+def test_plan_holds_only_the_pulls_the_backlog_can_fill(broker, broker_dir, caplog):
+    """num_partitions is an upper bound: 25 messages at 10 per pull plan
+    3 partitions, not 4, and every planned partition reads rows. The
+    first planning logs the batch key, the deliverable count, and the
+    planned and uncapped partition counts."""
+    caplog.set_level(logging.DEBUG, logger=_DS_LOGGER)
+    _publish_canonical(broker, 25)
+    reader = _reader(broker_dir, num_partitions=4, max_messages_per_partition=10)
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        parts = reader.partitions(start, end)
+        counts = [len(_read_rows(reader, p)) for p in parts]
+        assert counts == [10, 10, 5]
+        key = f"b{start['batch_id']}-{end['batch_id']}"
+        assert f"batch {key}: 25 deliverable, planned 3 partitions (4 uncapped)" in (
+            caplog.messages
+        )
+        reader.commit(end)
+        assert broker.backlog("s") == 0
+    finally:
+        reader.stop()
+
+
+def test_plan_counts_only_deliverable_messages(broker, broker_dir):
+    """Messages another consumer holds under lease are backlog that no
+    pull of this batch can lease: with 15 of 25 leased, one pull holds
+    the other 10."""
+    _publish_canonical(broker, 25)
+    assert len(FileBroker(broker_dir).pull("s", 15)) == 15
+    reader = _reader(broker_dir, num_partitions=4, max_messages_per_partition=10)
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        assert [len(_read_rows(reader, p)) for p in parts] == [10]
+    finally:
+        reader.stop()
+
+
+def test_region_split_cap_keeps_a_minority_region(broker_dir):
+    """Under max_dynamic_partitions the regions take turns in the plan:
+    a hot region above the split threshold cannot crowd out a small
+    region, which would then never be pulled while the hot one stays
+    hot."""
+    b = FileBroker(broker_dir)
+    b.create_topic("t")
+    b.create_subscription("s", "t", ack_deadline_s=300)
+    b.publish(
+        "t",
+        [PubsubMessage(data=b"a", publish_ts_us=1, region="asia-east1")] * 33_000
+        + [PubsubMessage(data=b"u", publish_ts_us=1, region="us-east1")] * 100,
+    )
+    reader = _reader(
+        broker_dir,
+        dynamic_partitioning="true",
+        max_dynamic_partitions=32,
+        max_messages_per_partition=1000,
+    )
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        regions = [p.value.region for p in parts]
+        assert len(regions) == 32
+        assert regions.count("us-east1") == regions.count("asia-east1") == 16
+        first_us = regions.index("us-east1")
+        rows = _read_rows(reader, parts[first_us])
+        assert len(rows) == 100 and {r[4] for r in rows} == {b"u"}
+    finally:
+        reader.stop()
+
+
+def test_replica_heal_is_logged(broker, broker_dir, caplog):
+    """A replay served from a replica re-heals the lost primary and says
+    so at WARNING, naming both copies."""
+    _publish_canonical(broker, 10)
+    reader = _reader(
+        broker_dir,
+        num_partitions=1,
+        max_messages_per_partition=10,
+        replay_cache_replicas=2,
+    )
+    try:
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+        assert len(_read_rows(reader, parts[0])) == 10
+        payload = parts[0].value
+        os.remove(payload.cache_file)
+        with caplog.at_level(logging.WARNING, logger=_DS_LOGGER):
+            assert len(_read_rows(reader, parts[0])) == 10
+        (rec,) = [r for r in caplog.records if r.levelno == logging.WARNING]
+        assert payload.replica_files[0] in rec.getMessage()
+        assert payload.cache_file in rec.getMessage()
+    finally:
+        reader.stop()
+
+
+def test_foreign_cache_purge_is_logged(broker, broker_dir, caplog):
+    """Registration purges a dead stream's replay cache unacked and says
+    so at INFO, naming the purged dir."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import _read_cache_dir
+
+    _publish_canonical(broker, 10)
+    r1 = _reader(broker_dir, num_partitions=1, stream_id="run1")
+    parts = r1.partitions(r1.initialOffset(), r1.latestOffset())
+    assert len(_read_rows(r1, parts[0])) == 10
+    r1.stop()  # crash before commit
+    r2 = _reader(broker_dir, num_partitions=1, stream_id="run2")
+    try:
+        with caplog.at_level(logging.INFO, logger=_DS_LOGGER):
+            r2.initialOffset()
+        purged = os.path.join(_read_cache_dir(r1.opts), "run1")
+        assert not os.path.exists(purged)
+        assert [r.levelno for r in caplog.records] == [logging.INFO]
+        assert purged in caplog.records[0].getMessage()
+    finally:
+        r2.stop()
+
+
 def test_relay_through_ack_only_batch_is_exactly_once(spark, broker, broker_dir, tmp_path):
     """pubsub -> pubsub: the batch after the last data batch plans no
     partitions, and the sink still commits it. The output holds every
@@ -1498,6 +1628,56 @@ def test_relay_through_ack_only_batch_is_exactly_once(spark, broker, broker_dir,
         assert json.load(fh)["last_batch"] == last_batch
     datas = [m.data for m in broker.topic_messages("t2")]
     assert sorted(datas) == sorted(f"Test Message: {i}".encode() for i in range(60))
+
+
+def test_relay_of_a_backlog_under_one_pull_plans_one_partition(
+    spark, broker, broker_dir, tmp_path
+):
+    """pubsub -> pubsub over a backlog smaller than one pull: the data
+    batch plans one partition, not num_partitions, so the query runs one
+    source task where three would pull nothing. Two availableNow runs on
+    one checkpoint: the first leaves its batch uncommitted on the source
+    side (Spark commits it while building the next batch), so its
+    persisted plan is still on disk; the second acks it. The output holds
+    every message exactly once."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _stream_cache_dir,
+    )
+    from spark_sql_pubsub_connector_spark.sources.options import (
+        validate_read_options,
+    )
+
+    _publish_canonical(broker, 40)
+    broker.create_topic("t2")
+    ck = str(tmp_path / "ck_one_pull")
+
+    def run():
+        src = read_stream(spark, broker_dir, "s", num_partitions=4, stream_id="relay1")
+        q = write_stream(
+            src.select("data", "attributes"),
+            broker_dir,
+            "t2",
+            ck,
+            trigger_available_now=True,  # sink_id defaults to ck
+        )
+        assert q.awaitTermination(120)
+
+    run()
+    cache = _stream_cache_dir(
+        validate_read_options(
+            {"project_id": "test-project", "subscription": "s", "broker_dir": broker_dir}
+        ),
+        "relay1",
+    )
+    (batch_dir,) = os.listdir(cache)
+    with open(os.path.join(cache, batch_dir, "plan.json")) as fh:
+        assert json.load(fh) == [None]
+    assert broker.backlog("s") == 40  # leased, acked by the next batch
+
+    run()
+    assert broker.backlog("s") == 0
+    datas = [m.data for m in broker.topic_messages("t2")]
+    assert sorted(datas) == sorted(f"Test Message: {i}".encode() for i in range(40))
 
 
 def test_corrupt_offset_state_fails_loudly(broker, broker_dir):
