@@ -926,12 +926,16 @@ def _ivf_dists_arr_guarded() -> str:
     (plans/r16/q49_ivf_assign_before.txt, node (3)). The ``size()``
     guard's only job is the second reference, which keeps ``q`` a
     materialized attribute computed once per row; it never changes the
-    value — for non-null ``q`` the condition is false, for null ``q``
-    it is null, and both take the else branch, byte-identical to the
-    unguarded expression (r16; interleaved A/B in
-    ``R16AB_q49_q44_q39.json``)."""
+    value. ``size(q)`` is at least 0 for a non-null ``q``; for a null
+    ``q`` it is null, or -1 under ``spark.sql.legacy.sizeOfNull`` with
+    ANSI mode off, so ``size(q) < -1`` is false or null and every row
+    takes the else branch, byte-identical to the unguarded expression
+    (r16; interleaved A/B in ``R16AB_q49_q44_q39.json``). A guard
+    ``size(q) = -1`` would be true for a null ``q`` under the legacy
+    setting and turn its distances to NULL, dropping the probe rows of
+    a null-embedding query in q61."""
     return (
-        f"IF(size(q) = -1, CAST(NULL AS ARRAY<BIGINT>), "
+        f"IF(size(q) < -1, CAST(NULL AS ARRAY<BIGINT>), "
         f"{_ivf_dists_arr_expr()})"
     )
 

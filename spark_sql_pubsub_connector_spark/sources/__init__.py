@@ -4,8 +4,10 @@ Re-expresses the reference connector's machinery (SURVEY.md §2.1
 S1-S19) Spark-first:
 
   options.py     option validation + partition-planning value objects
-  broker.py      broker abstraction: file-backed fake (cross-process)
-                 + real-client stub gated behind an import-try
+  broker.py      broker abstraction: file-backed fake (cross-process;
+                 each topic a directory of immutable Arrow IPC
+                 segments named by seq range) + real-client stub
+                 gated behind an import-try
   registry.py    single-consumer stream guard (S12)
   datasource.py  the DataSource / stream reader / stream writer (the
                  rest, including backlog-driven partition planning S6/S13)

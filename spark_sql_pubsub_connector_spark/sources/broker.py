@@ -17,6 +17,17 @@ mirrored from the real service:
   - per-region backlog stats feed dynamic partition planning (the
     reference polls Cloud Monitoring, PubsubSubscriptionMonitor.scala).
 
+A topic is a directory of immutable Arrow IPC segments, one per
+``publish`` call or committed staged chunk, each holding the
+``segment_schema()`` columns. A segment is named by the half-open seq
+range ``[lo, hi)`` it holds (``{lo:020d}-{hi:020d}.arrow``): row ``i``
+is the message with seq and message id ``lo + i``, so neither is
+stored. Writers build a segment in a tmp file and rename it in under
+the broker lock, minting its range from the newest segment's name, so
+a segment is whole or absent and any other file in the directory (a
+crashed writer's tmp file) is invisible. The ranges must tile: a gap
+or an overlap raises an error naming the topic directory.
+
 On a 1000-executor cluster this file broker is replaced by the real
 service — the interface is the contract, and all scale-sensitive state
 (message payloads) stays out of the subscription metadata file.
@@ -28,14 +39,54 @@ container.
 
 from __future__ import annotations
 
-import base64
+import bisect
 import contextlib
 import fcntl
+import functools
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, NamedTuple
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+# pyarrow is imported where it is used, as in datasource.py: the Python
+# processes Spark starts per query to plan batches, count backlogs and
+# ack never read a segment, so they do not load it.
+
+
+@functools.cache
+def segment_schema() -> pa.Schema:
+    """The columns of a topic segment and of a staged sink chunk."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("ordering_key", pa.string()),
+            ("data", pa.binary()),
+            ("attributes", pa.map_(pa.string(), pa.string())),
+            ("publish_ts_us", pa.int64()),  # µs since epoch
+            ("region", pa.string()),
+        ]
+    )
+
+
+@functools.cache
+def pull_schema() -> pa.Schema:
+    """What ``pull_raw`` returns: one row per leased message."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [("ack_id", pa.string()), ("message_id", pa.string())]
+        + list(segment_schema())
+    )
+
+
+_SEGMENT_NAME = re.compile(r"(\d{20})-(\d{20})\.arrow")
 
 
 def _write_atomic(path: str, data: str | bytes) -> None:
@@ -55,6 +106,42 @@ def _write_atomic(path: str, data: str | bytes) -> None:
     os.replace(tmp, path)
 
 
+def write_ipc(sink: str | pa.NativeFile, data: pa.RecordBatch | pa.Table) -> None:
+    """Write ``data`` to ``sink`` (a path or an Arrow stream) as an
+    Arrow IPC file."""
+    import pyarrow as pa
+
+    with pa.ipc.new_file(sink, data.schema) as writer:
+        writer.write(data)
+
+
+def read_ipc(path: str) -> pa.Table:
+    """The Arrow IPC file at ``path``, memory-mapped."""
+    import pyarrow as pa
+
+    return pa.ipc.open_file(pa.memory_map(path)).read_all()
+
+
+def segment_rows(path: str) -> int:
+    """Rows of the segment file ``path``. Raises ``ValueError`` naming
+    the path unless it opens as Arrow IPC with ``segment_schema()``."""
+    import pyarrow as pa
+
+    try:
+        with pa.memory_map(path) as src:
+            reader = pa.ipc.open_file(src)
+            if not reader.schema.equals(segment_schema()):
+                raise ValueError(
+                    f"{path}: schema {reader.schema} is not the segment schema"
+                )
+            return sum(
+                reader.get_batch(i).num_rows
+                for i in range(reader.num_record_batches)
+            )
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"{path}: not an Arrow IPC segment file ({e})") from e
+
+
 @dataclass(frozen=True)
 class PubsubMessage:
     data: bytes
@@ -64,17 +151,49 @@ class PubsubMessage:
     publish_ts_us: int = 0  # µs since epoch (reference truncates to µs)
     region: str = "global"
 
-    @staticmethod
-    def from_record(rec: dict) -> PubsubMessage:
-        """The message a topic-log record (or ``pull_raw`` record) holds."""
-        return PubsubMessage(
-            data=base64.b64decode(rec["data_b64"]),
-            attributes=rec.get("attributes") or {},
-            ordering_key=rec.get("ordering_key", ""),
-            message_id=rec["message_id"],
-            publish_ts_us=rec["publish_ts_us"],
-            region=rec.get("region", "global"),
+
+def segment_batch(messages: list[PubsubMessage], now_us: int) -> pa.RecordBatch:
+    """``messages`` as one ``segment_schema()`` batch; a message without
+    a publish timestamp is stamped ``now_us``."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([m.ordering_key for m in messages], pa.string()),
+            pa.array([m.data for m in messages], pa.binary()),
+            pa.array(
+                [list(m.attributes.items()) for m in messages],
+                segment_schema().field("attributes").type,
+            ),
+            pa.array([m.publish_ts_us or now_us for m in messages], pa.int64()),
+            pa.array([m.region for m in messages], pa.string()),
+        ],
+        schema=segment_schema(),
+    )
+
+
+def to_messages(rows: pa.Table | pa.RecordBatch, message_ids) -> list[PubsubMessage]:
+    """The ``PubsubMessage`` of each row of a table holding the
+    ``segment_schema()`` columns; ``message_ids`` gives their ids."""
+    c = rows.select(segment_schema().names).to_pydict()
+    return [
+        PubsubMessage(
+            data=d,
+            attributes=dict(a or ()),
+            ordering_key=k,
+            message_id=i,
+            publish_ts_us=t,
+            region=r,
         )
+        for k, d, a, t, r, i in zip(
+            c["ordering_key"],
+            c["data"],
+            c["attributes"],
+            c["publish_ts_us"],
+            c["region"],
+            message_ids,
+        )
+    ]
 
 
 @dataclass(frozen=True)
@@ -83,17 +202,24 @@ class ReceivedMessage:
     message: PubsubMessage
 
 
+class Segment(NamedTuple):
+    lo: int  # first seq
+    hi: int  # one past the last seq
+    path: str
+
+
 class FileBroker:
     """File-backed broker rooted at ``root``; safe across processes."""
 
     def __init__(self, root: str, auto_compact_bytes: int | None = None):
         self.root = root
         #: opt-in retention (VERDICT r14 #4): when set, publish/commit
-        #: runs a compaction pass whenever the topic log exceeds this
-        #: many bytes, cutting the prefix every subscription has acked
-        #: — the substrate twin of the sink stage-file GC. None keeps
-        #: the historical grow-forever behavior (real Pub/Sub bounds
-        #: retention at 7 days; this file fake bounds it by acks).
+        #: runs a compaction pass whenever the topic's live segments
+        #: exceed this many bytes, unlinking the segments every
+        #: subscription has acked — the substrate twin of the sink
+        #: stage-file GC. None keeps the historical grow-forever
+        #: behavior (real Pub/Sub bounds retention at 7 days; this file
+        #: fake bounds it by acks).
         self.auto_compact_bytes = auto_compact_bytes
         os.makedirs(os.path.join(root, "topics"), exist_ok=True)
         os.makedirs(os.path.join(root, "subs"), exist_ok=True)
@@ -116,14 +242,49 @@ class FileBroker:
     def _sub_path(self, sub: str) -> str:
         return os.path.join(self.root, "subs", sub.replace("/", "__") + ".json")
 
+    # -- segments -----------------------------------------------------------
+    @staticmethod
+    def _segments(d: str) -> list[Segment]:
+        """The live segments of topic dir ``d`` in seq order. Raises on a
+        topic in the older JSONL layout, which would otherwise read as
+        empty, and on ranges that do not tile."""
+        try:
+            names = os.listdir(d)
+        except FileNotFoundError:
+            return []
+        for old in ("log.jsonl", ".seq"):
+            if old in names:
+                raise RuntimeError(
+                    f"{os.path.join(d, old)}: topic in the older JSONL layout; "
+                    "this broker reads Arrow IPC segments only"
+                )
+        segs = sorted(
+            Segment(int(m[1]), int(m[2]), os.path.join(d, m[0]))
+            for m in map(_SEGMENT_NAME.fullmatch, names)
+            if m
+        )
+        for prev, s in zip([None] + segs, segs):
+            if s.hi < s.lo or (prev is not None and s.lo != prev.hi):
+                raise RuntimeError(
+                    f"topic {d}: segment {os.path.basename(s.path)} does not "
+                    "tile with the segments before it (gap or overlap)"
+                )
+        return segs
+
+    def _append_locked(self, d: str, files: list[tuple[str, int]]) -> int:
+        """Rename each ``(path, rows)`` file into topic dir ``d`` as the
+        next segment; returns the first seq minted. Caller holds the
+        broker lock."""
+        segs = self._segments(d)
+        first = lo = segs[-1].hi if segs else 0
+        for path, n in files:
+            os.rename(path, os.path.join(d, f"{lo:020d}-{lo + n:020d}.arrow"))
+            lo += n
+        return first
+
     # -- admin ------------------------------------------------------------
     def create_topic(self, topic: str) -> None:
-        d = self._topic_dir(topic)
-        os.makedirs(d, exist_ok=True)
-        seq = os.path.join(d, ".seq")
-        if not os.path.exists(seq):
-            with open(seq, "w") as fh:
-                fh.write("0")
+        os.makedirs(self._topic_dir(topic), exist_ok=True)
 
     def create_subscription(
         self, sub: str, topic: str, ack_deadline_s: float = 60.0
@@ -143,190 +304,31 @@ class FileBroker:
         }
         with self._lock():
             # r15 review: a subscription created AFTER a compaction must
-            # start its ack cursor at the retention floor, not 0 — seqs
-            # below the floor no longer exist, so the dense-prefix
-            # advance in _compact_acked could never leave 0: the sub's
-            # sparse acked list would grow forever AND pin the topic's
+            # start its ack cursor at the first retained seq, not 0 —
+            # seqs below it no longer exist, so the dense-prefix advance
+            # in _compact_acked could never leave 0: the sub's sparse
+            # acked list would grow forever AND pin the topic's
             # retention floor at 0, permanently disabling compaction.
-            # Starting at the floor keeps the pre-retention semantics
-            # (a new sub sees every RETAINED message) intact.
-            meta = self._load_topic_meta_locked(topic)
-            state["acked_below"] = meta.get("compacted_below_seq", 0)
+            # A new sub sees every RETAINED message.
+            segs = self._segments(self._topic_dir(topic))
+            state["acked_below"] = segs[0].lo if segs else 0
             # atomic: a torn sub file would veto compaction of every
             # topic (_retention_floor_locked)
             _write_atomic(self._sub_path(sub), json.dumps(state))
 
-    # -- crash-safe sequence minting ---------------------------------------
-    def _next_seq(self, d: str, repair: bool = True) -> int:
-        """Next dense sequence number for a topic dir, crash-safe
-        (r14 self-review, the publish twin of the r13 sink find).
-
-        Both appenders write ``log.jsonl`` FIRST and the ``.seq``
-        counter AFTER, so a crash between the two leaves committed
-        lines the counter does not cover; minting from the stale
-        counter would assign DUPLICATE seq numbers to new messages —
-        silent log corruption (acks conflate distinct messages, the
-        dense-seq scan cursor under-delivers). Recovery, under the
-        broker lock, in two steps:
-
-        1. A torn tail line (a crashed append's partial final write —
-           no trailing newline) is TRUNCATED: its publish/commit never
-           returned success to the caller, so removing it is the clean
-           at-least-once outcome (the publisher retries; a sink batch
-           was never recorded committed and re-commits whole).
-        2. The next seq is ``max(counter, last_intact_line_seq + 1)``,
-           so the counter lagging the log can never re-mint a live seq.
-
-        ``repair=False`` is the read-only form for counting: a torn
-        tail is skipped, not truncated.
-        """
-        with open(os.path.join(d, ".seq")) as fh:
-            seq = int(fh.read().strip() or "0")
-        path = os.path.join(d, "log.jsonl")
-
-        def read_back_to_newline(fh, end: int) -> bytes:
-            # bytes [start, end) where start is just past the last
-            # newline strictly before `end` (or 0): i.e. the final
-            # line of the region, COMPLETE even when it exceeds one
-            # window (a single message line can be megabytes). Each
-            # window is searched once as it is read — no re-scan or
-            # re-copy of the accumulated buffer, so the walk is O(L)
-            # for an L-byte final line (r14 review: the first version
-            # re-sliced the whole buffer per window, O(L²) under the
-            # global broker lock).
-            chunks: list[bytes] = []
-            pos = end
-            first = True
-            while pos > 0:
-                step = min(pos, 1 << 16)
-                fh.seek(pos - step)
-                chunk = fh.read(step)
-                pos -= step
-                # exclude the region's very last byte from the search
-                # so a trailing newline is part of the final line, not
-                # its separator
-                hi = len(chunk) - 1 if first else len(chunk)
-                first = False
-                cut = chunk.rfind(b"\n", 0, hi)
-                if cut >= 0:
-                    chunks.append(chunk[cut + 1 :])
-                    return b"".join(reversed(chunks))
-                chunks.append(chunk)
-            return b"".join(reversed(chunks))
-
-        try:
-            with open(path, "rb+" if repair else "rb") as fh:
-                fh.seek(0, os.SEEK_END)
-                size = fh.tell()
-                if size == 0:
-                    return seq
-                last = read_back_to_newline(fh, size)
-                if not last.endswith(b"\n"):
-                    # torn tail: cut back to the last complete line
-                    if repair:
-                        fh.truncate(size - len(last))
-                    size -= len(last)
-                    last = read_back_to_newline(fh, size) if size else b""
-                if last.strip():
-                    seq = max(seq, self._seq_of(last) + 1)
-        except FileNotFoundError:
-            pass
-        return seq
-
-    # -- topic-log retention (VERDICT r14 #4) -------------------------------
+    # -- topic retention (VERDICT r14 #4) -----------------------------------
     #
-    # ``log.jsonl`` used to grow forever: subscription ack state compacts
-    # (``acked_below``), but the topic log kept every message ever
-    # published. ``compact_topic`` cuts the prefix EVERY subscription of
-    # the topic has acked (min over subscriptions of ``acked_below``) —
-    # nothing leased or undelivered can sit below that floor, because a
-    # lease pins an unacked seq and ``acked_below`` cannot advance past
-    # an unacked seq.
-    #
-    # Cutting shifts every byte in the file, and subscriptions cache
-    # BYTE cursors (``scan_pos``/``deliver_pos``/lease-group starts) as
-    # pure performance state over the seq-authoritative ack bookkeeping.
-    # Rewriting all cursor files atomically with the cut is impossible
-    # with per-file atomic replaces, so the protocol makes stale cursors
-    # *detectable* instead (the same shape as the r14 seq-minting fix —
-    # write-ahead, then resolve on next entry):
-    #
-    #   1. meta.json ← {token: NEW, cut_below_seq: floor, state:
-    #      "pending"} (atomic replace). The token identifies the byte
-    #      LAYOUT of the log; it changes only here.
-    #   2. the cut: retained bytes copied to a tmp file, atomic replace
-    #      of log.jsonl (idempotent — a second pass finds nothing below
-    #      the floor).
-    #   3. meta.json ← state: "done" (atomic replace).
-    #
-    # Every cursor consumer syncs first (``_sync_cursors``): a sub whose
-    # stored ``cursor_token`` differs from the topic's resets its byte
-    # cursors to 0 and rescans — always CORRECT (the seq-based acked/
-    # leased checks skip duplicates), merely one rescan slower. A crash
-    # anywhere in 1–3 leaves either the old layout with the old token
-    # (harmless) or a "pending" meta that the next lock holder resolves
-    # by re-running the idempotent cut — never a cut log paired with
-    # trusted stale cursors, which is the one lethal combination (it
-    # would silently SKIP unacked bytes).
-
-    def _topic_meta_path(self, d: str) -> str:
-        return os.path.join(d, "meta.json")
-
-    def _store_topic_meta(self, d: str, meta: dict) -> None:
-        tmp = self._topic_meta_path(d) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._topic_meta_path(d))
-        self._fsync_dir(d)
-
-    @staticmethod
-    def _fsync_dir(d: str) -> None:
-        """Make a rename in ``d`` durable (r15 review: the write-ahead
-        ordering 'meta token changes BEFORE the log layout' only holds
-        across power loss if each os.replace is fsynced through the
-        directory — otherwise the log's rename can survive a crash the
-        meta's rename did not, re-creating the cut-log +
-        trusted-stale-cursors pairing the protocol exists to prevent)."""
-        fd = os.open(d, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-
-    def _load_topic_meta_locked(self, topic: str) -> dict:
-        """Topic meta, RESOLVING a pending compaction. Caller must hold
-        the broker lock (resolution mutates the log)."""
-        d = self._topic_dir(topic)
-        path = self._topic_meta_path(d)
-        if not os.path.exists(path):
-            return {}
-        with open(path) as fh:
-            meta = json.load(fh)
-        if meta.get("state") == "pending":
-            # crash mid-compaction: finish the idempotent cut, then
-            # mark done — cursors reset against the token either way
-            self._cut_log_below(d, meta["cut_below_seq"])
-            meta["state"] = "done"
-            meta["compacted_below_seq"] = meta["cut_below_seq"]
-            self._store_topic_meta(d, meta)
-        return meta
-
-    def _sync_cursors(self, state: dict, topic: str) -> None:
-        """Reset a subscription's byte cursors if the topic log's byte
-        layout changed under them (compaction). Seq-based state
-        (``acked_below``/``acked``/lease seqs) is layout-independent
-        and untouched; the rescan from byte 0 re-skips it."""
-        meta = self._load_topic_meta_locked(topic)
-        tok = meta.get("token")
-        if state.get("cursor_token", None) == tok:
-            return
-        state.pop("scan_pos", None)
-        state.pop("deliver_pos", None)
-        for g in state["lease_groups"]:
-            g[2] = 0
-        state["cursor_token"] = tok
+    # Subscription ack state compacts (``acked_below``); ``compact_topic``
+    # drops the segments EVERY subscription of the topic has acked: those
+    # whose ``hi`` is at or below the retention floor (min over
+    # subscriptions of ``acked_below``). Nothing leased or undelivered
+    # sits below that floor, because a lease pins an unacked seq and
+    # ``acked_below`` cannot advance past an unacked seq. Segments are
+    # unlinked lowest first, so a compaction killed midway leaves a
+    # suffix that still tiles. The newest segment's name is where the
+    # next range starts, so when it goes an empty segment ``[hi, hi)``
+    # is renamed in first: the next publish then still gets a seq above
+    # every acked one, and a new subscription starts there.
 
     def _retention_floor_locked(self, topic: str) -> int:
         """min over the topic's subscriptions of ``acked_below`` — the
@@ -350,47 +352,8 @@ class FileBroker:
             floor = ab if floor is None else min(floor, ab)
         return 0 if floor is None else floor
 
-    def _cut_log_below(self, d: str, floor: int) -> tuple[int, int]:
-        """Remove the log prefix of intact lines with seq < ``floor``
-        via copy + atomic replace; returns (bytes_cut, lines_cut).
-        Idempotent: an already-cut log has no such prefix. A torn tail
-        is copied through untouched (readers already ignore it; the
-        next append repairs it)."""
-        path = os.path.join(d, "log.jsonl")
-        if not os.path.exists(path):
-            return 0, 0
-        cut = 0
-        lines = 0
-        with open(path, "rb") as fh:
-            for raw in fh:
-                if not raw.endswith(b"\n"):
-                    break  # torn tail — never below an acked floor
-                if not raw.strip():
-                    cut += len(raw)  # dead bytes ride along with the cut
-                    continue
-                if self._seq_of(raw) >= floor:
-                    break
-                cut += len(raw)
-                lines += 1
-            if cut == 0:
-                return 0, 0
-            tmp = path + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "wb") as out:
-                fh.seek(cut)
-                while True:
-                    chunk = fh.read(1 << 20)
-                    if not chunk:
-                        break
-                    out.write(chunk)
-                out.flush()
-                os.fsync(out.fileno())
-        os.replace(tmp, path)
-        self._fsync_dir(d)
-        return cut, lines
-
     def compact_topic(self, topic: str) -> dict:
-        """Truncate ``log.jsonl`` below the retention floor (min over
-        subscriptions of ``acked_below``), write-ahead protocol above.
+        """Unlink the segments below the retention floor (see above).
         Returns ``{"floor_seq", "cut_bytes", "cut_messages"}``."""
         d = self._topic_dir(topic)
         if not os.path.isdir(d):
@@ -399,57 +362,67 @@ class FileBroker:
             return self._compact_topic_locked(topic, d)
 
     def _compact_topic_locked(self, topic: str, d: str) -> dict:
-        meta = self._load_topic_meta_locked(topic)  # resolves pending
         floor = self._retention_floor_locked(topic)
         out = {"floor_seq": floor, "cut_bytes": 0, "cut_messages": 0}
-        if floor <= meta.get("compacted_below_seq", 0):
-            return out
-        # the cut can remove the log's last line: bring a counter that
-        # lags the log (crash between append and counter write) up to
-        # date first, or the next publish would re-mint cut seqs below
-        # the ack floor and those messages would read as acked
-        with open(os.path.join(d, ".seq"), "w") as fh:
-            fh.write(str(self._next_seq(d)))
-        meta = {
-            "token": uuid.uuid4().hex,
-            "cut_below_seq": floor,
-            "state": "pending",
-            "compacted_below_seq": meta.get("compacted_below_seq", 0),
-        }
-        self._store_topic_meta(d, meta)  # write-ahead: step 1
-        cut, lines = self._cut_log_below(d, floor)  # step 2
-        meta["state"] = "done"
-        meta["compacted_below_seq"] = floor
-        self._store_topic_meta(d, meta)  # step 3
-        out["cut_bytes"] = cut
-        out["cut_messages"] = lines
+        segs = self._segments(d)
+        dead = [s for s in segs if s.hi <= floor]
+        if dead and dead[-1] == segs[-1]:
+            if segs[-1].lo == segs[-1].hi:
+                dead.pop()  # already the empty placeholder
+            else:
+                # durable before any unlink: a power loss must never
+                # keep the unlink of the newest segment but lose the
+                # name the next seq is minted from
+                import pyarrow as pa
+
+                empty = pa.BufferOutputStream()
+                write_ipc(empty, segment_schema().empty_table())
+                tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
+                with open(tmp, "wb") as fh:
+                    fh.write(empty.getvalue())
+                    fh.flush()
+                    os.fsync(fh.fileno())
+                self._append_locked(d, [(tmp, 0)])
+                fd = os.open(d, os.O_RDONLY)
+                try:
+                    os.fsync(fd)
+                finally:
+                    os.close(fd)
+        for s in dead:
+            out["cut_bytes"] += os.path.getsize(s.path)
+            out["cut_messages"] += s.hi - s.lo
+            os.unlink(s.path)
         return out
 
     def _maybe_auto_compact_locked(self, topic: str, d: str) -> None:
         if self.auto_compact_bytes is None:
             return
-        try:
-            size = os.path.getsize(os.path.join(d, "log.jsonl"))
-        except OSError:
-            return
+        size = sum(os.path.getsize(s.path) for s in self._segments(d))
         if size <= self.auto_compact_bytes:
             return
         # r15 review: an UNDRAINED over-threshold topic (floor cannot
         # advance) would otherwise pay the full subs-directory scan
         # under the broker lock on every publish for the rest of its
-        # life. After a no-op pass, back off until the log grows by
-        # another threshold; a successful cut rewrites meta without
-        # the key, re-arming immediately.
-        meta = self._load_topic_meta_locked(topic)
-        if size < meta.get("retention_retry_above_bytes", 0):
+        # life. After a no-op pass, back off until the topic grows by
+        # another threshold; a pass that cuts re-arms immediately.
+        backoff = os.path.join(d, "meta.json")
+        try:
+            with open(backoff) as fh:
+                retry_above = json.load(fh)["retention_retry_above_bytes"]
+        except FileNotFoundError:
+            retry_above = 0
+        if size < retry_above:
             return
-        res = self._compact_topic_locked(topic, d)
-        if res["cut_bytes"] == 0:
-            meta = self._load_topic_meta_locked(topic)
-            meta["retention_retry_above_bytes"] = (
-                size + self.auto_compact_bytes
+        if self._compact_topic_locked(topic, d)["cut_bytes"]:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(backoff)
+        else:
+            _write_atomic(
+                backoff,
+                json.dumps(
+                    {"retention_retry_above_bytes": size + self.auto_compact_bytes}
+                ),
             )
-            self._store_topic_meta(d, meta)
 
     # -- publish ----------------------------------------------------------
     def publish(
@@ -458,179 +431,48 @@ class FileBroker:
         messages: list[PubsubMessage],
         publish_ts_us: int | None = None,
     ) -> list[str]:
-        """Append messages to the topic log; returns assigned message ids.
-        ``publish_ts_us`` pins the publish timestamp for deterministic
-        tests (the real service stamps arrival time)."""
+        """Append messages to the topic as one segment; returns assigned
+        message ids. ``publish_ts_us`` pins the publish timestamp for
+        deterministic tests (the real service stamps arrival time)."""
         d = self._topic_dir(topic)
         if not os.path.isdir(d):
             raise KeyError(f"no such topic: {topic}")
+        if not messages:
+            return []
         now_us = (
             publish_ts_us if publish_ts_us is not None else int(time.time() * 1e6)
         )
-        with self._lock():
-            seq = self._next_seq(d)
-            ids = []
-            with open(os.path.join(d, "log.jsonl"), "a") as log:
-                for m in messages:
-                    mid = str(seq)
-                    log.write(
-                        json.dumps(
-                            {
-                                "seq": seq,
-                                "message_id": mid,
-                                "ordering_key": m.ordering_key,
-                                "data_b64": base64.b64encode(m.data).decode(),
-                                "attributes": m.attributes,
-                                "publish_ts_us": m.publish_ts_us or now_us,
-                                "region": m.region,
-                            }
-                        )
-                        + "\n"
-                    )
-                    ids.append(mid)
-                    seq += 1
-            with open(os.path.join(d, ".seq"), "w") as fh:
-                fh.write(str(seq))
-            self._maybe_auto_compact_locked(topic, d)
-        return ids
+        tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
+        try:
+            write_ipc(tmp, segment_batch(messages, now_us))
+            with self._lock():
+                lo = self._append_locked(d, [(tmp, len(messages))])
+                self._maybe_auto_compact_locked(topic, d)
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
+            raise
+        return [str(s) for s in range(lo, lo + len(messages))]
 
     def commit_staged(self, topic: str, staged_files: list[str]) -> int:
-        """Atomically append pre-staged JSONL message files to the topic
-        log (the sink's exactly-once commit); returns messages appended.
+        """Atomically append staged segment files to the topic (the
+        sink's exactly-once commit); returns messages appended.
 
-        Sequence numbers are spliced in as a text prefix — staged lines
-        are JSON objects (the writer emits them without seq or
-        message_id), so ``{"seq": N, "message_id": "N", <rest>`` is
-        valid JSON without re-parsing and re-serializing every message
-        under the broker lock."""
+        Each file is renamed into the topic as the next segment. Every
+        file must open as Arrow IPC with ``segment_schema()`` before any
+        is renamed, so a bad file leaves the topic unchanged. A file
+        without rows is left where it is."""
         d = self._topic_dir(topic)
         if not os.path.isdir(d):
             raise KeyError(f"no such topic: {topic}")
-        # Validate and buffer EVERY staged line before appending any:
-        # a malformed line discovered mid-append would leave earlier
-        # lines in the log with .seq never advanced, so the next
-        # publish would mint duplicate seq numbers — silent log
-        # corruption. Staged chunks are bounded (publish_batch_size),
-        # so buffering one commit's bodies is driver-side small.
-        bodies: list[str] = []
-        for path in staged_files:
-            with open(path) as src:
-                for line in src:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    if line[0] != "{":
-                        # never assert here: under ``python -O`` an
-                        # assert vanishes and a malformed line would be
-                        # spliced verbatim into the shared topic log,
-                        # corrupting it for every consumer
-                        raise ValueError(
-                            f"staged line must be a JSON object "
-                            f"(got {line[:40]!r} in {path})"
-                        )
-                    bodies.append(line[1:])
-        n = 0
+        files = [(path, segment_rows(path)) for path in staged_files]
+        files = [(path, n) for path, n in files if n]
         with self._lock():
-            seq = self._next_seq(d)
-            with open(os.path.join(d, "log.jsonl"), "a") as log:
-                for body in bodies:
-                    sep = "" if body.lstrip().startswith("}") else " "
-                    log.write(
-                        f'{{"seq": {seq}, "message_id": "{seq}"'
-                        + ("," if sep else "")
-                        + sep
-                        + body
-                        + "\n"
-                    )
-                    seq += 1
-                    n += 1
-            with open(os.path.join(d, ".seq"), "w") as fh:
-                fh.write(str(seq))
+            self._append_locked(d, files)
             self._maybe_auto_compact_locked(topic, d)
-        return n
+        return sum(n for _, n in files)
 
     # -- internal state helpers -------------------------------------------
-    def _read_log(self, topic: str) -> list[dict]:
-        path = os.path.join(self._topic_dir(topic), "log.jsonl")
-        if not os.path.exists(path):
-            return []
-        # Mirror _scan_unacked's torn-tail rule: a final line missing its
-        # trailing newline is a crashed append whose publish never returned
-        # success — skip it instead of raising JSONDecodeError (the next
-        # append truncates and rewrites it).
-        with open(path, "rb") as fh:
-            raw_lines = fh.readlines()
-        if raw_lines and not raw_lines[-1].endswith(b"\n"):
-            raw_lines.pop()
-        return [json.loads(line) for line in raw_lines if line.strip()]
-
-    @staticmethod
-    def _seq_of(raw: bytes) -> int:
-        """Sequence number of a raw log line WITHOUT a full JSON parse.
-
-        Every log line starts with ``{"seq": N,`` — ``publish()`` emits
-        the dict with ``seq`` first and ``commit_staged`` splices the
-        same prefix textually — so the seq is an int slice. Pulls scan
-        under the global broker lock; parsing whole messages there
-        serialized every consumer behind per-message ``json.loads``
-        (the r2 bottleneck). Falls back to a full parse if the prefix
-        invariant is ever violated."""
-        try:
-            return int(raw[8 : raw.index(b",", 8)])
-        except ValueError:
-            return json.loads(raw)["seq"]
-
-    def _scan_unacked(self, state: dict, topic: str, start_byte: int | None = None):
-        """Yield ``(seq, raw_line, line_start, line_end)`` from the
-        subscription's scan cursor (or ``start_byte``) onward, advancing
-        the cursor past the fully-acked prefix.
-
-        The log is append-only and ``seq`` is dense, so each sub keeps
-        ``scan_pos = [seq, byte_offset]`` — the first line not yet known
-        to be acked. Pulls then seek instead of re-parsing the whole
-        log (the whole-log scan made pulls O(log²) over a topic's
-        lifetime; with the cursor they are O(new messages)). Lines stay
-        raw — only the seq prefix is decoded — so callers holding the
-        broker lock defer ``json.loads`` until after they release it.
-        """
-        path = os.path.join(self._topic_dir(topic), "log.jsonl")
-        if not os.path.exists(path):
-            return
-        below = state["acked_below"]
-        pos = state.get("scan_pos", [0, 0])[1]
-        track_cursor = start_byte is None or start_byte <= pos
-        if start_byte is not None:
-            pos = max(pos, start_byte)
-        cursor_set = False
-        with open(path, "rb") as fh:
-            fh.seek(pos)
-            for raw in fh:
-                line_start = pos
-                pos += len(raw)
-                if not raw.endswith(b"\n"):
-                    # torn final line of a crashed append (r14 review:
-                    # _next_seq repairs it on the NEXT append, but a
-                    # drained producer may never append again). Its
-                    # publish/commit never returned success, so it must
-                    # be invisible to readers: never parsed, never
-                    # leased, and never advanced past — leaving every
-                    # cursor at its start keeps the repair (truncate +
-                    # rewritten line at this same byte) seamless.
-                    pos = line_start
-                    break
-                if not raw.strip():
-                    continue
-                s = self._seq_of(raw)
-                if s < below:
-                    continue  # acked prefix — cursor will skip it next time
-                if track_cursor and not cursor_set:
-                    state["scan_pos"] = [s, line_start]
-                    cursor_set = True
-                yield s, raw, line_start, pos
-        if track_cursor and not cursor_set:
-            # everything up to EOF is acked; next scan starts at the end
-            state["scan_pos"] = [below, pos]
-
     def _load_sub(self, sub: str) -> dict:
         path = self._sub_path(sub)
         if not os.path.exists(path):
@@ -647,18 +489,12 @@ class FileBroker:
     @staticmethod
     def _expire_leases(state: dict, now: float) -> None:
         """Drop expired lease groups, rewinding the delivery cursor to
-        the earliest expired group's log position so its messages get
-        rescanned (redelivered)."""
-        kept = []
-        dp = state.get("deliver_pos")
-        for g in state["lease_groups"]:
-            if g[0] > now and g[1]:
-                kept.append(g)
-            elif g[1]:  # expired with outstanding seqs → redeliver
-                dp = g[2] if dp is None else min(dp, g[2])
-        state["lease_groups"] = kept
-        if dp is not None:
-            state["deliver_pos"] = dp
+        the lowest seq they held so a pull redelivers them."""
+        groups = state["lease_groups"]
+        state["lease_groups"] = [g for g in groups if g[0] > now and g[1]]
+        lapsed = [min(g[1]) for g in groups if g[0] <= now and g[1]]
+        if lapsed and "deliver_pos" in state:
+            state["deliver_pos"] = min(state["deliver_pos"], *lapsed)
 
     @staticmethod
     def _leased_seqs(state: dict) -> set[int]:
@@ -686,6 +522,16 @@ class FileBroker:
         state["acked_below"] = below
         state["acked"] = acked[i:]
 
+    @staticmethod
+    def _regions(segs: list[Segment], below: int):
+        """``(seq, region)`` of every message at or above ``below``."""
+        for s in segs:
+            if s.hi <= below:
+                continue
+            start = max(below - s.lo, 0)
+            regions = read_ipc(s.path).column("region").to_pylist()
+            yield from enumerate(regions[start:], s.lo + start)
+
     # -- pull / ack ---------------------------------------------------------
     def pull(
         self, sub: str, max_messages: int, region: str | None = None
@@ -693,80 +539,85 @@ class FileBroker:
         """Lease up to ``max_messages`` undelivered messages (optionally
         restricted to one region — the reference's per-region endpoint
         pulls, PubsubMicroBatchStream.scala:58-74)."""
+        batch = self.pull_raw(sub, max_messages, region)
         return [
-            ReceivedMessage(ack_id=ack_id, message=PubsubMessage.from_record(rec))
-            for ack_id, rec in self.pull_raw(sub, max_messages, region)
+            ReceivedMessage(ack_id=a, message=m)
+            for a, m in zip(
+                batch.column("ack_id").to_pylist(),
+                to_messages(batch, batch.column("message_id").to_pylist()),
+            )
         ]
 
     def pull_raw(
         self, sub: str, max_messages: int, region: str | None = None
-    ) -> list[tuple[str, dict]]:
-        """``pull`` without the payload decode: returns ``(ack_id,
-        record_dict)`` pairs with ``data_b64`` still base64-encoded.
+    ) -> pa.RecordBatch:
+        """``pull`` as one ``pull_schema()`` RecordBatch, the shape the
+        connector's partition readers consume.
 
         All consumers serialize through the global broker lock, so the
-        critical section does only lease bookkeeping over RAW log lines
-        (seq comes from the ``_seq_of`` prefix); ``json.loads``, ack-id
-        minting, and any base64 work happen after the lock is released.
-        The connector's partition readers consume this directly — they
-        re-emit base64 into their replay cache anyway, so the
-        decode/re-encode round-trip of ``pull`` is skipped entirely."""
+        critical section does only lease bookkeeping. A region-less
+        pull is seq arithmetic: it resumes at the delivery cursor
+        ``deliver_pos`` (every seq below it is acked or under a live
+        lease) and skips acked and leased seqs. A region-pinned pull
+        skips other regions WITHOUT leasing them, so it reads the region
+        column of the unacked segments from the ack floor on and leaves
+        the delivery cursor alone. The lock is held only to memory-map
+        the leased rows' segments; they are decoded after it is
+        released. That is safe: a leased seq is unacked, so no
+        compaction unlinks its segment meanwhile, and an open file
+        stays readable after an unlink anyway."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         now = time.time()
-        picked: list[tuple[int, bytes | dict]] = []
         with self._lock():
             state = self._load_sub(sub)
-            self._sync_cursors(state, state["topic"])
+            segs = self._segments(self._topic_dir(state["topic"]))
             self._expire_leases(state, now)
             acked = set(state["acked"])
+            leased = self._leased_seqs(state)
             below = state["acked_below"]
-            leased_seqs = self._leased_seqs(state)
-            new_seqs: list[int] = []
-            # Region-less pulls resume at the delivery cursor: everything
-            # before it is acked or actively leased, so re-parsing those
-            # lines on every pull of a drain would be O(n²) JSON work.
-            # Region-pinned pulls skip other regions WITHOUT leasing
-            # them, so they scan from the ack cursor and leave the
-            # delivery cursor alone; they are also the one case that
-            # must parse under the lock (the region filter needs the
-            # record body).
-            start_byte = state.get("deliver_pos") if region is None else None
-            group_start: int | None = None
-            consumed_to: int | None = None
-            for s, raw, line_start, line_end in self._scan_unacked(
-                state, state["topic"], start_byte
-            ):
+            if region is None:
+                start = max(below, state.get("deliver_pos", below))
+                candidates = range(start, segs[-1].hi if segs else start)
+            else:
+                candidates = (
+                    s for s, r in self._regions(segs, below) if r == region
+                )
+            picked: list[int] = []
+            consumed_to = None
+            for s in candidates:
                 if len(picked) >= max_messages:
                     break
-                consumed_to = line_end
-                if s < below or s in acked or s in leased_seqs:
-                    continue
-                item: bytes | dict = raw
-                if region is not None:
-                    rec = json.loads(raw)
-                    if rec.get("region", "global") != region:
-                        continue
-                    item = rec
-                if group_start is None:
-                    group_start = line_start
-                new_seqs.append(s)
-                picked.append((s, item))
-            if new_seqs:
+                consumed_to = s + 1
+                if s not in acked and s not in leased:
+                    picked.append(s)
+            if picked:
                 state["lease_groups"].append(
-                    [now + state["ack_deadline_s"], new_seqs, group_start or 0]
+                    [now + state["ack_deadline_s"], picked]
                 )
             if region is None and consumed_to is not None:
                 state["deliver_pos"] = consumed_to
             self._store_sub(sub, state)
+            los = [s.lo for s in segs]
+            rows: dict[int, list[int]] = {}
+            for s in picked:
+                i = bisect.bisect_right(los, s) - 1
+                rows.setdefault(i, []).append(s - los[i])
+            sources = [(pa.memory_map(segs[i].path), r) for i, r in rows.items()]
+        if not picked:
+            return pa.RecordBatch.from_pylist([], schema=pull_schema())
+        taken = pa.concat_tables(
+            [pa.ipc.open_file(src).read_all().take(r) for src, r in sources]
+        )
+        seg = taken.combine_chunks().to_batches()[0]
+        ids = pc.cast(pa.array(picked, pa.int64()), pa.string())
         # one nonce per pull: the seq already makes each ack id unique
         # within the pull, the nonce tells redeliveries apart
-        nonce = uuid.uuid4().hex[:8]
-        return [
-            (
-                f"ack-{s}-{nonce}",
-                item if isinstance(item, dict) else json.loads(item),
-            )
-            for s, item in picked
-        ]
+        acks = pc.binary_join_element_wise("ack", ids, uuid.uuid4().hex[:8], "-")
+        return pa.RecordBatch.from_arrays(
+            [acks, ids, *seg.columns], schema=pull_schema()
+        )
 
     def acknowledge(self, sub: str, ack_ids: list[str]) -> int:
         """Ack leased messages; unknown/expired ack ids are ignored
@@ -803,25 +654,15 @@ class FileBroker:
         now = time.time()
         with self._lock():
             state = self._load_sub(sub)
-            self._sync_cursors(state, state["topic"])
             moved: list[int] = []
-            moved_start: int | None = None
             for g in state["lease_groups"]:
                 if not wanted.isdisjoint(g[1]):
                     keep = []
                     for s in g[1]:
-                        if s in wanted:
-                            moved.append(s)
-                        else:
-                            keep.append(s)
+                        (moved if s in wanted else keep).append(s)
                     g[1] = keep
-                    moved_start = (
-                        g[2] if moved_start is None else min(moved_start, g[2])
-                    )
             if moved:
-                state["lease_groups"].append(
-                    [now + seconds, moved, moved_start or 0]
-                )
+                state["lease_groups"].append([now + seconds, moved])
             self._expire_leases(state, now)
             self._store_sub(sub, state)
 
@@ -830,21 +671,22 @@ class FileBroker:
         """Unacked messages, leased ones included (like the real metric).
 
         Seqs are dense from the subscription's ``acked_below`` up to the
-        topic's next seq, so the backlog is a count: no log scan, no
-        JSON parse, no state write. It equals
+        newest segment's end, so the backlog is a count: no segment
+        read, no state write. It equals
         ``sum(backlog_by_region(sub).values())``."""
         with self._lock():
             return self._backlog_locked(self._load_sub(sub))
 
     def _backlog_locked(self, state: dict) -> int:
-        end = self._next_seq(self._topic_dir(state["topic"]), repair=False)
+        segs = self._segments(self._topic_dir(state["topic"]))
+        end = segs[-1].hi if segs else state["acked_below"]
         return end - state["acked_below"] - len(state["acked"])
 
     def deliverable(self, sub: str) -> int:
         """Messages a pull could lease now: the backlog minus those under
-        an unexpired lease. Counted like ``backlog``, with no log scan.
-        Every leased seq is unacked and sits in exactly one lease group,
-        so no message is subtracted twice."""
+        an unexpired lease. Counted like ``backlog``, with no segment
+        read. Every leased seq is unacked and sits in exactly one lease
+        group, so no message is subtracted twice."""
         now = time.time()
         with self._lock():
             state = self._load_sub(sub)
@@ -854,25 +696,30 @@ class FileBroker:
     def backlog_by_region(self, sub: str) -> dict[str, int]:
         """num_unacked_messages_by_region equivalent
         (PubsubSubscriptionMonitor.scala:155-210). Leased-but-unacked
-        messages still count as backlog, like the real metric. Scans and
-        parses the unacked log; only dynamic partition planning needs
-        the per-region split."""
+        messages still count as backlog, like the real metric. Reads the
+        region column of the unacked segments; only dynamic partition
+        planning needs the per-region split."""
         with self._lock():
             state = self._load_sub(sub)
-            self._sync_cursors(state, state["topic"])
+            segs = self._segments(self._topic_dir(state["topic"]))
             acked = set(state["acked"])
             out: dict[str, int] = {}
-            for s, raw, _ls, _le in self._scan_unacked(state, state["topic"]):
-                if s in acked:
-                    continue
-                r = json.loads(raw).get("region", "global")
-                out[r] = out.get(r, 0) + 1
-            self._store_sub(sub, state)  # persist the advanced cursor
+            for s, r in self._regions(segs, state["acked_below"]):
+                if s not in acked:
+                    out[r] = out.get(r, 0) + 1
         return out
 
     def topic_messages(self, topic: str) -> list[PubsubMessage]:
-        """Test helper: the full committed topic log, in order."""
-        return [PubsubMessage.from_record(rec) for rec in self._read_log(topic)]
+        """Test helper: every retained message, in seq order."""
+        with self._lock():
+            segs = self._segments(self._topic_dir(topic))
+            return [
+                m
+                for s in segs
+                for m in to_messages(read_ipc(s.path), map(str, range(s.lo, s.hi)))
+            ]
+
+
 
 
 class RealBrokerClient:
@@ -1039,28 +886,16 @@ class RealBrokerClient:
         return [f.result() for f in futures]
 
     def commit_staged(self, topic: str, staged_files: list[str]) -> int:
-        """Publish staged-chunk files (one JSON record per line, the
-        sink writer's on-disk format). Against the real service the
+        """Publish staged segment files (Arrow IPC, ``segment_schema()``:
+        the sink writer's on-disk format). Against the real service the
         staged-commit degrades to at-least-once — exactly the
         reference publisher's guarantee (PubsubStreamingWrite.scala) —
-        because there is no log-splice primitive to make it atomic."""
+        because there is no atomic multi-file publish."""
         n = 0
         for path in staged_files:
-            batch: list[PubsubMessage] = []
-            with open(path) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    rec = json.loads(line)
-                    batch.append(
-                        PubsubMessage(
-                            data=base64.b64decode(rec["data_b64"]),
-                            attributes=rec.get("attributes") or {},
-                            ordering_key=rec.get("ordering_key", ""),
-                        )
-                    )
-            self.publish(topic, batch)
-            n += len(batch)
+            rows = read_ipc(path)
+            self.publish(topic, to_messages(rows, [""] * rows.num_rows))
+            n += rows.num_rows
         return n
 
     # -- pull / ack (Subscriber.scala pull surface) ------------------------
@@ -1096,23 +931,21 @@ class RealBrokerClient:
 
     def pull_raw(
         self, sub: str, max_messages: int, region: str | None = None
-    ) -> list[tuple[str, dict]]:
-        """FileBroker's record-dict pull shape over a real service pull
+    ) -> pa.RecordBatch:
+        """FileBroker's ``pull_schema()`` batch over a real service pull
         (the partition readers consume this directly)."""
-        return [
-            (
-                rm.ack_id,
-                {
-                    "message_id": rm.message.message_id,
-                    "ordering_key": rm.message.ordering_key,
-                    "data_b64": base64.b64encode(rm.message.data).decode(),
-                    "attributes": rm.message.attributes,
-                    "publish_ts_us": rm.message.publish_ts_us,
-                    "region": rm.message.region,
-                },
-            )
-            for rm in self.pull(sub, max_messages, region)
-        ]
+        import pyarrow as pa
+
+        received = self.pull(sub, max_messages, region)
+        seg = segment_batch([rm.message for rm in received], 0)
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([rm.ack_id for rm in received], pa.string()),
+                pa.array([rm.message.message_id for rm in received], pa.string()),
+                *seg.columns,
+            ],
+            schema=pull_schema(),
+        )
 
     def acknowledge(self, sub: str, ack_ids: list[str]) -> int:
         for i in range(0, len(ack_ids), self.ACK_CHUNK):

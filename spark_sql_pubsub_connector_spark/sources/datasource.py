@@ -40,8 +40,9 @@ Parity map to the reference (SURVEY.md §2.1):
          worker cost, and a pull past that count returns nothing. A
          batch with nothing deliverable, such as the ack-only batch
          after a drain, plans no partitions and runs no tasks
-  S7/S8  per-task pull of ≤ max_messages_per_partition messages,
-         decoded to the 7-column row (PubsubPartitionReader.scala)
+  S7/S8  per-task pull of ≤ max_messages_per_partition messages as
+         one Arrow batch taken from the topic's IPC segments, given
+         the 7-column read schema (PubsubPartitionReader.scala)
   S9     deterministic replay: first pull persists the partition's
          RecordBatch as an atomically-renamed Arrow IPC file; task
          retries and plan re-evaluations yield the stored batch instead
@@ -93,7 +94,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .broker import FileBroker, _write_atomic
+from .broker import FileBroker, _write_atomic, segment_schema, write_ipc
 from .options import (
     PartitioningInfo,
     PubsubReadOptions,
@@ -233,42 +234,25 @@ class _PartitionPayload:
     legacy_files: tuple = ()
 
 
-def _records_to_arrow(subscription_path: str, received: list[tuple[str, dict]]):
-    """One Arrow RecordBatch for the whole partition — the DataSource
-    API accepts RecordBatches from read(), which skips per-row pickling
-    (the dominant cost of the tuple path: ~1000 rows × 7 fields per
-    partition through the Python/JVM boundary). ``received`` is
-    ``pull_raw``'s ``(ack_id, record)`` pairs."""
-    import base64
-
+def _records_to_arrow(subscription_path: str, pulled):
+    """The partition's read-schema RecordBatch from ``pull_raw``'s
+    ``pull_schema()`` batch: the DataSource API accepts RecordBatches from
+    read(), which skips per-row pickling through the Python/JVM
+    boundary. Adds the ``subscription`` column and casts the publish
+    time; every other column is passed through."""
     import pyarrow as pa
 
-    recs = [r for _, r in received]
     return pa.RecordBatch.from_arrays(
         [
-            pa.array([subscription_path] * len(recs), type=pa.string()),
-            pa.array([a for a, _ in received], type=pa.string()),
-            pa.array([r["message_id"] for r in recs], type=pa.string()),
-            pa.array([r.get("ordering_key", "") for r in recs], type=pa.string()),
-            pa.array([base64.b64decode(r["data_b64"]) for r in recs], type=pa.binary()),
-            pa.array(
-                [r["publish_ts_us"] for r in recs],
-                type=pa.timestamp("us", tz="UTC"),
-            ),
-            pa.array(
-                [list((r.get("attributes") or {}).items()) for r in recs],
-                type=pa.map_(pa.string(), pa.string()),
-            ),
+            pa.array([subscription_path] * pulled.num_rows, type=pa.string()),
+            pulled.column("ack_id"),
+            pulled.column("message_id"),
+            pulled.column("ordering_key"),
+            pulled.column("data"),
+            pulled.column("publish_ts_us").cast(pa.timestamp("us", tz="UTC")),
+            pulled.column("attributes"),
         ],
-        names=[
-            "subscription",
-            "ack_id",
-            "message_id",
-            "ordering_key",
-            "data",
-            "publish_timestamp",
-            "attributes",
-        ],
+        names=PUBSUB_READ_SCHEMA.names,
     )
 
 
@@ -397,12 +381,10 @@ def _pull_or_replay(payload: _PartitionPayload):
         return
 
     broker = FileBroker(payload.broker_dir)
-    # pull_raw keeps payloads base64-encoded, so each payload is decoded
-    # exactly once, in _records_to_arrow
-    received = broker.pull_raw(
+    pulled = broker.pull_raw(
         payload.subscription, payload.max_messages, region=payload.region
     )
-    batch = _records_to_arrow(payload.subscription_path, received)
+    batch = _records_to_arrow(payload.subscription_path, pulled)
     data = _batch_to_ipc(batch)
     for rep in payload.replica_files:
         _write_atomic(rep, data)
@@ -860,9 +842,10 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
     batch-id idempotence the reference implements driver-side
     (PubsubSink.scala:17-18) without re-publishing on task retries.
 
-    Arrow variant: write() receives pyarrow RecordBatches, so column
-    extraction is one vectorized ``to_pylist`` per column instead of
-    per-Row field access (mirrors the source's RecordBatch read path).
+    Arrow variant: write() receives pyarrow RecordBatches and stages
+    the segment columns selected from them as Arrow IPC chunk files,
+    with no per-message conversion (mirrors the source's RecordBatch
+    read path); commit() renames the chunks into the topic.
     """
 
     def __init__(self, options: dict, schema: StructType):
@@ -891,10 +874,12 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         # in publish_batch_size chunks — the staged-file analog of the
         # client library's batching element-count threshold
         # (CachedPublishers.scala:19-35: publishes flush every
-        # publish_batch_size messages; here every chunk is one atomic
-        # append unit at commit time)
-        import base64
+        # publish_batch_size messages; here every chunk is one segment
+        # file that commit renames into the topic)
         import time as _time
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         opts = self.opts
         stage = _stage_dir(opts)
@@ -903,7 +888,6 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         n = 0
         finals: list[str] = []
         tmps: list[str] = []
-        fh = None
 
         # chunks stay .tmp until the whole partition succeeds, then are
         # promoted together: a mid-task failure leaves only .tmp files,
@@ -920,67 +904,49 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         # which micro-batch sequencing makes safe (see _gc_orphans).
         owner = self._owner_token
 
-        def _roll():
-            nonlocal fh
-            if fh is not None:
-                fh.close()
-            tmp = os.path.join(
-                stage, f"stage-{owner}-{uuid.uuid4().hex}.jsonl.tmp"
-            )
+        def stage_chunk(rows) -> None:
+            tmp = os.path.join(stage, f"stage-{owner}-{uuid.uuid4().hex}.arrow.tmp")
             tmps.append(tmp)
-            fh = open(tmp, "w")
+            write_ipc(tmp, rows)
 
+        schema = segment_schema()
+        map_type = schema.field("attributes").type
+        held = schema.empty_table()  # rows not yet staged
         try:
             for batch in iterator:
-                names = batch.schema.names
-                datas = batch.column(names.index("data")).to_pylist()
-                attrs = batch.column(names.index("attributes")).to_pylist()
+                data = batch.column("data")
+                if data.null_count:
+                    raise ValueError("'data' must not be null")
+                rows = batch.num_rows
                 if opts.ordering_key is not None:
-                    keys = batch.column(names.index(opts.ordering_key)).to_pylist()
+                    keys = batch.column(opts.ordering_key).cast(pa.string())
+                    keys = pc.fill_null(keys, "")
                 else:
-                    keys = None
-                for i, data in enumerate(datas):
-                    if data is None:
-                        raise ValueError("'data' must not be null")
-                    a = attrs[i]
-                    # pyarrow MapArray rows arrive as [(k, v), ...]
-                    attributes = dict(a) if a else {}
-                    key = ""
-                    if keys is not None and keys[i] is not None:
-                        key = keys[i]
-                    if fh is None or n % opts.publish_batch_size == 0:
-                        _roll()
-                    # INVARIANT: no top-level "seq"/"message_id" keys —
-                    # FileBroker.commit_staged splices those in as a
-                    # text prefix and a duplicate here would win at
-                    # json.loads (last key wins), corrupting ordering.
-                    # User content only ever appears NESTED (attributes
-                    # values, base64 data), never as a top-level key.
-                    fh.write(
-                        json.dumps(
-                            {
-                                "ordering_key": str(key),
-                                "data_b64": base64.b64encode(bytes(data)).decode(),
-                                "attributes": attributes,
-                                "publish_ts_us": now_us,
-                                "region": "global",
-                            }
-                        )
-                        + "\n"
-                    )
-                    n += 1
-            if fh is not None:
-                fh.close()
-                fh = None
+                    keys = pa.array([""] * rows, pa.string())
+                attrs = batch.column("attributes").cast(map_type)
+                seg = pa.RecordBatch.from_arrays(
+                    [
+                        keys,
+                        data.cast(pa.binary()),
+                        pc.fill_null(attrs, pa.scalar([], map_type)),
+                        pa.array([now_us] * rows, pa.int64()),
+                        pa.array(["global"] * rows, pa.string()),
+                    ],
+                    schema=schema,
+                )
+                n += rows
+                held = pa.concat_tables([held, pa.Table.from_batches([seg])])
+                while held.num_rows >= opts.publish_batch_size:
+                    stage_chunk(held.slice(0, opts.publish_batch_size))
+                    held = held.slice(opts.publish_batch_size)
+            if held.num_rows:
+                stage_chunk(held)
             # whole partition succeeded: promote every chunk at once
             for tmp in tmps:
                 final = tmp[: -len(".tmp")]
                 os.replace(tmp, final)
                 finals.append(final)
         except BaseException:
-            if fh is not None:
-                fh.close()
-                fh = None
             for tmp in tmps:
                 if os.path.exists(tmp):
                     os.unlink(tmp)

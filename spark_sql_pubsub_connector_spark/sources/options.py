@@ -30,8 +30,9 @@ STREAM_ID = "stream_id"  # stable consumer identity (crash recovery)
 SINK_ID = "sink_id"  # stable writer identity (cross-restart idempotence)
 # Topic-log retention trigger (the file-broker analog of real Pub/Sub's
 # topic message_retention_duration, which is likewise a topic-level
-# admin property): when the log exceeds this many bytes at a sink
-# commit, the broker cuts the prefix every subscription has acked.
+# admin property): when the topic's live segments exceed this many
+# bytes at a sink commit, the broker unlinks the segments every
+# subscription has acked.
 # Unset = grow-forever (historical behavior).
 LOG_RETENTION_BYTES = "log_retention_bytes"
 REPLAY_CACHE_REPLICAS = "replay_cache_replicas"  # replay-block copies (S9)
@@ -173,8 +174,9 @@ class PubsubWriteOptions:
     # persisted, query-scoped state can survive).
     sink_id: str | None = None
     # Ack-based topic-log retention, applied at commit: None retains
-    # everything; a positive byte threshold compacts the fully-acked
-    # prefix whenever the log outgrows it (FileBroker.compact_topic).
+    # everything; a positive byte threshold unlinks the fully-acked
+    # segments whenever the live segments outgrow it
+    # (FileBroker.compact_topic).
     log_retention_bytes: int | None = None
     # The query's checkpointLocation verbatim (when Spark forwarded it
     # or the caller passed it), kept SEPARATELY from sink_id: the

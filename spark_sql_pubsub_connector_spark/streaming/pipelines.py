@@ -15,7 +15,7 @@ time as publish timestamp.
 
 from __future__ import annotations
 
-import glob
+import functools
 import json
 import os
 import shutil
@@ -25,8 +25,27 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.tables import load_table
-from ..sources.broker import FileBroker, PubsubMessage
+from ..session import ship_package
+from ..sources.broker import FileBroker, PubsubMessage, segment_schema, write_ipc
 from ..sources.datasource import register_pubsub
+
+
+def _stage_segment(staging: str, batches):
+    """``mapInArrow`` body of the seeder: write this task's rows as one
+    staged segment file named by its partition (a retried task replaces
+    the same file) and yield the file's path."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    rows = pa.Table.from_batches(batches)
+    path = os.path.join(staging, f"part-{TaskContext.get().partitionId():05d}.arrow")
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    write_ipc(tmp, rows.cast(segment_schema()))
+    os.replace(tmp, path)
+    yield pa.RecordBatch.from_pydict({"part": [path]})
 
 
 def seed_topic_from_events(
@@ -43,17 +62,17 @@ def seed_topic_from_events(
     """Publish the events table into a broker topic deterministically.
 
     Distributed: the staged-commit protocol the sink already uses.
-    Executors build each message's staged JSON line entirely JVM-side
-    (``to_json`` + ``base64``) and write one text part file per
-    range-partition of ``event_id``; the driver then splices the part
-    files into the topic log in filename (= partition = event_id)
-    order via ``FileBroker.commit_staged``, so message ids are
-    monotone in event_id exactly as the old driver-side
-    ``collect``+``publish`` loop produced — but no event data ever
-    moves through the driver, and seeding scales with the cluster
-    like any other write job. (``broker_dir`` is shared storage by
-    the FileBroker contract, so executor-written staging files are
-    visible to the driver.)
+    Executors compose each message's segment columns JVM-side
+    (``to_json`` payload, ordering key, attributes, publish time) and
+    one ``mapInArrow`` task per range-partition of ``event_id`` writes
+    its rows as one staged Arrow IPC segment file; the driver then
+    renames the files into the topic in partition (= event_id) order
+    via ``FileBroker.commit_staged``, so message ids are monotone in
+    event_id exactly as the old driver-side ``collect``+``publish``
+    loop produced — but no event data ever moves through the driver,
+    and seeding scales with the cluster like any other write job.
+    (``broker_dir`` is shared storage by the FileBroker contract, so
+    executor-written staging files are visible to the driver.)
 
     ``limit`` keeps its "first N by event_id" meaning via a
     pushed-down ``event_id < N`` filter — event ids are dense 0..N-1
@@ -115,24 +134,22 @@ def seed_topic_from_events(
             )
         return len(msgs)
 
-    # staged line = the broker log record minus seq/message_id (the
-    # commit splices those in): ordering_key, data_b64, attributes,
-    # publish_ts_us, region — all composed JVM-side
     # ignoreNullFields=false: emit "value": null like the json.dumps
     # path does, instead of silently dropping the key (to_json's
     # default) — consumers index payload fields unconditionally
-    keep_nulls = {"ignoreNullFields": "false"}
     payload = F.to_json(
         F.struct("event_id", "user_id", "event_type", "value", "props"),
-        keep_nulls,
+        {"ignoreNullFields": "false"},
     )
-    line = F.to_json(
-        F.struct(
+    segments = (
+        ev.repartitionByRange(num_partitions, "event_id")
+        .sortWithinPartitions("event_id")
+        .select(
             # str(None) == "None" in the old driver-side loop; keep it
             F.coalesce(F.col("user_id").cast("string"), F.lit("None")).alias(
                 "ordering_key"
             ),
-            F.base64(F.encode(payload, "UTF-8")).alias("data_b64"),
+            F.encode(payload, "UTF-8").alias("data"),
             F.create_map(F.lit("event_type"), F.col("event_type")).alias(
                 "attributes"
             ),
@@ -142,25 +159,21 @@ def seed_topic_from_events(
                 "publish_ts_us"
             ),
             F.lit("global").alias("region"),
-        ),
-        keep_nulls,
+        )
     )
     staging = os.path.join(
         broker_dir, f".seed-staging-{topic}-{uuid.uuid4().hex[:8]}"
     )
+    os.makedirs(staging)
     # the write lives inside the same try as the commit (r15 review):
     # a failed distributed write used to leave the staging dir behind
     # forever — the seeder twin of the sink stage-file GC
     try:
-        (
-            ev.repartitionByRange(num_partitions, "event_id")
-            .sortWithinPartitions("event_id")
-            .select(line.alias("value"))
-            .write.mode("overwrite")
-            .text(staging)
-        )
-        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-        n = broker.commit_staged(topic, parts)
+        ship_package(spark)
+        parts = segments.mapInArrow(
+            functools.partial(_stage_segment, staging), "part string"
+        ).collect()
+        n = broker.commit_staged(topic, sorted(r["part"] for r in parts))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     if limit is not None and n != limit:

@@ -2,9 +2,19 @@
 
 from __future__ import annotations
 
+import os
+import re
+
+import pyarrow as pa
 import pytest
 
-from spark_sql_pubsub_connector_spark.sources.broker import FileBroker, PubsubMessage
+from spark_sql_pubsub_connector_spark.sources.broker import (
+    FileBroker,
+    PubsubMessage,
+    segment_batch,
+    segment_schema,
+    write_ipc,
+)
 
 
 @pytest.fixture()
@@ -79,6 +89,20 @@ def test_backlog_by_region(broker):
     assert all(r.message.region == "eu-west1" for r in got)
 
 
+def test_region_lease_expiry_does_not_skip_unpulled_messages(tmp_path):
+    """A region-pinned pull leaves the delivery cursor alone. When its
+    lease lapses before any region-less pull has run, the cursor must
+    not be set to the lapsed seqs: a region-less pull still starts at
+    the ack floor and delivers the other regions' earlier messages."""
+    b = FileBroker(str(tmp_path))
+    b.create_subscription("fast", "t", ack_deadline_s=0.0)  # instant expiry
+    b.publish("t", _msgs(1, region="us-east1"))  # seq 0
+    b.publish("t", _msgs(1, region="eu-west1"))  # seq 1
+    assert [m.message.message_id for m in b.pull("fast", 10, region="eu-west1")] == ["1"]
+    got = b.pull("fast", 10)  # the eu lease has lapsed
+    assert sorted(m.message.message_id for m in got) == ["0", "1"]
+
+
 def test_ack_unknown_ids_is_idempotent(broker):
     broker.publish("t", _msgs(1))
     got = broker.pull("s", 1)
@@ -149,168 +173,158 @@ class TestRealClientParity:
         assert r("us-east1", "Localhost:8085") == "localhost:8085"
 
 
+# -- segment failure modes -------------------------------------------------
+
+
+def _segment_names(broker, topic="t"):
+    return [os.path.basename(s.path) for s in broker._segments(broker._topic_dir(topic))]
+
+
+def _staged(tmp_path, name, n):
+    path = str(tmp_path / name)
+    write_ipc(path, segment_batch(_msgs(n), 1))
+    return path
+
+
+def _torn_segment(broker, topic="t"):
+    """A crashed publish's residue: the first half of a segment file,
+    left under its tmp name."""
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_file(sink, segment_schema()) as w:
+        w.write(segment_batch(_msgs(3), 1))
+    data = sink.getvalue().to_pybytes()
+    path = os.path.join(broker._topic_dir(topic), ".0123abcd.tmp")
+    with open(path, "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    return path
+
+
 def test_commit_staged_malformed_line_leaves_log_untouched(broker, tmp_path):
-    """A malformed staged line must fail the WHOLE commit atomically:
-    no partial append (which would desync .seq and mint duplicate seq
-    numbers on the next publish) and the topic stays usable."""
+    """A staged file that is not an Arrow IPC segment — not IPC at all,
+    or IPC with another schema — fails the WHOLE commit before any
+    rename: the good file staged before it is not appended either, and
+    the topic keeps dense seqs."""
     broker.publish("t", _msgs(2))
-    good = tmp_path / "good.jsonl"
-    good.write_text('{"data_b64": "YQ==", "attributes": {}, "ordering_key": ""}\n')
-    bad = tmp_path / "bad.jsonl"
-    bad.write_text(
-        '{"data_b64": "Yg==", "attributes": {}, "ordering_key": ""}\n'
-        "not-json-at-all\n"
-    )
-    with pytest.raises(ValueError, match="JSON object"):
-        broker.commit_staged("t", [str(good), str(bad)])
-    # nothing appended — not even the valid lines before the bad one
+    good = _staged(tmp_path, "good.arrow", 1)
+    not_ipc = tmp_path / "bad.jsonl"
+    not_ipc.write_text('{"data_b64": "Yg==", "attributes": {}}\n')
+    wrong = str(tmp_path / "wrong.arrow")
+    write_ipc(wrong, pa.table({"data": pa.array([b"x"], pa.binary())}))
+    before = sorted(os.listdir(broker._topic_dir("t")))
+    for bad in (str(not_ipc), wrong):
+        with pytest.raises(ValueError, match=re.escape(bad)):
+            broker.commit_staged("t", [good, bad])
+        assert sorted(os.listdir(broker._topic_dir("t"))) == before
+        assert os.path.exists(good)
     assert len(broker.topic_messages("t")) == 2
     # the topic still works, with contiguous seqs
+    assert broker.commit_staged("t", [good]) == 1
     broker.publish("t", _msgs(1))
     msgs = broker.topic_messages("t")
-    assert [m.message_id for m in msgs] == ["0", "1", "2"]
+    assert [m.message_id for m in msgs] == ["0", "1", "2", "3"]
 
 
-def test_publish_seq_recovers_from_stale_counter(broker, tmp_path):
-    """r14 self-review (the publish twin of the r13 sink find): both
-    appenders write log.jsonl FIRST and .seq AFTER, so a crash between
-    the two leaves committed lines the counter doesn't cover. Minting
-    from the stale counter would duplicate live seq numbers — acks
-    conflate distinct messages, the dense-seq cursor under-delivers.
-    _next_seq recovers from the log tail: max(counter, last_seq + 1)."""
-    import os
+def test_segments_that_do_not_tile_raise(broker, tmp_path):
+    """Segment names are the seq counter. A gap between two ranges (a
+    lost segment) or an overlap (a range minted twice) is corruption:
+    every reader and writer raises an error naming the topic dir
+    instead of skipping or re-minting seqs."""
+    import shutil
 
     broker.publish("t", _msgs(3))
-    seq_path = os.path.join(str(tmp_path), "topics", "t", ".seq")
-    with open(seq_path, "w") as fh:
-        fh.write("1")  # simulate the crash window: counter lags the log
-    ids = broker.publish("t", _msgs(2))
-    assert ids == ["3", "4"]  # NOT "1","2" — no re-minted live seqs
-    got = broker.pull("s", 10)
-    assert sorted(int(m.message.message_id) for m in got) == [0, 1, 2, 3, 4]
-    assert len({m.message.message_id for m in got}) == 5
+    broker.publish("t", _msgs(2))
+    broker.publish("t", _msgs(2))
+    d = broker._topic_dir("t")
+    first, middle, last = broker._segments(d)
+    moved = os.path.join(str(tmp_path), "moved.arrow")
+    os.rename(middle.path, moved)  # gap: [0,3) then [5,7)
+    overlap = os.path.join(d, f"{2:020d}-{4:020d}.arrow")
+    for corrupt in ("gap", "overlap"):
+        if corrupt == "overlap":
+            os.rename(moved, middle.path)
+            shutil.copy(middle.path, overlap)  # [0,3) [2,4) [3,5) [5,7)
+        for call in (
+            lambda: broker.publish("t", _msgs(1)),
+            lambda: broker.pull("s", 10),
+            lambda: broker.backlog("s"),
+            lambda: broker.topic_messages("t"),
+        ):
+            with pytest.raises(RuntimeError, match=re.escape(d)):
+                call()
+    os.unlink(overlap)
+    assert broker.publish("t", _msgs(1)) == ["7"]
+
+
+def test_commit_staged_killed_between_renames(broker, tmp_path, monkeypatch):
+    """A commit killed after renaming some of its staged files has
+    appended whole segments only: seqs stay dense, the files not yet
+    renamed stay staged, and the next commit continues after the
+    newest segment (the sink re-commits the batch: at-least-once)."""
+    from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
+
+    broker.publish("t", _msgs(4))
+    a = _staged(tmp_path, "a.arrow", 2)
+    b = _staged(tmp_path, "b.arrow", 3)
+    real_rename = os.rename
+    calls = []
+
+    def dying_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise KeyboardInterrupt("killed")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(broker_mod.os, "rename", dying_rename)
+    with pytest.raises(KeyboardInterrupt):
+        broker.commit_staged("t", [a, b])
+    monkeypatch.undo()
+    assert not os.path.exists(a) and os.path.exists(b)
+    assert [int(m.message_id) for m in broker.topic_messages("t")] == list(range(6))
+    assert broker.backlog("s") == 6
+    assert broker.commit_staged("t", [b]) == 3
+    assert broker.publish("t", _msgs(1)) == ["9"]
+    got = broker.pull("s", 20)
+    assert sorted(int(m.message.message_id) for m in got) == list(range(10))
 
 
 def test_compaction_that_cuts_the_whole_log_keeps_a_lagging_counter_safe(
     broker, tmp_path
 ):
-    """A counter lagging the log is recovered from the log's last line,
-    so a compaction that cuts every line must bring the counter up to
-    date first. Otherwise the next publish re-mints seqs below the ack
-    floor, and those new messages read as already acked."""
-    import os
-
+    """The newest segment's name is the topic's seq counter, so a
+    compaction that cuts every message leaves an empty segment at its
+    end. Otherwise the next publish re-mints seqs below the ack floor,
+    and those new messages read as already acked."""
     broker.publish("t", _msgs(3))
-    seq_path = os.path.join(str(tmp_path), "topics", "t", ".seq")
-    with open(seq_path, "w") as fh:
-        fh.write("1")  # crash between the log append and the counter write
     broker.acknowledge("s", [m.ack_id for m in broker.pull("s", 10)])
-    broker.compact_topic("t")
-    assert os.path.getsize(_log_path(tmp_path)) == 0
+    assert broker.compact_topic("t")["cut_messages"] == 3
+    assert _segment_names(broker) == [f"{3:020d}-{3:020d}.arrow"]
+    assert broker.topic_messages("t") == []
     assert broker.backlog("s") == 0
+    # a second pass keeps the empty segment
+    assert broker.compact_topic("t")["cut_messages"] == 0
     assert broker.publish("t", _msgs(2)) == ["3", "4"]
     assert broker.backlog("s") == 2
     assert sorted(m.message.message_id for m in broker.pull("s", 10)) == ["3", "4"]
 
 
-def test_commit_staged_seq_recovers_from_stale_counter(broker, tmp_path):
-    """Same crash window through the sink's commit_staged path."""
-    import json
-    import os
-
-    broker.publish("t", _msgs(4))
-    seq_path = os.path.join(str(tmp_path), "topics", "t", ".seq")
-    with open(seq_path, "w") as fh:
-        fh.write("0")
-    staged = tmp_path / "chunk.jsonl"
-    staged.write_text(
-        json.dumps(
-            {
-                "ordering_key": "",
-                "data_b64": "aGk=",
-                "attributes": {},
-                "publish_ts_us": 1,
-                "region": "global",
-            }
-        )
-        + "\n"
-    )
-    assert broker.commit_staged("t", [str(staged)]) == 1
-    seqs = [int(m.message_id) for m in broker.topic_messages("t")]
-    assert seqs == [0, 1, 2, 3, 4]  # dense, no duplicates
-
-
-def test_torn_tail_line_truncated_before_next_append(broker, tmp_path):
-    """A crashed append's partial final write (no trailing newline)
-    would poison every later consumer's json.loads; the next publish
-    truncates it — safe, because a torn line's publish/commit never
-    returned success, so the caller retries (at-least-once)."""
-    import os
-
-    broker.publish("t", _msgs(3))
-    log = os.path.join(str(tmp_path), "topics", "t", "log.jsonl")
-    with open(log, "ab") as fh:
-        fh.write(b'{"seq": 3, "message_id": "3", "orde')  # torn
-    ids = broker.publish("t", _msgs(1))
-    assert ids == ["3"]  # the torn line was cut; its seq re-minted
-    msgs = broker.topic_messages("t")  # full parse — no poison left
-    assert [int(m.message_id) for m in msgs] == [0, 1, 2, 3]
-    got = broker.pull("s", 10)
-    assert sorted(int(m.message.message_id) for m in got) == [0, 1, 2, 3]
-
-
-def test_seq_recovery_with_line_longer_than_scan_window(broker, tmp_path):
-    """A single log line is one message — real payloads can exceed the
-    64 KB back-scan window (Pub/Sub allows 10 MB). Recovery must walk
-    back until the FINAL line is complete, not parse a mid-line
-    fragment."""
-    import os
-
-    big = PubsubMessage(
-        data=b"x" * 200_000,  # ~267 KB base64 — several windows
-        attributes={},
-        publish_ts_us=1,
-        region="global",
-    )
-    broker.publish("t", _msgs(2))
-    broker.publish("t", [big])
-    seq_path = os.path.join(str(tmp_path), "topics", "t", ".seq")
-    with open(seq_path, "w") as fh:
-        fh.write("0")
-    ids = broker.publish("t", _msgs(1))
-    assert ids == ["3"]
-    assert [int(m.message_id) for m in broker.topic_messages("t")] == [
-        0,
-        1,
-        2,
-        3,
-    ]
-
-
 def test_torn_tail_invisible_to_readers_without_an_append(broker, tmp_path):
-    """r14 review: _next_seq repairs a torn tail only on the NEXT
-    append — but a drained producer may never append again. Readers
-    must treat a final line without its newline as nonexistent (its
-    publish never returned success): no json.loads poison in
-    pull/backlog, no phantom lease, and no cursor advanced past it,
-    so the eventual repair (truncate + rewrite at the same byte) is
-    seamless."""
-    import os
-
+    """A publish that crashed while writing its segment leaves a torn
+    tmp file in the topic dir, and a drained producer may never
+    publish again. It must be invisible: no read error in
+    pull/backlog, no phantom lease, and no seq taken from the next
+    publish."""
     broker.publish("t", _msgs(2))
-    log = os.path.join(str(tmp_path), "topics", "t", "log.jsonl")
-    with open(log, "ab") as fh:
-        fh.write(b'{"seq": 2, "message_id": "2", "orde')  # torn, no \n
-    # every read API stays functional and blind to the torn line
+    _torn_segment(broker)
+    # every read API stays functional and blind to the torn write
     assert broker.backlog("s") == 2
+    assert broker.deliverable("s") == 2
+    assert broker.backlog_by_region("s") == {"global": 2}
     got = broker.pull("s", 10)
     assert sorted(m.message.message_id for m in got) == ["0", "1"]
     broker.acknowledge("s", [m.ack_id for m in got])
     assert broker.backlog("s") == 0
     assert broker.pull("s", 10) == []  # no phantom lease on seq 2
-    # producer retry: the torn line is truncated and seq 2 re-minted;
-    # the reader's cursors (parked at the torn line's start) pick the
-    # rewritten line up seamlessly
+    # producer retry: the torn write took no seq
     ids = broker.publish("t", _msgs(1))
     assert ids == ["2"]
     got2 = broker.pull("s", 10)
@@ -318,45 +332,35 @@ def test_torn_tail_invisible_to_readers_without_an_append(broker, tmp_path):
 
 
 def test_topic_messages_blind_to_torn_tail(broker, tmp_path):
-    """ADVICE r14: torn-tail invisibility covered _scan_unacked only;
-    _read_log (behind topic_messages, which bench.py and the streaming
-    differential twin call) still json.loads'd every line and raised
-    JSONDecodeError on a torn final line until the next append repaired
-    it. _read_log now mirrors the _scan_unacked rule: a final line
-    without its trailing newline is nonexistent."""
-    import os
-
+    """ADVICE r14: torn-write invisibility must hold for
+    ``topic_messages`` too (bench.py and the streaming differential
+    twin call it), not only for pulls."""
     broker.publish("t", _msgs(2))
-    log = os.path.join(str(tmp_path), "topics", "t", "log.jsonl")
-    with open(log, "ab") as fh:
-        fh.write(b'{"seq": 2, "message_id": "2", "orde')  # torn, no \n
+    _torn_segment(broker)
     msgs = broker.topic_messages("t")  # must not raise
     assert [m.data for m in msgs] == [
         b"Test Message: 0",
         b"Test Message: 1",
     ]
-    # repair path: the next publish truncates + re-mints seq 2, and
-    # topic_messages sees exactly the three intact lines
     broker.publish("t", _msgs(1))
     assert len(broker.topic_messages("t")) == 3
 
 
-# -- topic-log retention (VERDICT r14 #4) -----------------------------------
+# -- topic retention (VERDICT r14 #4) ---------------------------------------
 
 
-def _log_path(tmp_path, topic="t"):
-    import os
-
-    return os.path.join(str(tmp_path), "topics", topic, "log.jsonl")
+def _live(broker, topic="t"):
+    """``(bytes, messages)`` held by the topic's live segments."""
+    segs = broker._segments(broker._topic_dir(topic))
+    return sum(os.path.getsize(s.path) for s in segs), sum(s.hi - s.lo for s in segs)
 
 
 def test_compact_topic_cuts_fully_acked_prefix(broker, tmp_path):
-    """compact_topic removes exactly the prefix every subscription has
+    """compact_topic removes exactly the segments every subscription has
     acked; everything at or above the floor — leased-unacked and
     undelivered alike — survives and is still delivered."""
-    import os
-
-    broker.publish("t", _msgs(10))
+    broker.publish("t", _msgs(3))  # segment [0,3)
+    broker.publish("t", _msgs(7))  # segment [3,10)
     got = broker.pull("s", 5)  # lease 0-4
     # ack 0,1,2 → acked_below=3; 3,4 stay leased-unacked
     broker.acknowledge("s", [m.ack_id for m in got[:3]])
@@ -377,19 +381,19 @@ def test_compact_topic_cuts_fully_acked_prefix(broker, tmp_path):
         "s", [m.ack_id for m in got2] + [m.ack_id for m in got3]
     )
     assert broker.backlog("s") == 0
-    # second pass cuts the rest; an empty log still accepts publishes
-    # with seq continuity (.seq counter is authoritative)
+    # second pass cuts the rest; an empty topic still accepts publishes
+    # with seq continuity
     broker.compact_topic("t")
-    assert os.path.getsize(_log_path(tmp_path)) == 0
+    assert _live(broker)[1] == 0
     assert broker.publish("t", _msgs(1)) == ["10"]
 
 
 def test_compact_topic_floor_is_slowest_subscription(broker, tmp_path):
     """Two subscriptions: the floor is the SLOWER one's acked_below, and
-    the slow subscription still drains everything after the cut (its
-    byte cursors reset against the new layout and rescan)."""
+    the slow subscription still drains everything after the cut."""
     broker.create_subscription("s2", "t", ack_deadline_s=60)
-    broker.publish("t", _msgs(8))
+    broker.publish("t", _msgs(3))
+    broker.publish("t", _msgs(5))
     fast = broker.pull("s", 8)
     broker.acknowledge("s", [m.ack_id for m in fast])  # s: acked_below=8
     slow = broker.pull("s2", 3)
@@ -412,107 +416,140 @@ def test_compact_topic_no_subscription_retains_everything(broker, tmp_path):
     assert len(broker.topic_messages("lone")) == 4
 
 
-def test_crash_between_writeahead_and_cut_resolves(broker, tmp_path):
-    """Crash window 1→2: meta.json says 'pending' but the log is uncut.
-    The next lock holder (any pull) finishes the idempotent cut and
-    resets cursors — no loss, no duplicate."""
-    import json
-    import os
+def _kill_compaction_at_unlink(monkeypatch, n):
+    """Make the ``n``-th segment unlink of the next compaction die."""
+    from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
 
-    broker.publish("t", _msgs(6))
-    got = broker.pull("s", 3)
-    broker.acknowledge("s", [m.ack_id for m in got])  # acked_below=3
-    d = broker._topic_dir("t")
-    size_before = os.path.getsize(_log_path(tmp_path))
-    # simulate the crash: step 1 only (write-ahead), no cut, no done
-    broker._store_topic_meta(
-        d,
-        {
-            "token": "deadbeef",
-            "cut_below_seq": 3,
-            "state": "pending",
-            "compacted_below_seq": 0,
-        },
-    )
-    got2 = broker.pull("s", 10)  # resolves the pending compaction
-    assert sorted(int(m.message.message_id) for m in got2) == [3, 4, 5]
-    assert os.path.getsize(_log_path(tmp_path)) < size_before  # cut ran
-    with open(os.path.join(d, "meta.json")) as fh:
-        assert json.load(fh)["state"] == "done"
+    real_unlink = os.unlink
+    calls = []
+
+    def dying_unlink(path):
+        calls.append(path)
+        if len(calls) == n:
+            raise KeyboardInterrupt("killed")
+        real_unlink(path)
+
+    monkeypatch.setattr(broker_mod.os, "unlink", dying_unlink)
+
+
+def test_crash_between_writeahead_and_cut_resolves(broker, tmp_path, monkeypatch):
+    """A compaction that cuts the newest segment first renames in the
+    empty segment that carries the seq counter, then unlinks. Killed
+    between the two, it leaves every segment plus that empty one: the
+    ranges still tile, nothing is lost or duplicated, and the next
+    compaction finishes the cut."""
+    broker.publish("t", _msgs(3))
+    broker.publish("t", _msgs(3))
+    got = broker.pull("s", 6)
+    broker.acknowledge("s", [m.ack_id for m in got])  # acked_below=6
+    _kill_compaction_at_unlink(monkeypatch, 1)
+    with pytest.raises(KeyboardInterrupt):
+        broker.compact_topic("t")
+    monkeypatch.undo()
+    assert _live(broker)[1] == 6
+    assert _segment_names(broker)[-1] == f"{6:020d}-{6:020d}.arrow"
+    assert broker.backlog("s") == 0
+    assert broker.pull("s", 10) == []
+    assert broker.publish("t", _msgs(1)) == ["6"]
+    got2 = broker.pull("s", 10)
+    assert [m.message.message_id for m in got2] == ["6"]
     broker.acknowledge("s", [m.ack_id for m in got2])
+    assert broker.compact_topic("t")["cut_messages"] == 7
     assert broker.backlog("s") == 0
 
 
-def test_crash_between_cut_and_done_resolves(broker, tmp_path):
-    """Crash window 2→3: the log is already cut but meta still says
-    'pending'. Resolution re-runs the cut (a no-op below the floor)
-    and marks done; stale byte cursors are never trusted because the
-    token changed with the write-ahead."""
-    import json
-    import os
-
-    broker.publish("t", _msgs(6))
-    got = broker.pull("s", 6)  # advances deliver_pos/scan_pos to EOF bytes
+def test_crash_between_cut_and_done_resolves(broker, tmp_path, monkeypatch):
+    """A compaction killed after unlinking only some of its segments
+    leaves a suffix that still tiles, because segments go lowest
+    first: leases on retained seqs still redeliver, a new subscription
+    starts at the first retained seq, and the next pass cuts the
+    rest."""
+    for _ in range(3):
+        broker.publish("t", _msgs(2))  # [0,2) [2,4) [4,6)
+    got = broker.pull("s", 6)
     broker.acknowledge("s", [m.ack_id for m in got[:4]])  # acked_below=4
-    d = broker._topic_dir("t")
-    broker._store_topic_meta(
-        d,
-        {
-            "token": "cafebabe",
-            "cut_below_seq": 4,
-            "state": "pending",
-            "compacted_below_seq": 0,
-        },
-    )
-    broker._cut_log_below(d, 4)  # step 2 ran, step 3 (done) did not
-    # leases on 4,5 still outstanding; nack and re-pull through the
-    # resolved layout
+    _kill_compaction_at_unlink(monkeypatch, 2)
+    with pytest.raises(KeyboardInterrupt):
+        broker.compact_topic("t")
+    monkeypatch.undo()
+    assert [m.message_id for m in broker.topic_messages("t")] == ["2", "3", "4", "5"]
+    # leases on 4,5 still outstanding; nack and re-pull
     broker.modify_ack_deadline("s", [m.ack_id for m in got[4:]], 0)
     got2 = broker.pull("s", 10)
     assert sorted(int(m.message.message_id) for m in got2) == [4, 5]
-    with open(os.path.join(d, "meta.json")) as fh:
-        assert json.load(fh)["state"] == "done"
+    assert broker.backlog("s") == 2
+    broker.create_subscription("late", "t")
+    assert broker.backlog("late") == 4
+    assert broker.compact_topic("t")["cut_messages"] == 0  # "late" holds 2,3
+    broker.acknowledge("late", [m.ack_id for m in broker.pull("late", 2)])
+    assert broker.compact_topic("t")["cut_messages"] == 2
 
 
 def test_auto_compaction_bounds_long_lived_topic(tmp_path):
     """The bounded-disk guarantee: a publish/drain/ack loop with
-    auto_compact_bytes keeps log.jsonl near the threshold instead of
-    growing with topic lifetime, and delivers every message exactly
-    once along the way."""
-    import os
-
+    auto_compact_bytes keeps the live segments near the threshold
+    instead of growing with topic lifetime, and delivers every message
+    exactly once along the way."""
     b = FileBroker(str(tmp_path), auto_compact_bytes=8 * 1024)
     b.create_topic("t")
     b.create_subscription("s", "t", ack_deadline_s=60)
     delivered = []
-    max_size = 0
+    max_bytes = max_msgs = 0
     for _ in range(40):
-        b.publish("t", _msgs(25))  # ~170 bytes/line → ~4.2 KB/round
+        b.publish("t", _msgs(25))  # one ~3.2 KB segment per round
         got = b.pull("s", 100)
         delivered.extend(m.message.data for m in got)
         b.acknowledge("s", [m.ack_id for m in got])
-        max_size = max(max_size, os.path.getsize(_log_path(tmp_path)))
-    # 40 rounds * 4.2 KB ≈ 170 KB unbounded; bounded ≈ threshold + one
-    # round's worth
-    assert max_size < 3 * 8 * 1024, max_size
+        size, msgs = _live(b)
+        max_bytes, max_msgs = max(max_bytes, size), max(max_msgs, msgs)
+    # 40 rounds ≈ 129 KB and 1,000 messages unbounded; bounded: the
+    # threshold plus one round's segment
+    assert max_bytes < 8 * 1024 + 4 * 1024, max_bytes
+    assert max_msgs <= 3 * 25, max_msgs
     assert len(delivered) == 40 * 25
     assert b.backlog("s") == 0
 
 
 def test_compaction_preserves_torn_tail_repair(broker, tmp_path):
-    """A torn tail rides through the cut untouched: still invisible to
-    readers, still truncated and re-minted by the next publish."""
-    broker.publish("t", _msgs(3))
+    """A torn tmp file rides through a compaction untouched: still
+    invisible to readers, and the next publish still takes the next
+    seq."""
+    broker.publish("t", _msgs(2))
+    broker.publish("t", _msgs(1))
     got = broker.pull("s", 2)
     broker.acknowledge("s", [m.ack_id for m in got])  # acked_below=2
-    with open(_log_path(tmp_path), "ab") as fh:
-        fh.write(b'{"seq": 3, "message_id": "3", "orde')  # torn, no \n
+    torn = _torn_segment(broker)
     stats = broker.compact_topic("t")
     assert stats["cut_messages"] == 2
+    assert os.path.exists(torn)
     assert [m.message_id for m in broker.topic_messages("t")] == ["2"]
-    assert broker.publish("t", _msgs(1)) == ["3"]  # seq 3 re-minted
+    assert broker.publish("t", _msgs(1)) == ["3"]
     got2 = broker.pull("s", 10)
     assert sorted(m.message.message_id for m in got2) == ["2", "3"]
+
+
+def test_old_jsonl_topic_layout_fails_loudly(broker, tmp_path):
+    """A topic dir written by the older JSONL broker (``log.jsonl`` and
+    its ``.seq`` counter) would read as an empty topic; every call
+    that reads it raises an error naming the file instead."""
+    d = broker._topic_dir("t")
+    broker.publish("t", _msgs(1))
+    for name in ("log.jsonl", ".seq"):
+        path = os.path.join(d, name)
+        with open(path, "w") as fh:
+            fh.write('{"seq": 0, "message_id": "0"}\n' if name == "log.jsonl" else "1")
+        for call in (
+            lambda: broker.publish("t", _msgs(1)),
+            lambda: broker.pull("s", 10),
+            lambda: broker.backlog("s"),
+            lambda: broker.backlog_by_region("s"),
+            lambda: broker.topic_messages("t"),
+            lambda: broker.create_subscription("s2", "t"),
+        ):
+            with pytest.raises(RuntimeError, match=re.escape(path)):
+                call()
+        os.unlink(path)
+    assert broker.publish("t", _msgs(1)) == ["1"]
 
 
 def test_subscription_created_after_compaction_starts_at_floor(
@@ -541,8 +578,6 @@ def test_subscription_created_after_compaction_starts_at_floor(
     assert s2["acked"] == []
     # and the topic still compacts (floor would have stuck at 0 before)
     assert broker.compact_topic("t")["cut_messages"] == 2
-
-
 def test_torn_subscription_create_leaves_compaction_working(
     broker, tmp_path, monkeypatch
 ):

@@ -19,7 +19,12 @@ import time
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from spark_sql_pubsub_connector_spark.sources.broker import FileBroker, PubsubMessage
+from spark_sql_pubsub_connector_spark.sources.broker import (
+    FileBroker,
+    PubsubMessage,
+    segment_batch,
+    write_ipc,
+)
 
 
 def _mk(tmp_path, n, deadline):
@@ -235,6 +240,7 @@ def test_concurrent_consumers_with_auto_compacting_publisher(
     auto_compact_bytes (so compaction fires mid-drain, under the same
     lock the 8 consumer threads contend on), and every message must
     still be delivered to exactly one consumer."""
+    import os
     import threading
 
     tmp_path = tmp_path_factory.mktemp("concc")
@@ -295,30 +301,30 @@ def test_concurrent_consumers_with_auto_compacting_publisher(
     assert len(flat) == total, f"{len(flat)} deliveries for {total}"
     assert len(set(flat)) == total  # exactly-one delivery per message
     assert b.backlog("s") == 0
-    # retention actually engaged: the log is a fraction of the ~28 KB
-    # a grow-forever topic would hold. The bound here is deliberately
-    # loose: the LAST acks can land after the final publish, and with
-    # no further append nothing re-triggers auto-compaction, so the
-    # tail's size depends on ack timing (observed 14 KB under a
-    # loaded host vs ~6 KB solo — r15 flake).
-    import os
-
-    log = os.path.join(str(tmp_path / "b"), "topics", "t", "log.jsonl")
-    assert os.path.getsize(log) < 24 * 1024
+    # retention actually engaged: the topic retains a fraction of the
+    # 400 messages a grow-forever topic would hold. The bound is
+    # deliberately loose: the LAST acks can land after the final
+    # publish, and with no further append nothing re-triggers
+    # auto-compaction, so the tail depends on ack timing (r15 flake).
+    segs = b._segments(b._topic_dir("t"))
+    assert sum(s.hi - s.lo for s in segs) < 340
     # after an explicit compaction at quiescence (backlog 0, all
-    # acked) the bound is deterministic
+    # acked) the bound is deterministic: only the empty segment that
+    # carries the seq counter is left
     b.compact_topic("t")
-    assert os.path.getsize(log) < 2 * 1024
+    segs = b._segments(b._topic_dir("t"))
+    assert [(s.lo, s.hi) for s in segs] == [(total, total)]
+    assert os.path.getsize(segs[0].path) < 2 * 1024
 
 
 # op stream for the backlog differential: everything that moves the
-# ack floor, the log's end or its layout, plus the crash residues
-# (torn tail line, .seq counter lagging the log)
+# ack floor, the topic's end or its segments, plus the crash residues
+# (a stray tmp segment, a commit_staged killed between two renames)
 _OPS_B = st.lists(
     st.tuples(
         st.sampled_from(
-            ["publish", "pull", "ack", "nack", "expire", "compact", "torn",
-             "lag", "newsub"]
+            ["publish", "pull", "ack", "nack", "expire", "compact", "stray",
+             "killed_commit", "newsub"]
         ),
         st.integers(1, 7),
     ),
@@ -332,10 +338,10 @@ _OPS_B = st.lists(
 # a lapsed lease is deliverable again before any pull drops its group
 @example(ops=[("publish", 3), ("pull", 2), ("expire", 1), ("pull", 1)])
 @example(
-    # the compaction cuts every line, the lagging counter's included
-    ops=[("publish", 5), ("lag", 3), ("pull", 7), ("pull", 1), ("ack", 7),
-         ("ack", 1), ("compact", 1), ("newsub", 1), ("torn", 1), ("pull", 2),
-         ("publish", 2), ("compact", 1)]
+    # the compaction cuts every segment, the killed commit's included
+    ops=[("publish", 5), ("killed_commit", 3), ("pull", 7), ("pull", 1),
+         ("ack", 7), ("ack", 1), ("compact", 1), ("newsub", 1), ("stray", 1),
+         ("pull", 2), ("publish", 2), ("compact", 1)]
 )
 def test_backlog_and_deliverable_counts_match_a_scan(tmp_path_factory, ops):
     """``backlog()`` counts seqs between the ack floor and the log's end
@@ -362,17 +368,19 @@ def test_backlog_and_deliverable_counts_match_a_scan(tmp_path_factory, ops):
     published = 0
     regions = ["global", "us-east1", "eu-west1"]
 
+    def msgs(k: int) -> list[PubsubMessage]:
+        return [
+            PubsubMessage(data=b"x", publish_ts_us=1,
+                          region=regions[(published + i) % 3])
+            for i in range(k)
+        ]
+
     def publish(k: int) -> None:
         nonlocal published
-        b.publish(
-            "t",
-            [
-                PubsubMessage(data=b"x", publish_ts_us=1,
-                              region=regions[(published + i) % 3])
-                for i in range(k)
-            ],
-        )
+        b.publish("t", msgs(k))
         published += k
+
+    real_rename = os.rename
 
     with mock.patch.object(broker_mod, "time", SimpleNamespace(time=lambda: clock[0])):
         for kind, k in ops:
@@ -392,17 +400,32 @@ def test_backlog_and_deliverable_counts_match_a_scan(tmp_path_factory, ops):
                 outstanding = {s: [] for s in subs}
             elif kind == "compact":
                 b.compact_topic("t")
-            elif kind == "torn":
-                # a crashed append: part of a line, no newline
-                with open(os.path.join(topic_dir, "log.jsonl"), "a") as fh:
-                    fh.write('{"seq": 999999, "message_id": "99')
-            elif kind == "lag":
-                # crash between the log append and the counter write
-                with open(os.path.join(topic_dir, ".seq")) as fh:
-                    before = fh.read()
-                publish(k)
-                with open(os.path.join(topic_dir, ".seq"), "w") as fh:
-                    fh.write(before)
+            elif kind == "stray":
+                # a crashed publish: half a segment under a tmp name
+                with open(os.path.join(topic_dir, f".{k}.tmp"), "wb") as fh:
+                    fh.write(b"ARROW1\x00\x00" + b"\x00" * k)
+            elif kind == "killed_commit":
+                # two staged chunks; the commit dies before the second
+                # rename, so only the first is appended
+                staged = []
+                for part, rows in enumerate((k, 1)):
+                    path = str(tmp / f"staged-{published}-{part}.arrow")
+                    write_ipc(path, segment_batch(msgs(rows), 1))
+                    staged.append(path)
+                renames = []
+
+                def dying_rename(src, dst):
+                    renames.append(src)
+                    if len(renames) == 2:
+                        raise KeyboardInterrupt("killed")
+                    real_rename(src, dst)
+
+                with mock.patch.object(broker_mod.os, "rename", dying_rename):
+                    try:
+                        b.commit_staged("t", staged)
+                    except KeyboardInterrupt:
+                        pass
+                published += k
             elif kind == "newsub" and len(subs) < 3:
                 name = f"s{len(subs)}"
                 b.create_subscription(name, "t", ack_deadline_s=10)

@@ -8,8 +8,8 @@ The fakes reproduce the protobuf-ish shapes the real client exposes
 (``received_messages[].message.publish_time.seconds/.nanos``, publish
 futures, request-dict call signatures), so what's under test is every
 line of adapter logic in ``RealBrokerClient``: topic/subscription path
-construction, µs timestamp conversion, the FileBroker record-dict pull
-shape, client caching keyed by endpoint / (topic, ordering), the
+construction, µs timestamp conversion, the FileBroker ``pull_schema()``
+pull batch, client caching keyed by endpoint / (topic, ordering), the
 reference batching + flow-control constants (CachedPublishers.scala:
 19-35), and the emulator plaintext-credentials path
 (Subscriber.scala:38-54).
@@ -17,14 +17,18 @@ reference batching + flow-control constants (CachedPublishers.scala:
 
 from __future__ import annotations
 
-import base64
 import sys
 import types as _types
 from types import SimpleNamespace
 
 import pytest
 
-from spark_sql_pubsub_connector_spark.sources.broker import PubsubMessage
+from spark_sql_pubsub_connector_spark.sources.broker import (
+    PubsubMessage,
+    pull_schema,
+    segment_batch,
+    write_ipc,
+)
 
 # ---------------------------------------------------------------------------
 # in-memory service shared by the fake clients
@@ -253,18 +257,30 @@ def test_pull_leases_and_ack_removes(real_client):
 
 def test_pull_raw_matches_filebroker_record_shape(real_client):
     real_client.publish("t", _msgs(1))
-    (ack_id, rec), = real_client.pull_raw("s", 10)
-    assert ack_id == "ack-0"
-    assert set(rec) == {
-        "message_id",
-        "ordering_key",
-        "data_b64",
-        "attributes",
-        "publish_ts_us",
-        "region",
-    }
-    assert base64.b64decode(rec["data_b64"]) == b"Test Message: 0"
-    assert rec["region"] == "global"
+    batch = real_client.pull_raw("s", 10)
+    assert batch.schema == pull_schema()
+    (row,) = batch.to_pylist()
+    assert row["ack_id"] == "ack-0"
+    assert row["message_id"] == "0"
+    assert row["data"] == b"Test Message: 0"
+    assert row["attributes"] == [("key", "value: 0")]
+    assert row["publish_ts_us"] == 1_700_000_000_000_000 + 123
+    assert row["region"] == "global"
+
+
+def test_pull_raw_schema_matches_filebroker(real_client, tmp_path):
+    """The partition readers consume ``pull_raw``'s batch from either
+    broker, so both return the same schema, empty or not."""
+    from spark_sql_pubsub_connector_spark.sources.broker import FileBroker
+
+    fb = FileBroker(str(tmp_path / "b"))
+    fb.create_subscription("s", "t")
+    for client in (fb, real_client):
+        assert client.pull_raw("s", 10).schema == pull_schema()
+        client.publish("t", _msgs(2))
+        got = client.pull_raw("s", 10)
+        assert got.num_rows == 2
+        assert got.schema == pull_schema()
 
 
 def test_nack_via_modify_ack_deadline_redelivers(real_client):
@@ -341,16 +357,22 @@ def test_localhost_endpoint_uses_anonymous_credentials(fake_gcp):
 
 
 def test_commit_staged_publishes_staged_lines(real_client, fake_gcp, tmp_path):
-    staged = tmp_path / "chunk-0.jsonl"
-    staged.write_text(
-        '{"data_b64": "YQ==", "attributes": {"k": "v"}, "ordering_key": ""}\n'
-        '{"data_b64": "Yg==", "attributes": {}, "ordering_key": ""}\n'
-        "\n"
+    staged = str(tmp_path / "chunk-0.arrow")
+    write_ipc(
+        staged,
+        segment_batch(
+            [
+                PubsubMessage(data=b"a", attributes={"k": "v"}),
+                PubsubMessage(data=b"b", ordering_key="o"),
+            ],
+            1,
+        ),
     )
-    assert real_client.commit_staged("t", [str(staged)]) == 2
+    assert real_client.commit_staged("t", [staged]) == 2
     log = fake_gcp.topics["projects/proj/topics/t"]
     assert [m.data for m in log] == [b"a", b"b"]
     assert log[0].attributes == {"k": "v"}
+    assert [m.ordering_key for m in log] == ["", "o"]
 
 
 def test_backlog_by_region_reads_monitoring_metric(real_client, monkeypatch):

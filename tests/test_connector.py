@@ -1182,6 +1182,7 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
         # part file
         _publish_canonical(broker, 10)
         zombie = broker.pull_raw("s", 10)
+        zombie_acks = zombie.column("ack_id").to_pylist()
         assert len(zombie) == 10
         rep_file = parts[0].value.replica_files[0]
         assert os.path.exists(rep_file)
@@ -1189,15 +1190,15 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
             rep_file,
             _batch_to_ipc(_records_to_arrow(parts[0].value.subscription_path, zombie)),
         )
-        assert _load_ack_ids(rep_file) == [a for a, _ in zombie]
+        assert _load_ack_ids(rep_file) == zombie_acks
         reader.commit(end)
         # nack the zombie leases: every one of its messages must come
         # back (they were never part of a committed batch). A unioning
         # commit would have acked them away permanently.
-        broker.modify_ack_deadline("s", [a for a, _ in zombie], 0)
+        broker.modify_ack_deadline("s", zombie_acks, 0)
         redelivered = broker.pull("s", 100)
         ids = {m.message.message_id for m in redelivered}
-        assert {rec["message_id"] for _, rec in zombie} == ids
+        assert set(zombie.column("message_id").to_pylist()) == ids
         assert len(redelivered) == 10  # every zombie message came back
     finally:
         reader.stop()
@@ -2056,6 +2057,16 @@ def test_sink_anonymous_losing_attempt_leaves_zero_orphans(
     ] == []
 
 
+def _live_segment_bytes(broker, topic):
+    return sum(
+        os.path.getsize(s.path) for s in broker._segments(broker._topic_dir(topic))
+    )
+
+
+def _live_segment_messages(broker, topic):
+    return sum(s.hi - s.lo for s in broker._segments(broker._topic_dir(topic)))
+
+
 def test_sink_log_retention_bounds_topic_log(spark, broker, broker_dir):
     """log_retention_bytes on the sink (the connector surface of
     VERDICT r14 #4): repeated write/commit cycles against a draining
@@ -2094,19 +2105,18 @@ def test_sink_log_retention_bounds_topic_log(spark, broker, broker_dir):
         _sink_schema(),
     )
     assert w.opts.log_retention_bytes == 8 * 1024
-    log = os.path.join(broker_dir, "topics", "retained", "log.jsonl")
     max_size = 0
     seen = 0
-    for b in range(20):  # ~9 KB/batch published
+    for b in range(20):  # two ~3 KB segments per batch
         w.commit([w.write(iter([batch]))], batchId=b)
         got = broker.pull("rsub", 200)
         seen += len(got)
         broker.acknowledge("rsub", [m.ack_id for m in got])
-        max_size = max(max_size, os.path.getsize(log))
+        max_size = max(max_size, _live_segment_bytes(broker, "retained"))
     assert seen == 20 * n  # every message delivered exactly once
-    # one batch (~9 KB) can land atop a just-under-threshold log, so
-    # the bound is threshold + ~2 batches, far below the ~180 KB
-    # unbounded total
+    # one batch can land atop a just-under-threshold topic, so the
+    # bound is threshold + ~2 batches, far below the ~124 KB unbounded
+    # total
     assert max_size < 4 * 8 * 1024, max_size
 
     # undrained topic: no subscription acks → floor 0 → never cut
@@ -2339,8 +2349,7 @@ def test_source_drains_topic_that_compacts_mid_stream(
         .option("checkpointLocation", str(tmp_path / "cd_ck"))
         .start()
     )
-    log = os.path.join(broker_dir, "topics", "t", "log.jsonl")
-    max_size = 0
+    max_retained = 0
     try:
         total = 300
         for r in range(6):
@@ -2363,7 +2372,7 @@ def test_source_drains_topic_that_compacts_mid_stream(
             while time.time() < deadline and broker.backlog("s") > 0:
                 time.sleep(0.2)
             assert broker.backlog("s") == 0, f"round {r} never drained"
-            max_size = max(max_size, os.path.getsize(log))
+            max_retained = max(max_retained, _live_segment_messages(broker, "t"))
         q.processAllAvailable()
     finally:
         q.stop()
@@ -2372,9 +2381,9 @@ def test_source_drains_topic_that_compacts_mid_stream(
     datas = [bytes(r["data"]) for r in rows]
     assert len(datas) == total, f"{len(datas)} of {total} delivered"
     assert len(set(datas)) == total  # exactly once, across compactions
-    # the log was cut mid-stream: it never held anywhere near all 300
-    # messages (~46 KB); each publish atop a drained topic compacts the
-    # fully-acked prefix once past the 2 KiB threshold
-    assert max_size < 20 * 1024, max_size
-    assert os.path.getsize(log) < 10 * 1024
+    # the topic was cut mid-stream: it never held anywhere near all 300
+    # messages; each publish atop a drained topic unlinks the
+    # fully-acked segments once past the 2 KiB threshold
+    assert max_retained < 130, max_retained
+    assert _live_segment_messages(broker, "t") < 65
     assert broker.backlog("s") == 0

@@ -49,6 +49,7 @@ if not os.environ.get("PUBSUB_EMULATOR_HOST"):
 from spark_sql_pubsub_connector_spark.sources.broker import (  # noqa: E402
     PubsubMessage,
     RealBrokerClient,
+    pull_schema,
 )
 
 
@@ -161,7 +162,7 @@ def test_ordering_key_publisher_path(client, names):
 
 
 def test_pull_raw_record_shape_against_real_service(client, names):
-    """pull_raw must produce the FileBroker record-dict shape (the
+    """pull_raw must produce FileBroker's ``pull_schema()`` batch (the
     partition readers consume it directly) from real protobuf
     responses, including the µs publish-time conversion."""
     topic, sub = names
@@ -169,22 +170,12 @@ def test_pull_raw_record_shape_against_real_service(client, names):
     client.create_subscription(sub, topic, ack_deadline_s=60)
     client.publish(topic, [PubsubMessage(data=b"raw", attributes={"a": "b"})])
     deadline = time.time() + 30
-    recs = []
-    while not recs and time.time() < deadline:
-        recs = client.pull_raw(sub, 10)
-    assert len(recs) == 1
-    ack_id, rec = recs[0]
-    assert ack_id
-    assert set(rec) == {
-        "message_id",
-        "ordering_key",
-        "data_b64",
-        "attributes",
-        "publish_ts_us",
-        "region",
-    }
-    import base64
-
-    assert base64.b64decode(rec["data_b64"]) == b"raw"
-    assert dict(rec["attributes"]) == {"a": "b"}
-    assert rec["publish_ts_us"] > 1_000_000_000_000_000  # µs since epoch
+    batch = client.pull_raw(sub, 10)
+    while not batch and time.time() < deadline:
+        batch = client.pull_raw(sub, 10)
+    assert batch.schema == pull_schema()
+    (row,) = batch.to_pylist()
+    assert row["ack_id"]
+    assert row["data"] == b"raw"
+    assert dict(row["attributes"]) == {"a": "b"}
+    assert row["publish_ts_us"] > 1_000_000_000_000_000  # µs since epoch

@@ -197,6 +197,45 @@ def test_ivf_assign_has_no_shuffle(spark, sf_dir):
     assert "zip_with(transform(embedding" not in plan, plan
 
 
+@pytest.mark.parametrize("legacy_size_of_null", ["true", "false"])
+def test_ivf_guard_matches_unguarded_on_a_null_embedding(spark, legacy_size_of_null):
+    """The guard in ``_ivf_dists_arr_guarded`` exists only to reference
+    ``q`` twice; it must give the unguarded distances on every row, a
+    null ``q`` included, under both ``spark.sql.legacy.sizeOfNull``
+    settings. With the legacy setting (and ANSI off) ``size(NULL)`` is
+    -1, so a ``size(q) = -1`` guard turned a null embedding's distances
+    to NULL and q61 dropped its probe rows."""
+    from pyspark.sql import functions as F
+
+    from spark_sql_pubsub_connector_spark.plans.similarity import (
+        _ivf_dists_arr_expr,
+        _ivf_dists_arr_guarded,
+    )
+
+    confs = {
+        "spark.sql.legacy.sizeOfNull": legacy_size_of_null,
+        "spark.sql.ansi.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = spark.sql(
+            "SELECT CAST(NULL AS ARRAY<BIGINT>) AS q "
+            "UNION ALL SELECT array_repeat(CAST(3 AS BIGINT), 64)"
+        )
+        null_size = -1 if legacy_size_of_null == "true" else None
+        assert df.selectExpr("size(q)").collect()[0][0] == null_size
+        rows = df.select(
+            F.expr(_ivf_dists_arr_guarded()).alias("guarded"),
+            F.expr(_ivf_dists_arr_expr()).alias("plain"),
+        ).collect()
+        assert [r.guarded for r in rows] == [r.plain for r in rows]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_quality_filter_has_no_shuffle(spark, sf_dir):
     """q52 emits per-row verdicts — pure scan arithmetic, no Exchange."""
     plan = plan_of(spark, sf_dir, "q52_quality_filter", mode="simple")
