@@ -180,7 +180,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-    from spark_sql_pubsub_connector_spark.plans import all_specs
+    from spark_sql_pubsub_connector_spark.plans import all_specs, release_caches
     from spark_sql_pubsub_connector_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
@@ -279,8 +279,10 @@ def main() -> None:
         # clearing between queries makes every measurement independent
         # BY CONSTRUCTION and stops per-corpus cache accumulation
         # (ADVICE r6). Warm repeats above still share the cache — the
-        # within-query benefit persist exists for.
+        # within-query benefit persist exists for. release_caches drops
+        # the plan modules' tracked references with it.
         spark.catalog.clearCache()
+        release_caches()
 
     total = round(sum(timings.values()), 4)
     result = {

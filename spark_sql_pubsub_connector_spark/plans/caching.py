@@ -32,9 +32,12 @@ clobber their own caches to get hygiene.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_LOCK = threading.Lock()  # guards _TRACKED; never held across a Spark call
 
 
 def persist_tracked(df: DataFrame, *args, **kwargs) -> DataFrame:
@@ -44,7 +47,8 @@ def persist_tracked(df: DataFrame, *args, **kwargs) -> DataFrame:
     outlives the Python object anyway, and the reference is what lets
     ``release_caches`` unpersist exactly this entry later.
     """
-    _TRACKED.append(df)
+    with _LOCK:
+        _TRACKED.append(df)
     return df.persist(*args, **kwargs)
 
 
@@ -53,10 +57,15 @@ def release_caches() -> int:
 
     Blocking=False (Spark's default): block eviction is async, but the
     CacheManager entry is gone synchronously, which is what plan
-    independence needs.
+    independence needs. The list is taken and emptied under a lock
+    first, so a frame persisted while this runs stays tracked for the
+    next release.
     """
+    with _LOCK:
+        taken = _TRACKED[:]
+        _TRACKED.clear()
     n = 0
-    for df in _TRACKED:
+    for df in taken:
         try:
             df.unpersist()
             n += 1
@@ -64,5 +73,4 @@ def release_caches() -> int:
             # a stopped session or already-released entry is fine:
             # the goal is absence, and absent it is
             pass
-    _TRACKED.clear()
     return n

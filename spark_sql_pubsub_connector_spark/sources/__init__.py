@@ -6,7 +6,8 @@ S1-S19) Spark-first:
   options.py     option validation + partition-planning value objects
   broker.py      broker abstraction: file-backed fake (cross-process;
                  each topic a directory of immutable Arrow IPC
-                 segments named by seq range) + real-client stub
+                 segments named by seq range and a head.json, the
+                 one commit point) + real-client stub
                  gated behind an import-try
   registry.py    single-consumer stream guard (S12)
   datasource.py  the DataSource / stream reader / stream writer (the

@@ -19,14 +19,18 @@ mirrored from the real service:
 
 A topic is a directory of immutable Arrow IPC segments, one per
 ``publish`` call or committed staged chunk, each holding the
-``segment_schema()`` columns. A segment is named by the half-open seq
-range ``[lo, hi)`` it holds (``{lo:020d}-{hi:020d}.arrow``): row ``i``
-is the message with seq and message id ``lo + i``, so neither is
-stored. Writers build a segment in a tmp file and rename it in under
-the broker lock, minting its range from the newest segment's name, so
-a segment is whole or absent and any other file in the directory (a
-crashed writer's tmp file) is invisible. The ranges must tile: a gap
-or an overlap raises an error naming the topic directory.
+``segment_schema()`` columns, plus one small ``head.json``. A segment
+is named by the half-open seq range ``[lo, hi)`` it holds
+(``{lo:020d}-{hi:020d}.arrow``): row ``i`` is the message with seq and
+message id ``lo + i``, so neither is stored. The head holds ``end``,
+the visibility boundary; each sink's batch fence,
+``sinks: {sink_id: [checkpoint_instance, last_batch]}``; and the
+retention back-off. An append builds its segments in tmp files,
+renames them in at ``[end, ...)`` under the broker lock and then
+replaces the head: that one write is the commit point, so an append
+is whole or invisible. Readers see only segments with ``lo < end``,
+which must tile up to ``end``; a gap or an overlap raises an error
+naming the topic directory, as does a topic directory without a head.
 
 On a 1000-executor cluster this file broker is replaced by the real
 service — the interface is the contract, and all scale-sensitive state
@@ -44,6 +48,7 @@ import contextlib
 import fcntl
 import functools
 import json
+import logging
 import os
 import re
 import time
@@ -87,6 +92,11 @@ def pull_schema() -> pa.Schema:
 
 
 _SEGMENT_NAME = re.compile(r"(\d{20})-(\d{20})\.arrow")
+_HEAD = "head.json"  # a topic's end, sink fences and retention back-off
+_RETRY_ABOVE = "retention_retry_above_bytes"
+Fence = tuple[str, str | None, int]  # (sink_id, checkpoint_instance, batch_id)
+
+_log = logging.getLogger(__name__)
 
 
 def _write_atomic(path: str, data: str | bytes) -> None:
@@ -162,7 +172,7 @@ def segment_batch(messages: list[PubsubMessage], now_us: int) -> pa.RecordBatch:
             pa.array([m.ordering_key for m in messages], pa.string()),
             pa.array([m.data for m in messages], pa.binary()),
             pa.array(
-                [list(m.attributes.items()) for m in messages],
+                [m.attributes for m in messages],
                 segment_schema().field("attributes").type,
             ),
             pa.array([m.publish_ts_us or now_us for m in messages], pa.int64()),
@@ -242,26 +252,30 @@ class FileBroker:
     def _sub_path(self, sub: str) -> str:
         return os.path.join(self.root, "subs", sub.replace("/", "__") + ".json")
 
-    # -- segments -----------------------------------------------------------
+    # -- head and segments ----------------------------------------------------
     @staticmethod
-    def _segments(d: str) -> list[Segment]:
-        """The live segments of topic dir ``d`` in seq order. Raises on a
-        topic in the older JSONL layout, which would otherwise read as
-        empty, and on ranges that do not tile."""
+    def _head(d: str) -> dict:
+        """The head of topic dir ``d``. Raises naming the dir when it has
+        none: no such topic, or a dir in an older layout (``log.jsonl``,
+        or segments written before heads) that would read as empty."""
         try:
-            names = os.listdir(d)
+            with open(os.path.join(d, _HEAD)) as fh:
+                return json.load(fh)
         except FileNotFoundError:
-            return []
-        for old in ("log.jsonl", ".seq"):
-            if old in names:
-                raise RuntimeError(
-                    f"{os.path.join(d, old)}: topic in the older JSONL layout; "
-                    "this broker reads Arrow IPC segments only"
-                )
+            raise RuntimeError(
+                f"topic {d}: no {_HEAD}; not a topic of this broker"
+            ) from None
+
+    def _segments(self, d: str, end: int | None = None) -> list[Segment]:
+        """The visible segments of topic dir ``d`` in seq order: those
+        below ``end`` (the head's when not given), which must tile up to
+        it. Raises naming the dir on a gap or an overlap."""
+        if end is None:
+            end = self._head(d)["end"]
         segs = sorted(
             Segment(int(m[1]), int(m[2]), os.path.join(d, m[0]))
-            for m in map(_SEGMENT_NAME.fullmatch, names)
-            if m
+            for m in map(_SEGMENT_NAME.fullmatch, os.listdir(d))
+            if m and int(m[1]) < end
         )
         for prev, s in zip([None] + segs, segs):
             if s.hi < s.lo or (prev is not None and s.lo != prev.hi):
@@ -269,22 +283,41 @@ class FileBroker:
                     f"topic {d}: segment {os.path.basename(s.path)} does not "
                     "tile with the segments before it (gap or overlap)"
                 )
+        if segs and segs[-1].hi != end:
+            raise RuntimeError(
+                f"topic {d}: segments end at {segs[-1].hi}, the head at {end}"
+            )
         return segs
 
-    def _append_locked(self, d: str, files: list[tuple[str, int]]) -> int:
+    def _append_locked(self, d: str, head: dict, files: list[tuple[str, int]]) -> int:
         """Rename each ``(path, rows)`` file into topic dir ``d`` as the
-        next segment; returns the first seq minted. Caller holds the
-        broker lock."""
-        segs = self._segments(d)
-        first = lo = segs[-1].hi if segs else 0
+        next segment, then write ``head`` with the new end: the commit
+        point. Returns the first seq minted. Caller holds the broker
+        lock."""
+        end = head["end"]
+        for name in os.listdir(d):  # a killed append's leftovers sit past the end
+            m = _SEGMENT_NAME.fullmatch(name)
+            if m and int(m[1]) >= end:
+                os.unlink(os.path.join(d, name))
+        self._segments(d, end)  # raises unless the visible ones tile
+        lo = end
         for path, n in files:
             os.rename(path, os.path.join(d, f"{lo:020d}-{lo + n:020d}.arrow"))
             lo += n
-        return first
+        head["end"] = lo
+        _write_atomic(os.path.join(d, _HEAD), json.dumps(head))
+        return end
 
     # -- admin ------------------------------------------------------------
     def create_topic(self, topic: str) -> None:
-        os.makedirs(self._topic_dir(topic), exist_ok=True)
+        """Create the topic's dir and head. A dir that already holds
+        anything keeps what it has: a head is never written over an
+        unknown layout."""
+        d = self._topic_dir(topic)
+        os.makedirs(d, exist_ok=True)
+        with self._lock():
+            if not os.listdir(d):
+                _write_atomic(os.path.join(d, _HEAD), '{"end": 0, "sinks": {}}')
 
     def create_subscription(
         self, sub: str, topic: str, ack_deadline_s: float = 60.0
@@ -303,15 +336,14 @@ class FileBroker:
             "lease_groups": [],
         }
         with self._lock():
-            # r15 review: a subscription created AFTER a compaction must
-            # start its ack cursor at the first retained seq, not 0 —
-            # seqs below it no longer exist, so the dense-prefix advance
-            # in _compact_acked could never leave 0: the sub's sparse
-            # acked list would grow forever AND pin the topic's
-            # retention floor at 0, permanently disabling compaction.
-            # A new sub sees every RETAINED message.
-            segs = self._segments(self._topic_dir(topic))
-            state["acked_below"] = segs[0].lo if segs else 0
+            # A new sub starts at the first retained seq (the end when
+            # none is), not 0: seqs below it no longer exist, so its ack
+            # floor could never advance and would pin the topic's
+            # retention floor at 0, disabling compaction for good.
+            d = self._topic_dir(topic)
+            end = self._head(d)["end"]
+            segs = self._segments(d, end)
+            state["acked_below"] = segs[0].lo if segs else end
             # atomic: a torn sub file would veto compaction of every
             # topic (_retention_floor_locked)
             _write_atomic(self._sub_path(sub), json.dumps(state))
@@ -325,10 +357,12 @@ class FileBroker:
     # sits below that floor, because a lease pins an unacked seq and
     # ``acked_below`` cannot advance past an unacked seq. Segments are
     # unlinked lowest first, so a compaction killed midway leaves a
-    # suffix that still tiles. The newest segment's name is where the
-    # next range starts, so when it goes an empty segment ``[hi, hi)``
-    # is renamed in first: the next publish then still gets a seq above
-    # every acked one, and a new subscription starts there.
+    # suffix that still tiles. The next range starts at the head's
+    # ``end``, which no compaction lowers, so even when every segment
+    # goes the next publish gets a seq above every acked one and a new
+    # subscription starts there. The head and the topic dir are fsynced
+    # before the first unlink: a power loss must never keep an unlink
+    # but lose the end it was made under.
 
     def _retention_floor_locked(self, topic: str) -> int:
         """min over the topic's subscriptions of ``acked_below`` — the
@@ -359,31 +393,15 @@ class FileBroker:
         if not os.path.isdir(d):
             raise KeyError(f"no such topic: {topic}")
         with self._lock():
-            return self._compact_topic_locked(topic, d)
+            return self._compact_topic_locked(topic, d, self._head(d))
 
-    def _compact_topic_locked(self, topic: str, d: str) -> dict:
+    def _compact_topic_locked(self, topic: str, d: str, head: dict) -> dict:
         floor = self._retention_floor_locked(topic)
         out = {"floor_seq": floor, "cut_bytes": 0, "cut_messages": 0}
-        segs = self._segments(d)
-        dead = [s for s in segs if s.hi <= floor]
-        if dead and dead[-1] == segs[-1]:
-            if segs[-1].lo == segs[-1].hi:
-                dead.pop()  # already the empty placeholder
-            else:
-                # durable before any unlink: a power loss must never
-                # keep the unlink of the newest segment but lose the
-                # name the next seq is minted from
-                import pyarrow as pa
-
-                empty = pa.BufferOutputStream()
-                write_ipc(empty, segment_schema().empty_table())
-                tmp = os.path.join(d, f".{uuid.uuid4().hex}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(empty.getvalue())
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                self._append_locked(d, [(tmp, 0)])
-                fd = os.open(d, os.O_RDONLY)
+        dead = [s for s in self._segments(d, head["end"]) if s.hi <= floor]
+        if dead:
+            for path in (os.path.join(d, _HEAD), d):
+                fd = os.open(path, os.O_RDONLY)
                 try:
                     os.fsync(fd)
                 finally:
@@ -394,10 +412,10 @@ class FileBroker:
             os.unlink(s.path)
         return out
 
-    def _maybe_auto_compact_locked(self, topic: str, d: str) -> None:
+    def _maybe_auto_compact_locked(self, topic: str, d: str, head: dict) -> None:
         if self.auto_compact_bytes is None:
             return
-        size = sum(os.path.getsize(s.path) for s in self._segments(d))
+        size = sum(os.path.getsize(s.path) for s in self._segments(d, head["end"]))
         if size <= self.auto_compact_bytes:
             return
         # r15 review: an UNDRAINED over-threshold topic (floor cannot
@@ -405,24 +423,14 @@ class FileBroker:
         # under the broker lock on every publish for the rest of its
         # life. After a no-op pass, back off until the topic grows by
         # another threshold; a pass that cuts re-arms immediately.
-        backoff = os.path.join(d, "meta.json")
-        try:
-            with open(backoff) as fh:
-                retry_above = json.load(fh)["retention_retry_above_bytes"]
-        except FileNotFoundError:
-            retry_above = 0
-        if size < retry_above:
+        if size < head.get(_RETRY_ABOVE, 0):
             return
-        if self._compact_topic_locked(topic, d)["cut_bytes"]:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(backoff)
+        if self._compact_topic_locked(topic, d, head)["cut_bytes"]:
+            if head.pop(_RETRY_ABOVE, None) is None:
+                return
         else:
-            _write_atomic(
-                backoff,
-                json.dumps(
-                    {"retention_retry_above_bytes": size + self.auto_compact_bytes}
-                ),
-            )
+            head[_RETRY_ABOVE] = size + self.auto_compact_bytes
+        _write_atomic(os.path.join(d, _HEAD), json.dumps(head))
 
     # -- publish ----------------------------------------------------------
     def publish(
@@ -446,30 +454,55 @@ class FileBroker:
         try:
             write_ipc(tmp, segment_batch(messages, now_us))
             with self._lock():
-                lo = self._append_locked(d, [(tmp, len(messages))])
-                self._maybe_auto_compact_locked(topic, d)
+                head = self._head(d)
+                lo = self._append_locked(d, head, [(tmp, len(messages))])
+                self._maybe_auto_compact_locked(topic, d, head)
         except BaseException:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
             raise
         return [str(s) for s in range(lo, lo + len(messages))]
 
-    def commit_staged(self, topic: str, staged_files: list[str]) -> int:
+    def commit_staged(
+        self, topic: str, staged_files: list[str], fence: Fence | None = None
+    ) -> int:
         """Atomically append staged segment files to the topic (the
         sink's exactly-once commit); returns messages appended.
 
         Each file is renamed into the topic as the next segment. Every
         file must open as Arrow IPC with ``segment_schema()`` before any
         is renamed, so a bad file leaves the topic unchanged. A file
-        without rows is left where it is."""
+        without rows is left where it is.
+
+        ``fence = (sink_id, checkpoint_instance, batch_id)`` makes the
+        commit idempotent per batch: a batch at or below the sink's
+        recorded ``last_batch`` appends nothing and returns 0, its files
+        left in place. A record from another checkpoint instance counts
+        as absent (batch ids restart at 0 in a new checkpoint). The
+        record is written in the same head write that publishes the
+        batch, so the two land together or not at all."""
         d = self._topic_dir(topic)
         if not os.path.isdir(d):
             raise KeyError(f"no such topic: {topic}")
         files = [(path, segment_rows(path)) for path in staged_files]
         files = [(path, n) for path, n in files if n]
         with self._lock():
-            self._append_locked(d, files)
-            self._maybe_auto_compact_locked(topic, d)
+            head = self._head(d)
+            if fence is not None:
+                sink_id, instance, batch_id = fence
+                rec = head["sinks"].get(sink_id)
+                if rec is not None and rec[0] != instance:
+                    _log.info(
+                        "topic %s: sink %s's fence record (batch %d) is from "
+                        "checkpoint instance %s, not %s; voided",
+                        topic, sink_id, rec[1], rec[0], instance,
+                    )
+                    rec = None
+                if rec is not None and batch_id <= rec[1]:
+                    return 0
+                head["sinks"][sink_id] = [instance, batch_id]
+            self._append_locked(d, head, files)
+            self._maybe_auto_compact_locked(topic, d, head)
         return sum(n for _, n in files)
 
     # -- internal state helpers -------------------------------------------
@@ -572,14 +605,16 @@ class FileBroker:
         now = time.time()
         with self._lock():
             state = self._load_sub(sub)
-            segs = self._segments(self._topic_dir(state["topic"]))
+            d = self._topic_dir(state["topic"])
+            end = self._head(d)["end"]
+            segs = self._segments(d, end)
             self._expire_leases(state, now)
             acked = set(state["acked"])
             leased = self._leased_seqs(state)
             below = state["acked_below"]
             if region is None:
                 start = max(below, state.get("deliver_pos", below))
-                candidates = range(start, segs[-1].hi if segs else start)
+                candidates = range(start, end)
             else:
                 candidates = (
                     s for s, r in self._regions(segs, below) if r == region
@@ -671,15 +706,14 @@ class FileBroker:
         """Unacked messages, leased ones included (like the real metric).
 
         Seqs are dense from the subscription's ``acked_below`` up to the
-        newest segment's end, so the backlog is a count: no segment
-        read, no state write. It equals
+        head's ``end``, so the backlog is a count: no listing, no
+        segment read, no state write. It equals
         ``sum(backlog_by_region(sub).values())``."""
         with self._lock():
             return self._backlog_locked(self._load_sub(sub))
 
     def _backlog_locked(self, state: dict) -> int:
-        segs = self._segments(self._topic_dir(state["topic"]))
-        end = segs[-1].hi if segs else state["acked_below"]
+        end = self._head(self._topic_dir(state["topic"]))["end"]
         return end - state["acked_below"] - len(state["acked"])
 
     def deliverable(self, sub: str) -> int:
@@ -718,8 +752,6 @@ class FileBroker:
                 for s in segs
                 for m in to_messages(read_ipc(s.path), map(str, range(s.lo, s.hi)))
             ]
-
-
 
 
 class RealBrokerClient:
@@ -885,12 +917,17 @@ class RealBrokerClient:
         ]
         return [f.result() for f in futures]
 
-    def commit_staged(self, topic: str, staged_files: list[str]) -> int:
+    def commit_staged(
+        self, topic: str, staged_files: list[str], fence: Fence | None = None
+    ) -> int:
         """Publish staged segment files (Arrow IPC, ``segment_schema()``:
         the sink writer's on-disk format). Against the real service the
         staged-commit degrades to at-least-once — exactly the
         reference publisher's guarantee (PubsubStreamingWrite.scala) —
-        because there is no atomic multi-file publish."""
+        because there is no atomic multi-file publish. ``fence`` is
+        accepted for signature parity and ignored: the service has no
+        transactional publish to record it in, so a re-committed batch
+        is published again."""
         n = 0
         for path in staged_files:
             rows = read_ipc(path)

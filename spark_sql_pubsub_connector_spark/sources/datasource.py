@@ -33,11 +33,12 @@ Parity map to the reference (SURVEY.md §2.1):
          broker's per-region backlog where the reference polls Cloud
          Monitoring, PubsubSubscriptionMonitor.scala). Deliberate
          deviation: the reference plans num_partitions pulls every
-         batch (PubsubMicroBatchStream.scala:58-74); here a region-less
-         plan holds at most ceil(deliverable / max_messages_per_partition)
-         pulls, deliverable being the broker's unacked-and-unleased
-         count. Every planned partition is a Spark task with a fixed
-         worker cost, and a pull past that count returns nothing. A
+         batch (PubsubMicroBatchStream.scala:58-74); here a plan holds
+         at most ceil(deliverable / max_messages_per_partition) pulls,
+         deliverable being the broker's unacked-and-unleased count (a
+         region-split plan caps each region by its own backlog). Every
+         planned partition is a Spark task with a fixed worker cost,
+         and a pull past that count returns nothing. A
          batch with nothing deliverable, such as the ack-only batch
          after a drain, plans no partitions and runs no tasks
   S7/S8  per-task pull of ≤ max_messages_per_partition messages as
@@ -70,6 +71,7 @@ evicted on commit exactly like the reference's RDD blocks.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import logging
 import os
@@ -623,33 +625,40 @@ class PubsubStreamReader(DataSourceStreamReader):
         it builds the next one, so a drain ends with a batch whose only
         job is that ack.
 
-        A region-split plan keeps its per-region counts, since its pulls
-        are pinned to a region; the regions take turns in the list, so
-        the ``max_dynamic_partitions`` cut leaves every region at least
-        one partition."""
+        A region-split plan caps each region the same way by its own
+        backlog: ``min(num_partitions × units,
+        ceil(num_undelivered_messages / max_messages_per_partition))``.
+        That backlog counts leased messages, so the cap never plans
+        fewer pulls than the region can fill. The regions take turns in
+        the list, so the ``max_dynamic_partitions`` cut leaves every
+        region at least one partition."""
         deliverable = self.broker.deliverable(self.opts.subscription)
         if deliverable == 0:
             _log.debug("batch %s: nothing deliverable, planned 0 partitions", batch_key)
             return []
+        per_pull = self.opts.max_messages_per_partition
         info = self._partitioning()
         if info is not None and info.split_by_region:
             # region-aware split (PubsubMicroBatchStream.scala:58-74):
             # each region's partitions pull with a region-pinned
             # "endpoint" so a dominant region gets dedicated tasks
+            counts = [
+                (r.region, r.num_partitions * units, r.num_undelivered_messages)
+                for r in info.by_region
+            ]
             regions = [
                 region
                 for _, region in sorted(
-                    (i, r.region)
-                    for r in info.by_region
-                    for i in range(r.num_partitions * units)
+                    (i, region)
+                    for region, n, backlog in counts
+                    for i in range(min(n, -(-backlog // per_pull)))
                 )
             ]
-            uncapped = len(regions)
+            uncapped = sum(n for _, n, _ in counts)
         else:
             base = info.total_partitions if info else self.opts.num_partitions
             uncapped = base * units
-            fill = -(-deliverable // self.opts.max_messages_per_partition)
-            regions = [None] * min(uncapped, fill)
+            regions = [None] * min(uncapped, -(-deliverable // per_pull))
         regions = regions[: self.opts.max_dynamic_partitions]
         _log.debug(
             "batch %s: %d deliverable, planned %d partitions (%d uncapped)",
@@ -776,15 +785,11 @@ def _stage_dir(opts: PubsubWriteOptions) -> str:
 
 
 def _sink_owner_token(opts: PubsubWriteOptions) -> str | None:
-    """Fixed-width ownership token staged filenames carry (VERDICT r13
-    #5): md5-hex16 of the sink_id, so commit's orphan sweep can tell
-    THIS query's files from a concurrent query's on the same topic
-    without any separator-parsing ambiguity (sink ids may contain
-    dashes). None without a sink_id — the writer then mints a per-run
-    token instead (VERDICT r14 #3), so anonymous sinks still get their
-    losing-attempt orphans swept within the run; only idempotence
-    stays opt-in. usedforsecurity=False: this is a filename namespace,
-    not a credential, and FIPS builds reject security-mode md5."""
+    """The fixed-width owner token staged filenames carry: md5-hex16 of
+    the sink_id, so the orphan sweep tells this query's files from
+    another query's on the same topic (sink ids may contain dashes).
+    None without a sink_id; the writer then mints a per-run token.
+    usedforsecurity=False: a filename namespace, not a credential."""
     if opts.sink_id is None:
         return None
     import hashlib
@@ -800,10 +805,9 @@ def _checkpoint_instance_id(opts: PubsubWriteOptions) -> str | None:
     ``<checkpoint>/metadata`` exactly when the checkpoint directory is
     created, so the id distinguishes a restart (same id — Spark resumes
     the batch numbering) from a wiped-and-recreated checkpoint (new id —
-    batch ids restart at 0). The batch-id idempotence record must be
+    batch ids restart at 0). The sink's batch fence in the topic head is
     scoped to it: a stale record honored across a recreation would
-    silently swallow the new query's first batches — the "re-created
-    one" case _sink_state_path's contract names, which path- or
+    silently swallow the new query's first batches, which path- or
     sink_id-keying alone cannot see (r15 self-review). None when no
     readable metadata file exists (direct-API writers without a real
     checkpoint, or a DFS path this local-FS read cannot reach) — the
@@ -819,20 +823,6 @@ def _checkpoint_instance_id(opts: PubsubWriteOptions) -> str | None:
     return str(iid) if iid else None
 
 
-def _sink_state_path(opts: PubsubWriteOptions) -> str:
-    """Committed-batch-id record, namespaced by (topic, sink_id): batch
-    ids are per-query (they restart at 0 for every new checkpoint), so
-    a topic-global record would silently drop batches from a second
-    query or a re-created one — idempotence must only suppress
-    redeliveries of the *same* query."""
-    assert opts.sink_id is not None
-    return os.path.join(
-        opts.broker_dir,
-        ".sink_state",
-        _sanitize(opts.topic) + "__" + _sanitize(opts.sink_id) + ".json",
-    )
-
-
 class PubsubStreamWriter(DataSourceStreamArrowWriter):
     """Staged-commit publisher: executors stage messages, the driver's
     commit() appends them to the topic log exactly once per batch id.
@@ -840,7 +830,9 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
     This is deliberately *stronger* than the reference's async-publish
     (PubsubWriter.scala:64-89, at-least-once): staging gives the same
     batch-id idempotence the reference implements driver-side
-    (PubsubSink.scala:17-18) without re-publishing on task retries.
+    (PubsubSink.scala:17-18) without re-publishing on task retries, and
+    the batch fence commits in the topic-head write that publishes the
+    batch, so it also holds across a crash anywhere in commit().
 
     Arrow variant: write() receives pyarrow RecordBatches and stages
     the segment columns selected from them as Arrow IPC chunk files,
@@ -852,20 +844,12 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         self.opts = validate_write_options(options)
         _validate_write_schema(schema, self.opts)  # driver-side check
         self.schema = schema
-        # Owner token for staged filenames + the commit-time orphan
-        # sweep. With a resolved sink identity (explicit sink_id OR the
-        # query's checkpointLocation — _resolve_sink_id) it is the
-        # stable md5-hex16: identical across pyspark's separate
-        # per-process writer constructions (r15 review: executor
-        # write() and every driver commit() each build their OWN
-        # instance from the same options dict — an instance attribute
-        # alone cannot link them) and across restarts, so a crashed
-        # run's orphans are swept by the next run too. The uuid
-        # fallback covers only identity-less writers (direct API use,
-        # or a session-default checkpoint dir Spark resolves without
-        # exposing): there GC degrades to a safe no-op across
-        # processes (the commit-side token matches no staged file) —
-        # the pre-r15 exempt behavior, now opt-out instead of default.
+        # Owner token for staged filenames and the orphan sweep. With a
+        # sink identity it is stable across pyspark's per-process writer
+        # instances (executor write() and each driver commit() build
+        # their own) and across restarts, so a crashed run's orphans are
+        # swept by the next run. Without one, the per-run uuid matches
+        # no staged file across processes: the sweep is a safe no-op.
         self._owner_token = _sink_owner_token(self.opts) or uuid.uuid4().hex[:16]
 
     def write(self, iterator) -> PubsubCommitMessage:
@@ -889,19 +873,13 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         finals: list[str] = []
         tmps: list[str] = []
 
-        # chunks stay .tmp until the whole partition succeeds, then are
-        # promoted together: a mid-task failure leaves only .tmp files,
-        # which the except path unlinks — nothing mid-promoted can ever
-        # be orphaned in .sink_stage/ outside a commit message (ADVICE
-        # r2: the old per-chunk promotion leaked completed chunks of
-        # failed tasks forever, since abort() only sees commit messages)
-        # Ownership in the filename (VERDICT r13 #5): a COMPLETED
-        # speculative attempt that loses the race promotes files no
-        # commit message references — pure orphans. The Python
-        # DataSource API exposes batchId only driver-side (commit/
-        # abort), so filenames carry the sink's owner token instead of
-        # a batch number; commit()'s sweep reconciles by reference set,
-        # which micro-batch sequencing makes safe (see _gc_orphans).
+        # Chunks stay .tmp until the whole partition succeeds, then are
+        # promoted together: a failed task leaves only .tmp files, which
+        # the except path unlinks (abort() sees only commit messages).
+        # A losing speculative attempt still promotes files no commit
+        # message references; the API exposes batchId only driver-side,
+        # so filenames carry the owner token and commit()'s sweep
+        # removes them (see _gc_orphans).
         owner = self._owner_token
 
         def stage_chunk(rows) -> None:
@@ -954,55 +932,16 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
         return PubsubCommitMessage(staged_files=tuple(finals), count=n)
 
     # -- driver-side commit/abort -----------------------------------------
-    def _last_committed(self) -> int:
-        if self.opts.sink_id is None:
-            return -1
-        path = _sink_state_path(self.opts)
-        if not os.path.exists(path):
-            return -1
-        with open(path) as fh:
-            state = json.load(fh)
-        if state.get("ck_instance") != _checkpoint_instance_id(self.opts):
-            # The record was written under a DIFFERENT checkpoint
-            # instance (the dir was wiped and recreated — batch ids
-            # restart at 0) or under a different resolvability of the
-            # metadata file. Honoring it would silently swallow the
-            # new query's first batches; treating it as absent costs
-            # at most one republished redelivery (at-least-once, the
-            # safe direction). _record_committed overwrites with the
-            # current instance on the next commit.
-            return -1
-        return state.get("last_batch", -1)
-
-    def _record_committed(self, batch_id: int) -> None:
-        if self.opts.sink_id is None:
-            return
-        _write_atomic(
-            _sink_state_path(self.opts),
-            json.dumps(
-                {
-                    "last_batch": batch_id,
-                    "ck_instance": _checkpoint_instance_id(self.opts),
-                }
-            ),
-        )
-
     def _gc_orphans(self) -> None:
-        """Sweep THIS sink's leftover stage files (VERDICT r13 #5).
+        """Sweep this sink's leftover stage files.
 
-        Called at the end of commit(batch N), AFTER the batch's own
-        staged files have been published and removed — so every file
-        in the stage dir still carrying our owner token is either a
-        promoted file of a losing speculative batch-≤N attempt whose
-        commit message Spark discarded — never publishable — or a
-        .tmp of an attempt that died without running its except-unlink
-        — equally dead. (A still-running zombie of batch N may promote
-        AFTER this sweep; its file is unreferenced garbage by the same
-        sequencing argument and the NEXT commit removes it, bounding
-        orphan life to one batch.) Files of other queries are
-        untouched — their owner token differs. Anonymous sinks sweep
-        under their per-run token (VERDICT r14 #3); see __init__ for
-        the crash-restart residue that sink_id eliminates."""
+        Called at the end of commit(batch N), after the batch's own
+        staged files were published and removed, so every file still
+        carrying our owner token belongs to a dead attempt: a losing
+        speculative attempt of a batch ≤ N, or a .tmp of a task that
+        died before its except-unlink. (A zombie of batch N that
+        promotes after this sweep is removed by the next commit.) Other
+        queries' files carry another token and are left alone."""
         owner = self._owner_token
         stage = _stage_dir(self.opts)
         prefix = f"stage-{owner}-"
@@ -1020,23 +959,9 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         staged = [f for m in messages if m is not None for f in m.staged_files]
-        if batchId <= self._last_committed():
-            # re-delivered batch of the SAME query (PubsubSink.scala:
-            # 17-18): drop the duplicate staging, publish nothing.
-            # Without a sink_id this guard is off and a redelivered
-            # batch republishes — at-least-once, like the reference
-            # across restarts.
-            for f in staged:
-                if os.path.exists(f):
-                    os.remove(f)
-            self._gc_orphans()
-            return
-        # A staged file referenced by a commit message but absent on
-        # disk is LOST DATA for a batch that has not been committed:
-        # publishing the remainder and recording the batch committed
-        # would silently drop those messages (the sink twin of the
-        # source-side corrupt-cache rule, ADVICE r12). Fail the batch
-        # loudly so Spark retries it instead.
+        # A referenced staged file absent on disk is lost data:
+        # publishing the rest would silently drop it. Fail the batch so
+        # Spark retries it.
         missing = [f for f in staged if not os.path.exists(f)]
         if missing:
             raise RuntimeError(
@@ -1045,19 +970,33 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
                 f"(first: {missing[0]}); refusing to publish a partial "
                 "batch"
             )
+        # The fence commits in the topic-head write that publishes the
+        # batch, so a redelivered batch of the same query
+        # (PubsubSink.scala:17-18) publishes nothing, whatever point of
+        # this method a crash hit. Without a sink_id there is no fence:
+        # at-least-once, like the reference across restarts.
+        fence = (
+            None
+            if self.opts.sink_id is None
+            else (self.opts.sink_id, _checkpoint_instance_id(self.opts), batchId)
+        )
         broker = FileBroker(
             self.opts.broker_dir,
             auto_compact_bytes=self.opts.log_retention_bytes,
         )
-        broker.commit_staged(self.opts.topic, staged)
-        self._record_committed(batchId)
+        n = broker.commit_staged(self.opts.topic, staged, fence=fence)
+        # a published file was renamed into the topic; one still here
+        # belongs to a batch the fence dropped
+        removed = 0
         for f in staged:
-            if os.path.exists(f):
+            with contextlib.suppress(FileNotFoundError):
                 os.remove(f)
-        # losing speculative attempts of batches ≤ batchId leave
-        # promoted-but-unreferenced files; sweep them now (this
-        # batch's staged set was already removed above, so anything
-        # of ours still present is an orphan)
+                removed += 1
+        if removed and not n:
+            _log.info(
+                "sink %s: batch %d already committed, dropped; removed %d staged files",
+                self.opts.sink_id, batchId, removed,
+            )
         self._gc_orphans()
 
     def abort(self, messages, batchId: int) -> None:

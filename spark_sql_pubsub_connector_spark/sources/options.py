@@ -163,15 +163,14 @@ class PubsubWriteOptions:
     ordering_key: str | None = None
     publish_batch_size: int = DEFAULT_PUBLISH_BATCH_SIZE
     # Stable writer identity: explicit sink_id, else derived from the
-    # query's checkpointLocation (see _resolve_sink_id). When set,
-    # committed batch ids persist under (topic, sink_id) and
-    # re-delivered batches are suppressed across restarts
-    # (effectively-once), and staged-file orphan GC can claim this
-    # query's files. When neither is available, redelivery after a
-    # restart republishes — the reference's documented at-least-once
-    # (PubsubSink.scala:17-18 keeps latestBatchId per JVM instance; the
-    # Python API constructs a fresh writer per commit, so only
-    # persisted, query-scoped state can survive).
+    # query's checkpointLocation (see _resolve_sink_id). When set, the
+    # sink's last committed batch id is recorded in the topic's head by
+    # the same write that publishes the batch, so a redelivered batch
+    # is dropped even after a crash mid-commit (exactly-once on
+    # FileBroker; RealBrokerClient stays at-least-once), and the
+    # orphan sweep can claim this query's staged files. Without one, a
+    # redelivered batch republishes: the reference's at-least-once
+    # (PubsubSink.scala:17-18 keeps latestBatchId per JVM instance).
     sink_id: str | None = None
     # Ack-based topic-log retention, applied at commit: None retains
     # everything; a positive byte threshold unlinks the fully-acked
@@ -179,13 +178,12 @@ class PubsubWriteOptions:
     # (FileBroker.compact_topic).
     log_retention_bytes: int | None = None
     # The query's checkpointLocation verbatim (when Spark forwarded it
-    # or the caller passed it), kept SEPARATELY from sink_id: the
-    # batch-id idempotence record is additionally scoped to the
-    # checkpoint *instance* (the query id Spark mints into
-    # <checkpoint>/metadata at creation), so a wiped-and-recreated
-    # checkpoint — whose batch ids restart at 0 — can never be
-    # swallowed by a stale record keyed to the same path or sink_id
-    # (see datasource._checkpoint_instance_id).
+    # or the caller passed it), kept apart from sink_id: the batch
+    # fence is also scoped to the checkpoint *instance* (the query id
+    # Spark mints into <checkpoint>/metadata), so a wiped-and-recreated
+    # checkpoint, whose batch ids restart at 0, is never swallowed by a
+    # stale fence of the same sink_id (see
+    # datasource._checkpoint_instance_id).
     checkpoint_location: str | None = None
 
     @property

@@ -225,10 +225,11 @@ def test_commit_staged_malformed_line_leaves_log_untouched(broker, tmp_path):
 
 
 def test_segments_that_do_not_tile_raise(broker, tmp_path):
-    """Segment names are the seq counter. A gap between two ranges (a
-    lost segment) or an overlap (a range minted twice) is corruption:
-    every reader and writer raises an error naming the topic dir
-    instead of skipping or re-minting seqs."""
+    """A gap between two visible ranges (a lost segment) or an overlap
+    (a range minted twice) is corruption: every call that lists the
+    segments raises an error naming the topic dir instead of skipping
+    or re-minting seqs. (``backlog`` is a count from the head and reads
+    no segment.)"""
     import shutil
 
     broker.publish("t", _msgs(3))
@@ -246,7 +247,7 @@ def test_segments_that_do_not_tile_raise(broker, tmp_path):
         for call in (
             lambda: broker.publish("t", _msgs(1)),
             lambda: broker.pull("s", 10),
-            lambda: broker.backlog("s"),
+            lambda: broker.backlog_by_region("s"),
             lambda: broker.topic_messages("t"),
         ):
             with pytest.raises(RuntimeError, match=re.escape(d)):
@@ -256,10 +257,11 @@ def test_segments_that_do_not_tile_raise(broker, tmp_path):
 
 
 def test_commit_staged_killed_between_renames(broker, tmp_path, monkeypatch):
-    """A commit killed after renaming some of its staged files has
-    appended whole segments only: seqs stay dense, the files not yet
-    renamed stay staged, and the next commit continues after the
-    newest segment (the sink re-commits the batch: at-least-once)."""
+    """A commit killed after renaming some of its staged files never
+    wrote the head, so nothing of it is visible: the renamed segment
+    sits at the head's end, unread, the files not yet renamed stay
+    staged, and the next append replaces the leftover with dense
+    seqs."""
     from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
 
     broker.publish("t", _msgs(4))
@@ -279,28 +281,36 @@ def test_commit_staged_killed_between_renames(broker, tmp_path, monkeypatch):
         broker.commit_staged("t", [a, b])
     monkeypatch.undo()
     assert not os.path.exists(a) and os.path.exists(b)
-    assert [int(m.message_id) for m in broker.topic_messages("t")] == list(range(6))
-    assert broker.backlog("s") == 6
-    assert broker.commit_staged("t", [b]) == 3
-    assert broker.publish("t", _msgs(1)) == ["9"]
+    leftover = os.path.join(broker._topic_dir("t"), f"{4:020d}-{6:020d}.arrow")
+    assert os.path.exists(leftover)
+    assert [int(m.message_id) for m in broker.topic_messages("t")] == list(range(4))
+    assert broker.backlog("s") == broker.deliverable("s") == 4
+    assert broker.backlog_by_region("s") == {"global": 4}
     got = broker.pull("s", 20)
-    assert sorted(int(m.message.message_id) for m in got) == list(range(10))
+    assert sorted(int(m.message.message_id) for m in got) == list(range(4))
+    assert broker.commit_staged("t", [b]) == 3
+    assert broker.publish("t", _msgs(1)) == ["7"]
+    assert _segment_names(broker)[-2:] == [
+        f"{4:020d}-{7:020d}.arrow", f"{7:020d}-{8:020d}.arrow"
+    ]
+    got = broker.pull("s", 20)
+    assert sorted(int(m.message.message_id) for m in got) == list(range(4, 8))
 
 
 def test_compaction_that_cuts_the_whole_log_keeps_a_lagging_counter_safe(
     broker, tmp_path
 ):
-    """The newest segment's name is the topic's seq counter, so a
-    compaction that cuts every message leaves an empty segment at its
-    end. Otherwise the next publish re-mints seqs below the ack floor,
-    and those new messages read as already acked."""
+    """A compaction that cuts every message leaves no segment, but the
+    head keeps the topic's end, so the next publish does not re-mint
+    seqs below the ack floor (new messages that would read as already
+    acked)."""
     broker.publish("t", _msgs(3))
     broker.acknowledge("s", [m.ack_id for m in broker.pull("s", 10)])
     assert broker.compact_topic("t")["cut_messages"] == 3
-    assert _segment_names(broker) == [f"{3:020d}-{3:020d}.arrow"]
+    assert _segment_names(broker) == []
+    assert broker._head(broker._topic_dir("t"))["end"] == 3
     assert broker.topic_messages("t") == []
     assert broker.backlog("s") == 0
-    # a second pass keeps the empty segment
     assert broker.compact_topic("t")["cut_messages"] == 0
     assert broker.publish("t", _msgs(2)) == ["3", "4"]
     assert broker.backlog("s") == 2
@@ -433,21 +443,39 @@ def _kill_compaction_at_unlink(monkeypatch, n):
 
 
 def test_crash_between_writeahead_and_cut_resolves(broker, tmp_path, monkeypatch):
-    """A compaction that cuts the newest segment first renames in the
-    empty segment that carries the seq counter, then unlinks. Killed
-    between the two, it leaves every segment plus that empty one: the
-    ranges still tile, nothing is lost or duplicated, and the next
-    compaction finishes the cut."""
+    """A compaction fsyncs the head (which holds the topic's end) and
+    the topic dir before its first unlink, so no power loss keeps an
+    unlink but loses the end. Killed at that unlink, it leaves every
+    segment: nothing is lost or duplicated, the next publish continues
+    at the end, and the next compaction finishes the cut."""
+    from spark_sql_pubsub_connector_spark.sources import broker as broker_mod
+
     broker.publish("t", _msgs(3))
     broker.publish("t", _msgs(3))
     got = broker.pull("s", 6)
     broker.acknowledge("s", [m.ack_id for m in got])  # acked_below=6
+    d = broker._topic_dir("t")
+    events = []
+    real_open, real_fsync = os.open, os.fsync
+    fds = {}
+
+    def tracking_open(path, *args, **kwargs):
+        fd = real_open(path, *args, **kwargs)
+        fds[fd] = path
+        return fd
+
+    def tracking_fsync(fd):
+        events.append(fds.get(fd))
+        real_fsync(fd)
+
+    monkeypatch.setattr(broker_mod.os, "open", tracking_open)
+    monkeypatch.setattr(broker_mod.os, "fsync", tracking_fsync)
     _kill_compaction_at_unlink(monkeypatch, 1)
     with pytest.raises(KeyboardInterrupt):
         broker.compact_topic("t")
     monkeypatch.undo()
+    assert events == [os.path.join(d, "head.json"), d]
     assert _live(broker)[1] == 6
-    assert _segment_names(broker)[-1] == f"{6:020d}-{6:020d}.arrow"
     assert broker.backlog("s") == 0
     assert broker.pull("s", 10) == []
     assert broker.publish("t", _msgs(1)) == ["6"]
@@ -529,26 +557,45 @@ def test_compaction_preserves_torn_tail_repair(broker, tmp_path):
 
 
 def test_old_jsonl_topic_layout_fails_loudly(broker, tmp_path):
-    """A topic dir written by the older JSONL broker (``log.jsonl`` and
-    its ``.seq`` counter) would read as an empty topic; every call
-    that reads it raises an error naming the file instead."""
+    """A topic dir without ``head.json`` — one written by the older
+    JSONL broker (``log.jsonl`` and its ``.seq`` counter), or segments
+    written before heads — would read as an empty topic; every call
+    that reads it raises an error naming the dir instead, and
+    ``create_topic`` never writes a head into it."""
     d = broker._topic_dir("t")
     broker.publish("t", _msgs(1))
-    for name in ("log.jsonl", ".seq"):
-        path = os.path.join(d, name)
-        with open(path, "w") as fh:
-            fh.write('{"seq": 0, "message_id": "0"}\n' if name == "log.jsonl" else "1")
+    head = os.path.join(d, "head.json")
+    with open(head) as fh:
+        saved = fh.read()
+    os.unlink(head)  # segments without a head
+    (seg,) = broker._segments(d, 1)
+    staged = _staged(tmp_path, "c.arrow", 1)
+    for layout in ("segments", "jsonl"):
+        if layout == "jsonl":
+            os.rename(seg.path, str(tmp_path / "seg.arrow"))
+            for name, text in (("log.jsonl", '{"seq": 0}\n'), (".seq", "1")):
+                with open(os.path.join(d, name), "w") as fh:
+                    fh.write(text)
         for call in (
             lambda: broker.publish("t", _msgs(1)),
+            lambda: broker.commit_staged("t", [staged]),
             lambda: broker.pull("s", 10),
             lambda: broker.backlog("s"),
+            lambda: broker.deliverable("s"),
             lambda: broker.backlog_by_region("s"),
             lambda: broker.topic_messages("t"),
+            lambda: broker.compact_topic("t"),
             lambda: broker.create_subscription("s2", "t"),
         ):
-            with pytest.raises(RuntimeError, match=re.escape(path)):
+            with pytest.raises(RuntimeError, match=re.escape(d)):
                 call()
-        os.unlink(path)
+        broker.create_topic("t")
+        assert not os.path.exists(head)
+    for name in ("log.jsonl", ".seq"):
+        os.unlink(os.path.join(d, name))
+    os.rename(str(tmp_path / "seg.arrow"), seg.path)
+    with open(head, "w") as fh:
+        fh.write(saved)
     assert broker.publish("t", _msgs(1)) == ["1"]
 
 

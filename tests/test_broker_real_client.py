@@ -375,6 +375,19 @@ def test_commit_staged_publishes_staged_lines(real_client, fake_gcp, tmp_path):
     assert [m.ordering_key for m in log] == ["", "o"]
 
 
+def test_commit_staged_fence_is_ignored_at_least_once(real_client, fake_gcp, tmp_path):
+    """The service has no transactional publish, so the sink's batch
+    fence cannot ride with the batch: committing the same fenced batch
+    twice through the real client publishes it twice (at-least-once,
+    as documented), where ``FileBroker`` would publish it once."""
+    staged = str(tmp_path / "chunk-0.arrow")
+    write_ipc(staged, segment_batch([PubsubMessage(data=d) for d in (b"a", b"b")], 1))
+    fence = ("sink", "instance", 7)
+    assert real_client.commit_staged("t", [staged], fence=fence) == 2
+    assert real_client.commit_staged("t", [staged], fence=fence) == 2
+    log = fake_gcp.topics["projects/proj/topics/t"]
+    assert [m.data for m in log] == [b"a", b"b", b"a", b"b"]
+
 def test_backlog_by_region_reads_monitoring_metric(real_client, monkeypatch):
     """backlog()/backlog_by_region() poll the Cloud Monitoring
     num_unacked_messages_by_region time series

@@ -71,3 +71,33 @@ def test_release_caches_spares_caller_caches(spark, sf_dir):
     assert mine.storageLevel.useMemory
     mine.unpersist()
     assert _cache_empty(spark)
+
+
+def test_release_caches_keeps_a_frame_persisted_during_release(monkeypatch):
+    """A frame persisted while ``release_caches`` runs (here by an
+    ``unpersist`` that builds another query) is not dropped untracked:
+    it stays tracked, still persisted, and the next release frees it."""
+    from spark_sql_pubsub_connector_spark.plans import caching
+
+    monkeypatch.setattr(caching, "_TRACKED", [])
+
+    class Frame:
+        def __init__(self, on_unpersist=None):
+            self.persisted = False
+            self.on_unpersist = on_unpersist
+
+        def persist(self, *args, **kwargs):
+            self.persisted = True
+            return self
+
+        def unpersist(self):
+            self.persisted = False
+            if self.on_unpersist:
+                self.on_unpersist()
+
+    late = Frame()
+    caching.persist_tracked(Frame(lambda: caching.persist_tracked(late)))
+    assert caching.release_caches() == 1
+    assert caching._TRACKED == [late] and late.persisted
+    assert caching.release_caches() == 1
+    assert caching._TRACKED == [] and not late.persisted
