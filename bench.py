@@ -175,6 +175,17 @@ def headline_line(result: dict) -> str:
     return line
 
 
+def run_once(spark, spec, sf_dir: str) -> float:
+    """Wall seconds to build ``spec``'s DataFrame and evaluate it: the
+    headline's timed region."""
+    t0 = time.perf_counter()
+    df = spec.build(spark, sf_dir)
+    # write to a no-op sink: forces full evaluation of every row
+    # without driver-side collect
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -182,6 +193,7 @@ def main() -> None:
 
     from spark_sql_pubsub_connector_spark.plans import all_specs, release_caches
     from spark_sql_pubsub_connector_spark.session import get_spark
+    from tools.calib import calib3, warmup
 
     spark = get_spark(app_name="bench")
     specs = {n: s for n, s in sorted(all_specs().items()) if s.bench}
@@ -212,9 +224,7 @@ def main() -> None:
     # factor every cross-round comparison depends on. q22's cold number
     # again honestly includes the session's one-time Python fork+import
     # storm, directly comparable with rounds ≤14.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/region.parquet").groupBy("r_name").count()
-    warm.write.format("noop").mode("overwrite").save()
+    warmup(spark, sf_dir)
 
     # Host-speed calibration (r5): this box is a VM whose effective
     # speed swings >2x run-to-run with host load we cannot observe
@@ -223,41 +233,14 @@ def main() -> None:
     # shuffle-bound — time the SAME work every round; comparing their
     # drift against a prior round's values separates machine-speed
     # drift from genuine engine regressions (best of 3, min).
-    def calib_once() -> tuple[float, float]:
-        t0 = time.perf_counter()
-        spark.range(2_000_000_000).selectExpr("sum(id * 2 + 1)").collect()
-        t1 = time.perf_counter()
-        (
-            spark.range(60_000_000)
-            .selectExpr("id % 1024 AS k", "id AS v")
-            .groupBy("k")
-            .agg({"v": "sum"})
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return t1 - t0, time.perf_counter() - t1
-
-    calib = [calib_once() for _ in range(3)]
-    calibration = {
-        "cpu_probe_s": round(min(c[0] for c in calib), 4),
-        "shuffle_probe_s": round(min(c[1] for c in calib), 4),
-    }
-
-    def run_once(spec) -> float:
-        t0 = time.perf_counter()
-        df = spec.build(spark, sf_dir)
-        # write to a no-op sink: forces full evaluation of every row
-        # without driver-side collect
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    calibration = calib3(spark)
 
     timings: dict[str, float] = {}
     warm_median: dict[str, float] = {}
     warm_min: dict[str, float] = {}
     warm_spread: dict[str, float] = {}
     for name, spec in specs.items():
-        runs = [run_once(spec) for _ in range(n_runs)]
+        runs = [run_once(spark, spec, sf_dir) for _ in range(n_runs)]
         timings[name] = round(runs[0], 4)  # cold, comparable with r1/r2
         if len(runs) > 1:
             warm_median[name] = round(statistics.median(runs[1:]), 4)

@@ -530,62 +530,66 @@ def q54_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that can ever receive a non-self label
     nodes = edges.select(F.col("src").alias("doc_id")).distinct()
     # r16: the iteration state is the near-dup SUBGRAPH (819 nodes at
-    # sf0.1), yet every round's three shuffles planned at the session's
-    # full shuffle-partition count — at 4 rounds x 3 shuffles that is
-    # pure task-scheduling overhead on kilobyte frames. The loop now
-    # sizes its shuffles from the measured endpoint count (one task per
-    # 100k endpoints, capped at the session setting, restored after
-    # the loop) — at 100 TB the subgraph is huge and p saturates at the
+    # sf0.1), yet every round's shuffles planned at the session's full
+    # shuffle-partition count — pure task-scheduling overhead on
+    # kilobyte frames. The loop sizes its shuffles from the measured
+    # endpoint count (one task per 100k endpoints, capped at the session
+    # setting) — at 100 TB the subgraph is huge and p saturates at the
     # session value, so this is scale-adaptive, not a local constant.
-    # Together with the lazy checkpoint below: interleaved 4-round A/B
-    # at sf0.1 read 6.40 (eager, 32-part rounds) -> 5.98 (lazy) ->
-    # 5.03 s (lazy + adaptive), rows identical. A double pointer-jump
-    # per round was also tried: 7.77 s, REVERTED (the extra self-join
-    # outweighs it; round count is driven by the neighbor-min step and
-    # stayed at 4).
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n_endpoints = nodes.count()
-        p = max(1, min(int(old_sp), n_endpoints // 100_000 + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        lab = nodes.select(
-            "doc_id", F.col("doc_id").alias("component_id")
-        ).localCheckpoint(eager=True)
-        # empty-graph case: sum over zero rows is NULL on both sides of
-        # the comparison below, so the loop exits after one round
-        prev_sum = lab.agg(F.sum("component_id")).collect()[0][0]
-        while True:
-            # (1) min over {self} ∪ neighbor labels, one groupBy-min
-            nbr = edges.join(
-                lab.withColumnRenamed("doc_id", "dst"), "dst"
-            ).select(F.col("src").alias("doc_id"), "component_id")
-            merged = (
-                lab.unionByName(nbr)
-                .groupBy("doc_id")
-                .agg(F.min("component_id").alias("component_id"))
-            )
-            # (2) pointer jumping: component_id := label(component_id);
-            # every label IS some node's id, so the left join always hits
-            jump = merged.select(
-                F.col("doc_id").alias("component_id"),
-                F.col("component_id").alias("next_id"),
-            )
-            # lazy checkpoint (r16): the convergence sum's collect is
-            # the round's ONE job and materializes the checkpoint as a
-            # side effect — eager=True ran a second, separate
-            # materialization job per round for the same truncation
-            new_lab = (
-                merged.join(jump, "component_id", "left")
-                .select("doc_id", F.coalesce("next_id", "component_id").alias("component_id"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = new_lab.agg(F.sum("component_id")).collect()[0][0]
-            lab = new_lab
-            if new_sum == prev_sum:  # labels only decrease; fixpoint reached
-                break
-            prev_sum = new_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    # The width rides on explicit repartition(p, key) calls, never on
+    # the session conf, which a concurrent query on the same session
+    # would see. The lazy checkpoint below keeps a frame's partitioning,
+    # so each round shuffles only where its key changes. A double
+    # pointer-jump per round was also tried: 7.77 s vs 5.03 s, REVERTED
+    # (the extra self-join outweighs it; round count is driven by the
+    # neighbor-min step and stayed at 4).
+    n_endpoints = nodes.count()
+    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = max(1, min(session_p, n_endpoints // 100_000 + 1))
+    # the neighbor join's edge side never changes: partition it once
+    by_dst = edges.repartition(p, "dst").transform(persist_tracked)
+    lab = (
+        nodes.repartition(p, "doc_id")
+        .select("doc_id", F.col("doc_id").alias("component_id"))
+        .localCheckpoint(eager=True)
+    )
+    # empty-graph case: sum over zero rows is NULL on both sides of
+    # the comparison below, so the loop exits after one round
+    prev_sum = lab.agg(F.sum("component_id")).collect()[0][0]
+    while True:
+        # (1) min over {self} ∪ neighbor labels, one groupBy-min
+        nbr = by_dst.join(
+            lab.withColumnRenamed("doc_id", "dst"), "dst"
+        ).select(F.col("src").alias("doc_id"), "component_id")
+        merged = (
+            lab.unionByName(nbr)
+            .repartition(p, "doc_id")
+            .groupBy("doc_id")
+            .agg(F.min("component_id").alias("component_id"))
+        )
+        # (2) pointer jumping: component_id := label(component_id);
+        # every label IS some node's id, so the left join always hits
+        jump = merged.select(
+            F.col("doc_id").alias("component_id"),
+            F.col("component_id").alias("next_id"),
+        )
+        # lazy checkpoint (r16): the convergence sum's collect is
+        # the round's ONE job and materializes the checkpoint as a
+        # side effect — eager=True ran a second, separate
+        # materialization job per round for the same truncation
+        new_lab = (
+            merged.repartition(p, "component_id")
+            .join(jump, "component_id", "left")
+            .select("doc_id", F.coalesce("next_id", "component_id").alias("component_id"))
+            .repartition(p, "doc_id")
+            .localCheckpoint(eager=False)
+        )
+        new_sum = new_lab.agg(F.sum("component_id")).collect()[0][0]
+        lab = new_lab
+        if new_sum == prev_sum:  # labels only decrease; fixpoint reached
+            break
+        prev_sum = new_sum
+    by_dst.unpersist()
     edges.unpersist()
     docs = load_table(spark, sf_dir, "documents")
     # re-attach the (vast) singleton majority: no edges → own label

@@ -266,15 +266,20 @@ class FileBroker:
                 f"topic {d}: no {_HEAD}; not a topic of this broker"
             ) from None
 
-    def _segments(self, d: str, end: int | None = None) -> list[Segment]:
+    def _segments(
+        self, d: str, end: int | None = None, names: list[str] | None = None
+    ) -> list[Segment]:
         """The visible segments of topic dir ``d`` in seq order: those
         below ``end`` (the head's when not given), which must tile up to
-        it. Raises naming the dir on a gap or an overlap."""
+        it. ``names`` is a listing of ``d`` the caller already took.
+        Raises naming the dir on a gap or an overlap."""
         if end is None:
             end = self._head(d)["end"]
+        if names is None:
+            names = os.listdir(d)
         segs = sorted(
             Segment(int(m[1]), int(m[2]), os.path.join(d, m[0]))
-            for m in map(_SEGMENT_NAME.fullmatch, os.listdir(d))
+            for m in map(_SEGMENT_NAME.fullmatch, names)
             if m and int(m[1]) < end
         )
         for prev, s in zip([None] + segs, segs):
@@ -295,11 +300,12 @@ class FileBroker:
         point. Returns the first seq minted. Caller holds the broker
         lock."""
         end = head["end"]
-        for name in os.listdir(d):  # a killed append's leftovers sit past the end
+        names = os.listdir(d)
+        for name in names:  # a killed append's leftovers sit past the end
             m = _SEGMENT_NAME.fullmatch(name)
             if m and int(m[1]) >= end:
                 os.unlink(os.path.join(d, name))
-        self._segments(d, end)  # raises unless the visible ones tile
+        self._segments(d, end, names)  # raises unless the visible ones tile
         lo = end
         for path, n in files:
             os.rename(path, os.path.join(d, f"{lo:020d}-{lo + n:020d}.arrow"))

@@ -256,6 +256,21 @@ def test_segments_that_do_not_tile_raise(broker, tmp_path):
     assert broker.publish("t", _msgs(1)) == ["7"]
 
 
+def test_append_lists_the_topic_dir_once(broker, monkeypatch):
+    """An append takes one listing of the topic dir and feeds both the
+    leftover sweep and the tiling check from it."""
+    real, calls = os.listdir, []
+
+    def counting(path="."):
+        calls.append(path)
+        return real(path)
+
+    broker.publish("t", _msgs(2))
+    monkeypatch.setattr(os, "listdir", counting)
+    broker.publish("t", _msgs(3))
+    assert calls == [broker._topic_dir("t")]
+
+
 def test_commit_staged_killed_between_renames(broker, tmp_path, monkeypatch):
     """A commit killed after renaming some of its staged files never
     wrote the head, so nothing of it is visible: the renamed segment

@@ -1,12 +1,10 @@
 """Shared host-speed calibration probes for measurement tools.
 
-THE definition of the calibration protocol (r14 review: four divergable
-copies lived in bench.py / tools/bench_ab.py / tools/scale_probe.py /
-the new A/B tools; the probes are load-bearing for every drift
-adjudication, so a constant drifting in one copy would silently split
-the calibration family across artifacts). bench.py and the pre-r14
-tools keep their embedded byte-identical copies for artifact-lineage
-stability; new tools import from here.
+THE definition of the calibration protocol, and its only copy:
+bench.py, tools/scale_probe.py, tools/layer_profile.py and perfbench's
+diagnostics line all import it. The probes are load-bearing for every
+drift adjudication, so a constant drifting in one copy would silently
+split the calibration family across artifacts.
 
 Probe family (established r5): one CPU/codegen-bound probe, one
 shuffle-bound probe, min-of-3. Normal-host family on this box:

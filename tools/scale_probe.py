@@ -331,6 +331,7 @@ def main() -> None:
 
     from spark_sql_pubsub_connector_spark.plans import all_specs
     from spark_sql_pubsub_connector_spark.session import get_spark
+    from tools.calib import calib3
 
     if only_flag:  # fail fast, before a SparkSession spins up — and
         # unconditionally when the flag was given (ADVICE r7: the old
@@ -375,28 +376,6 @@ def main() -> None:
     # same fixed probes bench.py uses, timed at EACH scale, put the
     # host-drift factor in the artifact so a --compare failure can be
     # adjudicated against measured machine speed, not guessed.
-    def calibrate() -> dict[str, float]:
-        cpu, shuf = [], []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(2_000_000_000).selectExpr("sum(id * 2 + 1)").collect()
-            cpu.append(time.perf_counter() - t0)
-            t1 = time.perf_counter()
-            (
-                spark.range(60_000_000)
-                .selectExpr("id % 1024 AS k", "id AS v")
-                .groupBy("k")
-                .agg({"v": "sum"})
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            shuf.append(time.perf_counter() - t1)
-        return {
-            "cpu_probe_s": round(min(cpu), 4),
-            "shuffle_probe_s": round(min(shuf), 4),
-        }
-
     results: dict[int, dict[str, float]] = {}
     calibrations: dict[int, dict[str, float]] = {}
     for r_total in scales:
@@ -407,7 +386,7 @@ def main() -> None:
         # calibrate under the FIXED baseline conf (cpus partitions):
         # the probes exist to track host speed across scales/rounds,
         # so their own work must not vary with the per-scale sizing
-        calibrations[r_total] = calibrate()
+        calibrations[r_total] = calib3(spark)
         # per-scale shuffle sizing (VERDICT r7 #2) — runtime-settable,
         # applied for the query phase only and recorded in the artifact
         parts = session_conf["shuffle_partitions_by_scale"][str(r_total)]
