@@ -469,7 +469,6 @@ def connector_throughput(
             tempfile.mkdtemp(prefix=f"bench-ck2-{run}-{i}-"),
             trigger_available_now=True,
             sink_partitions=8,  # 8 publisher tasks, matching pull parallelism
-            publish_batch_size=2500,  # chunk staging to match partition caps
         )
         q2.awaitTermination(600)
         roundtrip.append(

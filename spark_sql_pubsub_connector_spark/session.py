@@ -7,7 +7,10 @@ settable and applied via :func:`ensure_confs`.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -99,13 +102,19 @@ def ship_package(spark: SparkSession) -> None:
     Needed whenever executors must unpickle objects defined in this
     package (the Python DataSource classes, Pandas-UDF closures that
     reference package modules). Zips the package once per process and
-    registers it via ``addPyFile``; idempotent.
+    registers it via ``addPyFile``; idempotent. The zip goes to a
+    directory private to this process: a shared path would let another
+    process (another checkout, test run or bench) rewrite it while this
+    one's executors still fetch it.
     """
     global _SHIPPED
     if _SHIPPED:
         return
+    zip_dir = tempfile.mkdtemp(prefix="pubsub-pkg-")
+    atexit.register(shutil.rmtree, zip_dir, True)
+    # addPyFile puts the basename on the workers' path: keep the name
+    zip_path = os.path.join(zip_dir, "spark_sql_pubsub_connector_spark.zip")
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join("/tmp", "spark_sql_pubsub_connector_spark.zip")
     root = os.path.dirname(pkg_dir)
     with zipfile.ZipFile(zip_path, "w") as zf:
         for dirpath, _dirs, files in os.walk(pkg_dir):

@@ -18,7 +18,7 @@ mirrored from the real service:
     reference polls Cloud Monitoring, PubsubSubscriptionMonitor.scala).
 
 A topic is a directory of immutable Arrow IPC segments, one per
-``publish`` call or committed staged chunk, each holding the
+``publish`` call or committed staged file, each holding the
 ``segment_schema()`` columns, plus one small ``head.json``. A segment
 is named by the half-open seq range ``[lo, hi)`` it holds
 (``{lo:020d}-{hi:020d}.arrow``): row ``i`` is the message with seq and
@@ -47,6 +47,7 @@ import bisect
 import contextlib
 import fcntl
 import functools
+import itertools
 import json
 import logging
 import os
@@ -66,7 +67,7 @@ if TYPE_CHECKING:
 
 @functools.cache
 def segment_schema() -> pa.Schema:
-    """The columns of a topic segment and of a staged sink chunk."""
+    """The columns of a topic segment and of a staged sink file."""
     import pyarrow as pa
 
     return pa.schema(
@@ -123,6 +124,34 @@ def write_ipc(sink: str | pa.NativeFile, data: pa.RecordBatch | pa.Table) -> Non
 
     with pa.ipc.new_file(sink, data.schema) as writer:
         writer.write(data)
+
+
+def write_segment(path: str, batches) -> int:
+    """Write the ``segment_schema()`` record batches of the iterator
+    ``batches`` to ``path`` as one Arrow IPC segment file, one batch at
+    a time; returns the rows written. The file is built under a tmp
+    name that starts with ``path`` and replaces ``path`` only once
+    every batch is written, so ``path`` is whole or absent. No rows
+    write no file; a failure unlinks the tmp file and re-raises."""
+    import pyarrow as pa
+
+    batches = (b for b in batches if b.num_rows)
+    first = next(batches, None)
+    if first is None:
+        return 0
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    rows = 0
+    try:
+        with pa.ipc.new_file(tmp, segment_schema()) as writer:
+            for batch in itertools.chain([first], batches):
+                writer.write_batch(batch)
+                rows += batch.num_rows
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
+    return rows
 
 
 def read_ipc(path: str) -> pa.Table:

@@ -74,8 +74,10 @@ from __future__ import annotations
 import contextlib
 import json
 import logging
+import math
 import os
 import shutil
+import time
 import uuid
 from dataclasses import dataclass
 
@@ -96,7 +98,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .broker import FileBroker, _write_atomic, segment_schema, write_ipc
+from .broker import FileBroker, _write_atomic, segment_schema, write_segment
 from .options import (
     PartitioningInfo,
     PubsubReadOptions,
@@ -105,12 +107,15 @@ from .options import (
     validate_read_options,
     validate_write_options,
 )
-from .registry import StreamRegistry
+from .registry import _STALE_AFTER_S, StreamRegistry
 
 _log = logging.getLogger(__name__)
 
 _PART_SUFFIX = ".arrow"  # replay-cache part files (Arrow IPC)
 _PLAN_FILE = "plan.json"  # a batch's partition plan, beside its parts
+# A live reader refreshes its registry claim at most this often, well
+# inside the claim's expiry.
+_HEARTBEAT_EVERY_S = _STALE_AFTER_S / 10
 
 # Read schema — 7 fixed columns (reference package.scala:174-186)
 PUBSUB_READ_SCHEMA = StructType(
@@ -412,14 +417,26 @@ class PubsubStreamReader(DataSourceStreamReader):
         # analysis/planning, and only the running stream's instance
         # drives the offset lifecycle.
         self._registered = False
+        self._beat = -math.inf  # time.monotonic() of the last registry write
 
     def _ensure_registered(self) -> None:
         if not self._registered:
             self.registry.register(self.opts.subscription, self.stream_id)  # S12
             self._registered = True
+            self._beat = time.monotonic()
             self._purge_foreign_cache_dirs()
         else:
+            self._heartbeat()
+
+    def _heartbeat(self) -> None:
+        """Refresh the registry claim once it is ``_HEARTBEAT_EVERY_S``
+        old. Spark polls ``latestOffset`` every few ms on an idle
+        stream, and each refresh locks, reads and replaces the
+        registry file."""
+        now = time.monotonic()
+        if now - self._beat >= _HEARTBEAT_EVERY_S:
             self.registry.heartbeat(self.opts.subscription, self.stream_id)
+            self._beat = now
 
     def _purge_foreign_cache_dirs(self) -> None:
         """Remove replay-cache dirs left by other stream_ids on this
@@ -730,7 +747,7 @@ class PubsubStreamReader(DataSourceStreamReader):
                 )
             for batch_dir in dirs:  # block eviction analog, every copy
                 shutil.rmtree(batch_dir, ignore_errors=True)
-        self.registry.heartbeat(self.opts.subscription, self.stream_id)
+        self._heartbeat()
 
     def stop(self) -> None:
         if self._registered:
@@ -835,9 +852,12 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
     batch, so it also holds across a crash anywhere in commit().
 
     Arrow variant: write() receives pyarrow RecordBatches and stages
-    the segment columns selected from them as Arrow IPC chunk files,
-    with no per-message conversion (mirrors the source's RecordBatch
-    read path); commit() renames the chunks into the topic.
+    the segment columns selected from them as one Arrow IPC segment
+    file per task, with no per-message conversion (mirrors the source's
+    RecordBatch read path); commit() renames the task files into the
+    topic under one head write. The reference's client batching
+    (CachedPublishers.scala:19-35) is ``RealBrokerClient``'s
+    ``BATCH_MAX_MESSAGES`` and ``BATCH_MAX_LATENCY_S``.
     """
 
     def __init__(self, options: dict, schema: StructType):
@@ -854,43 +874,24 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
 
     def write(self, iterator) -> PubsubCommitMessage:
         # executor-side: re-validate the ordering-key contract like
-        # PubsubWriter.scala:36-45, then stage this partition's messages
-        # in publish_batch_size chunks — the staged-file analog of the
-        # client library's batching element-count threshold
-        # (CachedPublishers.scala:19-35: publishes flush every
-        # publish_batch_size messages; here every chunk is one segment
-        # file that commit renames into the topic)
-        import time as _time
-
+        # PubsubWriter.scala:36-45, then stage this task's messages as
+        # one segment file that commit() renames into the topic. The
+        # file appears only once the whole task succeeded (abort() sees
+        # only commit messages). A losing speculative attempt still
+        # stages a file no commit message references; the API exposes
+        # batchId only driver-side, so filenames carry the owner token
+        # and commit()'s sweep removes them (see _gc_orphans).
         import pyarrow as pa
         import pyarrow.compute as pc
 
         opts = self.opts
         stage = _stage_dir(opts)
         os.makedirs(stage, exist_ok=True)
-        now_us = int(_time.time() * 1e6)
-        n = 0
-        finals: list[str] = []
-        tmps: list[str] = []
-
-        # Chunks stay .tmp until the whole partition succeeds, then are
-        # promoted together: a failed task leaves only .tmp files, which
-        # the except path unlinks (abort() sees only commit messages).
-        # A losing speculative attempt still promotes files no commit
-        # message references; the API exposes batchId only driver-side,
-        # so filenames carry the owner token and commit()'s sweep
-        # removes them (see _gc_orphans).
-        owner = self._owner_token
-
-        def stage_chunk(rows) -> None:
-            tmp = os.path.join(stage, f"stage-{owner}-{uuid.uuid4().hex}.arrow.tmp")
-            tmps.append(tmp)
-            write_ipc(tmp, rows)
-
+        now_us = int(time.time() * 1e6)
         schema = segment_schema()
         map_type = schema.field("attributes").type
-        held = schema.empty_table()  # rows not yet staged
-        try:
+
+        def segments():
             for batch in iterator:
                 data = batch.column("data")
                 if data.null_count:
@@ -902,7 +903,7 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
                 else:
                     keys = pa.array([""] * rows, pa.string())
                 attrs = batch.column("attributes").cast(map_type)
-                seg = pa.RecordBatch.from_arrays(
+                yield pa.RecordBatch.from_arrays(
                     [
                         keys,
                         data.cast(pa.binary()),
@@ -912,24 +913,12 @@ class PubsubStreamWriter(DataSourceStreamArrowWriter):
                     ],
                     schema=schema,
                 )
-                n += rows
-                held = pa.concat_tables([held, pa.Table.from_batches([seg])])
-                while held.num_rows >= opts.publish_batch_size:
-                    stage_chunk(held.slice(0, opts.publish_batch_size))
-                    held = held.slice(opts.publish_batch_size)
-            if held.num_rows:
-                stage_chunk(held)
-            # whole partition succeeded: promote every chunk at once
-            for tmp in tmps:
-                final = tmp[: -len(".tmp")]
-                os.replace(tmp, final)
-                finals.append(final)
-        except BaseException:
-            for tmp in tmps:
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
-            raise
-        return PubsubCommitMessage(staged_files=tuple(finals), count=n)
+
+        path = os.path.join(
+            stage, f"stage-{self._owner_token}-{uuid.uuid4().hex}.arrow"
+        )
+        n = write_segment(path, segments())
+        return PubsubCommitMessage(staged_files=(path,) if n else (), count=n)
 
     # -- driver-side commit/abort -----------------------------------------
     def _gc_orphans(self) -> None:

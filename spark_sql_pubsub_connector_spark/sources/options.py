@@ -25,7 +25,6 @@ BROKER_DIR = "broker_dir"  # fake-broker root (stands in for endPoint;
 BACKLOG_THRESHOLD = "backlog_threshold"
 MAX_DYNAMIC_PARTITIONS = "max_dynamic_partitions"
 REGION_SPLIT_THRESHOLD = "region_split_threshold"
-PUBLISH_BATCH_SIZE = "publish_batch_size"
 STREAM_ID = "stream_id"  # stable consumer identity (crash recovery)
 SINK_ID = "sink_id"  # stable writer identity (cross-restart idempotence)
 # Topic-log retention trigger (the file-broker analog of real Pub/Sub's
@@ -49,7 +48,6 @@ DEFAULT_MAX_MESSAGES_PER_PARTITION = 1000  # package.scala:33
 DEFAULT_BACKLOG_THRESHOLD = 10_000  # PubsubSubscriptionMonitor.scala:33-35
 DEFAULT_MAX_DYNAMIC_PARTITIONS = 256  # PubsubSubscriptionMonitor.scala:26-31
 DEFAULT_REGION_SPLIT_THRESHOLD = 0.7  # package.scala:118
-DEFAULT_PUBLISH_BATCH_SIZE = 100
 # The reference persists each pulled batch at MEMORY_AND_DISK_SER_2 —
 # two copies on distinct executors (PubsubPartitionReader.scala:57) —
 # so an executor loss between pull and commit replays from the replica
@@ -161,7 +159,6 @@ class PubsubWriteOptions:
     topic: str
     broker_dir: str
     ordering_key: str | None = None
-    publish_batch_size: int = DEFAULT_PUBLISH_BATCH_SIZE
     # Stable writer identity: explicit sink_id, else derived from the
     # query's checkpointLocation (see _resolve_sink_id). When set, the
     # sink's last committed batch id is recorded in the topic's head by
@@ -293,9 +290,6 @@ def validate_write_options(options: dict) -> PubsubWriteOptions:
         topic=_require(options, TOPIC),
         broker_dir=_require(options, BROKER_DIR),
         ordering_key=str(key) if key not in (None, "") else None,
-        publish_batch_size=_pos_int(
-            options, PUBLISH_BATCH_SIZE, DEFAULT_PUBLISH_BATCH_SIZE
-        ),
         sink_id=_resolve_sink_id(options),
         log_retention_bytes=(
             _pos_int(options, LOG_RETENTION_BYTES, default=0, minimum=1)

@@ -23,9 +23,10 @@ import time
 
 from .broker import _write_atomic
 
-# An entry is considered live while its stream heartbeats (every batch
-# via commit/latestOffset). A crashed stream's claim expires after this,
-# allowing restart-from-checkpoint to reclaim the subscription. The
+# An entry is considered live while its stream heartbeats (from
+# commit/latestOffset, at most every tenth of this). A crashed stream's
+# claim expires after this, allowing restart-from-checkpoint to
+# reclaim the subscription. The
 # reference's per-JVM registry gets this for free (JVM death clears it);
 # a file registry needs the TTL.
 _STALE_AFTER_S = 300.0

@@ -16,7 +16,6 @@ time as publish timestamp.
 from __future__ import annotations
 
 import functools
-import json
 import os
 import shutil
 import uuid
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.tables import load_table
 from ..session import ship_package
-from ..sources.broker import FileBroker, PubsubMessage, segment_schema, write_ipc
+from ..sources.broker import FileBroker, segment_schema, write_segment
 from ..sources.datasource import register_pubsub
 
 
@@ -37,15 +36,9 @@ def _stage_segment(staging: str, batches):
     import pyarrow as pa
     from pyspark import TaskContext
 
-    batches = [b for b in batches if b.num_rows]
-    if not batches:
-        return
-    rows = pa.Table.from_batches(batches)
     path = os.path.join(staging, f"part-{TaskContext.get().partitionId():05d}.arrow")
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    write_ipc(tmp, rows.cast(segment_schema()))
-    os.replace(tmp, path)
-    yield pa.RecordBatch.from_pydict({"part": [path]})
+    if write_segment(path, (b.cast(segment_schema()) for b in batches)):
+        yield pa.RecordBatch.from_pydict({"part": [path]})
 
 
 def seed_topic_from_events(
@@ -56,21 +49,21 @@ def seed_topic_from_events(
     subscription: str | None = None,
     limit: int | None = None,
     ack_deadline_s: float = 60.0,
-    region_of=None,
     num_partitions: int = 8,
 ) -> int:
     """Publish the events table into a broker topic deterministically.
 
-    Distributed: the staged-commit protocol the sink already uses.
-    Executors compose each message's segment columns JVM-side
-    (``to_json`` payload, ordering key, attributes, publish time) and
-    one ``mapInArrow`` task per range-partition of ``event_id`` writes
-    its rows as one staged Arrow IPC segment file; the driver then
-    renames the files into the topic in partition (= event_id) order
-    via ``FileBroker.commit_staged``, so message ids are monotone in
-    event_id exactly as the old driver-side ``collect``+``publish``
-    loop produced — but no event data ever moves through the driver,
-    and seeding scales with the cluster like any other write job.
+    Distributed: the staged-commit protocol of the sink, whose unit is
+    one staged segment per task. Executors compose each message's
+    segment columns JVM-side (``to_json`` payload, ordering key,
+    attributes, publish time) and one ``mapInArrow`` task per
+    range-partition of ``event_id`` writes its rows as one staged Arrow
+    IPC segment through ``write_segment``, the sink's writer; the
+    driver then renames the files into the topic in partition
+    (= event_id) order via ``FileBroker.commit_staged``, so message ids
+    are monotone in event_id. No event data moves through the driver,
+    and seeding scales with the cluster like any other write job. Every
+    message's region is ``"global"``.
     (``broker_dir`` is shared storage by the FileBroker contract, so
     executor-written staging files are visible to the driver.)
 
@@ -92,11 +85,6 @@ def seed_topic_from_events(
     (``{"a":1}``) where ``json.dumps`` emitted spaces after
     separators — semantically equal JSON, but not byte-identical to
     logs seeded before round 4.
-
-    ``region_of``: optional callable row→region string, used to build
-    skewed-region fixtures for the partition-planner tests. Those
-    fixtures are small by construction, so this hook keeps the
-    original driver-side path.
     """
     broker = FileBroker(broker_dir)
     broker.create_topic(topic)
@@ -106,37 +94,9 @@ def seed_topic_from_events(
     if limit is not None:
         ev = ev.filter(F.col("event_id") < limit)
 
-    if region_of is not None:  # fixture hook: tiny, driver-side
-        rows = ev.orderBy("event_id").collect()
-        msgs = [
-            PubsubMessage(
-                data=json.dumps(
-                    {
-                        "event_id": r["event_id"],
-                        "user_id": r["user_id"],
-                        "event_type": r["event_type"],
-                        "value": r["value"],
-                        "props": r["props"],
-                    }
-                ).encode(),
-                attributes={"event_type": r["event_type"]},
-                ordering_key=str(r["user_id"]),
-                publish_ts_us=r["ts_ns"] // 1000,
-                region=region_of(r),
-            )
-            for r in rows
-        ]
-        broker.publish(topic, msgs)
-        if limit is not None and len(msgs) != limit:
-            raise ValueError(
-                f"seeder under-fill: limit={limit} but {len(msgs)} messages "
-                "seeded — dense event_id contract violated (FIXTURES.md)"
-            )
-        return len(msgs)
-
-    # ignoreNullFields=false: emit "value": null like the json.dumps
-    # path does, instead of silently dropping the key (to_json's
-    # default) — consumers index payload fields unconditionally
+    # ignoreNullFields=false: emit "value": null instead of silently
+    # dropping the key (to_json's default) — consumers index payload
+    # fields unconditionally
     payload = F.to_json(
         F.struct("event_id", "user_id", "event_type", "value", "props"),
         {"ignoreNullFields": "false"},
@@ -223,15 +183,20 @@ def write_stream(
     across restarts (effectively-once) without ever swallowing batches
     from other queries writing the same topic.
 
+    Each sink task stages its rows as one topic segment, and the
+    batch's segments become visible together at commit. Client batching
+    (``BATCH_MAX_MESSAGES`` messages or ``BATCH_MAX_LATENCY_S``) applies
+    only against the real service, in ``RealBrokerClient``.
+
     ``sink_partitions`` coalesces the write stage to that many publisher
     tasks — the staged-commit analog of the reference's bounded
     publisher-client cache (CachedPublishers.scala:27-35: one cached
     publisher per topic, reused across partitions). Source micro-batches
     often plan many small partitions (backlog ÷ max_messages); each sink
-    task pays a fixed Python-worker + staging-file cost, so matching the
-    publisher count to the actual executor slots cuts per-batch overhead
-    without touching pull parallelism (coalesce, not repartition — no
-    shuffle)."""
+    task pays a fixed Python-worker cost and stages one segment, so
+    matching the publisher count to the actual executor slots cuts
+    per-batch overhead and segments without touching pull parallelism
+    (coalesce, not repartition — no shuffle)."""
     register_pubsub(df.sparkSession)
     if sink_partitions is not None:
         df = df.coalesce(sink_partitions)

@@ -28,6 +28,7 @@ from spark_sql_pubsub_connector_spark.sources.broker import (
     pull_schema,
     segment_batch,
     write_ipc,
+    write_segment,
 )
 
 # ---------------------------------------------------------------------------
@@ -357,6 +358,8 @@ def test_localhost_endpoint_uses_anonymous_credentials(fake_gcp):
 
 
 def test_commit_staged_publishes_staged_lines(real_client, fake_gcp, tmp_path):
+    import pyarrow as pa
+
     staged = str(tmp_path / "chunk-0.arrow")
     write_ipc(
         staged,
@@ -368,11 +371,21 @@ def test_commit_staged_publishes_staged_lines(real_client, fake_gcp, tmp_path):
             1,
         ),
     )
-    assert real_client.commit_staged("t", [staged]) == 2
+    # the sink writer's shape: one task's input batches in one file
+    task = str(tmp_path / "task-0.arrow")
+    assert write_segment(
+        task,
+        iter(
+            segment_batch([PubsubMessage(data=d, ordering_key=k)], 1)
+            for d, k in ((b"c", "p"), (b"d", ""))
+        ),
+    ) == 2
+    assert pa.ipc.open_file(task).num_record_batches == 2
+    assert real_client.commit_staged("t", [staged, task]) == 4
     log = fake_gcp.topics["projects/proj/topics/t"]
-    assert [m.data for m in log] == [b"a", b"b"]
+    assert [m.data for m in log] == [b"a", b"b", b"c", b"d"]
     assert log[0].attributes == {"k": "v"}
-    assert [m.ordering_key for m in log] == ["", "o"]
+    assert [m.ordering_key for m in log] == ["", "o", "p", ""]
 
 
 def test_commit_staged_fence_is_ignored_at_least_once(real_client, fake_gcp, tmp_path):

@@ -189,6 +189,73 @@ def test_stream_registry_direct(broker_dir, broker):
     reg.register("s", "stream-b")  # free after release
 
 
+def test_idle_reader_heartbeats_the_registry_sparingly(broker_dir, broker, monkeypatch):
+    """An idle stream's latestOffset polls (every few ms under Spark's
+    default trigger) rewrite the registry at most once per
+    ``_HEARTBEAT_EVERY_S``, and a heartbeat that old is refreshed, so
+    a live claim never reaches the registry's expiry."""
+    from spark_sql_pubsub_connector_spark.sources import datasource, registry
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        PubsubStreamReader,
+    )
+
+    writes = []
+    real_write = registry._write_atomic
+
+    def counting(path, data):
+        writes.append(json.loads(data))
+        real_write(path, data)
+
+    monkeypatch.setattr(registry, "_write_atomic", counting)
+    reader = PubsubStreamReader(
+        {"project_id": "p", "subscription": "s", "broker_dir": broker_dir}
+    )
+    reader.initialOffset()  # registers: one write
+    assert len(writes) == 1
+    for _ in range(100):  # nothing published: every poll is idle
+        reader.latestOffset()
+    assert len(writes) <= 2
+
+    claimed = writes[-1]["s"]["ts"]
+    reader._beat -= datasource._HEARTBEAT_EVERY_S  # the last beat is stale
+    time.sleep(0.01)
+    reader.latestOffset()
+    assert writes[-1]["s"]["stream_id"] == reader.stream_id
+    assert writes[-1]["s"]["ts"] > claimed
+    n = len(writes)
+    reader.latestOffset()
+    assert len(writes) == n  # fresh again
+    reader.stop()
+
+
+def test_ship_package_zips_into_a_private_dir(monkeypatch):
+    """Each process zips the package into a fresh directory of its own,
+    under the module's name. A shared path such as
+    ``/tmp/spark_sql_pubsub_connector_spark.zip`` can be rewritten by
+    another process (another checkout, test run or bench) while this
+    one's executors still fetch it."""
+    import stat
+    import tempfile
+    import zipfile
+    from types import SimpleNamespace
+
+    from spark_sql_pubsub_connector_spark import session
+
+    shipped = []
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+    for _ in range(2):
+        monkeypatch.setattr(session, "_SHIPPED", False)
+        session.ship_package(fake)
+    name = "spark_sql_pubsub_connector_spark.zip"
+    for path in shipped:
+        assert os.path.basename(path) == name
+        assert os.path.dirname(path) not in ("/tmp", tempfile.gettempdir())
+        assert stat.S_IMODE(os.stat(os.path.dirname(path)).st_mode) == 0o700
+        with zipfile.ZipFile(path) as zf:
+            assert "spark_sql_pubsub_connector_spark/session.py" in zf.namelist()
+    assert shipped[0] != shipped[1]
+
+
 def test_write_schema_validation(spark, broker, broker_dir, tmp_path):
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamWriter,
@@ -697,7 +764,6 @@ def test_sink_crash_matrix_publishes_every_message_once(
         "topic": "crash",
         "broker_dir": broker_dir,
         "sink_id": "crash-sink",
-        "publish_batch_size": "2",
     }
     stage = _stage_dir(validate_write_options(opts))
     schema = _sink_schema()
@@ -705,8 +771,8 @@ def test_sink_crash_matrix_publishes_every_message_once(
     batch = [b"b1-0", b"b1-1", b"b1-2"]
     w = PubsubStreamWriter(opts, schema)
     w.commit([w.write(iter([_payload_batch(before)]))], batchId=0)
-    msg = w.write(iter([_payload_batch(batch)]))
-    assert len(msg.staged_files) == 2  # two renames
+    msgs = [w.write(iter([_payload_batch(part)])) for part in (batch[:2], batch[2:])]
+    assert sum(len(m.staged_files) for m in msgs) == 2  # two tasks, two renames
 
     def dying(owner, name, when):
         real = getattr(owner, name)
@@ -730,7 +796,7 @@ def test_sink_crash_matrix_publishes_every_message_once(
         "during_gc_orphans": lambda: dying(os, "listdir", lambda n, a: a[0] == stage),
     }[kill]()
     with pytest.raises(KeyboardInterrupt):
-        PubsubStreamWriter(opts, schema).commit([msg], batchId=1)
+        PubsubStreamWriter(opts, schema).commit(msgs, batchId=1)
     monkeypatch.undo()
 
     committed = kill in ("during_staged_cleanup", "during_gc_orphans")
@@ -767,15 +833,14 @@ def test_sink_fence_decisions_are_logged(broker, broker_dir, tmp_path, caplog):
         "broker_dir": broker_dir,
         "sink_id": "log-sink",
         "checkpointlocation": str(ck),
-        "publish_batch_size": "2",
     }
     w = PubsubStreamWriter(opts, _sink_schema())
 
     def commit(batch_id):
         caplog.clear()
         with caplog.at_level(logging.INFO):
-            msg = w.write(iter([_payload_batch([b"x", b"y", b"z"])]))
-            w.commit([msg], batchId=batch_id)
+            msgs = [w.write(iter([_payload_batch(p)])) for p in ([b"x", b"y"], [b"z"])]
+            w.commit(msgs, batchId=batch_id)
         return [r for r in caplog.records if r.levelno >= logging.INFO]
 
     assert commit(4) == []
@@ -794,47 +859,41 @@ def test_sink_fence_decisions_are_logged(broker, broker_dir, tmp_path, caplog):
     assert len(broker.topic_messages("logged")) == 6
 
 
-def test_sink_publish_batch_size_chunks_staging(spark, broker, broker_dir):
-    """S16: publish_batch_size bounds each staged append unit — the
-    element-count flush threshold of the reference's client batching
-    (CachedPublishers.scala:19-35)."""
-    import pyarrow as pa
-
+def test_sink_stages_one_segment_per_task(broker, broker_dir):
+    """The sink's staged unit is one segment per write() task, whatever
+    its rows and input batches: a 1,000-row task stages one file, and a
+    commit of k tasks' files appends exactly k segments, rows in task
+    and batch order."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamWriter,
     )
 
-    broker.create_topic("chunk")
-    n = 25
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array([f"m{i}".encode() for i in range(n)], type=pa.binary()),
-            pa.array([[("k", "v")]] * n, type=pa.map_(pa.string(), pa.string())),
-        ],
-        names=["data", "attributes"],
-    )
+    broker.create_topic("unit")
     w = PubsubStreamWriter(
-        {
-            "project_id": "p",
-            "topic": "chunk",
-            "broker_dir": broker_dir,
-            "publish_batch_size": "10",
-        },
+        {"project_id": "p", "topic": "unit", "broker_dir": broker_dir},
         _sink_schema(),
     )
-    msg = w.write(iter([batch]))
-    assert msg.count == 25
-    assert len(msg.staged_files) == 3  # 10 + 10 + 5
-    w.commit([msg], batchId=0)
-    assert len(broker.topic_messages("chunk")) == 25
+    tasks = [
+        [[f"a{i}".encode() for i in range(1000)]],
+        [[b"b0", b"b1"], [], [b"b2"]],  # three input batches, one empty
+        [[b"c0"]],
+    ]
+    msgs = [w.write(iter([_payload_batch(b) for b in task])) for task in tasks]
+    assert [len(m.staged_files) for m in msgs] == [1, 1, 1]
+    assert [m.count for m in msgs] == [1000, 3, 1]
+    w.commit(msgs, batchId=0)
+    segs = broker._segments(broker._topic_dir("unit"))
+    assert [s.hi - s.lo for s in segs] == [1000, 3, 1]
+    want = [p for task in tasks for b in task for p in b]
+    assert [m.data for m in broker.topic_messages("unit")] == want
 
 
 def test_sink_failed_task_leaves_no_promoted_chunks(spark, broker, broker_dir):
     """ADVICE r2 (low): a task that fails mid-write must not leave
-    promoted (non-.tmp) chunks in .sink_stage/ — abort() only sees
+    a promoted (non-.tmp) segment in .sink_stage/ — abort() only sees
     commit messages, so anything promoted outside one leaks forever.
-    Chunks stay .tmp until the whole partition succeeds; the except
-    path unlinks them."""
+    The task's segment stays .tmp until the whole task succeeds, and
+    a failure after some rows were written unlinks it."""
     import os
 
     import pyarrow as pa
@@ -865,7 +924,6 @@ def test_sink_failed_task_leaves_no_promoted_chunks(spark, broker, broker_dir):
             "project_id": "p",
             "topic": "failchunk",
             "broker_dir": broker_dir,
-            "publish_batch_size": "10",  # 2 full chunks roll before the bad row
         },
         _sink_schema(),
     )
@@ -2035,14 +2093,13 @@ def test_sink_losing_attempt_leaves_zero_orphans(
             "project_id": "p",
             "topic": "spec",
             "broker_dir": broker_dir,
-            "publish_batch_size": "10",
             "sink_id": "q-spec",
         },
         _sink_schema(),
     )
     winner = w.write(iter([batch]))
     loser = w.write(iter([batch]))  # speculative duplicate, COMPLETED
-    assert len(loser.staged_files) == 3
+    assert len(loser.staged_files) == 1
     stage = _stage_dir(w.opts)
     owner = _sink_owner_token(w.opts)
     # zombie .tmp of a hard-killed attempt (its except-unlink never ran)
@@ -2107,16 +2164,14 @@ def test_sink_commit_fails_loudly_on_missing_staged_file(
             "project_id": "p",
             "topic": "lost",
             "broker_dir": broker_dir,
-            "publish_batch_size": "10",
             "sink_id": "q1",
         },
         _sink_schema(),
     )
-    msg = w.write(iter([batch]))
-    assert len(msg.staged_files) == 3
-    os.remove(msg.staged_files[1])  # lose the middle chunk
+    msgs = [w.write(iter([batch])) for _ in range(3)]  # three tasks
+    os.remove(msgs[1].staged_files[0])  # lose the middle task's segment
     with pytest.raises(RuntimeError, match="staged files are missing"):
-        w.commit([msg], batchId=0)
+        w.commit(msgs, batchId=0)
     # nothing was published and the batch is NOT recorded committed —
     # a retry with re-staged files goes through cleanly
     assert broker.topic_messages("lost") == []
@@ -2158,7 +2213,6 @@ def test_sink_anonymous_losing_attempt_leaves_zero_orphans(
         "project_id": "p",
         "topic": "anonspec",
         "broker_dir": broker_dir,
-        "publish_batch_size": "10",
         # NO sink_id
     }
     w = PubsubStreamWriter(dict(opts), _sink_schema())
@@ -2166,7 +2220,7 @@ def test_sink_anonymous_losing_attempt_leaves_zero_orphans(
     assert w._owner_token != w2._owner_token  # per-run, not shared
     winner = w.write(iter([batch]))
     loser = w.write(iter([batch]))  # speculative duplicate, COMPLETED
-    assert len(loser.staged_files) == 3
+    assert len(loser.staged_files) == 1
     other = w2.write(iter([batch]))  # other query's batch, in flight
     stage = _stage_dir(w.opts)
     # zombie .tmp of a hard-killed attempt of THIS run
@@ -2236,7 +2290,6 @@ def test_sink_log_retention_bounds_topic_log(spark, broker, broker_dir):
             "project_id": "p",
             "topic": "retained",
             "broker_dir": broker_dir,
-            "publish_batch_size": "25",
             "sink_id": "ret-q",
             "log_retention_bytes": str(8 * 1024),
         },
@@ -2245,7 +2298,7 @@ def test_sink_log_retention_bounds_topic_log(spark, broker, broker_dir):
     assert w.opts.log_retention_bytes == 8 * 1024
     max_size = 0
     seen = 0
-    for b in range(20):  # two ~3 KB segments per batch
+    for b in range(20):  # one ~6 KB segment per batch
         w.commit([w.write(iter([batch]))], batchId=b)
         got = broker.pull("rsub", 200)
         seen += len(got)
@@ -2264,7 +2317,6 @@ def test_sink_log_retention_bounds_topic_log(spark, broker, broker_dir):
             "project_id": "p",
             "topic": "undrained",
             "broker_dir": broker_dir,
-            "publish_batch_size": "25",
             "log_retention_bytes": "1024",
         },
         _sink_schema(),
@@ -2310,7 +2362,6 @@ def test_sink_checkpoint_derived_identity_sweeps_across_instances(
         "project_id": "p",
         "topic": "ckq",
         "broker_dir": broker_dir,
-        "publish_batch_size": "10",
         # NO sink_id — Spark forwards the checkpoint, lower-cased
         "checkpointlocation": str(tmp_path / "ckA"),
     }

@@ -73,18 +73,3 @@ def test_limit_beyond_fixture_fails_loudly(spark, sf_dir, tmp_path):
             spark, sf_dir, str(tmp_path / "b3"), "t3", None, limit=n_events + 7
         )
 
-
-def test_region_of_fixture_hook_still_driver_side(spark, sf_dir, tmp_path):
-    bd = str(tmp_path / "broker2")
-    n = seed_topic_from_events(
-        spark,
-        sf_dir,
-        bd,
-        "t2",
-        None,
-        limit=10,
-        region_of=lambda r: "us-east1" if r["user_id"] % 2 else "global",
-    )
-    assert n == 10
-    regions = {m.region for m in FileBroker(bd).topic_messages("t2")}
-    assert regions == {"us-east1", "global"}
