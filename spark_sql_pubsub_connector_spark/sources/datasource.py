@@ -28,13 +28,15 @@ Parity map to the reference (SURVEY.md §2.1):
          The backlog counts leased messages, so the batch after a
          drain's last data batch still exists: Spark calls commit() only
          while it builds the next batch, and that batch carries the ack
-  S6/S13 per-batch partition planning — static num_partitions, or
-         backlog-driven with per-region splits (the reader scans the
-         broker's per-region backlog where the reference polls Cloud
-         Monitoring, PubsubSubscriptionMonitor.scala). Deliberate
-         deviation: the reference plans num_partitions pulls every
-         batch (PubsubMicroBatchStream.scala:58-74); here a plan holds
-         at most ceil(deliverable / max_messages_per_partition) pulls,
+  S6/S13 per-batch partition planning in one path, _plan — static
+         num_partitions, or backlog-driven with per-region splits
+         (options.calculate_partitions / region_split; the reader scans
+         the broker's per-region backlog once per planned batch where
+         the reference polls Cloud Monitoring,
+         PubsubSubscriptionMonitor.scala). Deliberate deviation: the
+         reference plans num_partitions pulls every batch
+         (PubsubMicroBatchStream.scala:58-74); here a plan holds at
+         most ceil(deliverable / max_messages_per_partition) pulls,
          deliverable being the broker's unacked-and-unleased count (a
          region-split plan caps each region by its own backlog). Every
          planned partition is a Spark task with a fixed worker cost,
@@ -61,7 +63,8 @@ Parity map to the reference (SURVEY.md §2.1):
   S12    single-consumer stream registry (registry.py)
   S14-S16 append-only staged-commit sink with batch-id idempotence,
          write-schema + ordering-key validation on driver AND executor
-  S18    eager option validation (options.py)
+  S18    eager option validation (options.py); an undeclared option
+         key is rejected, naming the closest declared one
 
 Scale design: pulls, decoding, and publishing all happen on executors;
 the driver only plans partitions, acks, and moves staged files. State
@@ -100,10 +103,10 @@ from pyspark.sql.types import (
 
 from .broker import FileBroker, _write_atomic, segment_schema, write_segment
 from .options import (
-    PartitioningInfo,
     PubsubReadOptions,
     PubsubWriteOptions,
-    plan_partitioning,
+    calculate_partitions,
+    region_split,
     validate_read_options,
     validate_write_options,
 )
@@ -514,21 +517,12 @@ class PubsubStreamReader(DataSourceStreamReader):
         self._ensure_registered()
         return {"batch_id": self._committed}
 
-    def _partitioning(self) -> PartitioningInfo | None:
-        """The backlog-driven plan (S6/S13) when ``dynamic_partitioning``
-        is on, else None (static ``num_partitions``):
-        ``clamp(ceil(backlog / threshold), 1, max)`` partitions, split by
-        region when one region dominates the backlog
-        (PubsubSubscriptionMonitor.scala:136-210). One region scan per
-        call; the reference caches a Cloud Monitoring poll instead."""
+    def _partitions_per_unit(self, backlog: int) -> int:
+        """``num_partitions``, or ``calculate_partitions(backlog)`` under
+        ``dynamic_partitioning`` (S6/S13)."""
         if not self.opts.dynamic_partitioning:
-            return None
-        return plan_partitioning(
-            self.broker.backlog_by_region(self.opts.subscription),
-            threshold=self.opts.backlog_threshold,
-            max_partitions=self.opts.max_dynamic_partitions,
-            split_threshold=self.opts.region_split_threshold,
-        )
+            return self.opts.num_partitions
+        return calculate_partitions(backlog, self.opts.max_dynamic_partitions)
 
     def latestOffset(self) -> dict:
         # advance the synthetic counter by the number of capacity-sized
@@ -539,8 +533,7 @@ class PubsubStreamReader(DataSourceStreamReader):
         backlog = self.broker.backlog(self.opts.subscription)
         n = self._last
         if backlog > 0:
-            info = self._partitioning()
-            base = info.total_partitions if info else self.opts.num_partitions
+            base = self._partitions_per_unit(backlog)
             capacity = base * self.opts.max_messages_per_partition
             max_units = max(1, self.opts.max_dynamic_partitions // base)
             units = min(max_units, max(1, -(-backlog // capacity)))
@@ -632,54 +625,48 @@ class PubsubStreamReader(DataSourceStreamReader):
         units (None pulls from every region), at most
         ``max_dynamic_partitions`` of them.
 
-        A region-less plan has ``num_partitions × units`` partitions
-        (``total_partitions × units`` under dynamic partitioning), capped
-        at the pulls the deliverable backlog can fill:
-        ``ceil(deliverable / max_messages_per_partition)``. Every planned
+        Each ``(region, partitions per unit, backlog)`` group plans
+        ``min(partitions × units, ceil(backlog / max_messages_per_partition))``
+        pulls. A region-less plan is the one group ``(None, base,
+        deliverable)``, ``base`` as in ``latestOffset``. Every planned
         partition is a Spark task with a fixed cost, and a pull past the
         deliverable count returns nothing. So a batch with nothing
         deliverable plans no partitions: Spark acks a batch only while
         it builds the next one, so a drain ends with a batch whose only
         job is that ack.
 
-        A region-split plan caps each region the same way by its own
-        backlog: ``min(num_partitions × units,
-        ceil(num_undelivered_messages / max_messages_per_partition))``.
-        That backlog counts leased messages, so the cap never plans
-        fewer pulls than the region can fill. The regions take turns in
-        the list, so the ``max_dynamic_partitions`` cut leaves every
-        region at least one partition."""
+        A dynamic plan splits into one region-pinned group per region
+        when ``region_split`` says so (PubsubMicroBatchStream.scala:58-74).
+        A region's backlog counts leased messages, so its cap never
+        plans fewer pulls than the region can fill. The groups take
+        turns in the list, so the ``max_dynamic_partitions`` cut leaves
+        every region at least one partition."""
         deliverable = self.broker.deliverable(self.opts.subscription)
         if deliverable == 0:
             _log.debug("batch %s: nothing deliverable, planned 0 partitions", batch_key)
             return []
         per_pull = self.opts.max_messages_per_partition
-        info = self._partitioning()
-        if info is not None and info.split_by_region:
-            # region-aware split (PubsubMicroBatchStream.scala:58-74):
-            # each region's partitions pull with a region-pinned
-            # "endpoint" so a dominant region gets dedicated tasks
-            counts = [
-                (r.region, r.num_partitions * units, r.num_undelivered_messages)
-                for r in info.by_region
-            ]
-            regions = [
-                region
-                for _, region in sorted(
-                    (i, region)
-                    for region, n, backlog in counts
-                    for i in range(min(n, -(-backlog // per_pull)))
-                )
-            ]
-            uncapped = sum(n for _, n, _ in counts)
-        else:
-            base = info.total_partitions if info else self.opts.num_partitions
-            uncapped = base * units
-            regions = [None] * min(uncapped, -(-deliverable // per_pull))
-        regions = regions[: self.opts.max_dynamic_partitions]
+        by_region = (
+            self.broker.backlog_by_region(self.opts.subscription)
+            if self.opts.dynamic_partitioning
+            else {}
+        )
+        groups = region_split(by_region, self.opts.max_dynamic_partitions) or [
+            (None, self._partitions_per_unit(sum(by_region.values())), deliverable)
+        ]
+        regions = [
+            region
+            for _, region in sorted(
+                (i, region)
+                for region, n, backlog in groups
+                for i in range(min(n * units, -(-backlog // per_pull)))
+            )
+        ][: self.opts.max_dynamic_partitions]
+        split = ", ".join(f"{r}={regions.count(r)}" for r, _, _ in groups if r)
         _log.debug(
-            "batch %s: %d deliverable, planned %d partitions (%d uncapped)",
-            batch_key, deliverable, len(regions), uncapped,
+            "batch %s: %d deliverable, planned %d partitions (%d uncapped)%s",
+            batch_key, deliverable, len(regions), sum(n for _, n, _ in groups) * units,
+            f"; by region {split}" if split else "",
         )
         return regions
 

@@ -1,16 +1,21 @@
-"""Option models + validation for the pubsub source/sink.
+"""Option models + validation for the pubsub source/sink, and the
+partition arithmetic the source plans with.
 
 Mirrors the reference's option surface and eager validation
 (package.scala:8-38 keys/defaults, :49-80 case classes, :138-171
-validators; PartitioningInfo region-split decision :106-129), raising
-``ValueError`` from the DataSource constructor like the reference's
-``IllegalArgumentException`` from ``validateAndInit*``.
+validators), raising ``ValueError`` from the DataSource constructor
+like the reference's ``IllegalArgumentException`` from
+``validateAndInit*`` (S18). An undeclared key is rejected, naming the
+closest declared one: ignored, a misspelt key would leave its option at
+the default. The planning thresholds are constants, as in the reference
+(S6/S13).
 """
 
 from __future__ import annotations
 
+import difflib
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # option keys (reference package.scala:8-38)
 PROJECT_ID = "project_id"
@@ -22,9 +27,7 @@ DYNAMIC_PARTITIONING = "dynamic_partitioning"
 ORDERING_KEY = "ordering_key"
 BROKER_DIR = "broker_dir"  # fake-broker root (stands in for endPoint;
 # a real-client endpoint would come from region_endpoint() below)
-BACKLOG_THRESHOLD = "backlog_threshold"
 MAX_DYNAMIC_PARTITIONS = "max_dynamic_partitions"
-REGION_SPLIT_THRESHOLD = "region_split_threshold"
 STREAM_ID = "stream_id"  # stable consumer identity (crash recovery)
 SINK_ID = "sink_id"  # stable writer identity (cross-restart idempotence)
 # Topic-log retention trigger (the file-broker analog of real Pub/Sub's
@@ -42,12 +45,28 @@ REPLAY_CACHE_REPLICAS = "replay_cache_replicas"  # replay-block copies (S9)
 # — the deployment analog of MEMORY_AND_DISK_SER_2's distinct-executor
 # placement (PubsubPartitionReader.scala:57).
 REPLAY_CACHE_REPLICA_DIRS = "replay_cache_replica_dirs"
+# Spark forwards the sink query's checkpointLocation in its options,
+# lower-cased like every key.
+CHECKPOINT_LOCATION = "checkpointlocation"
+
+READ_OPTIONS = frozenset({
+    PROJECT_ID, SUBSCRIPTION, BROKER_DIR, NUM_PARTITIONS,
+    MAX_MESSAGES_PER_PARTITION, DYNAMIC_PARTITIONING, MAX_DYNAMIC_PARTITIONS,
+    STREAM_ID, REPLAY_CACHE_REPLICAS, REPLAY_CACHE_REPLICA_DIRS,
+})
+WRITE_OPTIONS = frozenset({
+    PROJECT_ID, TOPIC, BROKER_DIR, ORDERING_KEY, SINK_ID, LOG_RETENTION_BYTES,
+    CHECKPOINT_LOCATION,
+})
 
 DEFAULT_NUM_PARTITIONS = 4  # package.scala:36
 DEFAULT_MAX_MESSAGES_PER_PARTITION = 1000  # package.scala:33
-DEFAULT_BACKLOG_THRESHOLD = 10_000  # PubsubSubscriptionMonitor.scala:33-35
 DEFAULT_MAX_DYNAMIC_PARTITIONS = 256  # PubsubSubscriptionMonitor.scala:26-31
-DEFAULT_REGION_SPLIT_THRESHOLD = 0.7  # package.scala:118
+# backlog messages per dynamic partition (PubsubSubscriptionMonitor.scala:33-35)
+BACKLOG_PER_PARTITION = 10_000
+# a region holding more than this share of the backlog splits the plan
+# by region (package.scala:118)
+REGION_SPLIT_SHARE = 0.7
 # The reference persists each pulled batch at MEMORY_AND_DISK_SER_2 —
 # two copies on distinct executors (PubsubPartitionReader.scala:57) —
 # so an executor loss between pull and commit replays from the replica
@@ -68,6 +87,19 @@ def region_endpoint(region: str | None = None) -> str:
     if region is None or str(region).strip() == "" or region == "global":
         return DEFAULT_ENDPOINT
     return f"{region}-pubsub.googleapis.com:443"
+
+
+def _declared(options: dict, declared: frozenset) -> dict:
+    """``options`` keyed in lower case, once every key is found declared.
+    Spark lower-cases option keys; a direct caller may use any case."""
+    for key in options:
+        if key.lower() not in declared:
+            close = difflib.get_close_matches(key.lower(), sorted(declared), n=1)
+            hint = f"; did you mean '{close[0]}'?" if close else ""
+            raise ValueError(f"Unknown option '{key}'{hint}")
+    if all(key == key.lower() for key in options):
+        return options
+    return {key.lower(): value for key, value in options.items()}
 
 
 def _require(options: dict, key: str) -> str:
@@ -110,16 +142,6 @@ def _bool(options: dict, key: str, default: bool = False) -> bool:
     raise ValueError(f"Option '{key}' must be a boolean, got {raw!r}")
 
 
-def _float(options: dict, key: str, default: float) -> float:
-    raw = options.get(key)
-    if raw is None:
-        return default
-    try:
-        return float(raw)
-    except (TypeError, ValueError):
-        raise ValueError(f"Option '{key}' must be a number, got {raw!r}") from None
-
-
 @dataclass(frozen=True)
 class PubsubReadOptions:
     """package.scala:49-57 equivalent."""
@@ -130,9 +152,7 @@ class PubsubReadOptions:
     num_partitions: int = DEFAULT_NUM_PARTITIONS
     max_messages_per_partition: int = DEFAULT_MAX_MESSAGES_PER_PARTITION
     dynamic_partitioning: bool = False
-    backlog_threshold: int = DEFAULT_BACKLOG_THRESHOLD
     max_dynamic_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS
-    region_split_threshold: float = DEFAULT_REGION_SPLIT_THRESHOLD
     # Stable consumer identity: a restarted query passing the same
     # stream_id (e.g. its checkpoint path) re-claims the subscription
     # immediately instead of waiting out the registry's crash TTL.
@@ -217,6 +237,7 @@ def _replica_dirs(options: dict, replicas: int) -> tuple:
 
 def validate_read_options(options: dict) -> PubsubReadOptions:
     """validateAndInitReadOptions (package.scala:138-155)."""
+    options = _declared(options, READ_OPTIONS)
     replicas = _pos_int(
         options,
         REPLAY_CACHE_REPLICAS,
@@ -233,14 +254,8 @@ def validate_read_options(options: dict) -> PubsubReadOptions:
             options, MAX_MESSAGES_PER_PARTITION, DEFAULT_MAX_MESSAGES_PER_PARTITION
         ),
         dynamic_partitioning=_bool(options, DYNAMIC_PARTITIONING, False),
-        backlog_threshold=_pos_int(
-            options, BACKLOG_THRESHOLD, DEFAULT_BACKLOG_THRESHOLD, minimum=1000
-        ),
         max_dynamic_partitions=_pos_int(
             options, MAX_DYNAMIC_PARTITIONS, DEFAULT_MAX_DYNAMIC_PARTITIONS, minimum=32
-        ),
-        region_split_threshold=max(
-            0.5, _float(options, REGION_SPLIT_THRESHOLD, DEFAULT_REGION_SPLIT_THRESHOLD)
         ),
         stream_id=(
             str(options[STREAM_ID])
@@ -276,14 +291,14 @@ def _resolve_sink_id(options: dict) -> str | None:
 
 
 def _checkpoint_of(options: dict) -> str | None:
-    """The query's checkpointLocation from the options map (Spark
-    lower-cases option keys; direct callers may pass either casing)."""
-    ck = options.get("checkpointlocation") or options.get("checkpointLocation")
+    """The query's checkpointLocation from the (lower-cased) options."""
+    ck = options.get(CHECKPOINT_LOCATION)
     return str(ck) if ck not in (None, "") else None
 
 
 def validate_write_options(options: dict) -> PubsubWriteOptions:
     """validateAndInitWriteOption (package.scala:164-171)."""
+    options = _declared(options, WRITE_OPTIONS)
     key = options.get(ORDERING_KEY)
     return PubsubWriteOptions(
         project_id=_require(options, PROJECT_ID),
@@ -300,68 +315,31 @@ def validate_write_options(options: dict) -> PubsubWriteOptions:
     )
 
 
-@dataclass(frozen=True)
-class PartitioningInfoForRegion:
-    """package.scala:106-108 equivalent."""
-
-    region: str
-    num_partitions: int
-    num_undelivered_messages: int
-
-
-@dataclass(frozen=True)
-class PartitioningInfo:
-    """Region-split decision (package.scala:116-129): split partition
-    planning by region when any single region holds more than
-    ``split_threshold`` of the total backlog."""
-
-    total_partitions: int
-    by_region: tuple[PartitioningInfoForRegion, ...] = field(default_factory=tuple)
-
-    @property
-    def split_by_region(self) -> bool:
-        return len(self.by_region) > 0
-
-
 def calculate_partitions(
-    backlog: int,
-    threshold: int = DEFAULT_BACKLOG_THRESHOLD,
-    max_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS,
-    min_partitions: int = 1,
+    backlog: int, max_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS
 ) -> int:
-    """clamp(ceil(backlog / threshold), min, max)
+    """clamp(ceil(backlog / BACKLOG_PER_PARTITION), 1, max_partitions)
     (PubsubSubscriptionMonitor.scala:136-141)."""
-    if backlog <= 0:
-        return min_partitions
-    return max(min_partitions, min(max_partitions, math.ceil(backlog / threshold)))
+    return max(1, min(max_partitions, math.ceil(backlog / BACKLOG_PER_PARTITION)))
 
 
-def plan_partitioning(
+def region_split(
     backlog_by_region: dict[str, int],
-    threshold: int = DEFAULT_BACKLOG_THRESHOLD,
     max_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS,
-    split_threshold: float = DEFAULT_REGION_SPLIT_THRESHOLD,
-) -> PartitioningInfo:
-    """Full planning decision (PubsubSubscriptionMonitor.scala:155-210 +
-    package.scala:116-129): per-region partition counts when one region
-    dominates, a single uniform count otherwise. Each region gets at
-    least ``total // n_regions`` partitions, like the reference."""
-    total_backlog = sum(backlog_by_region.values())
-    total = calculate_partitions(total_backlog, threshold, max_partitions)
-    if total_backlog > 0 and len(backlog_by_region) > 1:
-        dominant = max(backlog_by_region.values()) / total_backlog
-        if dominant > split_threshold:
-            floor_per_region = max(1, total // len(backlog_by_region))
-            by_region = tuple(
-                PartitioningInfoForRegion(
-                    region=r,
-                    num_partitions=max(
-                        floor_per_region,
-                        calculate_partitions(b, threshold, max_partitions),
-                    ),
-                    num_undelivered_messages=b,
-                )
-                for r, b in sorted(backlog_by_region.items())
-            )
-            return PartitioningInfo(total_partitions=total, by_region=by_region)
-    return PartitioningInfo(total_partitions=total)
+) -> list[tuple[str, int, int]]:
+    """``(region, partitions, backlog)`` per region, in region order, when
+    one region holds more than ``REGION_SPLIT_SHARE`` of the backlog;
+    else ``[]``, a plan over every region at once
+    (PubsubSubscriptionMonitor.scala:155-210, package.scala:106-129).
+    Each region gets at least ``total // n_regions`` partitions, like
+    the reference."""
+    total = sum(backlog_by_region.values())
+    if len(backlog_by_region) < 2 or not total:
+        return []
+    if max(backlog_by_region.values()) / total <= REGION_SPLIT_SHARE:
+        return []
+    floor = calculate_partitions(total, max_partitions) // len(backlog_by_region)
+    return [
+        (region, max(floor, calculate_partitions(b, max_partitions)), b)
+        for region, b in sorted(backlog_by_region.items())
+    ]

@@ -472,8 +472,9 @@ def test_commit_never_acks_foreign_stream_cache(spark, broker, broker_dir):
         r2.stop()
 
 
-def test_dynamic_partitioning_region_split(spark, broker_dir):
-    """S6/S13: skewed region backlog → region-pinned partitions."""
+def test_dynamic_partitioning_region_split(spark, broker_dir, caplog):
+    """S6/S13: skewed region backlog → region-pinned partitions. The
+    plan's debug line names each region's planned count."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamReader,
     )
@@ -498,15 +499,20 @@ def test_dynamic_partitioning_region_split(spark, broker_dir):
             "subscription": "s",
             "broker_dir": broker_dir,
             "dynamic_partitioning": "true",
-            "backlog_threshold": "1000",  # min clamp
             "max_messages_per_partition": "10",
         }
     )
+    caplog.set_level(logging.DEBUG, logger=_DS_LOGGER)
     try:
         start, end = reader.initialOffset(), reader.latestOffset()
         parts = reader.partitions(start, end)
         regions = [p.value.region for p in parts]
         assert "us-east1" in regions and "eu-west1" in regions
+        key = f"b{start['batch_id']}-{end['batch_id']}"
+        assert (
+            f"batch {key}: 33 deliverable, planned 4 partitions (8 uncapped); "
+            "by region eu-west1=1, us-east1=3"
+        ) in caplog.messages
         rows = [row for p in parts for row in _read_rows(reader, p)]
         assert len(rows) == 33
         reader.commit(end)
@@ -1594,15 +1600,14 @@ def test_replan_after_restart_reuses_the_persisted_plan(tmp_path):
     pull fresh messages into the planned batch, and commit() would ack
     them even if a sink skips the batch as already committed."""
     modes = {
-        # a fresh plan would now say
-        # min(ceil(6500 / 1000) × 1, ceil(5000 deliverable / 1000)) = 5
-        "dynamic": dict(
-            num_partitions=1, dynamic_partitioning="true", backlog_threshold=1000
-        ),
-        # a fresh plan would now say min(4 × 1, ceil(5000 / 1000)) = 4
-        "static": dict(num_partitions=4),
+        # a fresh plan of the 2-unit batch would now say
+        # min(ceil(26,500 / 10,000) × 2, ceil(25,000 deliverable / 1000)) = 6
+        "dynamic": (dict(num_partitions=1, dynamic_partitioning="true"), 6),
+        # a fresh plan of the 1-unit batch would now say
+        # min(4 × 1, ceil(25,000 / 1000)) = 4
+        "static": (dict(num_partitions=4), 4),
     }
-    for name, mode in modes.items():
+    for name, (mode, fresh) in modes.items():
         broker_dir = str(tmp_path / name)
         broker = FileBroker(broker_dir)
         broker.create_topic("t")
@@ -1616,14 +1621,16 @@ def test_replan_after_restart_reuses_the_persisted_plan(tmp_path):
         assert sum(len(_read_rows(r1, p)) for p in parts) == 1500
         r1.stop()  # crash before commit
 
-        broker.publish("t", [PubsubMessage(data=b"b", publish_ts_us=1)] * 5000)
+        broker.publish("t", [PubsubMessage(data=b"b", publish_ts_us=1)] * 25_000)
         r2 = _reader(broker_dir, **opts)
         try:
+            units = end["batch_id"] - start["batch_id"]
+            assert len(r2._plan(units, "fresh")) == fresh, name
             replanned = r2.partitions(start, end)
-            assert len(replanned) == 2, name  # a fresh plan would be larger
+            assert len(replanned) == 2, name
             assert sum(len(_read_rows(r2, p)) for p in replanned) == 1500
             r2.commit(end)
-            assert broker.backlog("s") == 5000
+            assert broker.backlog("s") == 25_000
         finally:
             r2.stop()
 
@@ -1712,6 +1719,40 @@ def test_plan_counts_only_deliverable_messages(broker, broker_dir):
     try:
         parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
         assert [len(_read_rows(reader, p)) for p in parts] == [10]
+    finally:
+        reader.stop()
+
+
+def test_dynamic_plan_scans_regions_once_per_batch(broker_dir, monkeypatch):
+    """Under dynamic partitioning, latestOffset sizes its units from the
+    backlog count alone, and planning a batch reads the per-region
+    backlog (a scan of every unacked segment under the broker lock)
+    once."""
+    b = FileBroker(broker_dir)
+    b.create_topic("t")
+    b.create_subscription("s", "t", ack_deadline_s=300)
+    b.publish(
+        "t",
+        [PubsubMessage(data=b"u", publish_ts_us=1, region="us-east1")] * 30
+        + [PubsubMessage(data=b"e", publish_ts_us=1, region="eu-west1")] * 3,
+    )
+    scans = []
+    real = FileBroker.backlog_by_region
+    monkeypatch.setattr(
+        FileBroker,
+        "backlog_by_region",
+        lambda self, sub: scans.append(sub) or real(self, sub),
+    )
+    reader = _reader(
+        broker_dir, dynamic_partitioning="true", max_messages_per_partition=10
+    )
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        assert end == {"batch_id": 4}  # ceil(33 / (1 × 10))
+        assert scans == []
+        parts = reader.partitions(start, end)
+        assert scans == ["s"]
+        assert [p.value.region for p in parts] == ["eu-west1"] + ["us-east1"] * 3
     finally:
         reader.stop()
 

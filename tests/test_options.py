@@ -7,7 +7,7 @@ import pytest
 
 from spark_sql_pubsub_connector_spark.sources.options import (
     calculate_partitions,
-    plan_partitioning,
+    region_split,
     validate_read_options,
     validate_write_options,
 )
@@ -64,7 +64,7 @@ def test_read_range_violations_throw(key, bad):
     [
         ("dynamic_partitioning", "ture"),
         ("dynamic_partitioning", ""),
-        ("region_split_threshold", "abc"),
+        ("max_dynamic_partitions", "abc"),
     ],
 )
 def test_read_malformed_values_name_the_option(key, bad):
@@ -97,24 +97,32 @@ def test_calculate_partitions_clamps():
     assert calculate_partitions(10_000) == 1
     assert calculate_partitions(10_001) == 2
     assert calculate_partitions(10_000_000) == 256  # ceiling
-    assert calculate_partitions(25_000, threshold=10_000) == 3
+    assert calculate_partitions(25_000) == 3  # 10,000 per partition
 
 
 def test_plan_partitioning_uniform():
-    info = plan_partitioning({"us-east1": 30_000, "eu-west1": 25_000})
-    assert not info.split_by_region  # no region dominates (max 55%)
-    assert info.total_partitions == 6
+    backlog = {"us-east1": 30_000, "eu-west1": 25_000}
+    assert region_split(backlog) == []  # no region dominates (max 55%)
+    assert calculate_partitions(sum(backlog.values())) == 6
 
 
 def test_plan_partitioning_region_split():
     # one region holds >70% of backlog → per-region planning
     # (package.scala:116-129)
-    info = plan_partitioning({"us-east1": 80_000, "eu-west1": 10_000})
-    assert info.split_by_region
-    regions = {r.region: r for r in info.by_region}
-    assert regions["us-east1"].num_partitions == 8
+    backlog = {"us-east1": 80_000, "eu-west1": 10_000}
+    regions = {r: n for r, n, _ in region_split(backlog)}
+    assert regions["us-east1"] == 8
     # minor region still gets >= total//n_regions partitions
-    assert regions["eu-west1"].num_partitions >= info.total_partitions // 2
+    total = calculate_partitions(sum(backlog.values()))
+    assert regions["eu-west1"] >= total // 2
+
+
+def test_region_split_threshold_is_strictly_above_70_percent():
+    """A region holding exactly 70% of the backlog does not split the
+    plan; one holding 71% does (package.scala:118)."""
+    assert region_split({"a": 7, "b": 3}) == []
+    assert region_split({"a": 71, "b": 29}) == [("a", 1, 71), ("b", 1, 29)]
+    assert region_split({"a": 100}) == []  # one region: nothing to split
 
 
 def test_batches_to_drain_formula(tmp_path):
@@ -156,6 +164,43 @@ def test_batches_to_drain_formula(tmp_path):
         assert reader.latestOffset() == {"batch_id": 3 + 8}
     finally:
         reader.stop()
+
+
+@pytest.mark.parametrize(
+    "validate,base,key,closest",
+    [
+        (validate_write_options, BASE_WRITE, "ordering_kye", "ordering_key"),
+        (
+            validate_read_options,
+            BASE_READ,
+            "max_mesages_per_partition",
+            "max_messages_per_partition",
+        ),
+        # removed options: the sink stages one segment per task, and the
+        # planner's two thresholds are the reference's constants
+        (validate_write_options, BASE_WRITE, "publish_batch_size", None),
+        (validate_read_options, BASE_READ, "backlog_threshold", None),
+        (validate_read_options, BASE_READ, "region_split_threshold", None),
+    ],
+)
+def test_unknown_option_keys_are_rejected(validate, base, key, closest):
+    """An undeclared key raises, naming it and the closest declared key,
+    instead of leaving its option silently at the default."""
+    with pytest.raises(ValueError, match=f"Unknown option '{key}'") as ei:
+        validate({**base, key: "5"})
+    if closest is not None:
+        assert f"did you mean '{closest}'" in str(ei.value)
+
+
+def test_option_keys_match_case_insensitively():
+    """Spark lower-cases option keys before the source sees them; a
+    direct caller may spell them in any case, checkpointLocation
+    included."""
+    r = validate_read_options({**BASE_READ, "Num_Partitions": "7"})
+    assert r.num_partitions == 7
+    for ck in ("checkpointLocation", "checkpointlocation"):
+        w = validate_write_options({**BASE_WRITE, ck: "/ck/q"})
+        assert (w.checkpoint_location, w.sink_id) == ("/ck/q", "ck:/ck/q")
 
 
 def test_region_endpoint_mapping():
