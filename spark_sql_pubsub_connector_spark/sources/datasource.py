@@ -52,9 +52,12 @@ Parity map to the reference (SURVEY.md §2.1):
          of re-pulling (RDD-block cache analog,
          PubsubPartitionReader.scala:33-70). A copy that exists but
          does not read (zero-length, truncated, older format) fails the
-         task rather than re-pulling. The batch's partition plan is
-         persisted beside its parts the first time it is planned, so a
-         replan rebuilds the same partitions
+         task rather than re-pulling. The batch's plan is persisted
+         beside its parts the first time it is planned: its partitions'
+         regions and the replica roots (replay_cache_replica_dirs) it was
+         planned under. A replan rebuilds the same partitions over the
+         same copies whatever the configuration says by then; a batch
+         dir holding parts but no readable plan fails planning
   S10/S11 ack-on-commit: ack ids ride in the cache files' ack_id column
          (the accumulator analog); commit(end) acks each batch with one
          broker call and evicts the batch's cache
@@ -146,9 +149,10 @@ def _sanitize(name: str) -> str:
     return name.replace("/", "__")
 
 
-def _read_cache_dir(opts: PubsubReadOptions, replica: int = 0) -> str:
-    """Per-subscription replay-cache root; each stream scopes its batch
-    dirs one level deeper under its stream_id. Scoping by consumer
+def _read_cache_dir(opts: PubsubReadOptions, root: str | None = None) -> str:
+    """Per-subscription replay-cache dir under ``root`` (None: the
+    primary root, ``broker_dir/.read_cache``); each stream scopes its
+    batch dirs one level deeper under its stream_id. Scoping by consumer
     identity keeps commit()'s ack sweep from ever acking a crashed
     predecessor's cache: those messages were skipped as still-leased by
     the new query, so acking them would drop them from every committed
@@ -156,58 +160,19 @@ def _read_cache_dir(opts: PubsubReadOptions, replica: int = 0) -> str:
     unacked — at registration; the broker's lease expiry redelivers
     their messages.
 
-    ``replica > 0`` addresses a sibling root: the analog of the
-    reference's 2× executor replication of the pulled batch
-    (``MEMORY_AND_DISK_SER_2``, PubsubPartitionReader.scala:57). By
-    default replicas live under derived ``.read_cache_rep{r}`` siblings
-    of the primary (same broker dir — one disk on this harness); the
-    ``replay_cache_replica_dirs`` option substitutes explicit absolute
-    roots so each copy maps to an independent failure domain (a second
-    executor's local disk, a second mount, or a DFS path) — the
-    deployment analog of MEMORY_AND_DISK_SER_2's distinct-executor
-    placement."""
-    return os.path.join(_replica_base(opts, replica), _sanitize(opts.subscription))
-
-
-def _replica_base(opts: PubsubReadOptions, replica: int) -> str:
-    """The root directory replica ``replica`` lives under — THE
-    definition of the derived-vs-explicit layout (everything that
-    needs a replica path derives from here, so a layout change cannot
-    desynchronize the planner's legacy probing — r14 review)."""
-    if replica == 0:
-        return os.path.join(opts.broker_dir, ".read_cache")
-    if opts.replay_cache_replica_dirs:
-        return opts.replay_cache_replica_dirs[replica - 1]
-    return os.path.join(opts.broker_dir, f".read_cache_rep{replica}")
-
-
-def _derived_replica_bases(opts: PubsubReadOptions) -> list[str]:
-    """Every derived ``.read_cache_rep*`` sibling present on disk —
-    including roots a RETIRED configuration wrote (one local listdir)."""
-    try:
-        names = os.listdir(opts.broker_dir)
-    except OSError:
-        names = []
-    return [
-        os.path.join(opts.broker_dir, n)
-        for n in sorted(names)
-        if n.startswith(".read_cache_rep")
-    ]
-
-
-def _replica_root_dirs(opts: PubsubReadOptions) -> list[str]:
-    """Every replica cache root the ack sweep / foreign-dir purge must
-    cover: the explicitly-configured roots (if any) plus any derived
-    ``.read_cache_rep*`` siblings present on disk — copies written under
-    an older configuration still need eviction and purging."""
-    roots = list(opts.replay_cache_replica_dirs) + _derived_replica_bases(opts)
-    return list(dict.fromkeys(roots))
+    The other roots are ``replay_cache_replica_dirs``: the analog of
+    the reference's 2× executor replication of the pulled batch
+    (``MEMORY_AND_DISK_SER_2``, PubsubPartitionReader.scala:57), each
+    root an independent failure domain (a second executor's local disk,
+    a second mount, or a DFS path)."""
+    root = root or os.path.join(opts.broker_dir, ".read_cache")
+    return os.path.join(root, _sanitize(opts.subscription))
 
 
 def _stream_cache_dir(
-    opts: PubsubReadOptions, stream_id: str, replica: int = 0
+    opts: PubsubReadOptions, stream_id: str, root: str | None = None
 ) -> str:
-    return os.path.join(_read_cache_dir(opts, replica), _sanitize(stream_id))
+    return os.path.join(_read_cache_dir(opts, root), _sanitize(stream_id))
 
 
 def _offset_state_path(opts: PubsubReadOptions) -> str:
@@ -232,16 +197,10 @@ class _PartitionPayload:
     max_messages: int
     cache_file: str
     region: str | None
-    # Extra copies of the partition cache file (replay_cache_replicas
-    # > 1): written on pull, read as fallback when the primary is lost.
+    # Copies of the partition cache file under the replica roots the
+    # batch's plan names: written on pull, read as fallback when the
+    # primary is lost.
     replica_files: tuple = ()
-    # Copies that may exist under RETIRED derived ``.read_cache_rep*``
-    # roots (written before the config switched to explicit
-    # ``replay_cache_replica_dirs``, or before the replica count
-    # shrank): probed read-side before concluding no copy was ever
-    # written, but never heal/write targets — healing restores the
-    # CONFIGURED redundancy only (ADVICE r13).
-    legacy_files: tuple = ()
 
 
 def _records_to_arrow(subscription_path: str, pulled):
@@ -304,9 +263,13 @@ def _load_ack_ids(path: str) -> list[str]:
         ]
 
 
-def _load_plan(path: str) -> list:
+def _load_plan(path: str) -> tuple[list, list]:
+    """``(regions, replica_roots)`` of a batch's plan. An older bare-list
+    plan does not index by name (TypeError), so it reads as corrupt,
+    never as a plan without replicas."""
     with open(path) as fh:
-        return json.load(fh)
+        plan = json.load(fh)
+    return plan["regions"], plan["replica_roots"]
 
 
 def _first_readable(paths, load):
@@ -322,7 +285,7 @@ def _first_readable(paths, load):
             return path, load(path)
         except FileNotFoundError:
             continue
-        except (OSError, ValueError, KeyError, pa.ArrowException):
+        except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
             bad.append(path)
     if bad:
         raise RuntimeError(
@@ -338,49 +301,44 @@ def _pull_or_replay(payload: _PartitionPayload):
     present, else pull once and persist atomically (S7 + S9).
 
     The cache file is the Arrow IPC file of the partition's RecordBatch,
-    so a replay yields the stored batch without parsing. With
-    ``replay_cache_replicas > 1`` each pull is persisted to every
-    replica path before the primary (the primary's existence is the
-    commit point), and a replay that finds the primary missing or
-    corrupted serves from the first healthy replica — re-healing the
-    primary AND any other lost copy with the same bytes, so redundancy
-    never silently degrades below the configured replica count —
+    so a replay yields the stored batch without parsing. With replica
+    roots in the batch's plan, each pull is persisted to every replica
+    path before the primary (the primary's existence is the commit
+    point), and a replay that finds the primary missing or corrupted
+    serves from the first healthy replica — re-healing the primary AND
+    any other lost copy with the same bytes, plan included, so
+    redundancy never silently degrades below the planned copy count —
     instead of re-pulling. This mirrors the reference's 2× replicated
     persist of the pulled batch (PubsubPartitionReader.scala:57,
     MEMORY_AND_DISK_SER_2): losing one copy between pull and commit
     never changes what the batch replays.
 
-    When a copy EXISTS but no existing copy parses (zero-length,
-    truncated, or a ``.jsonl`` copy written by the older JSON-lines
-    cache format), the task fails loudly instead of re-pulling: a
-    re-pull under a still-held broker lease can return fewer (or zero)
-    messages and overwrite the cache, silently changing a planned
-    batch's replay content (ADVICE r12). Only the fully-absent case (no
-    copy ever written) pulls. The probe set includes ``legacy_files`` —
-    copies under retired derived ``.read_cache_rep*`` roots (ADVICE
-    r13): a batch pulled under an older replica config whose surviving
-    copy sits under an old root must replay from it, not silently
-    re-pull. Legacy copies are read-only here; healing rewrites only
-    the configured set."""
+    When a copy EXISTS but none parses (zero-length or truncated), the
+    task fails loudly instead of re-pulling: a re-pull under a
+    still-held broker lease can return fewer (or zero) messages and
+    overwrite the cache, silently changing a planned batch's replay
+    content (ADVICE r12). Only the fully-absent case (no copy ever
+    written) pulls."""
     import pyarrow as pa
 
-    configured = (payload.cache_file,) + tuple(payload.replica_files)
-    all_copies = configured + tuple(payload.legacy_files)
-    # a .jsonl sibling is a copy in the older format: present, unreadable
-    older = tuple(p[: -len(_PART_SUFFIX)] + ".jsonl" for p in all_copies)
-    found = _first_readable(all_copies + older, _load_ipc)
+    copies = (payload.cache_file,) + tuple(payload.replica_files)
+    found = _first_readable(copies, _load_ipc)
     if found is not None:
         source, (data, batches) = found
         if source != payload.cache_file:
-            # served from a replica (or a legacy copy): re-heal the
-            # primary and every other missing/corrupt CONFIGURED copy
+            # served from a replica: re-heal every other lost copy, the
+            # batch's plan first, so that no batch dir holds parts
+            # without the plan that names its roots
+            with open(os.path.join(os.path.dirname(source), _PLAN_FILE), "rb") as fh:
+                plan = fh.read()
             healed = []
-            for path in configured:
+            for path in copies:
                 if path == source:
                     continue
                 try:
                     _load_ipc(path)
                 except (OSError, ValueError, pa.ArrowException):
+                    _write_atomic(os.path.join(os.path.dirname(path), _PLAN_FILE), plan)
                     _write_atomic(path, data)
                     healed.append(path)
             if healed:
@@ -447,15 +405,12 @@ class PubsubStreamReader(DataSourceStreamReader):
         foreign dir belongs to a dead query; its messages must be
         redelivered by lease expiry, never acked by us (ADVICE r2:
         acking a predecessor's cached ack_ids drops messages this query
-        skipped as leased). Replica roots are swept the same way."""
+        skipped as leased). The configured replica roots are swept the
+        same way; a root no longer configured is not."""
         own = _sanitize(self.stream_id)
-        sub = _sanitize(self.opts.subscription)
-        roots = [_read_cache_dir(self.opts)] + [
-            os.path.join(rep, sub)
-            for rep in _replica_root_dirs(self.opts)
-        ]
         purged = []
-        for root in roots:
+        for base in (None, *self.opts.replay_cache_replica_dirs):
+            root = _read_cache_dir(self.opts, base)
             if not os.path.isdir(root):
                 continue
             for d in os.listdir(root):
@@ -550,54 +505,39 @@ class PubsubStreamReader(DataSourceStreamReader):
         self._advance_to(max(start["batch_id"], end["batch_id"]))
         units = max(1, end["batch_id"] - start["batch_id"])
         batch_key = f"b{start['batch_id']}-{end['batch_id']}"
-        cache_dir = os.path.join(
-            _stream_cache_dir(self.opts, self.stream_id), batch_key
-        )
-        replica_dirs = [
-            os.path.join(
-                _stream_cache_dir(self.opts, self.stream_id, r), batch_key
-            )
-            for r in range(1, self.opts.replay_cache_replicas)
-        ]
-        # Retired derived roots (ADVICE r13): after switching to
-        # explicit replay_cache_replica_dirs (or shrinking the replica
-        # count), a batch pulled under the OLD config may have its only
-        # surviving copy under a derived .read_cache_rep* sibling no
-        # longer in the configured set. Probe those as read-only
-        # fallbacks so the replay never silently re-pulls; one local
-        # listdir per micro-batch plan, driver-side.
-        configured_bases = {
-            _replica_base(self.opts, r)
-            for r in range(1, self.opts.replay_cache_replicas)
-        }
-        legacy_dirs = [
-            os.path.join(
-                base,
-                _sanitize(self.opts.subscription),
-                _sanitize(self.stream_id),
-                batch_key,
-            )
-            for base in _derived_replica_bases(self.opts)
-            if base not in configured_bases
-        ]
-
         # The plan is fixed the first time a batch is planned, an empty
         # one included: a replan (restart, plan re-evaluation) must
-        # rebuild the same partitions, or a backlog that grew in between
-        # adds partitions that pull fresh messages into an already-planned
-        # batch, which a sink may skip as committed while commit() acks.
-        plan_dirs = [cache_dir] + replica_dirs + legacy_dirs
+        # rebuild the same partitions over the same copies, or a backlog
+        # that grew in between adds partitions that pull fresh messages
+        # into an already-planned batch, which a sink may skip as
+        # committed while commit() acks. The plan names its replica
+        # roots, so a replan after a config switch finds the batch's
+        # copies where they were written.
+        checked = self._batch_dirs(batch_key, self.opts.replay_cache_replica_dirs)
         found = _first_readable(
-            [os.path.join(d, _PLAN_FILE) for d in plan_dirs], _load_plan
+            [os.path.join(d, _PLAN_FILE) for d in checked], _load_plan
         )
         if found is not None:
-            regions = found[1]
+            regions, roots = found[1]
+        elif any(
+            name.startswith("part-")
+            for d in checked
+            if os.path.isdir(d)
+            for name in os.listdir(d)
+        ):
+            raise RuntimeError(
+                f"pubsub replay cache: batch {batch_key} has part files but "
+                f"no {_PLAN_FILE} under {checked}; refusing to re-plan a batch "
+                "that was already pulled"
+            )
         else:
             regions = self._plan(units, batch_key)
-            data = json.dumps(regions).encode()
-            for d in replica_dirs + [cache_dir]:  # primary last, as for parts
+            roots = self.opts.replay_cache_replica_dirs
+            data = json.dumps({"regions": regions, "replica_roots": roots}).encode()
+            for d in checked[1:] + checked[:1]:  # primary last, as for parts
                 _write_atomic(os.path.join(d, _PLAN_FILE), data)
 
+        cache_dir, *replica_dirs = self._batch_dirs(batch_key, roots)
         return [
             InputPartition(
                 _PartitionPayload(
@@ -611,13 +551,17 @@ class PubsubStreamReader(DataSourceStreamReader):
                         os.path.join(d, f"part-{i:05d}{_PART_SUFFIX}")
                         for d in replica_dirs
                     ),
-                    legacy_files=tuple(
-                        os.path.join(d, f"part-{i:05d}{_PART_SUFFIX}")
-                        for d in legacy_dirs
-                    ),
                 )
             )
             for i, region in enumerate(regions)
+        ]
+
+    def _batch_dirs(self, batch_key: str, replica_roots) -> list[str]:
+        """The batch's dir under the primary root, then under each of
+        ``replica_roots``."""
+        return [
+            os.path.join(_stream_cache_dir(self.opts, self.stream_id, root), batch_key)
+            for root in (None, *replica_roots)
         ]
 
     def _plan(self, units: int, batch_key: str) -> list[str | None]:
@@ -677,45 +621,49 @@ class PubsubStreamReader(DataSourceStreamReader):
     # -- commit: ack + evict (S10/S11) -------------------------------------
     def commit(self, end: dict) -> None:
         self._advance_to(end["batch_id"], committed=True)
-        # sweep is scoped to THIS stream's cache dirs: foreign dirs are
-        # purged unacked at registration, never acknowledged here. The
-        # sweep spans the primary root and every replica root on disk,
-        # so the ack set survives the loss of any single copy and
-        # eviction removes all of them.
-        sub = _sanitize(self.opts.subscription)
-        roots = [_stream_cache_dir(self.opts, self.stream_id)] + [
-            os.path.join(rep, sub, _sanitize(self.stream_id))
-            for rep in _replica_root_dirs(self.opts)
-        ]
+        # The sweep is scoped to THIS stream's cache dirs: foreign dirs
+        # are purged unacked at registration, never acknowledged here.
+        # Batch dirs are found under the primary and the configured
+        # replica roots, so the ack set survives the loss of any single
+        # copy; each batch is then acked and evicted over the roots its
+        # plan names.
         end_id = end["batch_id"]
-        # batch_key -> every copy of that batch's dir across roots
-        batch_dirs: dict[str, list[str]] = {}
-        for root in roots:
-            if not os.path.isdir(root):
+        # batch_key -> the dirs of that batch found under those roots
+        found: dict[str, list[str]] = {}
+        for root in (None, *self.opts.replay_cache_replica_dirs):
+            stream_dir = _stream_cache_dir(self.opts, self.stream_id, root)
+            if not os.path.isdir(stream_dir):
                 continue
-            for batch_key in os.listdir(root):
+            for batch_key in os.listdir(stream_dir):
                 try:
                     hi = int(batch_key.split("-")[-1])
                 except ValueError:
                     continue
                 if hi > end_id:
                     continue
-                batch_dirs.setdefault(batch_key, []).append(
-                    os.path.join(root, batch_key)
+                found.setdefault(batch_key, []).append(
+                    os.path.join(stream_dir, batch_key)
                 )
-        for dirs in batch_dirs.values():
+        for batch_key, dirs in found.items():
+            plan = _first_readable(
+                [os.path.join(d, _PLAN_FILE) for d in dirs], _load_plan
+            )
+            if plan is not None:  # else its plan went in an eviction cut short
+                dirs = [
+                    d
+                    for d in self._batch_dirs(batch_key, plan[1][1])
+                    if os.path.isdir(d)
+                ]
             # Ack set per part file comes from the FIRST readable copy
-            # in root order (primary first — `roots` leads with the
-            # primary and batch_dirs preserves that order), never the
-            # union across copies: divergent copies (a zombie or
-            # speculative task attempt whose pull landed only in a
-            # replica while another attempt's pull became the primary)
-            # would otherwise ack messages that appear in no replayed
-            # batch — an at-least-once violation (ADVICE r12). Replica
-            # content counts only where the primary copy of that part
-            # file is absent or unreadable, which is exactly when a
-            # replay serves that replica. Only the ack_id column is
-            # read.
+            # in root order (primary first), never the union across
+            # copies: divergent copies (a zombie or speculative task
+            # attempt whose pull landed only in a replica while another
+            # attempt's pull became the primary) would otherwise ack
+            # messages that appear in no replayed batch — an
+            # at-least-once violation (ADVICE r12). Replica content
+            # counts only where the primary copy of that part file is
+            # absent or unreadable, which is exactly when a replay
+            # serves that replica. Only the ack_id column is read.
             part_names = sorted(
                 {f for d in dirs for f in os.listdir(d) if f.endswith(_PART_SUFFIX)}
             )

@@ -37,12 +37,10 @@ SINK_ID = "sink_id"  # stable writer identity (cross-restart idempotence)
 # subscription has acked.
 # Unset = grow-forever (historical behavior).
 LOG_RETENTION_BYTES = "log_retention_bytes"
-REPLAY_CACHE_REPLICAS = "replay_cache_replicas"  # replay-block copies (S9)
-# Explicit replica cache roots (comma-separated absolute paths), one per
-# replica beyond the primary. Replaces the derived
-# `broker_dir/.read_cache_rep{r}` siblings so each copy can live on a
-# genuinely independent failure domain (a second disk/mount or DFS path)
-# — the deployment analog of MEMORY_AND_DISK_SER_2's distinct-executor
+# Replica replay-cache roots (comma-separated absolute paths), one per
+# copy beyond the primary under broker_dir; unset keeps one copy. Each
+# root stands for an independent failure domain (a second disk or mount,
+# a DFS path): the analog of MEMORY_AND_DISK_SER_2's distinct-executor
 # placement (PubsubPartitionReader.scala:57).
 REPLAY_CACHE_REPLICA_DIRS = "replay_cache_replica_dirs"
 # Spark forwards the sink query's checkpointLocation in its options,
@@ -52,7 +50,7 @@ CHECKPOINT_LOCATION = "checkpointlocation"
 READ_OPTIONS = frozenset({
     PROJECT_ID, SUBSCRIPTION, BROKER_DIR, NUM_PARTITIONS,
     MAX_MESSAGES_PER_PARTITION, DYNAMIC_PARTITIONING, MAX_DYNAMIC_PARTITIONS,
-    STREAM_ID, REPLAY_CACHE_REPLICAS, REPLAY_CACHE_REPLICA_DIRS,
+    STREAM_ID, REPLAY_CACHE_REPLICA_DIRS,
 })
 WRITE_OPTIONS = frozenset({
     PROJECT_ID, TOPIC, BROKER_DIR, ORDERING_KEY, SINK_ID, LOG_RETENTION_BYTES,
@@ -70,10 +68,10 @@ REGION_SPLIT_SHARE = 0.7
 # The reference persists each pulled batch at MEMORY_AND_DISK_SER_2 —
 # two copies on distinct executors (PubsubPartitionReader.scala:57) —
 # so an executor loss between pull and commit replays from the replica
-# instead of re-pulling. The file-cache analog defaults to one copy
-# (this harness is single-node); set 2 to mirror the reference.
-DEFAULT_REPLAY_CACHE_REPLICAS = 1
-MAX_REPLAY_CACHE_REPLICAS = 4
+# instead of re-pulling. The file-cache analog keeps one copy unless
+# replay_cache_replica_dirs names more roots; one root mirrors the
+# reference.
+MAX_REPLICA_DIRS = 3
 
 DEFAULT_ENDPOINT = "pubsub.googleapis.com:443"
 
@@ -109,13 +107,7 @@ def _require(options: dict, key: str) -> str:
     return str(v)
 
 
-def _pos_int(
-    options: dict,
-    key: str,
-    default: int,
-    minimum: int = 1,
-    maximum: int | None = None,
-) -> int:
+def _pos_int(options: dict, key: str, default: int, minimum: int = 1) -> int:
     raw = options.get(key)
     if raw is None:
         return default
@@ -125,8 +117,6 @@ def _pos_int(
         raise ValueError(f"Option '{key}' must be an integer, got {raw!r}") from None
     if v < minimum:
         raise ValueError(f"Option '{key}' must be >= {minimum}, got {v}")
-    if maximum is not None and v > maximum:
-        raise ValueError(f"Option '{key}' must be <= {maximum}, got {v}")
     return v
 
 
@@ -157,11 +147,8 @@ class PubsubReadOptions:
     # stream_id (e.g. its checkpoint path) re-claims the subscription
     # immediately instead of waiting out the registry's crash TTL.
     stream_id: str | None = None
-    # Replay-cache copies per partition file (reference: 2× executor
-    # replication via MEMORY_AND_DISK_SER_2, PubsubPartitionReader.scala:57).
-    replay_cache_replicas: int = DEFAULT_REPLAY_CACHE_REPLICAS
-    # Explicit replica roots, one per replica beyond the primary; empty
-    # means the derived `.read_cache_rep{r}` siblings under broker_dir.
+    # Replica replay-cache roots, one per copy beyond the primary;
+    # empty keeps one copy.
     replay_cache_replica_dirs: tuple = ()
 
     @property
@@ -208,19 +195,16 @@ class PubsubWriteOptions:
         return f"projects/{self.project_id}/topics/{self.topic}"
 
 
-def _replica_dirs(options: dict, replicas: int) -> tuple:
-    """Parse + validate explicit replica roots: count must equal
-    ``replay_cache_replicas - 1`` (one root per copy beyond the
-    primary), every path absolute — so the option cannot silently map
-    two copies onto one failure domain or leave a copy unplaced."""
+def _replica_dirs(options: dict) -> tuple:
+    """Parse + validate the replica roots: at most ``MAX_REPLICA_DIRS``
+    absolute, distinct paths, so the option cannot map two copies onto
+    one failure domain."""
     raw = options.get(REPLAY_CACHE_REPLICA_DIRS)
-    if raw is None or str(raw).strip() == "":
-        return ()
-    dirs = tuple(p.strip() for p in str(raw).split(",") if p.strip())
-    if len(dirs) != replicas - 1:
+    dirs = tuple(p.strip() for p in str(raw or "").split(",") if p.strip())
+    if len(dirs) > MAX_REPLICA_DIRS:
         raise ValueError(
-            f"Option '{REPLAY_CACHE_REPLICA_DIRS}' must list exactly "
-            f"replay_cache_replicas-1 = {replicas - 1} paths, got {len(dirs)}"
+            f"Option '{REPLAY_CACHE_REPLICA_DIRS}' lists {len(dirs)} paths; "
+            f"at most {MAX_REPLICA_DIRS}"
         )
     for p in dirs:
         if not p.startswith("/"):
@@ -238,13 +222,6 @@ def _replica_dirs(options: dict, replicas: int) -> tuple:
 def validate_read_options(options: dict) -> PubsubReadOptions:
     """validateAndInitReadOptions (package.scala:138-155)."""
     options = _declared(options, READ_OPTIONS)
-    replicas = _pos_int(
-        options,
-        REPLAY_CACHE_REPLICAS,
-        DEFAULT_REPLAY_CACHE_REPLICAS,
-        minimum=1,
-        maximum=MAX_REPLAY_CACHE_REPLICAS,
-    )
     return PubsubReadOptions(
         project_id=_require(options, PROJECT_ID),
         subscription=_require(options, SUBSCRIPTION),
@@ -262,8 +239,7 @@ def validate_read_options(options: dict) -> PubsubReadOptions:
             if options.get(STREAM_ID) not in (None, "")
             else None
         ),
-        replay_cache_replicas=replicas,
-        replay_cache_replica_dirs=_replica_dirs(options, replicas),
+        replay_cache_replica_dirs=_replica_dirs(options),
     )
 
 

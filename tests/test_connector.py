@@ -1208,9 +1208,9 @@ def test_adversarial_payloads_roundtrip_exactly(spark, broker, broker_dir, tmp_p
         assert echoed.ordering_key == sent.ordering_key
 
 
-def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
+def test_replay_survives_primary_cache_loss(spark, broker, broker_dir, tmp_path):
     """S9 replication analog (PubsubPartitionReader.scala:57,
-    MEMORY_AND_DISK_SER_2): with replay_cache_replicas=2, losing the
+    MEMORY_AND_DISK_SER_2): with one replica root, losing the
     whole primary cache between pull and replay serves the identical
     batch from the replica — no re-pull (the broker still holds the
     lease, so a re-pull would return nothing)."""
@@ -1221,6 +1221,7 @@ def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
     )
 
     _publish_canonical(broker, 30)
+    rep_root = str(tmp_path / "rep1")
     reader = PubsubStreamReader(
         {
             "project_id": "p",
@@ -1228,7 +1229,7 @@ def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
             "broker_dir": broker_dir,
             "num_partitions": "3",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "2",
+            "replay_cache_replica_dirs": rep_root,
         }
     )
     try:
@@ -1241,7 +1242,6 @@ def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
         ]
         assert sum(len(x) for x in first) == 30
         # replica copies exist alongside the primary
-        rep_root = os.path.join(broker_dir, ".read_cache_rep1")
         assert os.path.isdir(rep_root)
         # kill the ENTIRE primary cache tree
         _shutil.rmtree(os.path.join(broker_dir, ".read_cache"))
@@ -1255,8 +1255,8 @@ def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
         # commit still acks everything and evicts BOTH roots' batch dirs
         reader.commit(end)
         assert broker.backlog("s") == 0
-        for root in (".read_cache", ".read_cache_rep1"):
-            sub_root = os.path.join(broker_dir, root, "s")
+        for root in (os.path.join(broker_dir, ".read_cache"), rep_root):
+            sub_root = os.path.join(root, "s")
             if os.path.isdir(sub_root):
                 for stream_d in os.listdir(sub_root):
                     assert os.listdir(os.path.join(sub_root, stream_d)) == []
@@ -1264,7 +1264,7 @@ def test_replay_survives_primary_cache_loss(spark, broker, broker_dir):
         reader.stop()
 
 
-def test_replay_replicas_ack_survives_primary_loss(spark, broker, broker_dir):
+def test_replay_replicas_ack_survives_primary_loss(spark, broker, broker_dir, tmp_path):
     """Commit's ack sweep reads from replica roots too: even if the
     primary is lost and never re-read before commit, the acks land."""
     import shutil as _shutil
@@ -1281,7 +1281,7 @@ def test_replay_replicas_ack_survives_primary_loss(spark, broker, broker_dir):
             "broker_dir": broker_dir,
             "num_partitions": "2",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "2",
+            "replay_cache_replica_dirs": str(tmp_path / "rep1"),
         }
     )
     try:
@@ -1297,29 +1297,20 @@ def test_replay_replicas_ack_survives_primary_loss(spark, broker, broker_dir):
         reader.stop()
 
 
-def test_replay_cache_replicas_option_validation(broker_dir):
-    """Range check mirrors the other option validators (package.scala
-    validateAndInitReadOptions style): >=1, <=4, default 1."""
-    from spark_sql_pubsub_connector_spark.sources.options import (
-        validate_read_options,
+def test_replay_cache_replicas_is_an_unknown_option(broker_dir):
+    """The copy count follows from replay_cache_replica_dirs alone, so
+    the old count option is rejected like any undeclared key, naming
+    the option that replaced it."""
+    with pytest.raises(ValueError) as err:
+        _reader(broker_dir, replay_cache_replicas=2)
+    assert str(err.value) == (
+        "Unknown option 'replay_cache_replicas'; "
+        "did you mean 'replay_cache_replica_dirs'?"
     )
-
-    base = {"project_id": "p", "subscription": "s", "broker_dir": broker_dir}
-    assert validate_read_options(dict(base)).replay_cache_replicas == 1
-    assert (
-        validate_read_options(
-            dict(base, replay_cache_replicas="2")
-        ).replay_cache_replicas
-        == 2
-    )
-    with pytest.raises(ValueError):
-        validate_read_options(dict(base, replay_cache_replicas="0"))
-    with pytest.raises(ValueError):
-        validate_read_options(dict(base, replay_cache_replicas="5"))
 
 
 def test_source_e2e_with_replicated_cache(spark, broker, broker_dir, tmp_path):
-    """End-to-end readStream with replay_cache_replicas=2: the replica
+    """End-to-end readStream with one replica root: the replica
     copies are written by real executor workers (not the in-process
     reader API), all 100 messages arrive exactly once, and commit
     evicts every root's batch dirs."""
@@ -1330,7 +1321,7 @@ def test_source_e2e_with_replicated_cache(spark, broker, broker_dir, tmp_path):
         "s",
         max_messages_per_partition=10,
         num_partitions=4,
-        replay_cache_replicas=2,
+        replay_cache_replica_dirs=str(tmp_path / "rep1"),
     )
     out = _run_to_memory(spark, df, "src_rep", str(tmp_path / "ckpt_rep"), broker)
     rows = out.collect()
@@ -1341,7 +1332,7 @@ def test_source_e2e_with_replicated_cache(spark, broker, broker_dir, tmp_path):
     # mirrors the primary exactly (Spark commits batch N while
     # constructing batch N+1, so a trailing never-committed batch may
     # linger in BOTH roots after stop — same-set, not empty-set)
-    rep_root = os.path.join(broker_dir, ".read_cache_rep1", "s")
+    rep_root = os.path.join(tmp_path, "rep1", "s")
     pri_root = os.path.join(broker_dir, ".read_cache", "s")
     assert os.path.isdir(rep_root)
     def _remaining(root):
@@ -1353,7 +1344,9 @@ def test_source_e2e_with_replicated_cache(spark, broker, broker_dir, tmp_path):
     assert _remaining(rep_root) == _remaining(pri_root)
 
 
-def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
+def test_commit_acks_primary_copy_only_on_divergence(
+    spark, broker, broker_dir, tmp_path
+):
     """ADVICE r12 (at-least-once): when a batch's primary and replica
     copies diverge (zombie/speculative-attempt interleave — one
     attempt's pull lands only in a replica while another attempt's pull
@@ -1378,7 +1371,7 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
             "broker_dir": broker_dir,
             "num_partitions": "1",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "2",
+            "replay_cache_replica_dirs": str(tmp_path / "rep1"),
         }
     )
     try:
@@ -1414,7 +1407,7 @@ def test_commit_acks_primary_copy_only_on_divergence(spark, broker, broker_dir):
         reader.stop()
 
 
-def test_corrupt_all_copies_fails_loudly(spark, broker, broker_dir):
+def test_corrupt_all_copies_fails_loudly(spark, broker, broker_dir, tmp_path):
     """ADVICE r12: a present-but-unparseable cache (every copy corrupt)
     must fail the task, not silently re-pull — a re-pull under the
     still-held lease returns nothing and would overwrite the planned
@@ -1431,7 +1424,7 @@ def test_corrupt_all_copies_fails_loudly(spark, broker, broker_dir):
             "broker_dir": broker_dir,
             "num_partitions": "1",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "2",
+            "replay_cache_replica_dirs": str(tmp_path / "rep1"),
         }
     )
     try:
@@ -1452,10 +1445,10 @@ def test_corrupt_all_copies_fails_loudly(spark, broker, broker_dir):
         reader.stop()
 
 
-def test_replica_serve_reheals_all_copies(spark, broker, broker_dir):
+def test_replica_serve_reheals_all_copies(spark, broker, broker_dir, tmp_path):
     """ADVICE r12: serving from a replica re-heals the primary AND any
     other lost copy, so redundancy never silently degrades below the
-    configured replay_cache_replicas."""
+    planned copy count."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamReader,
     )
@@ -1468,7 +1461,7 @@ def test_replica_serve_reheals_all_copies(spark, broker, broker_dir):
             "broker_dir": broker_dir,
             "num_partitions": "1",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "3",
+            "replay_cache_replica_dirs": f"{tmp_path / 'rep1'},{tmp_path / 'rep2'}",
         }
     )
     try:
@@ -1525,23 +1518,27 @@ def test_torn_primary_without_replica_fails_loudly(broker, broker_dir, keep):
 
 
 def test_legacy_jsonl_cache_copy_fails_loudly(broker, broker_dir):
-    """A batch dir holding only a copy in the older JSON-lines format
-    must not be taken for a never-pulled partition: re-pulling under
-    the still-held lease would replay a different batch."""
-    import json as _json
+    """A batch dir from the older JSON-lines cache holds a part file but
+    no plan.json (plans came with the Arrow cache): planning it raises
+    naming the batch instead of taking it for a never-planned batch,
+    and pulls nothing."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _stream_cache_dir,
+    )
 
     _publish_canonical(broker, 10)
     reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
     try:
-        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
-        cache_file = parts[0].value.cache_file
-        legacy = cache_file[: -len(".arrow")] + ".jsonl"
-        os.makedirs(os.path.dirname(legacy), exist_ok=True)
-        with open(legacy, "w") as fh:
-            fh.write(_json.dumps({"ack_id": "ack-0-x", "message_id": "0"}) + "\n")
-        with pytest.raises(RuntimeError, match="no copy is parseable"):
-            _read_rows(reader, parts[0])
-        assert not os.path.exists(cache_file)
+        start, end = reader.initialOffset(), reader.latestOffset()
+        batch_key = f"b{start['batch_id']}-{end['batch_id']}"
+        batch_dir = os.path.join(
+            _stream_cache_dir(reader.opts, reader.stream_id), batch_key
+        )
+        os.makedirs(batch_dir)
+        with open(os.path.join(batch_dir, "part-00000.jsonl"), "w") as fh:
+            fh.write(json.dumps({"ack_id": "ack-0-x", "message_id": "0"}) + "\n")
+        with pytest.raises(RuntimeError, match=re.escape(batch_key)):
+            reader.partitions(start, end)
         assert len(broker.pull("s", 10)) == 10  # nothing was leased
     finally:
         reader.stop()
@@ -1791,7 +1788,7 @@ def test_region_split_cap_keeps_a_minority_region(broker_dir):
         reader.stop()
 
 
-def test_replica_heal_is_logged(broker, broker_dir, caplog):
+def test_replica_heal_is_logged(broker, broker_dir, caplog, tmp_path):
     """A replay served from a replica re-heals the lost primary and says
     so at WARNING, naming both copies."""
     _publish_canonical(broker, 10)
@@ -1799,7 +1796,7 @@ def test_replica_heal_is_logged(broker, broker_dir, caplog):
         broker_dir,
         num_partitions=1,
         max_messages_per_partition=10,
-        replay_cache_replicas=2,
+        replay_cache_replica_dirs=str(tmp_path / "rep1"),
     )
     try:
         parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
@@ -1909,7 +1906,7 @@ def test_relay_of_a_backlog_under_one_pull_plans_one_partition(
     )
     (batch_dir,) = os.listdir(cache)
     with open(os.path.join(cache, batch_dir, "plan.json")) as fh:
-        assert json.load(fh) == [None]
+        assert json.load(fh) == {"regions": [None], "replica_roots": []}
     assert broker.backlog("s") == 40  # leased, acked by the next batch
 
     run()
@@ -1940,41 +1937,32 @@ def test_corrupt_offset_state_fails_loudly(broker, broker_dir):
 
 
 def test_replay_cache_replica_dirs_option_validation(broker_dir, tmp_path):
-    """Explicit replica roots: exactly replicas-1 absolute, distinct
-    paths; anything else is an eager ValueError."""
+    """Replica roots: at most three absolute, distinct paths; anything
+    else is an eager ValueError."""
     from spark_sql_pubsub_connector_spark.sources.options import (
         validate_read_options,
     )
 
     base = {"project_id": "p", "subscription": "s", "broker_dir": broker_dir}
     m1, m2 = str(tmp_path / "m1"), str(tmp_path / "m2")
-    ok = validate_read_options(
-        dict(base, replay_cache_replicas="3", replay_cache_replica_dirs=f"{m1},{m2}")
-    )
+    ok = validate_read_options(dict(base, replay_cache_replica_dirs=f"{m1},{m2}"))
     assert ok.replay_cache_replica_dirs == (m1, m2)
     assert validate_read_options(dict(base)).replay_cache_replica_dirs == ()
-    with pytest.raises(ValueError, match="exactly"):
-        validate_read_options(
-            dict(base, replay_cache_replicas="2", replay_cache_replica_dirs=f"{m1},{m2}")
-        )
-    with pytest.raises(ValueError, match="exactly"):
-        validate_read_options(dict(base, replay_cache_replica_dirs=m1))
+    four = ",".join(str(tmp_path / f"m{i}") for i in range(4))
+    with pytest.raises(ValueError, match="at most 3"):
+        validate_read_options(dict(base, replay_cache_replica_dirs=four))
     with pytest.raises(ValueError, match="absolute"):
-        validate_read_options(
-            dict(base, replay_cache_replicas="2", replay_cache_replica_dirs="rel/path")
-        )
+        validate_read_options(dict(base, replay_cache_replica_dirs="rel/path"))
     with pytest.raises(ValueError, match="distinct"):
-        validate_read_options(
-            dict(base, replay_cache_replicas="3", replay_cache_replica_dirs=f"{m1},{m1}")
-        )
+        validate_read_options(dict(base, replay_cache_replica_dirs=f"{m1},{m1}"))
 
 
 def test_explicit_replica_dirs_second_mount(spark, broker, broker_dir, tmp_path):
     """VERDICT r12 #6: replay_cache_replica_dirs places replica copies
     on an explicitly-named root (a second mount in a real deployment —
     the distinct-executor placement of MEMORY_AND_DISK_SER_2,
-    PubsubPartitionReader.scala:57): copies land there instead of the
-    derived sibling, primary loss replays from it byte-identically, and
+    PubsubPartitionReader.scala:57): copies land there and nowhere
+    beside the primary, primary loss replays from it byte-identically, and
     commit's ack sweep + eviction cover it."""
     import shutil as _shutil
 
@@ -1991,7 +1979,6 @@ def test_explicit_replica_dirs_second_mount(spark, broker, broker_dir, tmp_path)
             "broker_dir": broker_dir,
             "num_partitions": "2",
             "max_messages_per_partition": "10",
-            "replay_cache_replicas": "2",
             "replay_cache_replica_dirs": mount2,
         }
     )
@@ -2004,9 +1991,10 @@ def test_explicit_replica_dirs_second_mount(spark, broker, broker_dir, tmp_path)
             for p in parts
         ]
         assert sum(len(x) for x in first) == 20
-        # copies live on the explicit mount, not the derived sibling
+        # copies live on the explicit mount, not beside the primary
         assert os.path.isdir(os.path.join(mount2, "s"))
-        assert not os.path.isdir(os.path.join(broker_dir, ".read_cache_rep1"))
+        caches = [n for n in os.listdir(broker_dir) if n.startswith(".read_cache")]
+        assert caches == [".read_cache"]
         # kill the whole primary tree: replay serves from mount2
         _shutil.rmtree(os.path.join(broker_dir, ".read_cache"))
         second = [
@@ -2024,79 +2012,138 @@ def test_explicit_replica_dirs_second_mount(spark, broker, broker_dir, tmp_path)
         reader.stop()
 
 
-def test_legacy_derived_replica_root_served_after_config_switch(
-    spark, broker, broker_dir, tmp_path
+def test_replica_root_switch_replays_from_the_planned_root(
+    spark, broker, broker_dir, tmp_path, monkeypatch
 ):
-    """ADVICE r13 (low): a batch pulled under the DERIVED-replica
-    config whose primary is lost but whose copy survives under the old
-    ``.read_cache_rep1`` sibling must replay from that legacy root
-    after the config switches to explicit replay_cache_replica_dirs —
-    not hit the fully-absent branch and silently re-pull (the broker
-    still holds the lease, so a re-pull returns nothing: exactly the
-    planned-batch-content change the corrupt-cache RuntimeError exists
-    to prevent). The legacy copy is read-only: healing rewrites the
-    configured set (primary + explicit mount), never the retired root."""
+    """A batch planned with its replica under root A is replanned after a
+    restart whose config names root B instead. Its plan names A, so with
+    the primary lost the replay serves A's copy byte for byte rather than
+    re-pulling (the broker still holds the lease, so a re-pull would
+    return nothing). Healing rewrites the primary; commit acks each
+    message once and evicts the primary's and A's copies; nothing is
+    ever written under B."""
     import shutil as _shutil
 
-    from spark_sql_pubsub_connector_spark.sources.datasource import (
-        PubsubStreamReader,
-    )
-
     _publish_canonical(broker, 20)
-    base = {
-        "project_id": "p",
-        "subscription": "s",
-        "broker_dir": broker_dir,
-        "num_partitions": "2",
-        "max_messages_per_partition": "10",
-        "replay_cache_replicas": "2",
-        "stream_id": "sid-cfgswitch",
-    }
-    old = PubsubStreamReader(dict(base))
+    root_a, root_b = str(tmp_path / "root_a"), str(tmp_path / "root_b")
+    base = dict(num_partitions=2, max_messages_per_partition=10, stream_id="sid-cfgswitch")
+    old = _reader(broker_dir, replay_cache_replica_dirs=root_a, **base)
     try:
         start = old.initialOffset()
         end = old.latestOffset()
         parts = old.partitions(start, end)
-        first = [
-            sorted(tuple(map(str, r)) for r in _read_rows(old, p))
-            for p in parts
-        ]
+        first = [_read_rows(old, p) for p in parts]
         assert sum(len(x) for x in first) == 20
-        assert os.path.isdir(os.path.join(broker_dir, ".read_cache_rep1"))
+        a_bytes = []
+        for p in parts:
+            (rep_file,) = p.value.replica_files
+            assert rep_file.startswith(root_a)
+            with open(rep_file, "rb") as fh:
+                a_bytes.append(fh.read())
     finally:
         old.stop()  # uncommitted: the restart replans this batch
 
-    # restart with the replica moved to an explicit second mount; same
-    # stream identity (the registry keeps same-sid dirs), same batch
-    mount2 = str(tmp_path / "mount2")
-    new = PubsubStreamReader(dict(base, replay_cache_replica_dirs=mount2))
+    # restart with the replica root moved to B; same stream identity
+    # (the registry keeps same-sid dirs), same batch
+    new = _reader(broker_dir, replay_cache_replica_dirs=root_b, **base)
     try:
         parts2 = new.partitions(start, end)
-        # primary lost; only the RETIRED derived root still has copies
-        _shutil.rmtree(os.path.join(broker_dir, ".read_cache"))
-        second = [
-            sorted(tuple(map(str, r)) for r in _read_rows(new, p))
-            for p in parts2
+        assert [p.value.replica_files for p in parts2] == [
+            p.value.replica_files for p in parts
         ]
-        assert first == second  # legacy copy served, byte-identical
-        # healing restored the CONFIGURED set: primary + explicit mount
-        assert os.path.isdir(os.path.join(broker_dir, ".read_cache"))
-        assert os.path.isdir(os.path.join(mount2, "s"))
-        # commit acks from whichever root and evicts every copy,
-        # including the retired derived sibling's
+        # primary lost; only root A still has copies
+        _shutil.rmtree(os.path.join(broker_dir, ".read_cache"))
+        second = [_read_rows(new, p) for p in parts2]
+        assert first == second  # A's copy served
+        for p, data in zip(parts2, a_bytes):
+            with open(p.value.cache_file, "rb") as fh:
+                assert fh.read() == data  # primary re-healed, byte-identical
+        acked = []
+        real_ack = new.broker.acknowledge
+
+        def record_ack(sub, ids):
+            acked.extend(ids)
+            return real_ack(sub, ids)
+
+        monkeypatch.setattr(new.broker, "acknowledge", record_ack)
         new.commit(end)
+        assert sorted(acked) == sorted(r[1] for rows in first for r in rows)
+        assert len(set(acked)) == 20
         assert broker.backlog("s") == 0
-        for root in (
-            os.path.join(broker_dir, ".read_cache"),
-            os.path.join(broker_dir, ".read_cache_rep1"),
-            mount2,
-        ):
-            sub_root = os.path.join(root, "s")
-            if os.path.isdir(sub_root):
-                for stream_d in os.listdir(sub_root):
-                    assert os.listdir(os.path.join(sub_root, stream_d)) == []
+        for root in (os.path.join(broker_dir, ".read_cache"), root_a):
+            stream_root = os.path.join(root, "s", "sid-cfgswitch")
+            assert os.listdir(stream_root) == []
+        assert not os.path.exists(root_b)
     finally:
         new.stop()
+
+
+def test_partitions_and_commit_never_list_the_broker_dir(
+    broker, broker_dir, monkeypatch
+):
+    """Planning, replay and commit find a batch's copies from its plan
+    and the configured roots alone: no scan of the broker dir for
+    other cache roots."""
+    _publish_canonical(broker, 20)
+    reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
+    try:
+        start = reader.initialOffset()
+        end = reader.latestOffset()
+        listed = []
+        real_listdir = os.listdir
+
+        def record_listdir(path="."):
+            listed.append(os.path.abspath(path))
+            return real_listdir(path)
+
+        monkeypatch.setattr(os, "listdir", record_listdir)
+        parts = reader.partitions(start, end)
+        assert sum(len(_read_rows(reader, p)) for p in parts) == 20
+        reader.partitions(start, end)  # a replan reads the stored plan
+        reader.commit(end)
+        assert broker.backlog("s") == 0
+        assert listed  # the recorder saw commit's own sweep
+        assert os.path.abspath(broker_dir) not in listed
+    finally:
+        reader.stop()
+
+
+def test_batch_with_parts_but_no_plan_is_not_replanned(broker, broker_dir):
+    """A batch dir holding a part file but no plan.json was pulled under
+    a plan that is gone: replanning it could plan other partitions over
+    the same batch key. partitions() raises naming the batch instead,
+    and writes no new plan."""
+    _publish_canonical(broker, 10)
+    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        parts = reader.partitions(start, end)
+        assert len(_read_rows(reader, parts[0])) == 10
+        batch_dir = os.path.dirname(parts[0].value.cache_file)
+        batch_key = os.path.basename(batch_dir)
+        os.remove(os.path.join(batch_dir, "plan.json"))
+        with pytest.raises(RuntimeError, match=re.escape(batch_key)):
+            reader.partitions(start, end)
+        assert not os.path.exists(os.path.join(batch_dir, "plan.json"))
+    finally:
+        reader.stop()
+
+
+def test_bare_list_plan_fails_loudly(broker, broker_dir):
+    """A plan.json in the older bare-list form reads as corrupt, never
+    as a plan with no replica roots."""
+    _publish_canonical(broker, 10)
+    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        parts = reader.partitions(start, end)
+        plan = os.path.join(os.path.dirname(parts[0].value.cache_file), "plan.json")
+        with open(plan, "w") as fh:
+            fh.write("[null]")
+        with pytest.raises(RuntimeError, match="no copy is parseable"):
+            reader.partitions(start, end)
+    finally:
+        reader.stop()
 
 
 def test_sink_losing_attempt_leaves_zero_orphans(
