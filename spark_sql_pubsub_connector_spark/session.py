@@ -74,13 +74,6 @@ def get_spark(
     b = b.config(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
-    # Launch-time JVM flags for measurement experiments (r9: the
-    # JIT-code-cache discriminator of the session-aging probe, since
-    # removed; see git history). Unset → no flag, identical JVM to
-    # every prior round.
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        b = b.config("spark.driver.extraJavaOptions", java_opts)
     for k, v in _BUILD_CONFS.items():
         b = b.config(k, v)
     for k, v in _RUNTIME_CONFS.items():

@@ -689,6 +689,25 @@ class FileBroker:
             [acks, ids, *seg.columns], schema=pull_schema()
         )
 
+    @staticmethod
+    def _take_leased(state: dict, wanted: set[int]) -> list[int]:
+        """Take the ``wanted`` seqs out of their lease groups, dropping
+        emptied groups; returns the seqs taken. A seq no group holds
+        (unknown, or its lease expired) is not taken."""
+        taken: list[int] = []
+        for g in state["lease_groups"]:
+            if not wanted.isdisjoint(g[1]):
+                keep = []
+                for s in g[1]:
+                    if s in wanted:
+                        taken.append(s)
+                        wanted.discard(s)
+                    else:
+                        keep.append(s)
+                g[1] = keep
+        state["lease_groups"] = [g for g in state["lease_groups"] if g[1]]
+        return taken
+
     def acknowledge(self, sub: str, ack_ids: list[str]) -> int:
         """Ack leased messages; unknown/expired ack ids are ignored
         (matching the real service's idempotent acks)."""
@@ -697,24 +716,13 @@ class FileBroker:
         }
         if not wanted:
             return 0
-        n = 0
         with self._lock():
             state = self._load_sub(sub)
-            for g in state["lease_groups"]:
-                if not wanted.isdisjoint(g[1]):
-                    keep = []
-                    for s in g[1]:
-                        if s in wanted:
-                            state["acked"].append(s)
-                            wanted.discard(s)
-                            n += 1
-                        else:
-                            keep.append(s)
-                    g[1] = keep
-            state["lease_groups"] = [g for g in state["lease_groups"] if g[1]]
+            taken = self._take_leased(state, wanted)
+            state["acked"].extend(taken)
             self._compact_acked(state)
             self._store_sub(sub, state)
-        return n
+        return len(taken)
 
     def modify_ack_deadline(self, sub: str, ack_ids: list[str], seconds: float) -> None:
         """0 seconds == nack → immediate redelivery."""
@@ -724,13 +732,7 @@ class FileBroker:
         now = time.time()
         with self._lock():
             state = self._load_sub(sub)
-            moved: list[int] = []
-            for g in state["lease_groups"]:
-                if not wanted.isdisjoint(g[1]):
-                    keep = []
-                    for s in g[1]:
-                        (moved if s in wanted else keep).append(s)
-                    g[1] = keep
+            moved = self._take_leased(state, wanted)
             if moved:
                 state["lease_groups"].append([now + seconds, moved])
             self._expire_leases(state, now)

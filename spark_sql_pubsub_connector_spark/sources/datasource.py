@@ -17,9 +17,11 @@ Parity map to the reference (SURVEY.md §2.1):
          DataSource API has no SupportsTriggerAvailableNow hook
          (PythonMicroBatchStream falls back to single-batch
          execution), so one availableNow run drains
-         min(backlog, max_dynamic_partitions × max_messages) in a
-         single bounded batch; a backlog beyond that envelope drains
-         across repeated runs on the same checkpoint (tested:
+         min(backlog, 256 × max_messages) in a single bounded batch
+         (options.MAX_PARTITIONS, the reference's per-batch cap); a
+         backlog beyond that envelope drains across repeated runs on
+         the same checkpoint (tested:
+         test_available_now_batch_plans_at_most_256_partitions,
          test_available_now_bounded_drain_across_runs).
          Re-checked against pyspark 4.1.2 (rounds 4 and 5; r5 probe:
          zero availableNow mentions in pyspark.sql.datasource, no new
@@ -55,9 +57,11 @@ Parity map to the reference (SURVEY.md §2.1):
          task rather than re-pulling. The batch's plan is persisted
          beside its parts the first time it is planned: its partitions'
          regions and the replica roots (replay_cache_replica_dirs) it was
-         planned under. A replan rebuilds the same partitions over the
-         same copies whatever the configuration says by then; a batch
-         dir holding parts but no readable plan fails planning
+         planned under, which the offset state also records for the
+         last planned batch. A replan rebuilds the same partitions over
+         the same copies whatever the configuration says by then, the
+         primary copy lost included; a batch dir holding parts but no
+         readable plan fails planning
   S10/S11 ack-on-commit: ack ids ride in the cache files' ack_id column
          (the accumulator analog); commit(end) acks each batch with one
          broker call and evicts the batch's cache
@@ -106,6 +110,7 @@ from pyspark.sql.types import (
 
 from .broker import FileBroker, _write_atomic, segment_schema, write_segment
 from .options import (
+    MAX_PARTITIONS,
     PubsubReadOptions,
     PubsubWriteOptions,
     calculate_partitions,
@@ -183,7 +188,10 @@ def _offset_state_path(opts: PubsubReadOptions) -> str:
     processedOffsets = end in planInputPartitions); the Python API
     builds a fresh reader on restart, so the counter must also survive
     the process — otherwise latestOffset() regresses behind the
-    checkpoint and the stream stalls until it catches back up."""
+    checkpoint and the stream stalls until it catches back up. The
+    state also records the replica roots of the last planned batch, so
+    a restart under other roots still finds that batch's plan and
+    copies when the primary copy is lost."""
     return os.path.join(
         opts.broker_dir, ".offsets", _sanitize(opts.subscription) + ".json"
     )
@@ -371,6 +379,7 @@ class PubsubStreamReader(DataSourceStreamReader):
         st = self._restore_state()
         self._last = st["planned"]  # high-water mark of planned offsets
         self._committed = st["committed"]  # floor: all acked below this
+        self._roots = st["replica_roots"]  # of the last planned batch
         self.broker = FileBroker(self.opts.broker_dir)
         self.registry = StreamRegistry(self.opts.broker_dir)
         # S12 guard is claimed lazily on the first offset/partition call:
@@ -426,25 +435,37 @@ class PubsubStreamReader(DataSourceStreamReader):
 
     # -- offsets (S4/S5) ---------------------------------------------------
     def _restore_state(self) -> dict:
-        """The persisted counters; a missing file starts at 0. A file
-        that does not parse raises: reading it as 0 would re-plan
-        already-committed batch keys (ROADMAP direction 3)."""
+        """The persisted counters and roots; a missing file starts at 0
+        with no roots, and a file written before roots were recorded
+        has none. A file that does not parse raises: reading it as 0
+        would re-plan already-committed batch keys (ROADMAP direction
+        3)."""
         path = _offset_state_path(self.opts)
         try:
             with open(path) as fh:
                 raw = fh.read()
         except FileNotFoundError:
-            return {"planned": 0, "committed": 0}
+            return {"planned": 0, "committed": 0, "replica_roots": ()}
         try:
             st = json.loads(raw)
-            return {"planned": int(st["planned"]), "committed": int(st["committed"])}
+            return {
+                "planned": int(st["planned"]),
+                "committed": int(st["committed"]),
+                "replica_roots": tuple(st.get("replica_roots", ())),
+            }
         except (ValueError, KeyError, TypeError) as e:
             raise ValueError(f"corrupt pubsub offset state {path}: {e}") from e
 
     def _persist_state(self) -> None:
         _write_atomic(
             _offset_state_path(self.opts),
-            json.dumps({"planned": self._last, "committed": self._committed}),
+            json.dumps(
+                {
+                    "planned": self._last,
+                    "committed": self._committed,
+                    "replica_roots": self._roots,
+                }
+            ),
         )
 
     def _advance_to(self, n: int, committed: bool = False) -> None:
@@ -477,20 +498,21 @@ class PubsubStreamReader(DataSourceStreamReader):
         ``dynamic_partitioning`` (S6/S13)."""
         if not self.opts.dynamic_partitioning:
             return self.opts.num_partitions
-        return calculate_partitions(backlog, self.opts.max_dynamic_partitions)
+        return calculate_partitions(backlog)
 
     def latestOffset(self) -> dict:
         # advance the synthetic counter by the number of capacity-sized
         # batch units needed to drain the current backlog, bounded so a
-        # single trigger never plans more than max_dynamic_partitions
-        # tasks (the reference's 256×1000 ingest envelope, BASELINE.md)
+        # single trigger never plans more than MAX_PARTITIONS tasks (the
+        # reference's 256×1000 ingest envelope, BASELINE.md); a static
+        # num_partitions above the cap still advances one unit
         self._ensure_registered()
         backlog = self.broker.backlog(self.opts.subscription)
         n = self._last
         if backlog > 0:
             base = self._partitions_per_unit(backlog)
             capacity = base * self.opts.max_messages_per_partition
-            max_units = max(1, self.opts.max_dynamic_partitions // base)
+            max_units = max(1, MAX_PARTITIONS // base)
             units = min(max_units, max(1, -(-backlog // capacity)))
             n += units
         self._advance_to(n)
@@ -511,9 +533,10 @@ class PubsubStreamReader(DataSourceStreamReader):
         # that grew in between adds partitions that pull fresh messages
         # into an already-planned batch, which a sink may skip as
         # committed while commit() acks. The plan names its replica
-        # roots, so a replan after a config switch finds the batch's
-        # copies where they were written.
-        checked = self._batch_dirs(batch_key, self.opts.replay_cache_replica_dirs)
+        # roots, and the offset state those of the last planned batch,
+        # so a replan after a config switch finds the batch's copies
+        # where they were written, even with the primary lost.
+        checked = self._batch_dirs(batch_key, self._known_roots())
         found = _first_readable(
             [os.path.join(d, _PLAN_FILE) for d in checked], _load_plan
         )
@@ -533,8 +556,12 @@ class PubsubStreamReader(DataSourceStreamReader):
         else:
             regions = self._plan(units, batch_key)
             roots = self.opts.replay_cache_replica_dirs
+            if roots != self._roots:  # recorded before any copy exists
+                self._roots = roots
+                self._persist_state()
             data = json.dumps({"regions": regions, "replica_roots": roots}).encode()
-            for d in checked[1:] + checked[:1]:  # primary last, as for parts
+            dirs = self._batch_dirs(batch_key, roots)
+            for d in dirs[1:] + dirs[:1]:  # primary last, as for parts
                 _write_atomic(os.path.join(d, _PLAN_FILE), data)
 
         cache_dir, *replica_dirs = self._batch_dirs(batch_key, roots)
@@ -556,6 +583,11 @@ class PubsubStreamReader(DataSourceStreamReader):
             for i, region in enumerate(regions)
         ]
 
+    def _known_roots(self) -> tuple:
+        """The configured replica roots, then those of the last planned
+        batch."""
+        return tuple(dict.fromkeys(self.opts.replay_cache_replica_dirs + self._roots))
+
     def _batch_dirs(self, batch_key: str, replica_roots) -> list[str]:
         """The batch's dir under the primary root, then under each of
         ``replica_roots``."""
@@ -566,8 +598,8 @@ class PubsubStreamReader(DataSourceStreamReader):
 
     def _plan(self, units: int, batch_key: str) -> list[str | None]:
         """The region of each partition of a batch of ``units`` capacity
-        units (None pulls from every region), at most
-        ``max_dynamic_partitions`` of them.
+        units (None pulls from every region), at most ``MAX_PARTITIONS``
+        of them.
 
         Each ``(region, partitions per unit, backlog)`` group plans
         ``min(partitions × units, ceil(backlog / max_messages_per_partition))``
@@ -583,8 +615,8 @@ class PubsubStreamReader(DataSourceStreamReader):
         when ``region_split`` says so (PubsubMicroBatchStream.scala:58-74).
         A region's backlog counts leased messages, so its cap never
         plans fewer pulls than the region can fill. The groups take
-        turns in the list, so the ``max_dynamic_partitions`` cut leaves
-        every region at least one partition."""
+        turns in the list, so the ``MAX_PARTITIONS`` cut leaves every
+        region at least one partition."""
         deliverable = self.broker.deliverable(self.opts.subscription)
         if deliverable == 0:
             _log.debug("batch %s: nothing deliverable, planned 0 partitions", batch_key)
@@ -595,7 +627,7 @@ class PubsubStreamReader(DataSourceStreamReader):
             if self.opts.dynamic_partitioning
             else {}
         )
-        groups = region_split(by_region, self.opts.max_dynamic_partitions) or [
+        groups = region_split(by_region) or [
             (None, self._partitions_per_unit(sum(by_region.values())), deliverable)
         ]
         regions = [
@@ -605,7 +637,7 @@ class PubsubStreamReader(DataSourceStreamReader):
                 for region, n, backlog in groups
                 for i in range(min(n * units, -(-backlog // per_pull)))
             )
-        ][: self.opts.max_dynamic_partitions]
+        ][:MAX_PARTITIONS]
         split = ", ".join(f"{r}={regions.count(r)}" for r, _, _ in groups if r)
         _log.debug(
             "batch %s: %d deliverable, planned %d partitions (%d uncapped)%s",
@@ -623,14 +655,14 @@ class PubsubStreamReader(DataSourceStreamReader):
         self._advance_to(end["batch_id"], committed=True)
         # The sweep is scoped to THIS stream's cache dirs: foreign dirs
         # are purged unacked at registration, never acknowledged here.
-        # Batch dirs are found under the primary and the configured
-        # replica roots, so the ack set survives the loss of any single
-        # copy; each batch is then acked and evicted over the roots its
-        # plan names.
+        # Batch dirs are found under the primary, the configured replica
+        # roots and those of the last planned batch, so the ack set
+        # survives the loss of any single copy; each batch is then acked
+        # and evicted over the roots its plan names.
         end_id = end["batch_id"]
         # batch_key -> the dirs of that batch found under those roots
         found: dict[str, list[str]] = {}
-        for root in (None, *self.opts.replay_cache_replica_dirs):
+        for root in (None, *self._known_roots()):
             stream_dir = _stream_cache_dir(self.opts, self.stream_id, root)
             if not os.path.isdir(stream_dir):
                 continue

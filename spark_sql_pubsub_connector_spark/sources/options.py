@@ -5,63 +5,24 @@ Mirrors the reference's option surface and eager validation
 (package.scala:8-38 keys/defaults, :49-80 case classes, :138-171
 validators), raising ``ValueError`` from the DataSource constructor
 like the reference's ``IllegalArgumentException`` from
-``validateAndInit*`` (S18). An undeclared key is rejected, naming the
+``validateAndInit*`` (S18). Each option is declared once, as a field
+of its dataclass: name, type, default and comment; the declared key
+sets derive from the fields. An undeclared key is rejected, naming the
 closest declared one: ignored, a misspelt key would leave its option at
-the default. The planning thresholds are constants, as in the reference
-(S6/S13).
+the default. The planning thresholds and the per-batch partition cap
+are constants, as in the reference (S6/S13).
 """
 
 from __future__ import annotations
 
 import difflib
 import math
-from dataclasses import dataclass
+from dataclasses import MISSING, dataclass, field, fields
 
-# option keys (reference package.scala:8-38)
-PROJECT_ID = "project_id"
-SUBSCRIPTION = "subscription"
-TOPIC = "topic"
-NUM_PARTITIONS = "num_partitions"
-MAX_MESSAGES_PER_PARTITION = "max_messages_per_partition"
-DYNAMIC_PARTITIONING = "dynamic_partitioning"
-ORDERING_KEY = "ordering_key"
-BROKER_DIR = "broker_dir"  # fake-broker root (stands in for endPoint;
-# a real-client endpoint would come from region_endpoint() below)
-MAX_DYNAMIC_PARTITIONS = "max_dynamic_partitions"
-STREAM_ID = "stream_id"  # stable consumer identity (crash recovery)
-SINK_ID = "sink_id"  # stable writer identity (cross-restart idempotence)
-# Topic-log retention trigger (the file-broker analog of real Pub/Sub's
-# topic message_retention_duration, which is likewise a topic-level
-# admin property): when the topic's live segments exceed this many
-# bytes at a sink commit, the broker unlinks the segments every
-# subscription has acked.
-# Unset = grow-forever (historical behavior).
-LOG_RETENTION_BYTES = "log_retention_bytes"
-# Replica replay-cache roots (comma-separated absolute paths), one per
-# copy beyond the primary under broker_dir; unset keeps one copy. Each
-# root stands for an independent failure domain (a second disk or mount,
-# a DFS path): the analog of MEMORY_AND_DISK_SER_2's distinct-executor
-# placement (PubsubPartitionReader.scala:57).
-REPLAY_CACHE_REPLICA_DIRS = "replay_cache_replica_dirs"
-# Spark forwards the sink query's checkpointLocation in its options,
-# lower-cased like every key.
-CHECKPOINT_LOCATION = "checkpointlocation"
-
-READ_OPTIONS = frozenset({
-    PROJECT_ID, SUBSCRIPTION, BROKER_DIR, NUM_PARTITIONS,
-    MAX_MESSAGES_PER_PARTITION, DYNAMIC_PARTITIONING, MAX_DYNAMIC_PARTITIONS,
-    STREAM_ID, REPLAY_CACHE_REPLICA_DIRS,
-})
-WRITE_OPTIONS = frozenset({
-    PROJECT_ID, TOPIC, BROKER_DIR, ORDERING_KEY, SINK_ID, LOG_RETENTION_BYTES,
-    CHECKPOINT_LOCATION,
-})
-
-DEFAULT_NUM_PARTITIONS = 4  # package.scala:36
-DEFAULT_MAX_MESSAGES_PER_PARTITION = 1000  # package.scala:33
-DEFAULT_MAX_DYNAMIC_PARTITIONS = 256  # PubsubSubscriptionMonitor.scala:26-31
 # backlog messages per dynamic partition (PubsubSubscriptionMonitor.scala:33-35)
 BACKLOG_PER_PARTITION = 10_000
+# partitions one batch plans at most (PubsubSubscriptionMonitor.scala:26-31)
+MAX_PARTITIONS = 256
 # a region holding more than this share of the backlog splits the plan
 # by region (package.scala:118)
 REGION_SPLIT_SHARE = 0.7
@@ -87,68 +48,27 @@ def region_endpoint(region: str | None = None) -> str:
     return f"{region}-pubsub.googleapis.com:443"
 
 
-def _declared(options: dict, declared: frozenset) -> dict:
-    """``options`` keyed in lower case, once every key is found declared.
-    Spark lower-cases option keys; a direct caller may use any case."""
-    for key in options:
-        if key.lower() not in declared:
-            close = difflib.get_close_matches(key.lower(), sorted(declared), n=1)
-            hint = f"; did you mean '{close[0]}'?" if close else ""
-            raise ValueError(f"Unknown option '{key}'{hint}")
-    if all(key == key.lower() for key in options):
-        return options
-    return {key.lower(): value for key, value in options.items()}
-
-
-def _require(options: dict, key: str) -> str:
-    v = options.get(key)
-    if v is None or str(v).strip() == "":
-        raise ValueError(f"Missing required option: '{key}'")
-    return str(v)
-
-
-def _pos_int(options: dict, key: str, default: int, minimum: int = 1) -> int:
-    raw = options.get(key)
-    if raw is None:
-        return default
-    try:
-        v = int(raw)
-    except (TypeError, ValueError):
-        raise ValueError(f"Option '{key}' must be an integer, got {raw!r}") from None
-    if v < minimum:
-        raise ValueError(f"Option '{key}' must be >= {minimum}, got {v}")
-    return v
-
-
-def _bool(options: dict, key: str, default: bool = False) -> bool:
-    raw = options.get(key)
-    if raw is None:
-        return default
-    v = str(raw).strip().lower()
-    if v in ("true", "1", "yes"):
-        return True
-    if v in ("false", "0", "no"):
-        return False
-    raise ValueError(f"Option '{key}' must be a boolean, got {raw!r}")
-
-
 @dataclass(frozen=True)
 class PubsubReadOptions:
     """package.scala:49-57 equivalent."""
 
     project_id: str
     subscription: str
+    # fake-broker root (stands in for endPoint; a real-client endpoint
+    # would come from region_endpoint() above)
     broker_dir: str
-    num_partitions: int = DEFAULT_NUM_PARTITIONS
-    max_messages_per_partition: int = DEFAULT_MAX_MESSAGES_PER_PARTITION
+    num_partitions: int = 4  # package.scala:36
+    max_messages_per_partition: int = 1000  # package.scala:33
     dynamic_partitioning: bool = False
-    max_dynamic_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS
     # Stable consumer identity: a restarted query passing the same
     # stream_id (e.g. its checkpoint path) re-claims the subscription
     # immediately instead of waiting out the registry's crash TTL.
     stream_id: str | None = None
-    # Replica replay-cache roots, one per copy beyond the primary;
-    # empty keeps one copy.
+    # Replica replay-cache roots (comma-separated absolute paths), one
+    # per copy beyond the primary under broker_dir; empty keeps one
+    # copy. Each root stands for an independent failure domain (a second
+    # disk or mount, a DFS path): the analog of MEMORY_AND_DISK_SER_2's
+    # distinct-executor placement (PubsubPartitionReader.scala:57).
     replay_cache_replica_dirs: tuple = ()
 
     @property
@@ -176,74 +96,126 @@ class PubsubWriteOptions:
     # redelivered batch republishes: the reference's at-least-once
     # (PubsubSink.scala:17-18 keeps latestBatchId per JVM instance).
     sink_id: str | None = None
-    # Ack-based topic-log retention, applied at commit: None retains
-    # everything; a positive byte threshold unlinks the fully-acked
-    # segments whenever the live segments outgrow it
-    # (FileBroker.compact_topic).
+    # Topic-log retention, the file-broker analog of real Pub/Sub's
+    # topic message_retention_duration (likewise a topic-level admin
+    # property). Applied at commit: None retains everything; a positive
+    # byte threshold unlinks the segments every subscription has acked
+    # whenever the live segments outgrow it (FileBroker.compact_topic).
     log_retention_bytes: int | None = None
-    # The query's checkpointLocation verbatim (when Spark forwarded it
-    # or the caller passed it), kept apart from sink_id: the batch
-    # fence is also scoped to the checkpoint *instance* (the query id
-    # Spark mints into <checkpoint>/metadata), so a wiped-and-recreated
-    # checkpoint, whose batch ids restart at 0, is never swallowed by a
-    # stale fence of the same sink_id (see
+    # The query's checkpointLocation verbatim, under the key Spark
+    # forwards it as (lower-cased like every key), kept apart from
+    # sink_id: the batch fence is also scoped to the checkpoint
+    # *instance* (the query id Spark mints into <checkpoint>/metadata),
+    # so a wiped-and-recreated checkpoint, whose batch ids restart at 0,
+    # is never swallowed by a stale fence of the same sink_id (see
     # datasource._checkpoint_instance_id).
-    checkpoint_location: str | None = None
+    checkpoint_location: str | None = field(
+        default=None, metadata={"key": "checkpointlocation"}
+    )
 
     @property
     def topic_path(self) -> str:
         return f"projects/{self.project_id}/topics/{self.topic}"
 
 
-def _replica_dirs(options: dict) -> tuple:
+def _key(f) -> str:
+    """The option key of a dataclass field: its name, unless it says
+    otherwise."""
+    return f.metadata.get("key", f.name)
+
+
+READ_OPTIONS = frozenset(_key(f) for f in fields(PubsubReadOptions))
+WRITE_OPTIONS = frozenset(_key(f) for f in fields(PubsubWriteOptions))
+
+
+def _declared(options: dict, declared: frozenset) -> dict:
+    """``options`` keyed in lower case, once every key is found declared.
+    Spark lower-cases option keys; a direct caller may use any case."""
+    for key in options:
+        if key.lower() not in declared:
+            close = difflib.get_close_matches(key.lower(), sorted(declared), n=1)
+            hint = f"; did you mean '{close[0]}'?" if close else ""
+            raise ValueError(f"Unknown option '{key}'{hint}")
+    if all(key == key.lower() for key in options):
+        return options
+    return {key.lower(): value for key, value in options.items()}
+
+
+def _require(options: dict, key: str) -> str:
+    v = options.get(key)
+    if v is None or str(v).strip() == "":
+        raise ValueError(f"Missing required option: '{key}'")
+    return str(v)
+
+
+def _pos_int(options: dict, key: str) -> int:
+    raw = options[key]
+    try:
+        v = int(raw)
+    except (TypeError, ValueError):
+        raise ValueError(f"Option '{key}' must be an integer, got {raw!r}") from None
+    if v < 1:
+        raise ValueError(f"Option '{key}' must be >= 1, got {v}")
+    return v
+
+
+def _bool(options: dict, key: str) -> bool:
+    raw = options[key]
+    v = str(raw).strip().lower()
+    if v in ("true", "1", "yes"):
+        return True
+    if v in ("false", "0", "no"):
+        return False
+    raise ValueError(f"Option '{key}' must be a boolean, got {raw!r}")
+
+
+def _replica_dirs(options: dict, key: str) -> tuple:
     """Parse + validate the replica roots: at most ``MAX_REPLICA_DIRS``
     absolute, distinct paths, so the option cannot map two copies onto
     one failure domain."""
-    raw = options.get(REPLAY_CACHE_REPLICA_DIRS)
-    dirs = tuple(p.strip() for p in str(raw or "").split(",") if p.strip())
+    dirs = tuple(p.strip() for p in str(options[key] or "").split(",") if p.strip())
     if len(dirs) > MAX_REPLICA_DIRS:
         raise ValueError(
-            f"Option '{REPLAY_CACHE_REPLICA_DIRS}' lists {len(dirs)} paths; "
-            f"at most {MAX_REPLICA_DIRS}"
+            f"Option '{key}' lists {len(dirs)} paths; at most {MAX_REPLICA_DIRS}"
         )
     for p in dirs:
         if not p.startswith("/"):
-            raise ValueError(
-                f"Option '{REPLAY_CACHE_REPLICA_DIRS}' paths must be "
-                f"absolute, got {p!r}"
-            )
+            raise ValueError(f"Option '{key}' paths must be absolute, got {p!r}")
     if len(set(dirs)) != len(dirs):
-        raise ValueError(
-            f"Option '{REPLAY_CACHE_REPLICA_DIRS}' paths must be distinct"
-        )
+        raise ValueError(f"Option '{key}' paths must be distinct")
     return dirs
+
+
+# A field's parser, by its annotation. An optional field set to "" is
+# unset; a required one raises.
+_PARSERS = {
+    "str": _require,
+    "int": _pos_int,
+    "bool": _bool,
+    "str | None": lambda o, k: str(o[k]) if o[k] != "" else None,
+    "int | None": lambda o, k: _pos_int(o, k) if o[k] != "" else None,
+    "tuple": _replica_dirs,
+}
+
+
+def _parse(cls, options: dict, declared: frozenset) -> dict:
+    """The fields of ``cls`` parsed, in field order, from the keys a
+    caller set; a required field must be set, and the field defaults
+    apply to the rest."""
+    options = _declared(options, declared)
+    return {
+        f.name: _PARSERS[f.type](options, _key(f))
+        for f in fields(cls)
+        if f.default is MISSING or options.get(_key(f)) is not None
+    }
 
 
 def validate_read_options(options: dict) -> PubsubReadOptions:
     """validateAndInitReadOptions (package.scala:138-155)."""
-    options = _declared(options, READ_OPTIONS)
-    return PubsubReadOptions(
-        project_id=_require(options, PROJECT_ID),
-        subscription=_require(options, SUBSCRIPTION),
-        broker_dir=_require(options, BROKER_DIR),
-        num_partitions=_pos_int(options, NUM_PARTITIONS, DEFAULT_NUM_PARTITIONS),
-        max_messages_per_partition=_pos_int(
-            options, MAX_MESSAGES_PER_PARTITION, DEFAULT_MAX_MESSAGES_PER_PARTITION
-        ),
-        dynamic_partitioning=_bool(options, DYNAMIC_PARTITIONING, False),
-        max_dynamic_partitions=_pos_int(
-            options, MAX_DYNAMIC_PARTITIONS, DEFAULT_MAX_DYNAMIC_PARTITIONS, minimum=32
-        ),
-        stream_id=(
-            str(options[STREAM_ID])
-            if options.get(STREAM_ID) not in (None, "")
-            else None
-        ),
-        replay_cache_replica_dirs=_replica_dirs(options),
-    )
+    return PubsubReadOptions(**_parse(PubsubReadOptions, options, READ_OPTIONS))
 
 
-def _resolve_sink_id(options: dict) -> str | None:
+def _resolve_sink_id(values: dict) -> str | None:
     """Stable writer identity. Explicit ``sink_id`` wins; otherwise the
     query's checkpoint location stands in (r15 review: pyspark 4.1.2
     constructs a SEPARATE writer instance per worker process — one for
@@ -257,52 +229,26 @@ def _resolve_sink_id(options: dict) -> str | None:
     continues its numbering. None only when the query has neither —
     e.g. a session-default checkpoint dir, which Spark resolves
     without putting it in the options."""
-    raw = options.get(SINK_ID)
-    if raw not in (None, ""):
-        return str(raw)
-    ck = _checkpoint_of(options)
-    if ck is not None:
-        return "ck:" + ck
-    return None
-
-
-def _checkpoint_of(options: dict) -> str | None:
-    """The query's checkpointLocation from the (lower-cased) options."""
-    ck = options.get(CHECKPOINT_LOCATION)
-    return str(ck) if ck not in (None, "") else None
+    if values.get("sink_id") is not None:
+        return values["sink_id"]
+    ck = values.get("checkpoint_location")
+    return None if ck is None else "ck:" + ck
 
 
 def validate_write_options(options: dict) -> PubsubWriteOptions:
     """validateAndInitWriteOption (package.scala:164-171)."""
-    options = _declared(options, WRITE_OPTIONS)
-    key = options.get(ORDERING_KEY)
-    return PubsubWriteOptions(
-        project_id=_require(options, PROJECT_ID),
-        topic=_require(options, TOPIC),
-        broker_dir=_require(options, BROKER_DIR),
-        ordering_key=str(key) if key not in (None, "") else None,
-        sink_id=_resolve_sink_id(options),
-        log_retention_bytes=(
-            _pos_int(options, LOG_RETENTION_BYTES, default=0, minimum=1)
-            if options.get(LOG_RETENTION_BYTES) not in (None, "")
-            else None
-        ),
-        checkpoint_location=_checkpoint_of(options),
-    )
+    values = _parse(PubsubWriteOptions, options, WRITE_OPTIONS)
+    values["sink_id"] = _resolve_sink_id(values)
+    return PubsubWriteOptions(**values)
 
 
-def calculate_partitions(
-    backlog: int, max_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS
-) -> int:
-    """clamp(ceil(backlog / BACKLOG_PER_PARTITION), 1, max_partitions)
+def calculate_partitions(backlog: int) -> int:
+    """clamp(ceil(backlog / BACKLOG_PER_PARTITION), 1, MAX_PARTITIONS)
     (PubsubSubscriptionMonitor.scala:136-141)."""
-    return max(1, min(max_partitions, math.ceil(backlog / BACKLOG_PER_PARTITION)))
+    return max(1, min(MAX_PARTITIONS, math.ceil(backlog / BACKLOG_PER_PARTITION)))
 
 
-def region_split(
-    backlog_by_region: dict[str, int],
-    max_partitions: int = DEFAULT_MAX_DYNAMIC_PARTITIONS,
-) -> list[tuple[str, int, int]]:
+def region_split(backlog_by_region: dict[str, int]) -> list[tuple[str, int, int]]:
     """``(region, partitions, backlog)`` per region, in region order, when
     one region holds more than ``REGION_SPLIT_SHARE`` of the backlog;
     else ``[]``, a plan over every region at once
@@ -314,8 +260,8 @@ def region_split(
         return []
     if max(backlog_by_region.values()) / total <= REGION_SPLIT_SHARE:
         return []
-    floor = calculate_partitions(total, max_partitions) // len(backlog_by_region)
+    floor = calculate_partitions(total) // len(backlog_by_region)
     return [
-        (region, max(floor, calculate_partitions(b, max_partitions)), b)
+        (region, max(floor, calculate_partitions(b)), b)
         for region, b in sorted(backlog_by_region.items())
     ]

@@ -1015,27 +1015,53 @@ def test_stream_id_reclaims_after_crash(spark, broker, broker_dir):
         r2.stop()
 
 
+def test_available_now_batch_plans_at_most_256_partitions(broker, broker_dir):
+    """S5 bound: one batch plans at most MAX_PARTITIONS (256) partitions,
+    the reference's per-batch cap, so a single availableNow trigger
+    drains min(backlog, 256 × max_messages). At one message per pull, a
+    300-message backlog plans 256 partitions, then the other 44 once
+    the first batch is committed."""
+    from spark_sql_pubsub_connector_spark.sources.options import MAX_PARTITIONS
+
+    _publish_canonical(broker, 300)
+    reader = _reader(
+        broker_dir, num_partitions=4, max_messages_per_partition=1
+    )
+    try:
+        seen = []
+        start = reader.initialOffset()
+        for want in (MAX_PARTITIONS, 44):
+            end = reader.latestOffset()
+            parts = reader.partitions(start, end)
+            assert len(parts) == want
+            seen.extend(r[2] for p in parts for r in _read_rows(reader, p))
+            reader.commit(end)
+            start = end
+        assert sorted(seen, key=int) == [str(i) for i in range(300)]
+        assert broker.backlog("s") == 0
+    finally:
+        reader.stop()
+
+
 def test_available_now_bounded_drain_across_runs(spark, broker_dir, tmp_path):
     """S5 under the Python DataSource API: PythonMicroBatchStream has no
     SupportsTriggerAvailableNow hook, so Trigger.AvailableNow falls back
     to single-batch execution. The source makes that single batch a
-    BOUNDED full drain — min(backlog, max_dynamic_partitions ×
-    max_messages) — and a backlog beyond the envelope drains across
-    repeated availableNow runs on the same checkpoint, exactly once."""
+    bounded full drain (see
+    test_available_now_batch_plans_at_most_256_partitions), and
+    repeated availableNow runs on the same checkpoint, with messages
+    published between them, drain every message exactly once."""
     b = FileBroker(broker_dir)
     b.create_topic("t")
     b.create_subscription("s", "t", ack_deadline_s=300)
-    _publish_canonical(b, 50)
-    n_msgs = 50
 
-    def run(name):
+    def run():
         df = read_stream(
             spark,
             broker_dir,
             "s",
-            max_messages_per_partition=1,  # envelope = 32 msgs/trigger
+            max_messages_per_partition=5,
             num_partitions=4,
-            max_dynamic_partitions=32,
             # stable identity: run 2 re-claims the subscription even if
             # run 1's reader teardown (stop→unregister) is still in
             # flight — exactly how a restarted production query avoids
@@ -1058,11 +1084,14 @@ def test_available_now_bounded_drain_across_runs(spark, broker_dir, tmp_path):
         assert q.awaitTermination(120)
         return seen
 
-    first = run("an_run1")
-    assert len(first) == 32  # bounded: one trigger ≤ the drain envelope
-    second = run("an_run2")
-    assert len(second) == 18  # restart resumed the counter and drained
-    assert sorted(first + second, key=int) == [str(i) for i in range(n_msgs)]
+    _publish_canonical(b, 30)
+    first = run()
+    assert sorted(first, key=int) == [str(i) for i in range(30)]
+    b.publish(
+        "t", [PubsubMessage(data=b"x", publish_ts_us=1) for _ in range(20)]
+    )
+    second = run()  # restart resumed the counter and drained the rest
+    assert sorted(first + second, key=int) == [str(i) for i in range(50)]
 
 
 def test_batch_read_write_unsupported(spark, broker_dir):
@@ -1755,7 +1784,7 @@ def test_dynamic_plan_scans_regions_once_per_batch(broker_dir, monkeypatch):
 
 
 def test_region_split_cap_keeps_a_minority_region(broker_dir):
-    """Under max_dynamic_partitions the regions take turns in the plan:
+    """Under the 256-partition cap the regions take turns in the plan:
     a hot region above the split threshold cannot crowd out a small
     region, which would then never be pulled while the hot one stays
     hot."""
@@ -1768,19 +1797,16 @@ def test_region_split_cap_keeps_a_minority_region(broker_dir):
         + [PubsubMessage(data=b"u", publish_ts_us=1, region="us-east1")] * 100,
     )
     reader = _reader(
-        broker_dir,
-        dynamic_partitioning="true",
-        max_dynamic_partitions=32,
-        max_messages_per_partition=1000,
+        broker_dir, dynamic_partitioning="true", max_messages_per_partition=100
     )
     try:
         parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
         regions = [p.value.region for p in parts]
         # each region is capped at the pulls its own backlog can fill:
-        # us-east1's 100 messages fill one 1,000-message pull
-        assert len(regions) == 32
+        # us-east1's 100 messages fill one 100-message pull
+        assert len(regions) == 256
         assert regions.count("us-east1") == 1
-        assert regions.count("asia-east1") == 31
+        assert regions.count("asia-east1") == 255
         first_us = regions.index("us-east1")
         rows = _read_rows(reader, parts[first_us])
         assert len(rows) == 100 and {r[4] for r in rows} == {b"u"}
@@ -2076,6 +2102,80 @@ def test_replica_root_switch_replays_from_the_planned_root(
         assert not os.path.exists(root_b)
     finally:
         new.stop()
+
+
+def test_replica_root_switch_with_the_primary_lost_before_restart(
+    broker, broker_dir, tmp_path, monkeypatch
+):
+    """A batch planned and pulled under replica root A, whose primary
+    copy (plan included) is lost before a restart under root B, replays
+    from A: the offset state records the roots of the last planned
+    batch, so the restart finds A's plan rather than planning the batch
+    anew (a re-pull under the held lease would return nothing). Commit
+    acks each message once and evicts A's copies; nothing is ever
+    written under B."""
+    import shutil as _shutil
+
+    _publish_canonical(broker, 20)
+    root_a, root_b = str(tmp_path / "root_a"), str(tmp_path / "root_b")
+    base = dict(num_partitions=1, max_messages_per_partition=20, stream_id="sid-lost")
+    old = _reader(broker_dir, replay_cache_replica_dirs=root_a, **base)
+    try:
+        start, end = old.initialOffset(), old.latestOffset()
+        (part,) = old.partitions(start, end)
+        first = _read_rows(old, part)
+        assert len(first) == 20
+        (rep_file,) = part.value.replica_files
+        with open(rep_file, "rb") as fh:
+            a_bytes = fh.read()
+    finally:
+        old.stop()  # uncommitted: the restart replans this batch
+    _shutil.rmtree(os.path.join(broker_dir, ".read_cache"))
+
+    new = _reader(broker_dir, replay_cache_replica_dirs=root_b, **base)
+    try:
+        parts = new.partitions(start, end)
+        assert [p.value.replica_files for p in parts] == [(rep_file,)]
+        assert [_read_rows(new, p) for p in parts] == [first]
+        with open(parts[0].value.cache_file, "rb") as fh:
+            assert fh.read() == a_bytes  # primary re-healed from A
+        acked = []
+        real_ack = new.broker.acknowledge
+
+        def record_ack(sub, ids):
+            acked.extend(ids)
+            return real_ack(sub, ids)
+
+        monkeypatch.setattr(new.broker, "acknowledge", record_ack)
+        new.commit(end)
+        assert sorted(acked) == sorted(r[1] for r in first)
+        assert len(set(acked)) == 20
+        assert broker.backlog("s") == 0
+        for root in (os.path.join(broker_dir, ".read_cache"), root_a):
+            assert os.listdir(os.path.join(root, "s", "sid-lost")) == []
+        assert not os.path.exists(root_b)
+    finally:
+        new.stop()
+
+
+def test_offset_state_without_replica_roots_reads_as_none(broker, broker_dir):
+    """An offset state file written before replica roots were recorded
+    reads as recording none, not as corrupt."""
+    state = os.path.join(broker_dir, ".offsets", "s.json")
+    os.makedirs(os.path.dirname(state))
+    with open(state, "w") as fh:
+        json.dump({"planned": 3, "committed": 2}, fh)
+    _publish_canonical(broker, 5)
+    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=5)
+    try:
+        start, end = reader.initialOffset(), reader.latestOffset()
+        assert (start, end) == ({"batch_id": 2}, {"batch_id": 4})
+        parts = reader.partitions(start, end)
+        assert sum(len(_read_rows(reader, p)) for p in parts) == 5
+        with open(state) as fh:
+            assert json.load(fh) == {"planned": 4, "committed": 2, "replica_roots": []}
+    finally:
+        reader.stop()
 
 
 def test_partitions_and_commit_never_list_the_broker_dir(

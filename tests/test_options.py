@@ -64,7 +64,7 @@ def test_read_range_violations_throw(key, bad):
     [
         ("dynamic_partitioning", "ture"),
         ("dynamic_partitioning", ""),
-        ("max_dynamic_partitions", "abc"),
+        ("num_partitions", ""),
     ],
 )
 def test_read_malformed_values_name_the_option(key, bad):
@@ -129,7 +129,7 @@ def test_batches_to_drain_formula(tmp_path):
     """S5: each latestOffset advances the offset by
     ceil(backlog / capacity) units, capacity = partitions × max messages
     (PubsubSubscriptionMonitor.scala:96-113 semantics), capped at
-    max_dynamic_partitions // partitions units."""
+    MAX_PARTITIONS // partitions units (256 // 4 = 64)."""
     from spark_sql_pubsub_connector_spark.sources.broker import (
         FileBroker,
         PubsubMessage,
@@ -148,7 +148,6 @@ def test_batches_to_drain_formula(tmp_path):
             "broker_dir": str(tmp_path / "broker"),
             "num_partitions": "4",
             "max_messages_per_partition": "10",
-            "max_dynamic_partitions": "32",
         }
     )
 
@@ -160,8 +159,8 @@ def test_batches_to_drain_formula(tmp_path):
         assert reader.latestOffset() == {"batch_id": 0}  # empty backlog
         b.publish("t", msgs(95))
         assert reader.latestOffset() == {"batch_id": 3}  # ceil(95/40)
-        b.publish("t", msgs(905))  # ceil(1000/40) = 25 units > 32 // 4
-        assert reader.latestOffset() == {"batch_id": 3 + 8}
+        b.publish("t", msgs(2_905))  # ceil(3000/40) = 75 units > 256 // 4
+        assert reader.latestOffset() == {"batch_id": 3 + 64}
     finally:
         reader.stop()
 
@@ -177,17 +176,24 @@ def test_batches_to_drain_formula(tmp_path):
             "max_messages_per_partition",
         ),
         # removed options: the sink stages one segment per task, and the
-        # planner's two thresholds are the reference's constants
+        # planner's two thresholds and its partition cap are the
+        # reference's constants
         (validate_write_options, BASE_WRITE, "publish_batch_size", None),
         (validate_read_options, BASE_READ, "backlog_threshold", None),
         (validate_read_options, BASE_READ, "region_split_threshold", None),
+        (
+            validate_read_options,
+            BASE_READ,
+            "max_dynamic_partitions",
+            "dynamic_partitioning",
+        ),
     ],
 )
 def test_unknown_option_keys_are_rejected(validate, base, key, closest):
     """An undeclared key raises, naming it and the closest declared key,
     instead of leaving its option silently at the default."""
     with pytest.raises(ValueError, match=f"Unknown option '{key}'") as ei:
-        validate({**base, key: "5"})
+        validate({**base, key: "abc"})
     if closest is not None:
         assert f"did you mean '{closest}'" in str(ei.value)
 
@@ -265,16 +271,10 @@ def test_reader_reads_only_declared_options(tmp_path):
     """Every key the stream reader reads from its options map is one
     declared in options.py, so the option surface is stated in one
     place and validated there."""
-    from spark_sql_pubsub_connector_spark.sources import options as options_mod
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         PubsubStreamReader,
     )
-
-    declared = {
-        v
-        for k, v in vars(options_mod).items()
-        if k.isupper() and not k.startswith("DEFAULT_") and isinstance(v, str)
-    }
+    from spark_sql_pubsub_connector_spark.sources.options import READ_OPTIONS
 
     class Recording(dict):
         def __init__(self, *args):
@@ -298,4 +298,28 @@ def test_reader_reads_only_declared_options(tmp_path):
     )
     PubsubStreamReader(opts).stop()
     assert "dynamic_partitioning" in opts.read
-    assert opts.read <= declared, sorted(opts.read - declared)
+    assert opts.read <= READ_OPTIONS, sorted(opts.read - READ_OPTIONS)
+
+
+def test_declared_keys_are_the_dataclass_fields():
+    """Each option is declared once, as its dataclass field; the key
+    sets derive from the fields, Spark's lower-cased checkpointLocation
+    being the one key spelled apart from its field's name."""
+    from dataclasses import fields
+
+    from spark_sql_pubsub_connector_spark.sources.options import (
+        READ_OPTIONS,
+        WRITE_OPTIONS,
+        PubsubReadOptions,
+        PubsubWriteOptions,
+    )
+
+    assert READ_OPTIONS == {f.name for f in fields(PubsubReadOptions)}
+    assert len(READ_OPTIONS) == 8
+    assert WRITE_OPTIONS == (
+        {f.name for f in fields(PubsubWriteOptions)} - {"checkpoint_location"}
+    ) | {"checkpointlocation"}
+    assert len(WRITE_OPTIONS) == 7
+    # unset keys take the field defaults
+    assert validate_read_options(BASE_READ) == PubsubReadOptions("p", "s", "/tmp/b")
+    assert validate_write_options(BASE_WRITE) == PubsubWriteOptions("p", "t", "/tmp/b")
