@@ -32,8 +32,8 @@ Overflow headroom — measured, two tiers:
   MEASURED at +141% warm wall on q01's agg (Spark's >18-digit decimal
   sum buffer leaves the compact-long fast path), so the narrow form
   stays the default at bench scales; switch call sites to the wide
-  form when deploying past ~sf25,000 per group (the r12 PARITY note
-  records the measurement).
+  form when deploying past ~sf25,000 per group (PARITY.md §3,
+  "Exact-accumulator cost", records the measurement).
 
 The SQL-text twins (`sql_esum`/`sql_eavg`) keep the DuckDB oracle
 expression structurally identical to the Spark plan.

@@ -1647,48 +1647,8 @@ def q110_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q113 — grouped-map robust stats (batch applyInPandas)
+# q113 — robust length stats (value histogram)
 # --------------------------------------------------------------------------
-def _robust_stats(pdf):
-    """Per-group discrete median/MAD in pandas — quantile with
-    interpolation='lower' keeps every statistic an exact integer, so
-    the DuckDB twin (quantile_disc) matches bit-for-bit.
-
-    NOT on the q113 query path (the operator is the histogram form —
-    a grouped-map stage whose frames grow with corpus size would OOM
-    at 100 TB). Kept as the batch ``applyInPandas`` reference
-    implementation: ``robust_length_stats_grouped_map`` below drives
-    it, and the differential test asserts it equals q113 exactly."""
-    import pandas as pd
-
-    lens = pdf["n_chars"].astype("int64")
-    med = int(lens.quantile(0.5, interpolation="lower"))
-    mad = int((lens - med).abs().quantile(0.5, interpolation="lower"))
-    return pd.DataFrame(
-        {
-            "source": [pdf["source"].iloc[0]],
-            "n_docs": pd.Series([len(lens)], dtype="int64"),
-            "median_len": pd.Series([med], dtype="int64"),
-            "mad_len": pd.Series([mad], dtype="int64"),
-        }
-    )
-
-
-def robust_length_stats_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch ``applyInPandas`` twin of q113 — each source's rows arrive
-    as ONE pandas frame. This is the grouped-map API-surface demo
-    (next to mapInPandas q27, mapInArrow q112, applyInPandasWithState
-    q33, transformWithState q48), suitable only where every group is
-    known to fit one worker's memory; the registered q113 operator is
-    the histogram form, which has no such bound. The streaming
-    differential suite asserts the two agree bit-for-bit."""
-    docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
-    return docs.groupBy("source").applyInPandas(
-        _robust_stats,
-        schema="source string, n_docs long, median_len long, mad_len long",
-    )
-
-
 @query(
     "q113_robust_length_stats",
     oracle="""
@@ -1718,10 +1678,7 @@ def q113_robust_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus size), and a cumulative-sum walk to the target rank.
     pandas ``quantile(0.5, interpolation='lower')`` picks 0-based
     index floor((n-1)/2); the cumulative filter mirrors that exactly,
-    so the result is still bit-equal to DuckDB ``quantile_disc``
-    (asserted against the retained grouped-map twin,
-    :func:`robust_length_stats_grouped_map`, in the differential
-    suite).
+    so the result is still bit-equal to DuckDB ``quantile_disc``.
 
     Scale: the histogram aggregate (partial+final, keyed
     (source, n_chars)) does the only data-sized shuffle; the windows

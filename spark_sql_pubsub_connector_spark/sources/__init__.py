@@ -3,7 +3,8 @@
 Re-expresses the reference connector's machinery (SURVEY.md §2.1
 S1-S19) Spark-first:
 
-  options.py     option validation + partition-planning value objects
+  options.py     option declarations and validation, plus the planning
+                 constants and helpers (calculate_partitions, region_split)
   broker.py      broker abstraction: file-backed fake (cross-process;
                  each topic a directory of immutable Arrow IPC
                  segments named by seq range and a head.json, the

@@ -27,9 +27,11 @@ Parity map to the reference (SURVEY.md §2.1):
          zero availableNow mentions in pyspark.sql.datasource, no new
          DataSourceStreamReader methods): still no
          SupportsTriggerAvailableNow analog — watch item stands.
-         The backlog counts leased messages, so the batch after a
-         drain's last data batch still exists: Spark calls commit() only
-         while it builds the next batch, and that batch carries the ack
+         Spark calls commit() only while it builds the next batch, so
+         latestOffset() advances while a batch this reader planned with
+         partitions waits for its ack, and that next batch carries it.
+         Otherwise it advances only when something is deliverable:
+         messages under another consumer's lease plan no batch
   S6/S13 per-batch partition planning in one path, _plan — static
          num_partitions, or backlog-driven with per-region splits
          (options.calculate_partitions / region_split; the reader scans
@@ -388,6 +390,10 @@ class PubsubStreamReader(DataSourceStreamReader):
         # drives the offset lifecycle.
         self._registered = False
         self._beat = -math.inf  # time.monotonic() of the last registry write
+        # End offset of the last batch planned with partitions: its ack
+        # rides on the next batch. None until the first latestOffset
+        # looks for one in this stream's cache dirs.
+        self._ack_due: int | None = None
 
     def _ensure_registered(self) -> None:
         if not self._registered:
@@ -505,11 +511,24 @@ class PubsubStreamReader(DataSourceStreamReader):
         # batch units needed to drain the current backlog, bounded so a
         # single trigger never plans more than MAX_PARTITIONS tasks (the
         # reference's 256×1000 ingest envelope, BASELINE.md); a static
-        # num_partitions above the cap still advances one unit
+        # num_partitions above the cap still advances one unit. The
+        # backlog counts leased messages, so advance only for a batch
+        # that can pull or one that carries a pending ack: leases held
+        # by another consumer would otherwise plan empty batches until
+        # they expire.
         self._ensure_registered()
-        backlog = self.broker.backlog(self.opts.subscription)
+        if self._ack_due is None:
+            self._ack_due = max(
+                (hi for _, hi, d in self._cached_batches()
+                 if any(f.startswith("part-") for f in os.listdir(d))),
+                default=0,
+            )
+        sub = self.opts.subscription
+        backlog = self.broker.backlog(sub)
         n = self._last
-        if backlog > 0:
+        if backlog > 0 and (
+            self._ack_due > self._committed or self.broker.deliverable(sub) > 0
+        ):
             base = self._partitions_per_unit(backlog)
             capacity = base * self.opts.max_messages_per_partition
             max_units = max(1, MAX_PARTITIONS // base)
@@ -563,6 +582,8 @@ class PubsubStreamReader(DataSourceStreamReader):
             dirs = self._batch_dirs(batch_key, roots)
             for d in dirs[1:] + dirs[:1]:  # primary last, as for parts
                 _write_atomic(os.path.join(d, _PLAN_FILE), data)
+        if regions:
+            self._ack_due = max(self._ack_due or 0, end["batch_id"])
 
         cache_dir, *replica_dirs = self._batch_dirs(batch_key, roots)
         return [
@@ -587,6 +608,21 @@ class PubsubStreamReader(DataSourceStreamReader):
         """The configured replica roots, then those of the last planned
         batch."""
         return tuple(dict.fromkeys(self.opts.replay_cache_replica_dirs + self._roots))
+
+    def _cached_batches(self):
+        """``(batch_key, end offset, dir)`` of each batch dir under this
+        stream's primary root, its configured replica roots and those of
+        the last planned batch."""
+        for root in (None, *self._known_roots()):
+            stream_dir = _stream_cache_dir(self.opts, self.stream_id, root)
+            if not os.path.isdir(stream_dir):
+                continue
+            for batch_key in os.listdir(stream_dir):
+                try:
+                    hi = int(batch_key.split("-")[-1])
+                except ValueError:
+                    continue
+                yield batch_key, hi, os.path.join(stream_dir, batch_key)
 
     def _batch_dirs(self, batch_key: str, replica_roots) -> list[str]:
         """The batch's dir under the primary root, then under each of
@@ -662,20 +698,9 @@ class PubsubStreamReader(DataSourceStreamReader):
         end_id = end["batch_id"]
         # batch_key -> the dirs of that batch found under those roots
         found: dict[str, list[str]] = {}
-        for root in (None, *self._known_roots()):
-            stream_dir = _stream_cache_dir(self.opts, self.stream_id, root)
-            if not os.path.isdir(stream_dir):
-                continue
-            for batch_key in os.listdir(stream_dir):
-                try:
-                    hi = int(batch_key.split("-")[-1])
-                except ValueError:
-                    continue
-                if hi > end_id:
-                    continue
-                found.setdefault(batch_key, []).append(
-                    os.path.join(stream_dir, batch_key)
-                )
+        for batch_key, hi, batch_dir in self._cached_batches():
+            if hi <= end_id:
+                found.setdefault(batch_key, []).append(batch_dir)
         for batch_key, dirs in found.items():
             plan = _first_readable(
                 [os.path.join(d, _PLAN_FILE) for d in dirs], _load_plan

@@ -1694,19 +1694,88 @@ def test_ack_only_batch_plans_no_partitions_even_after_restart(broker, broker_di
 
 def test_batch_planned_over_leased_backlog_is_empty(broker, broker_dir):
     """Messages leased by another consumer are backlog but not
-    deliverable: a batch planned over them alone runs no tasks."""
+    deliverable: the offset does not advance over them, and a batch
+    planned over them alone runs no tasks."""
     _publish_canonical(broker, 10)
     zombie = broker.pull("s", 10)
     assert len(zombie) == 10
     reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
     try:
-        start, end = reader.initialOffset(), reader.latestOffset()
-        assert end["batch_id"] > start["batch_id"]
+        start = reader.initialOffset()
+        assert reader.latestOffset() == start
+        end = {"batch_id": start["batch_id"] + 1}
         assert reader.partitions(start, end) == []
         reader.commit(end)
         assert broker.backlog("s") == 10  # the zombie's leases stand
     finally:
         reader.stop()
+
+
+def test_foreign_leases_do_not_advance_the_offset(broker, broker_dir):
+    """Messages another consumer holds under lease (a crashed
+    predecessor's, or a plain pull on the same subscription) count as
+    backlog, yet no batch of this reader can pull them: latestOffset
+    holds at initialOffset instead of planning an empty batch per call
+    until the leases expire."""
+    _publish_canonical(broker, 10)
+    assert len(FileBroker(broker_dir).pull("s", 10)) == 10
+    reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
+    try:
+        start = reader.initialOffset()
+        assert [reader.latestOffset() for _ in range(5)] == [start] * 5
+    finally:
+        reader.stop()
+
+
+def test_data_batch_is_followed_by_one_ack_only_batch(broker, broker_dir):
+    """Spark acks a batch while it builds the next one, so the offset
+    advances once more after the batch that took every message, and
+    then holds once that ack has landed."""
+    _publish_canonical(broker, 20)
+    reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
+    try:
+        b0 = reader.initialOffset()
+        b1 = reader.latestOffset()
+        assert sum(len(_read_rows(reader, p)) for p in reader.partitions(b0, b1)) == 20
+        b2 = reader.latestOffset()  # carries batch b1's ack
+        assert b2["batch_id"] > b1["batch_id"]
+        reader.commit(b1)
+        assert reader.partitions(b1, b2) == []
+        assert [reader.latestOffset() for _ in range(3)] == [b2] * 3
+    finally:
+        reader.stop()
+
+
+def test_stable_stream_restart_after_a_normal_finish_runs_no_batch(
+    spark, broker, broker_dir, tmp_path
+):
+    """A query with a stable stream_id that drained its backlog and
+    stopped leaves no batch for its successor on the same checkpoint:
+    the restarted query writes no offset log entry."""
+    _publish_canonical(broker, 30)
+    broker.create_topic("t2")
+    ck = str(tmp_path / "ck_restart")
+
+    def run():
+        src = read_stream(
+            spark, broker_dir, "s", max_messages_per_partition=10,
+            num_partitions=2, stream_id="stable",
+        )
+        q = write_stream(src.select("data", "attributes"), broker_dir, "t2", ck)
+        try:
+            deadline = time.time() + 120
+            while time.time() < deadline and broker.backlog("s") > 0:
+                time.sleep(0.2)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+        return sorted(os.listdir(os.path.join(ck, "offsets")))
+
+    first = run()
+    assert broker.backlog("s") == 0
+    assert run() == first
+    assert len(broker.topic_messages("t2")) == 30
 
 
 _DS_LOGGER = "spark_sql_pubsub_connector_spark.sources.datasource"

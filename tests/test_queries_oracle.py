@@ -35,18 +35,3 @@ def test_entry_smoke(spark):
     assert names == set(SPECS)
     assert set(oracles) == {n for n, s in SPECS.items() if s.oracle is not None}
 
-
-def test_q113_grouped_map_twin_matches_histogram(spark, sf_dir):
-    """The retained batch applyInPandas reference implementation must
-    agree bit-for-bit with the registered histogram-form q113 — this
-    both exercises the grouped-map API surface and differentially
-    tests the cumulative-rank median/MAD derivation."""
-    from spark_sql_pubsub_connector_spark.plans.text import (
-        robust_length_stats_grouped_map,
-    )
-
-    hist = sorted(
-        tuple(r) for r in SPECS["q113_robust_length_stats"].build(spark, sf_dir).collect()
-    )
-    gm = sorted(tuple(r) for r in robust_length_stats_grouped_map(spark, sf_dir).collect())
-    assert hist == gm and len(hist) > 0

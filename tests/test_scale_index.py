@@ -1,5 +1,5 @@
 """Pins for ``tools/scale_index.py`` — the consolidated scale-evidence
-index the judge reads in PARITY. Round 11's verdict found the index
+index PARITY.md carries. Round 11's verdict found the index
 citing superseded bodies for exactly the two queries that round fixed
 (q22's capped-codebook artifact, q91's pre-fix solo artifact), caused
 by (a) no body-staleness awareness and (b) a lexicographic equal-scale
@@ -129,3 +129,12 @@ def test_artifact_round_parses_probe_filenames():
     assert ar("SCALE_r11.json") == 11
     assert ar("SCALE100_r11_q91_fixed.json") == 11
     assert ar("SCALE_nostamp.json") is None
+
+
+def test_default_root_is_the_measurements_dir():
+    """With no argument the index reads ``artifacts/measurements/``, and
+    every artifact a row cites lives there."""
+    best = scale_index.collect()
+    assert len(best) > 0
+    for _scale, _ratio, _wall, artifact in best.values():
+        assert (Path(scale_index.MEASUREMENTS) / artifact).is_file(), artifact

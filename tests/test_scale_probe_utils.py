@@ -237,14 +237,15 @@ def test_adjudication_applies_to_real_r8_artifacts(capsys):
     """The shipped r8 artifacts themselves: gating either against a
     copy of itself must apply its own adjudication to BOTH sides and
     pass — proving the fix reads the real committed block shapes."""
-    repo = os.path.join(os.path.dirname(__file__), "..")
+    measurements = os.path.join(
+        os.path.dirname(__file__), "..", "artifacts", "measurements"
+    )
     for name, scale, raw, honest in (
         ("SCALE100_r08.json", "100", 1.21, 4.89),
         ("SCALE1000_r08_q54.json", "1000", 4.43, 9.03),
     ):
-        p = os.path.join(repo, name)
-        if not os.path.exists(p):  # artifact pruned in a later round
-            continue
+        p = os.path.join(measurements, name)
+        assert os.path.exists(p), p
         assert compare(p, p) == 0
         out = json.loads(capsys.readouterr().out)
         assert out["failures"] == []

@@ -8,7 +8,7 @@ split the calibration family across artifacts.
 
 Probe family (established r5): one CPU/codegen-bound probe, one
 shuffle-bound probe, min-of-3. Normal-host family on this box:
-cpu 0.29-0.34 s (see PARITY's drift-adjudication protocol).
+cpu 0.29-0.34 s (see PARITY.md §3, "Drift-adjudication protocol").
 """
 
 from __future__ import annotations

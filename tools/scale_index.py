@@ -1,11 +1,11 @@
 """Consolidated scale-evidence index: one row per query, the LARGEST
 scale it has ever been measured at, across every SCALE*.json artifact
-in the repo root.
+in artifacts/measurements/.
 
 The per-round artifacts answer "did this round regress?" (--compare);
-this index answers the coverage question the judge reads PARITY for:
-"which queries have real measurements at which scale, and what did
-they say?" Regenerate and re-paste into PARITY when coverage moves:
+this index answers the coverage question: "which queries have real
+measurements at which scale, and what did they say?" Regenerate and
+re-paste into PARITY.md §3 when coverage moves:
 
     python tools/scale_index.py            # markdown table on stdout
 
@@ -19,8 +19,8 @@ SUPERSEDED pins the body-staleness exclusions (VERDICT r11 #2): a
 (artifact, query) pair listed there measured a body that was fixed in
 a later commit, so indexing it would report the defect the fix
 removed. Entries are added when a fix round re-measures the query;
-they are never auto-derived (the ledger in PARITY.md records the
-body-change rounds the entries cite).
+they are never auto-derived (PARITY.md §3, "Scale coverage", gives the
+rationale; each entry's comment names the fixing commit).
 """
 
 from __future__ import annotations
@@ -32,9 +32,10 @@ import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MEASUREMENTS = os.path.join(REPO, "artifacts", "measurements")
 
-# Body-staleness exclusions, two forms (kept in sync with the PARITY
-# ledger's last-body-change column):
+# Body-staleness exclusions, two forms (each entry cites the commit
+# that last changed the query's body):
 #
 # - SUPERSEDED_BEFORE_ROUND[query] = R: every artifact whose filename
 #   round number (the _rNN_ token all probe artifacts carry) is < R
@@ -76,7 +77,7 @@ def artifact_round(basename: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def collect(root: str = REPO) -> dict[str, tuple[int, float, float | None, str]]:
+def collect(root: str = MEASUREMENTS) -> dict[str, tuple[int, float, float | None, str]]:
     """query -> (max_scale, ratio, wall_s, artifact)."""
     # query -> (scale, recorded_utc, filename, ratio, wall)
     best: dict[str, tuple[int, str, str, float, float | None]] = {}

@@ -30,10 +30,11 @@ Replication preserves workload shape instead of creating pathology:
 
 Usage:
     python tools/scale_probe.py [R ...]        # default: 1 2 5 10
-    python tools/scale_probe.py --all 1 25 --out SCALE_r06.json
+    python tools/scale_probe.py --all 1 25 --out artifacts/measurements/SCALE_r06.json
     python tools/scale_probe.py --only q22_embedding_neardup 1 25
     python tools/scale_probe.py --shared-vocab --only q78_lm_doc_score 1 25
-    python tools/scale_probe.py --compare SCALE_r05.json SCALE_r06.json
+    python tools/scale_probe.py --compare artifacts/measurements/SCALE_r05.json \
+        artifacts/measurements/SCALE_r06.json
     SPARK_GRAFT_SF_DIR=...                     # base fixtures (sf0.1)
 
 Prints one JSON line per scale with per-query wall seconds, plus a
