@@ -6,7 +6,8 @@ Parity map to the reference (SURVEY.md §2.1):
   S4     synthetic monotone batch-counter offsets ({"batch_id": n}) —
          Pub/Sub has no offsets (PubsubMicroBatchStream.scala:35-38).
          The counter survives restarts: persisted per subscription
-         (.offsets/) and re-synced from checkpointed offsets in
+         (.offsets/), with the plan of every batch planned but not yet
+         committed, and re-synced from checkpointed offsets in
          partitions()/commit(), mirroring the reference's
          deserializeOffset + processedOffsets re-sync
          (PubsubMicroBatchStream.scala:87-89)
@@ -56,17 +57,19 @@ Parity map to the reference (SURVEY.md §2.1):
          of re-pulling (RDD-block cache analog,
          PubsubPartitionReader.scala:33-70). A copy that exists but
          does not read (zero-length, truncated, older format) fails the
-         task rather than re-pulling. The batch's plan is persisted
-         beside its parts the first time it is planned: its partitions'
-         regions and the replica roots (replay_cache_replica_dirs) it was
-         planned under, which the offset state also records for the
-         last planned batch. A replan rebuilds the same partitions over
-         the same copies whatever the configuration says by then, the
-         primary copy lost included; a batch dir holding parts but no
-         readable plan fails planning
+         task rather than re-pulling. The batch's plan is recorded in
+         the offset state before its first copy exists, and dropped
+         when the batch commits: its partitions' regions and the
+         replica roots (replay_cache_replica_dirs) it was planned
+         under. A replan rebuilds the same partitions over the same
+         copies whatever the configuration says by then, the primary
+         copy lost included; a batch dir holding parts but no plan
+         fails planning. A dead stream's copies are purged, unacked,
+         under the primary, the configured roots and the roots its
+         held plans name
   S10/S11 ack-on-commit: ack ids ride in the cache files' ack_id column
          (the accumulator analog); commit(end) acks each batch with one
-         broker call and evicts the batch's cache
+         broker call, evicts its cache and drops its plan
          (PubsubMicroBatchStream.scala:93-114; the reference's
          1500-id request chunking lives in RealBrokerClient.acknowledge)
   S12    single-consumer stream registry (registry.py)
@@ -125,7 +128,6 @@ from .registry import _STALE_AFTER_S, StreamRegistry
 _log = logging.getLogger(__name__)
 
 _PART_SUFFIX = ".arrow"  # replay-cache part files (Arrow IPC)
-_PLAN_FILE = "plan.json"  # a batch's partition plan, beside its parts
 # A live reader refreshes its registry claim at most this often, well
 # inside the claim's expiry.
 _HEARTBEAT_EVERY_S = _STALE_AFTER_S / 10
@@ -190,10 +192,13 @@ def _offset_state_path(opts: PubsubReadOptions) -> str:
     processedOffsets = end in planInputPartitions); the Python API
     builds a fresh reader on restart, so the counter must also survive
     the process — otherwise latestOffset() regresses behind the
-    checkpoint and the stream stalls until it catches back up. The
-    state also records the replica roots of the last planned batch, so
-    a restart under other roots still finds that batch's plan and
-    copies when the primary copy is lost."""
+    checkpoint and the stream stalls until it catches back up.
+
+    ``{"planned", "committed", "stream_id", "plans"}``: ``plans`` maps
+    each batch key planned but not yet committed by ``stream_id`` to
+    its ``{"regions", "replica_roots"}``, the one record of where its
+    copies live, so a restart under other roots finds them even with
+    the primary copy lost."""
     return os.path.join(
         opts.broker_dir, ".offsets", _sanitize(opts.subscription) + ".json"
     )
@@ -273,20 +278,23 @@ def _load_ack_ids(path: str) -> list[str]:
         ]
 
 
-def _load_plan(path: str) -> tuple[list, list]:
-    """``(regions, replica_roots)`` of a batch's plan. An older bare-list
-    plan does not index by name (TypeError), so it reads as corrupt,
-    never as a plan without replicas."""
-    with open(path) as fh:
-        plan = json.load(fh)
-    return plan["regions"], plan["replica_roots"]
+def _part_file(batch_dir: str, i: int) -> str:
+    return os.path.join(batch_dir, f"part-{i:05d}{_PART_SUFFIX}")
+
+
+def _listdir(path: str) -> list[str]:
+    """``os.listdir(path)``, or none when ``path`` is absent."""
+    try:
+        return os.listdir(path)
+    except FileNotFoundError:
+        return []
 
 
 def _first_readable(paths, load):
     """``(path, load(path))`` for the first copy in ``paths`` that loads,
     or None when no copy exists. Copies that exist but none of which
-    loads raise: re-pulling or re-planning in their place would change
-    what an already-planned batch replays or acks (ADVICE r12)."""
+    loads raise: re-pulling in their place would change what an
+    already-planned batch replays or acks (ADVICE r12)."""
     import pyarrow as pa
 
     bad = []
@@ -295,12 +303,12 @@ def _first_readable(paths, load):
             return path, load(path)
         except FileNotFoundError:
             continue
-        except (OSError, ValueError, KeyError, TypeError, pa.ArrowException):
+        except (OSError, ValueError, KeyError, pa.ArrowException):
             bad.append(path)
     if bad:
         raise RuntimeError(
             f"pubsub replay cache: {bad[0]} exists but no copy is parseable "
-            f"({len(paths)} paths checked); refusing to re-pull or re-plan "
+            f"({len(paths)} paths checked); refusing to re-pull "
             "— that would silently change the planned batch"
         )
     return None
@@ -316,9 +324,9 @@ def _pull_or_replay(payload: _PartitionPayload):
     path before the primary (the primary's existence is the commit
     point), and a replay that finds the primary missing or corrupted
     serves from the first healthy replica — re-healing the primary AND
-    any other lost copy with the same bytes, plan included, so
-    redundancy never silently degrades below the planned copy count —
-    instead of re-pulling. This mirrors the reference's 2× replicated
+    any other lost copy with the same bytes, so redundancy never
+    silently degrades below the planned copy count — instead of
+    re-pulling. This mirrors the reference's 2× replicated
     persist of the pulled batch (PubsubPartitionReader.scala:57,
     MEMORY_AND_DISK_SER_2): losing one copy between pull and commit
     never changes what the batch replays.
@@ -336,11 +344,7 @@ def _pull_or_replay(payload: _PartitionPayload):
     if found is not None:
         source, (data, batches) = found
         if source != payload.cache_file:
-            # served from a replica: re-heal every other lost copy, the
-            # batch's plan first, so that no batch dir holds parts
-            # without the plan that names its roots
-            with open(os.path.join(os.path.dirname(source), _PLAN_FILE), "rb") as fh:
-                plan = fh.read()
+            # served from a replica: re-heal every other lost copy
             healed = []
             for path in copies:
                 if path == source:
@@ -348,7 +352,6 @@ def _pull_or_replay(payload: _PartitionPayload):
                 try:
                     _load_ipc(path)
                 except (OSError, ValueError, pa.ArrowException):
-                    _write_atomic(os.path.join(os.path.dirname(path), _PLAN_FILE), plan)
                     _write_atomic(path, data)
                     healed.append(path)
             if healed:
@@ -381,7 +384,17 @@ class PubsubStreamReader(DataSourceStreamReader):
         st = self._restore_state()
         self._last = st["planned"]  # high-water mark of planned offsets
         self._committed = st["committed"]  # floor: all acked below this
-        self._roots = st["replica_roots"]  # of the last planned batch
+        # batch key -> {"regions", "replica_roots"} of each batch planned
+        # and not yet committed. Another stream's plans are not ours to
+        # replay or ack: registration purges its copies, unacked, under
+        # the roots they name.
+        self._plans = st["plans"]
+        self._dead_roots = ()
+        if st["stream_id"] != self.stream_id:
+            self._dead_roots = tuple(
+                r for plan in self._plans.values() for r in plan["replica_roots"]
+            )
+            self._plans = {}
         self.broker = FileBroker(self.opts.broker_dir)
         self.registry = StreamRegistry(self.opts.broker_dir)
         # S12 guard is claimed lazily on the first offset/partition call:
@@ -390,10 +403,6 @@ class PubsubStreamReader(DataSourceStreamReader):
         # drives the offset lifecycle.
         self._registered = False
         self._beat = -math.inf  # time.monotonic() of the last registry write
-        # End offset of the last batch planned with partitions: its ack
-        # rides on the next batch. None until the first latestOffset
-        # looks for one in this stream's cache dirs.
-        self._ack_due: int | None = None
 
     def _ensure_registered(self) -> None:
         if not self._registered:
@@ -420,11 +429,12 @@ class PubsubStreamReader(DataSourceStreamReader):
         foreign dir belongs to a dead query; its messages must be
         redelivered by lease expiry, never acked by us (ADVICE r2:
         acking a predecessor's cached ack_ids drops messages this query
-        skipped as leased). The configured replica roots are swept the
-        same way; a root no longer configured is not."""
+        skipped as leased). The configured replica roots and those the
+        dead stream's held plans name are swept the same way."""
         own = _sanitize(self.stream_id)
         purged = []
-        for base in (None, *self.opts.replay_cache_replica_dirs):
+        roots = (None, *self.opts.replay_cache_replica_dirs, *self._dead_roots)
+        for base in dict.fromkeys(roots):
             root = _read_cache_dir(self.opts, base)
             if not os.path.isdir(root):
                 continue
@@ -441,25 +451,30 @@ class PubsubStreamReader(DataSourceStreamReader):
 
     # -- offsets (S4/S5) ---------------------------------------------------
     def _restore_state(self) -> dict:
-        """The persisted counters and roots; a missing file starts at 0
-        with no roots, and a file written before roots were recorded
-        has none. A file that does not parse raises: reading it as 0
-        would re-plan already-committed batch keys (ROADMAP direction
+        """The persisted counters, stream_id and held plans; a missing
+        file starts at 0 with none, and a file written before plans were
+        recorded holds none. A file or plan that does not parse raises:
+        reading it as 0 would re-plan already-committed batch keys, and
+        dropping a plan would re-plan a pulled batch (ROADMAP direction
         3)."""
         path = _offset_state_path(self.opts)
         try:
             with open(path) as fh:
                 raw = fh.read()
         except FileNotFoundError:
-            return {"planned": 0, "committed": 0, "replica_roots": ()}
+            return {"planned": 0, "committed": 0, "stream_id": None, "plans": {}}
         try:
             st = json.loads(raw)
             return {
                 "planned": int(st["planned"]),
                 "committed": int(st["committed"]),
-                "replica_roots": tuple(st.get("replica_roots", ())),
+                "stream_id": st.get("stream_id"),
+                "plans": {
+                    key: {"regions": p["regions"], "replica_roots": p["replica_roots"]}
+                    for key, p in st.get("plans", {}).items()
+                },
             }
-        except (ValueError, KeyError, TypeError) as e:
+        except (ValueError, KeyError, TypeError, AttributeError) as e:
             raise ValueError(f"corrupt pubsub offset state {path}: {e}") from e
 
     def _persist_state(self) -> None:
@@ -469,14 +484,17 @@ class PubsubStreamReader(DataSourceStreamReader):
                 {
                     "planned": self._last,
                     "committed": self._committed,
-                    "replica_roots": self._roots,
+                    "stream_id": self.stream_id,
+                    "plans": self._plans,
                 }
             ),
         )
 
-    def _advance_to(self, n: int, committed: bool = False) -> None:
-        """Monotone counter update + persistence (only on increase)."""
-        changed = False
+    def _advance_to(
+        self, n: int, committed: bool = False, changed: bool = False
+    ) -> None:
+        """Monotone counter update; persists the state when a counter
+        rose or the caller ``changed`` the held plans."""
         if n > self._last:
             self._last = n
             changed = True
@@ -517,18 +535,11 @@ class PubsubStreamReader(DataSourceStreamReader):
         # by another consumer would otherwise plan empty batches until
         # they expire.
         self._ensure_registered()
-        if self._ack_due is None:
-            self._ack_due = max(
-                (hi for _, hi, d in self._cached_batches()
-                 if any(f.startswith("part-") for f in os.listdir(d))),
-                default=0,
-            )
         sub = self.opts.subscription
         backlog = self.broker.backlog(sub)
         n = self._last
-        if backlog > 0 and (
-            self._ack_due > self._committed or self.broker.deliverable(sub) > 0
-        ):
+        ack_due = any(plan["regions"] for plan in self._plans.values())
+        if backlog > 0 and (ack_due or self.broker.deliverable(sub) > 0):
             base = self._partitions_per_unit(backlog)
             capacity = base * self.opts.max_messages_per_partition
             max_units = max(1, MAX_PARTITIONS // base)
@@ -540,10 +551,6 @@ class PubsubStreamReader(DataSourceStreamReader):
     # -- partition planning (S6/S13) --------------------------------------
     def partitions(self, start: dict, end: dict):
         self._ensure_registered()
-        # restart re-sync: a recovered run replans its uncommitted batch
-        # from checkpointed offsets before ever calling latestOffset —
-        # never let the counter sit behind them
-        self._advance_to(max(start["batch_id"], end["batch_id"]))
         units = max(1, end["batch_id"] - start["batch_id"])
         batch_key = f"b{start['batch_id']}-{end['batch_id']}"
         # The plan is fixed the first time a batch is planned, an empty
@@ -551,41 +558,29 @@ class PubsubStreamReader(DataSourceStreamReader):
         # rebuild the same partitions over the same copies, or a backlog
         # that grew in between adds partitions that pull fresh messages
         # into an already-planned batch, which a sink may skip as
-        # committed while commit() acks. The plan names its replica
-        # roots, and the offset state those of the last planned batch,
+        # committed while commit() acks. The offset state records the
+        # plan, with the replica roots it names, before any copy exists,
         # so a replan after a config switch finds the batch's copies
         # where they were written, even with the primary lost.
-        checked = self._batch_dirs(batch_key, self._known_roots())
-        found = _first_readable(
-            [os.path.join(d, _PLAN_FILE) for d in checked], _load_plan
-        )
-        if found is not None:
-            regions, roots = found[1]
-        elif any(
-            name.startswith("part-")
-            for d in checked
-            if os.path.isdir(d)
-            for name in os.listdir(d)
-        ):
-            raise RuntimeError(
-                f"pubsub replay cache: batch {batch_key} has part files but "
-                f"no {_PLAN_FILE} under {checked}; refusing to re-plan a batch "
-                "that was already pulled"
-            )
-        else:
-            regions = self._plan(units, batch_key)
-            roots = self.opts.replay_cache_replica_dirs
-            if roots != self._roots:  # recorded before any copy exists
-                self._roots = roots
-                self._persist_state()
-            data = json.dumps({"regions": regions, "replica_roots": roots}).encode()
-            dirs = self._batch_dirs(batch_key, roots)
-            for d in dirs[1:] + dirs[:1]:  # primary last, as for parts
-                _write_atomic(os.path.join(d, _PLAN_FILE), data)
-        if regions:
-            self._ack_due = max(self._ack_due or 0, end["batch_id"])
-
-        cache_dir, *replica_dirs = self._batch_dirs(batch_key, roots)
+        new = batch_key not in self._plans
+        if new:
+            checked = self._batch_dirs(batch_key, self.opts.replay_cache_replica_dirs)
+            if any(name.startswith("part-") for d in checked for name in _listdir(d)):
+                raise RuntimeError(
+                    f"pubsub replay cache: batch {batch_key} has part files under "
+                    f"{checked} but no plan in {_offset_state_path(self.opts)}; "
+                    "refusing to re-plan a batch that was already pulled"
+                )
+            self._plans[batch_key] = {
+                "regions": self._plan(units, batch_key),
+                "replica_roots": list(self.opts.replay_cache_replica_dirs),
+            }
+        # restart re-sync: a recovered run replans its uncommitted batch
+        # from checkpointed offsets before ever calling latestOffset —
+        # never let the counter sit behind them
+        self._advance_to(max(start["batch_id"], end["batch_id"]), changed=new)
+        plan = self._plans[batch_key]
+        cache_dir, *replica_dirs = self._batch_dirs(batch_key, plan["replica_roots"])
         return [
             InputPartition(
                 _PartitionPayload(
@@ -593,36 +588,13 @@ class PubsubStreamReader(DataSourceStreamReader):
                     subscription=self.opts.subscription,
                     subscription_path=self.opts.subscription_path,
                     max_messages=self.opts.max_messages_per_partition,
-                    cache_file=os.path.join(cache_dir, f"part-{i:05d}{_PART_SUFFIX}"),
+                    cache_file=_part_file(cache_dir, i),
                     region=region,
-                    replica_files=tuple(
-                        os.path.join(d, f"part-{i:05d}{_PART_SUFFIX}")
-                        for d in replica_dirs
-                    ),
+                    replica_files=tuple(_part_file(d, i) for d in replica_dirs),
                 )
             )
-            for i, region in enumerate(regions)
+            for i, region in enumerate(plan["regions"])
         ]
-
-    def _known_roots(self) -> tuple:
-        """The configured replica roots, then those of the last planned
-        batch."""
-        return tuple(dict.fromkeys(self.opts.replay_cache_replica_dirs + self._roots))
-
-    def _cached_batches(self):
-        """``(batch_key, end offset, dir)`` of each batch dir under this
-        stream's primary root, its configured replica roots and those of
-        the last planned batch."""
-        for root in (None, *self._known_roots()):
-            stream_dir = _stream_cache_dir(self.opts, self.stream_id, root)
-            if not os.path.isdir(stream_dir):
-                continue
-            for batch_key in os.listdir(stream_dir):
-                try:
-                    hi = int(batch_key.split("-")[-1])
-                except ValueError:
-                    continue
-                yield batch_key, hi, os.path.join(stream_dir, batch_key)
 
     def _batch_dirs(self, batch_key: str, replica_roots) -> list[str]:
         """The batch's dir under the primary root, then under each of
@@ -688,48 +660,28 @@ class PubsubStreamReader(DataSourceStreamReader):
 
     # -- commit: ack + evict (S10/S11) -------------------------------------
     def commit(self, end: dict) -> None:
-        self._advance_to(end["batch_id"], committed=True)
-        # The sweep is scoped to THIS stream's cache dirs: foreign dirs
-        # are purged unacked at registration, never acknowledged here.
-        # Batch dirs are found under the primary, the configured replica
-        # roots and those of the last planned batch, so the ack set
-        # survives the loss of any single copy; each batch is then acked
-        # and evicted over the roots its plan names.
+        # Only this stream's held plans are acked: another stream's
+        # copies are purged unacked at registration. A plan names its
+        # replica roots, so the ack set survives the loss of any single
+        # copy. Ack ids per part file come from the FIRST readable copy
+        # in root order (primary first), never the union across copies:
+        # divergent copies (a zombie or speculative task attempt whose
+        # pull landed only in a replica while another attempt's pull
+        # became the primary) would otherwise ack messages that appear
+        # in no replayed batch — an at-least-once violation (ADVICE
+        # r12). Replica content counts only where the primary copy of
+        # that part file is absent or unreadable, which is exactly when
+        # a replay serves that replica. Only the ack_id column is read.
         end_id = end["batch_id"]
-        # batch_key -> the dirs of that batch found under those roots
-        found: dict[str, list[str]] = {}
-        for batch_key, hi, batch_dir in self._cached_batches():
-            if hi <= end_id:
-                found.setdefault(batch_key, []).append(batch_dir)
-        for batch_key, dirs in found.items():
-            plan = _first_readable(
-                [os.path.join(d, _PLAN_FILE) for d in dirs], _load_plan
-            )
-            if plan is not None:  # else its plan went in an eviction cut short
-                dirs = [
-                    d
-                    for d in self._batch_dirs(batch_key, plan[1][1])
-                    if os.path.isdir(d)
-                ]
-            # Ack set per part file comes from the FIRST readable copy
-            # in root order (primary first), never the union across
-            # copies: divergent copies (a zombie or speculative task
-            # attempt whose pull landed only in a replica while another
-            # attempt's pull became the primary) would otherwise ack
-            # messages that appear in no replayed batch — an
-            # at-least-once violation (ADVICE r12). Replica content
-            # counts only where the primary copy of that part file is
-            # absent or unreadable, which is exactly when a replay
-            # serves that replica. Only the ack_id column is read.
-            part_names = sorted(
-                {f for d in dirs for f in os.listdir(d) if f.endswith(_PART_SUFFIX)}
-            )
+        due = [key for key in self._plans if int(key.rsplit("-", 1)[1]) <= end_id]
+        for batch_key in due:
+            plan = self._plans[batch_key]
+            dirs = self._batch_dirs(batch_key, plan["replica_roots"])
             ack_ids: list[str] = []
-            for name in part_names:
-                _path, ids = _first_readable(
-                    [os.path.join(d, name) for d in dirs], _load_ack_ids
-                )
-                ack_ids.extend(ids)
+            for i in range(len(plan["regions"])):
+                found = _first_readable([_part_file(d, i) for d in dirs], _load_ack_ids)
+                if found is not None:  # else never pulled, or evicted
+                    ack_ids.extend(found[1])
             if ack_ids:
                 # one call per batch: the file broker takes any number
                 # of ids under one lock hold; RealBrokerClient chunks to
@@ -739,6 +691,9 @@ class PubsubStreamReader(DataSourceStreamReader):
                 )
             for batch_dir in dirs:  # block eviction analog, every copy
                 shutil.rmtree(batch_dir, ignore_errors=True)
+            del self._plans[batch_key]
+        # one state write: the committed floor and the plans dropped
+        self._advance_to(end_id, committed=True, changed=bool(due))
         self._heartbeat()
 
     def stop(self) -> None:

@@ -466,8 +466,9 @@ def test_commit_never_acks_foreign_stream_cache(spark, broker, broker_dir):
         r2.commit(end)
         # the commit must NOT have acked run1's cached ack_ids
         assert broker.backlog("s") == 10
-        # and run1's stale dirs were purged (unacked) at registration
-        assert os.listdir(root) == ["run2"]
+        # and run1's stale dirs were purged (unacked) at registration;
+        # run2's batch planned no partitions, so it made no dir
+        assert os.listdir(root) == []
     finally:
         r2.stop()
 
@@ -1548,9 +1549,9 @@ def test_torn_primary_without_replica_fails_loudly(broker, broker_dir, keep):
 
 def test_legacy_jsonl_cache_copy_fails_loudly(broker, broker_dir):
     """A batch dir from the older JSON-lines cache holds a part file but
-    no plan.json (plans came with the Arrow cache): planning it raises
-    naming the batch instead of taking it for a never-planned batch,
-    and pulls nothing."""
+    the offset state holds no plan for it: planning it raises naming
+    the batch instead of taking it for a never-planned batch, and pulls
+    nothing."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
         _stream_cache_dir,
     )
@@ -1730,7 +1731,12 @@ def test_foreign_leases_do_not_advance_the_offset(broker, broker_dir):
 def test_data_batch_is_followed_by_one_ack_only_batch(broker, broker_dir):
     """Spark acks a batch while it builds the next one, so the offset
     advances once more after the batch that took every message, and
-    then holds once that ack has landed."""
+    then holds once that ack has landed. The ack-only batch plans no
+    partitions, so it leaves no dir under the cache roots."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _stream_cache_dir,
+    )
+
     _publish_canonical(broker, 20)
     reader = _reader(broker_dir, num_partitions=2, max_messages_per_partition=10)
     try:
@@ -1742,6 +1748,7 @@ def test_data_batch_is_followed_by_one_ack_only_batch(broker, broker_dir):
         reader.commit(b1)
         assert reader.partitions(b1, b2) == []
         assert [reader.latestOffset() for _ in range(3)] == [b2] * 3
+        assert os.listdir(_stream_cache_dir(reader.opts, reader.stream_id)) == []
     finally:
         reader.stop()
 
@@ -1968,9 +1975,10 @@ def test_relay_of_a_backlog_under_one_pull_plans_one_partition(
     source task where three would pull nothing. Two availableNow runs on
     one checkpoint: the first leaves its batch uncommitted on the source
     side (Spark commits it while building the next batch), so its
-    persisted plan is still on disk; the second acks it. The output holds
-    every message exactly once."""
+    plan is still held in the offset state; the second acks it. The
+    output holds every message exactly once."""
     from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _offset_state_path,
         _stream_cache_dir,
     )
     from spark_sql_pubsub_connector_spark.sources.options import (
@@ -1993,15 +2001,13 @@ def test_relay_of_a_backlog_under_one_pull_plans_one_partition(
         assert q.awaitTermination(120)
 
     run()
-    cache = _stream_cache_dir(
-        validate_read_options(
-            {"project_id": "test-project", "subscription": "s", "broker_dir": broker_dir}
-        ),
-        "relay1",
+    opts = validate_read_options(
+        {"project_id": "test-project", "subscription": "s", "broker_dir": broker_dir}
     )
-    (batch_dir,) = os.listdir(cache)
-    with open(os.path.join(cache, batch_dir, "plan.json")) as fh:
-        assert json.load(fh) == {"regions": [None], "replica_roots": []}
+    (batch_dir,) = os.listdir(_stream_cache_dir(opts, "relay1"))
+    with open(_offset_state_path(opts)) as fh:
+        plans = json.load(fh)["plans"]
+    assert plans == {batch_dir: {"regions": [None], "replica_roots": []}}
     assert broker.backlog("s") == 40  # leased, acked by the next batch
 
     run()
@@ -2228,8 +2234,9 @@ def test_replica_root_switch_with_the_primary_lost_before_restart(
 
 
 def test_offset_state_without_replica_roots_reads_as_none(broker, broker_dir):
-    """An offset state file written before replica roots were recorded
-    reads as recording none, not as corrupt."""
+    """An offset state file written before the state held plans (and
+    their replica roots) reads as holding none, not as corrupt. The next
+    write records the stream and the batch it plans."""
     state = os.path.join(broker_dir, ".offsets", "s.json")
     os.makedirs(os.path.dirname(state))
     with open(state, "w") as fh:
@@ -2242,7 +2249,12 @@ def test_offset_state_without_replica_roots_reads_as_none(broker, broker_dir):
         parts = reader.partitions(start, end)
         assert sum(len(_read_rows(reader, p)) for p in parts) == 5
         with open(state) as fh:
-            assert json.load(fh) == {"planned": 4, "committed": 2, "replica_roots": []}
+            assert json.load(fh) == {
+                "planned": 4,
+                "committed": 2,
+                "stream_id": reader.stream_id,
+                "plans": {"b2-4": {"regions": [None], "replica_roots": []}},
+            }
     finally:
         reader.stop()
 
@@ -2278,41 +2290,154 @@ def test_partitions_and_commit_never_list_the_broker_dir(
 
 
 def test_batch_with_parts_but_no_plan_is_not_replanned(broker, broker_dir):
-    """A batch dir holding a part file but no plan.json was pulled under
-    a plan that is gone: replanning it could plan other partitions over
-    the same batch key. partitions() raises naming the batch instead,
-    and writes no new plan."""
+    """A batch dir holding a part file whose plan is gone from the
+    offset state was pulled under that lost plan: replanning it could
+    plan other partitions over the same batch key. partitions() raises
+    naming the batch instead, and records no new plan."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _offset_state_path,
+    )
+
     _publish_canonical(broker, 10)
-    reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
+    opts = dict(num_partitions=1, max_messages_per_partition=10, stream_id="fixed")
+    reader = _reader(broker_dir, **opts)
     try:
         start, end = reader.initialOffset(), reader.latestOffset()
         parts = reader.partitions(start, end)
         assert len(_read_rows(reader, parts[0])) == 10
-        batch_dir = os.path.dirname(parts[0].value.cache_file)
-        batch_key = os.path.basename(batch_dir)
-        os.remove(os.path.join(batch_dir, "plan.json"))
+    finally:
+        reader.stop()
+    batch_key = os.path.basename(os.path.dirname(parts[0].value.cache_file))
+    path = _offset_state_path(reader.opts)
+    with open(path) as fh:
+        state = json.load(fh)
+    del state["plans"][batch_key]
+    with open(path, "w") as fh:
+        json.dump(state, fh)
+    reader = _reader(broker_dir, **opts)
+    try:
         with pytest.raises(RuntimeError, match=re.escape(batch_key)):
             reader.partitions(start, end)
-        assert not os.path.exists(os.path.join(batch_dir, "plan.json"))
+        with open(path) as fh:
+            assert json.load(fh)["plans"] == {}
     finally:
         reader.stop()
 
 
 def test_bare_list_plan_fails_loudly(broker, broker_dir):
-    """A plan.json in the older bare-list form reads as corrupt, never
-    as a plan with no replica roots."""
+    """A held plan in the older bare-list form makes the offset state
+    corrupt, naming its file, never a plan with no replica roots."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _offset_state_path,
+    )
+
     _publish_canonical(broker, 10)
     reader = _reader(broker_dir, num_partitions=1, max_messages_per_partition=10)
     try:
         start, end = reader.initialOffset(), reader.latestOffset()
-        parts = reader.partitions(start, end)
-        plan = os.path.join(os.path.dirname(parts[0].value.cache_file), "plan.json")
-        with open(plan, "w") as fh:
-            fh.write("[null]")
-        with pytest.raises(RuntimeError, match="no copy is parseable"):
-            reader.partitions(start, end)
+        reader.partitions(start, end)
     finally:
         reader.stop()
+    path = _offset_state_path(reader.opts)
+    with open(path) as fh:
+        state = json.load(fh)
+    state["plans"][f"b{start['batch_id']}-{end['batch_id']}"] = [None]
+    with open(path, "w") as fh:
+        json.dump(state, fh)
+    corrupt = f"corrupt pubsub offset state {re.escape(path)}"
+    with pytest.raises(ValueError, match=corrupt):
+        _reader(broker_dir)
+
+
+def test_registration_purges_a_dead_stream_under_its_planned_roots(
+    broker, broker_dir, tmp_path
+):
+    """Stream A pulls a batch with its replica under root A and dies
+    before commit; stream B starts configured with root B alone. A's
+    held plan names root A, so B's registration purges A's copies there
+    as well as under the primary, unacked: A's messages wait out their
+    leases."""
+    from spark_sql_pubsub_connector_spark.sources.datasource import _read_cache_dir
+
+    _publish_canonical(broker, 10)
+    root_a, root_b = str(tmp_path / "root_a"), str(tmp_path / "root_b")
+    base = dict(num_partitions=1, max_messages_per_partition=10)
+    a = _reader(broker_dir, stream_id="A", replay_cache_replica_dirs=root_a, **base)
+    try:
+        (part,) = a.partitions(a.initialOffset(), a.latestOffset())
+        assert len(_read_rows(a, part)) == 10
+    finally:
+        a.stop()  # crash before commit
+    a_dirs = [
+        os.path.join(_read_cache_dir(a.opts, root), "A") for root in (None, root_a)
+    ]
+    assert all(os.path.isdir(d) for d in a_dirs)
+
+    b = _reader(broker_dir, stream_id="B", replay_cache_replica_dirs=root_b, **base)
+    try:
+        b.initialOffset()
+        assert not any(os.path.exists(d) for d in a_dirs)
+        assert broker.backlog("s") == 10
+    finally:
+        b.stop()
+
+
+def test_commit_crash_at_the_state_write_is_retried_cleanly(
+    broker, broker_dir, monkeypatch
+):
+    """commit() acks a batch, evicts its copies, then records the
+    committed floor with the batch's plan dropped in one offset-state
+    write. A crash at that write leaves the plan held; a fresh reader of
+    the same stream commits the same end again without error, and ends
+    with the backlog at 0, no cache file left and the plan gone. The
+    state holds a batch's plan before any of its parts is read."""
+    from spark_sql_pubsub_connector_spark.sources import datasource
+    from spark_sql_pubsub_connector_spark.sources.datasource import (
+        _offset_state_path,
+    )
+
+    _publish_canonical(broker, 20)
+    opts = dict(num_partitions=2, max_messages_per_partition=10, stream_id="fixed")
+    r1 = _reader(broker_dir, **opts)
+    path = _offset_state_path(r1.opts)
+    try:
+        start, end = r1.initialOffset(), r1.latestOffset()
+        parts = r1.partitions(start, end)
+        key = f"b{start['batch_id']}-{end['batch_id']}"
+        with open(path) as fh:
+            plans = json.load(fh)["plans"]
+        assert plans == {key: {"regions": [None, None], "replica_roots": []}}
+        assert not any(os.path.exists(p.value.cache_file) for p in parts)
+        assert sum(len(_read_rows(r1, p)) for p in parts) == 20
+
+        real_write = datasource._write_atomic
+
+        def crash_at_state_write(target, data):
+            if target == path:
+                raise OSError("killed at the offset-state write")
+            real_write(target, data)
+
+        with monkeypatch.context() as m:
+            m.setattr(datasource, "_write_atomic", crash_at_state_write)
+            with pytest.raises(OSError, match="killed"):
+                r1.commit(end)
+    finally:
+        r1.stop()
+    assert broker.backlog("s") == 0  # the ack landed before the crash
+    with open(path) as fh:
+        assert key in json.load(fh)["plans"]
+
+    r2 = _reader(broker_dir, **opts)
+    try:
+        r2.commit(end)
+        assert broker.backlog("s") == 0
+        cache = os.path.join(broker_dir, ".read_cache")
+        assert [f for _, _, files in os.walk(cache) for f in files] == []
+        with open(path) as fh:
+            state = json.load(fh)
+        assert (state["committed"], state["plans"]) == (end["batch_id"], {})
+    finally:
+        r2.stop()
 
 
 def test_sink_losing_attempt_leaves_zero_orphans(
